@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.text import tokens
 from building_a_rag_pipeline_with_airflow_spark.operators import ensure_min_partitions
+from building_a_rag_pipeline_with_airflow_spark.session import local_frame
 
 __all__ = [
     "bm25_score",
@@ -554,9 +555,9 @@ def bm25_topk_from_index(
     else:
         n_docs_val, avgdl_val = float(meta["n_docs"]), float(meta["avgdl"])
     # resolve the terms' buckets with the same JVM hash the build used;
-    # |terms| rows through the JVM, driver-side metadata
+    # |terms| rows in a driver-local frame, folded at plan time (no job)
     bucket_rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
+        local_frame(spark, [(t,) for t in terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
         .collect()
     )

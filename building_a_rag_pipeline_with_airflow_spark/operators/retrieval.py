@@ -13,10 +13,12 @@ from typing import Iterator, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from building_a_rag_pipeline_with_airflow_spark.functions.embed import embed_text
 from building_a_rag_pipeline_with_airflow_spark.functions.vectors import cosine_similarity
 from building_a_rag_pipeline_with_airflow_spark.operators.similarity import TOP_K, topk_cosine
+from building_a_rag_pipeline_with_airflow_spark.session import local_frame
 
 
 def retrieve_chunks(
@@ -28,16 +30,140 @@ def retrieve_chunks(
     prefilter=None,
 ) -> DataFrame:
     """Embed the query (driver-side, same embedder as the index) and return
-    the top-k chunk rows with scores. ``prefilter`` = hybrid search (V3)."""
+    the top-k chunk rows with scores, ``(chunk_id, score, <other index
+    columns>, rank)``. ``prefilter`` = hybrid search (V3).
+
+    The payload rides the k-row heap: the top-k cut is one
+    TakeOrderedAndProject over ``(chunk_id, score, payload)``, so the
+    index is scanned once and nothing joins back onto it."""
     qvec = embed_text(query_text, dim)
+    payload = [c for c in index.columns if c not in ("chunk_id", vec_col)]
     topk = topk_cosine(
-        index, qvec, k=k, vec_col=vec_col, id_col="chunk_id", prefilter=prefilter
+        index,
+        qvec,
+        k=k,
+        vec_col=vec_col,
+        id_col="chunk_id",
+        prefilter=prefilter,
+        payload=payload,
     )
-    # k rows at this point — the global window is trivially cheap.
+    # k rows in one partition at this point — the global window is
+    # trivially cheap and adds no exchange.
     w = Window.orderBy(F.desc("score"), F.asc("chunk_id"))
-    return (
-        topk.join(index.drop(vec_col), "chunk_id")
-        .withColumn("rank", F.row_number().over(w))
+    return topk.withColumn("rank", F.row_number().over(w))
+
+
+def _pair_sims_frame(spark, vecs: list, vec_type) -> DataFrame:
+    """``(_a, _b, s)`` for every candidate pair ``_a < _b`` (positions in
+    ``vecs``): the 6dp pair cosines, as a projection over a driver-local
+    frame — it plans as a ``LocalRelation`` and collects without a job."""
+    pairs = [
+        (a, b, vecs[a], vecs[b])
+        for a in range(len(vecs))
+        for b in range(a + 1, len(vecs))
+    ]
+    schema = StructType(
+        [
+            StructField("_a", IntegerType()),
+            StructField("_b", IntegerType()),
+            StructField("_va", vec_type),
+            StructField("_vb", vec_type),
+        ]
+    )
+    return local_frame(spark, pairs, schema).select(
+        "_a", "_b", F.round(cosine_similarity("_va", "_vb"), 6).alias("s")
+    )
+
+
+def _mmr_select(
+    index: DataFrame,
+    query_vec: list[float],
+    k: int,
+    fetch_k: int,
+    lambda_mult: float,
+    vec_col: str,
+    id_col: str,
+    payload: list[str],
+) -> DataFrame:
+    """MMR core shared by :func:`mmr_topk` and :func:`mmr_rerank`: the k
+    selected rows as a local frame ``(id, *payload, rel, mmr_score,
+    rank)`` in rank order."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    # NULL vectors are excluded BEFORE the candidate cut: cosine
+    # propagates NULL, and when the corpus has fewer than fetch_k
+    # non-null vectors the desc sort would still admit NULL-scored rows
+    # — which then crash the greedy loop with float(None). A degenerate
+    # index degrades to fewer candidates instead of raising.
+    # One job: the topk_cosine cut (4dp score, id tiebreak) with each
+    # candidate's vector, 6dp rel and payload riding the k-row heap. The
+    # cosine sits in its own projection so it is computed once per row
+    # and rounded twice.
+    cands = (
+        index.where(F.col(vec_col).isNotNull())
+        .select(
+            id_col,
+            vec_col,
+            *payload,
+            cosine_similarity(F.col(vec_col), q).alias("_cos"),
+        )
+        .select(
+            id_col,
+            vec_col,
+            *payload,
+            F.round("_cos", 6).alias("rel"),
+            F.round("_cos", 4).alias("_score"),
+        )
+        .orderBy(F.desc("_score"), F.asc(id_col))
+        .limit(fetch_k)
+        .collect()
+    )
+    spark = index.sparkSession
+    sims = _pair_sims_frame(
+        spark, [r[vec_col] for r in cands], index.schema[vec_col].dataType
+    ).collect()
+    rel = [float(r["rel"]) for r in cands]
+    sim: dict = {}
+    for r in sims:
+        sim[(r["_a"], r["_b"])] = sim[(r["_b"], r["_a"])] = float(r["s"])
+    lam = float(lambda_mult)
+    # candidate positions in id order = the argmax tiebreak order
+    remaining = sorted(range(len(cands)), key=lambda p: cands[p][id_col])
+    selected: list[tuple] = []  # (position, mmr_score)
+    while remaining and len(selected) < k:
+        if not selected:
+            # first pick is PURE relevance (the MMR definition, and the
+            # oracle's ORDER BY rel) — keying on lam*rel would collapse
+            # to the id tiebreak at lambda=0, which is a ranking
+            # regression, not a rounding concern; rel is already 6dp so
+            # the comparison is exact
+            best = max(remaining, key=lambda p: rel[p])
+            score_e7 = round(lam * rel[best] * 1e7)
+        else:
+            def _m_e7(p):
+                return round(
+                    (lam * rel[p]
+                     - (1.0 - lam) * max(sim[(p, s)] for s, _ in selected))
+                    * 1e7
+                )
+            best = max(remaining, key=_m_e7)  # stable: smallest id wins ties
+            score_e7 = _m_e7(best)
+        selected.append((best, score_e7 / 1e7))
+        remaining.remove(best)
+    schema = StructType(
+        [index.schema[c] for c in (id_col, *payload)]
+        + [
+            StructField("rel", DoubleType()),
+            StructField("mmr_score", DoubleType()),
+            StructField("rank", IntegerType()),
+        ]
+    )
+    return local_frame(
+        spark,
+        [
+            (*(cands[p][c] for c in (id_col, *payload)), rel[p], m, rank + 1)
+            for rank, (p, m) in enumerate(selected)
+        ],
+        schema,
     )
 
 
@@ -57,14 +183,15 @@ def mmr_topk(
     MMR objective, the diversity knob the reference's plain top-k lacks).
     Returns ``(id, rel, mmr_score, rank)``.
 
-    Scale shape: the distributed part is the candidate scan (identical to
-    :func:`retrieve_chunks`'s top-k — TakeOrderedAndProject, corpus never
-    shuffles) plus the candidate×candidate cosine matrix (a fetch_k-row
-    crossJoin — metadata-scale by construction, like the IVF probe's
-    centroid collect, NOT a data-path collect). The greedy selection is
-    inherently sequential in k, so it runs driver-side over the collected
-    fetch_k rel values and fetch_k² pair sims. Payload columns stay
-    distributed: the chosen ids join back against the index.
+    Scale shape: the distributed part is the candidate scan (the same
+    top-k cut as :func:`retrieve_chunks` — TakeOrderedAndProject, corpus
+    never shuffles), collected in one job with each candidate's vector.
+    The fetch_k × fetch_k pair cosines run on a driver-local frame (a
+    ``LocalRelation`` — metadata-scale by construction, like the IVF
+    probe's centroid collect, NOT a data-path collect). The greedy
+    selection is inherently sequential in k, so it runs driver-side over
+    the fetch_k rel values and the pair sims; the result is a local
+    frame of the k selected rows.
 
     Oracle determinism: ``rel`` and the pair sims are rounded to 6dp
     IN-PLAN (``F.round`` — the engine family every other oracle proves
@@ -78,78 +205,8 @@ def mmr_topk(
     half-boundaries structurally (measured at sf0.001: 0.19435550
     exactly), where correctly-rounded rounding (Spark/Python) and
     scale-then-``std::round`` (DuckDB) disagree on the last digit."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # NULL vectors are excluded BEFORE the candidate cut: cosine
-    # propagates NULL, and when the corpus has fewer than fetch_k
-    # non-null vectors the desc sort would still admit NULL-scored rows
-    # — which then crash the greedy loop with float(None). A degenerate
-    # index degrades to fewer candidates instead of raising.
-    index = index.where(F.col(vec_col).isNotNull())
-    # Narrow lazy checkpoint after the candidate cut: three downstream
-    # references (the rel collect + both crossJoin sides) would each
-    # re-run the corpus-scale TakeOrdered scan otherwise — the
-    # phash_near_dups recompute-per-reference trap; the pinned blocks
-    # are fetch_k (id, vector) rows.
-    cands = (
-        topk_cosine(index, query_vec, k=fetch_k, vec_col=vec_col, id_col=id_col)
-        .join(index.select(id_col, vec_col), id_col)
-        .localCheckpoint(eager=False)
-    )
-    rel_rows = cands.select(
-        F.col(id_col),
-        F.round(cosine_similarity(F.col(vec_col), q), 6).alias("rel"),
-    ).collect()
-    spark = index.sparkSession
-    id_type = index.schema[id_col].dataType.simpleString()
-    if not rel_rows:
-        return spark.createDataFrame(
-            [], f"{id_col} {id_type}, rel double, mmr_score double, rank int"
-        )
-    a = cands.select(F.col(id_col).alias("_ia"), F.col(vec_col).alias("_va"))
-    b = cands.select(F.col(id_col).alias("_ib"), F.col(vec_col).alias("_vb"))
-    # fetch_k × fetch_k pair cosines: both crossJoin sides are bounded by
-    # the candidate cut above — metadata-scale, never corpus-scale.
-    sim_rows = (
-        a.crossJoin(b)
-        .where(F.col("_ia") < F.col("_ib"))
-        .select(
-            "_ia",
-            "_ib",
-            F.round(cosine_similarity("_va", "_vb"), 6).alias("s"),
-        )
-        .collect()
-    )
-    rel = {r[id_col]: float(r["rel"]) for r in rel_rows}
-    sim: dict = {}
-    for r in sim_rows:
-        sim[(r["_ia"], r["_ib"])] = float(r["s"])
-        sim[(r["_ib"], r["_ia"])] = float(r["s"])
-    lam = float(lambda_mult)
-    remaining = sorted(rel)  # id order = the argmax tiebreak order
-    selected: list[tuple] = []  # (id, rel, mmr_score)
-    while remaining and len(selected) < k:
-        if not selected:
-            # first pick is PURE relevance (the MMR definition, and the
-            # oracle's ORDER BY rel) — keying on lam*rel would collapse
-            # to the id tiebreak at lambda=0, which is a ranking
-            # regression, not a rounding concern; rel is already 6dp so
-            # the comparison is exact
-            best = max(remaining, key=lambda i: rel[i])
-            score_e7 = round(lam * rel[best] * 1e7)
-        else:
-            def _m_e7(i):
-                return round(
-                    (lam * rel[i]
-                     - (1.0 - lam) * max(sim[(i, s[0])] for s in selected))
-                    * 1e7
-                )
-            best = max(remaining, key=_m_e7)  # stable: smallest id wins ties
-            score_e7 = _m_e7(best)
-        selected.append((best, rel[best], score_e7 / 1e7))
-        remaining.remove(best)
-    return spark.createDataFrame(
-        [(i, r, m, rank + 1) for rank, (i, r, m) in enumerate(selected)],
-        f"{id_col} {id_type}, rel double, mmr_score double, rank int",
+    return _mmr_select(
+        index, query_vec, k, fetch_k, lambda_mult, vec_col, id_col, payload=[]
     )
 
 
@@ -164,19 +221,15 @@ def mmr_rerank(
     id_col: str = "chunk_id",
 ) -> DataFrame:
     """MMR retrieval over a chunk index: embed the query (driver-side, same
-    embedder as the index), select via :func:`mmr_topk`, join the chosen
-    ids back for the full rows."""
+    embedder as the index) and select as :func:`mmr_topk` does, with the
+    candidates' other index columns carried through the candidate cut.
+    Returns ``(id, <other index columns>, rel, mmr_score, rank)``, a local
+    frame in rank order."""
     qvec = embed_text(query_text, dim)
-    order = mmr_topk(
-        index,
-        qvec,
-        k=k,
-        fetch_k=fetch_k,
-        lambda_mult=lambda_mult,
-        vec_col=vec_col,
-        id_col=id_col,
+    payload = [c for c in index.columns if c not in (id_col, vec_col)]
+    return _mmr_select(
+        index, qvec, k, fetch_k, lambda_mult, vec_col, id_col, payload
     )
-    return index.drop(vec_col).join(F.broadcast(order), id_col).orderBy("rank")
 
 
 def expand_retrieved_window(

@@ -38,18 +38,21 @@ def topk_cosine(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     prefilter=None,
+    payload=(),
 ) -> DataFrame:
     """Exact cosine top-k for one query vector (V2). ``prefilter`` is an
     optional Column predicate applied *before* scoring (V3 hybrid search —
-    partition-prunable at scale)."""
+    partition-prunable at scale). ``payload`` columns ride along after
+    ``score``: ``(id, score, *payload)``."""
     df = corpus if prefilter is None else corpus.where(prefilter)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = df.select(
         F.col(id_col),
         F.round(cosine_similarity(F.col(vec_col), q), 4).alias("score"),
+        *payload,
     )
-    # orderBy+limit compiles to TakeOrderedAndProject: per-partition heaps,
-    # no full sort, no corpus shuffle.
+    # orderBy+limit compiles to TakeOrderedAndProject: per-partition heaps
+    # of k whole rows (payload included), no full sort, no corpus shuffle.
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 

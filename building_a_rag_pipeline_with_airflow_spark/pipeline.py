@@ -83,7 +83,11 @@ def rag_query(
     """Query-time path: top-k retrieve + context assembly; returns one row
     (context, n_sources). ``diversity="mmr"`` swaps plain relevance top-k
     for maximal-marginal-relevance re-ranking (retrieval.mmr_rerank) —
-    same distributed candidate scan, diversified final k."""
+    same distributed candidate scan, diversified final k.
+
+    Either way the index is scanned once per request: the plain path is
+    one job, and MMR adds only driver-local pair scoring and the context
+    aggregate over the k selected rows."""
     if diversity == "mmr":
         from building_a_rag_pipeline_with_airflow_spark.operators.retrieval import mmr_rerank
 

@@ -1859,10 +1859,10 @@ def mmr_rerank_embeddings_q(spark, sf_dir):
     (chromadb_rag.py:127-140) lacks: top-20 cosine candidates for the
     vec_id-0 query, then greedy selection of 5 maximizing
     0.7·rel − 0.3·max-sim-to-selected. Candidate scan is the usual
-    TakeOrderedAndProject (corpus never shuffles); the pair-sim matrix is
-    a 20-row crossJoin; selection is driver-side over 6dp-pre-rounded
-    scores with smaller-id tiebreaks — replayed exactly by the unrolled
-    greedy CTE chain above."""
+    TakeOrderedAndProject (corpus never shuffles); the pair sims run on a
+    driver-local frame of the 20 candidates; selection is driver-side
+    over 6dp-pre-rounded scores with smaller-id tiebreaks — replayed
+    exactly by the unrolled greedy CTE chain above."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
     return retrieval.mmr_topk(

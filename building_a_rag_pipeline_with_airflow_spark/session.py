@@ -9,8 +9,10 @@ the (naive-UTC) parquet test data and any SQL oracle.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 # Defaults chosen for 100 TB-scale behavior, not just local tests:
 #  - AQE coalesces small shuffle partitions and splits skewed ones at runtime,
@@ -76,3 +78,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: "StructType | str") -> DataFrame:
+    """Driver-side ``rows`` (tuples or ``Row`` objects in ``schema`` field
+    order) as a DataFrame over a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` plans as a ``LogicalRDD``
+    over a ``PythonRDD``, so every execution of the frame starts Python
+    workers. The same rows handed over as one Arrow table plan as a
+    ``LocalRelation``: the optimizer folds projections and filters over it
+    at plan time, so collecting such a projection runs no job at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for values, field, atype in zip(cols, schema.fields, arrow_schema.types):
+        if isinstance(field.dataType, TimestampType):
+            # collected timestamps are naive host-local datetimes, and
+            # Arrow stores any datetime's wall clock as the UTC value
+            values = [v if v is None else v.astimezone(timezone.utc) for v in values]
+        arrays.append(pa.array(values, type=atype))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

@@ -7,6 +7,14 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs started while ``fn()`` runs."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    fn()
+    return scheduler.nextJobId() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     from building_a_rag_pipeline_with_airflow_spark import get_spark

@@ -6,6 +6,7 @@ import io as _io
 import shutil
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark import schemas
@@ -911,6 +912,98 @@ def test_mmr_candidate_scan_is_take_ordered(spark, sf_dir):
     assert got.count() == 5
 
 
+@pytest.fixture(scope="module")
+def served_index(spark, sf_dir, tmp_path_factory):
+    """A persisted bucketed chunk index with a ``source`` prefilter column,
+    read back the way a serving session reads it."""
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import (
+        build_index,
+        read_index_bucketed,
+        write_index_bucketed,
+    )
+
+    path = str(tmp_path_factory.mktemp("served") / "index")
+    docs = schemas.load_table(spark, sf_dir, "documents")
+    write_index_bucketed(build_index(docs, keep_cols=("source",)), path, 4)
+    return read_index_bucketed(spark, path)
+
+
+@pytest.mark.parametrize("hybrid", [False, True], ids=["dense", "hybrid"])
+def test_rag_request_is_one_job_over_one_index_scan(spark, served_index, hybrid):
+    """A dense or hybrid request is one top-k cut that carries the payload:
+    one job, one parquet scan of the index, no join back onto it."""
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import rag_query
+
+    pre = (F.col("source") == served_index.first()["source"]) if hybrid else None
+    df = rag_query(served_index, "spark join merge", k=5, prefilter=pre)
+    assert count_jobs(spark, df.collect) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final_tree = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final_tree
+    assert final_tree.count("FileScan parquet") == 1
+    assert "Join" not in plan
+
+
+def test_mmr_request_runs_at_most_three_jobs(spark, served_index):
+    """MMR: one candidate job, driver-local pair scoring, then the context
+    aggregate over the k selected rows."""
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import rag_query
+
+    n = count_jobs(
+        spark,
+        lambda: rag_query(
+            served_index, "spark join merge", k=5, diversity="mmr"
+        ).collect(),
+    )
+    assert n <= 3
+
+
+def test_mmr_pair_sims_plan_as_local_relation(spark):
+    """The pair-similarity frame is an Arrow-built LocalRelation (never a
+    PythonRDD-backed LogicalRDD), so its projection folds at plan time
+    and collects without a job."""
+    from pyspark.sql.types import ArrayType, FloatType
+
+    from building_a_rag_pipeline_with_airflow_spark.operators import retrieval
+
+    vecs = [[1.0, 0.0], [0.6, 0.8], [0.0, 1.0]]
+    pairs = retrieval._pair_sims_frame(spark, vecs, ArrayType(FloatType()))
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+    assert count_jobs(spark, pairs.collect) == 0
+    assert sorted(tuple(r) for r in pairs.collect()) == [
+        (0, 1, 0.6),
+        (0, 2, 0.0),
+        (1, 2, 0.8),
+    ]
+
+
+def test_mmr_requests_pin_no_rdds(spark, sf_dir, served_index):
+    """No MMR entry point leaves a persisted RDD behind after its collect."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import retrieval
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import rag_query
+
+    emb = schemas.load_table(spark, sf_dir, "embeddings")
+    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
+    calls = {
+        "rag_query": lambda: rag_query(
+            served_index, "spark join merge", k=5, diversity="mmr"
+        ),
+        "mmr_rerank": lambda: retrieval.mmr_rerank(
+            served_index, "spark join merge", k=5
+        ),
+        "mmr_topk": lambda: retrieval.mmr_topk(
+            emb, qvec, k=5, fetch_k=20, id_col="vec_id"
+        ),
+    }
+    jsc = spark.sparkContext._jsc.sc()
+    for name, call in calls.items():
+        before = jsc.getPersistentRDDs().size()
+        call().collect()
+        assert jsc.getPersistentRDDs().size() == before, name
+
+
 def test_cluster_safe_split_is_one_join_no_window(spark, sf_dir):
     """The split is a single left equi-join plus a map-side md5 predicate:
     no window, no cartesian, no extra shuffle beyond the join itself."""
@@ -937,6 +1030,6 @@ def test_sentence_window_broadcasts_hits(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    # the only Window in the plan is retrieve_chunks' k-row rank join,
+    # the only Window in the plan is retrieve_chunks' k-row rank window,
     # never one over the chunk corpus: no corpus-side Window before agg
     assert plan.count("Window") <= 1
