@@ -709,6 +709,24 @@ def dsir_importance_weights(
     )
 
 
+def _nb_token_buckets(
+    df: DataFrame, src: str, out: str, text_col: str, n_buckets: int
+) -> DataFrame:
+    """``(out, b)`` rows, one per token of each non-blank ``text_col``,
+    md5-hashed into ``n_buckets`` — the naive-Bayes featurization, shared
+    by :func:`nb_domain_classify` and the streamed NB gate
+    (``streaming.ingest.streaming_nb_update``) so both bucket alike."""
+    ex = df.where(F.length(F.trim(F.col(text_col))) > 0).select(
+        F.col(src).alias(out),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("_w"),
+    )
+    b = (
+        F.conv(F.substring(F.md5("_w"), 1, 15), 16, 10).cast("bigint")
+        % F.lit(int(n_buckets))
+    ).alias("b")
+    return ex.select(out, b)
+
+
 def nb_domain_classify(
     labeled_df: DataFrame,
     score_df: DataFrame,
@@ -744,20 +762,9 @@ def nb_domain_classify(
     if alpha <= 0:
         raise ValueError("alpha must be > 0 (unsmoothed probs hit ln(0))")
 
-    def _tok(df: DataFrame, src: str, out: str) -> DataFrame:
-        ex = df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-            F.col(src).alias(out),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("_w"),
-        )
-        b = (
-            F.conv(F.substring(F.md5("_w"), 1, 15), 16, 10).cast("bigint")
-            % F.lit(int(n_buckets))
-        ).alias("b")
-        return ex.select(out, b)
-
-    lab_tok = _tok(labeled_df, label_col, "_lbl")
+    lab_tok = _nb_token_buckets(labeled_df, label_col, "_lbl", text_col, n_buckets)
     require_nonempty(lab_tok.limit(1), "nb labeled tokens")
-    sc_tok = _tok(score_df, id_col, id_col)
+    sc_tok = _nb_token_buckets(score_df, id_col, id_col, text_col, n_buckets)
     a, bsz = float(alpha), float(n_buckets)
 
     cls_tok = lab_tok.groupBy("_lbl", "b").agg(

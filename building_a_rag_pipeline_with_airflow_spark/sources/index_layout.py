@@ -107,20 +107,12 @@ def _conform_to_existing(
     of storage is at stake. ``stored_schema`` lets a caller that has
     already read the layout's schema (the IVF extender reads it for the
     _codes probe) skip the duplicate parquet footer listing."""
-    spark = rows.sparkSession
-    if stored_schema is not None:
-        stored = {f.name: f.dataType for f in stored_schema.fields}
-    else:
-        try:
-            stored = {
-                f.name: f.dataType
-                for f in spark.read.parquet(path).schema.fields
-            }
-        except AnalysisException as exc:
-            err = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-            if "PATH_NOT_FOUND" not in err:
-                raise
+    if stored_schema is None:
+        existing = _read_or_none(rows.sparkSession, path)
+        if existing is None:
             return rows
+        stored_schema = existing.schema
+    stored = {f.name: f.dataType for f in stored_schema.fields}
     incoming = {f.name: f.dataType for f in rows.schema.fields}
     exempt = set(skip) | {"_batch_id"}
     narrowed = [
@@ -176,6 +168,32 @@ def write_index_rows(
     (:func:`_conform_to_existing`)."""
     if extend:
         rows = _conform_to_existing(rows, path, skip=partition_cols)
+    _write_tagged(
+        rows, path, batch_id, partition_cols=partition_cols,
+        sort_col=sort_col, n_files=n_files, coalesce=coalesce,
+        dynamic=extend,
+    )
+
+
+def _write_tagged(
+    rows: DataFrame,
+    path: str,
+    batch_id: int,
+    *,
+    partition_cols: Sequence[str] = (),
+    sort_col: "str | None" = None,
+    n_files: "int | None" = None,
+    coalesce: "int | None" = None,
+    dynamic: bool = True,
+) -> None:
+    """THE ``_batch_id`` writer: tag ``rows`` with ``batch_id`` and write
+    them partitioned by ``partition_cols`` plus ``_batch_id``. With
+    ``dynamic`` (every streaming write) the overwrite is per partition,
+    so a replayed batch id replaces exactly its own rows; without it the
+    whole of ``path`` is replaced (base builds, compaction outputs).
+    Writes exactly what it is given — type conformance against the
+    stored layout is :func:`write_index_rows`' job, so a gate writing its
+    own partials pays no schema read."""
     out = rows.withColumn("_batch_id", F.lit(int(batch_id)))
     if n_files and partition_cols:
         out = out.repartition(int(n_files), partition_cols[0])
@@ -184,7 +202,7 @@ def write_index_rows(
     if coalesce:
         out = out.coalesce(int(coalesce))
     writer = out.write.mode("overwrite")
-    if extend:
+    if dynamic:
         writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.partitionBy(*partition_cols, "_batch_id").parquet(path)
 
@@ -199,19 +217,27 @@ def read_meta(spark: SparkSession, path: str):
     return spark.read.parquet(f"{path}/meta").first()
 
 
-def read_meta_or_none(spark: SparkSession, path: str):
-    """:func:`read_meta`, returning ``None`` when the meta does not exist
-    yet (a gate's first invocation). Only PATH_NOT_FOUND means "fresh
-    state"; any other read failure (corrupt footer, permissions)
-    propagates — the streaming_psi guard rule, shared by every
-    frozen-contract gate instead of hand-rolled per gate."""
+def _read_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
+    """``spark.read.parquet(path)``, or ``None`` when nothing has been
+    written there yet: the path is missing (PATH_NOT_FOUND) or holds no
+    parquet file (UNABLE_TO_INFER_SCHEMA). Any other read failure
+    (corrupt footer, permissions) propagates — swallowing it would let a
+    first-invocation branch overwrite frozen state. The one
+    missing-path rule of the index and gate families."""
     try:
-        return read_meta(spark, path)
+        return spark.read.parquet(path)
     except AnalysisException as exc:
         err = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-        if "PATH_NOT_FOUND" not in err:
+        if "PATH_NOT_FOUND" not in err and "UNABLE_TO_INFER_SCHEMA" not in err:
             raise
         return None
+
+
+def read_meta_or_none(spark: SparkSession, path: str):
+    """:func:`read_meta`, returning ``None`` when the meta does not exist
+    yet (a gate's first invocation) — :func:`_read_or_none`'s rule."""
+    meta = _read_or_none(spark, f"{path}/meta")
+    return None if meta is None else meta.first()
 
 
 def publish_index(spark: SparkSession, manifest_path: str, index_path: str) -> int:
@@ -228,17 +254,10 @@ def publish_index(spark: SparkSession, manifest_path: str, index_path: str) -> i
     Publishing is a single-writer maintenance operation, like the
     rebuild itself — two concurrent publishers could mint the same
     version number. Returns the new version."""
-    try:
-        prev = (
-            spark.read.parquet(manifest_path)
-            .agg(F.max("version").cast("int").alias("v"))
-            .first()["v"]
-        )
-    except AnalysisException as exc:
-        err = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
-        if "PATH_NOT_FOUND" not in err:
-            raise
-        prev = None
+    manifest = _read_or_none(spark, manifest_path)
+    prev = None
+    if manifest is not None:
+        prev = manifest.agg(F.max("version").cast("int").alias("v")).first()["v"]
     version = (prev or 0) + 1
     spark.createDataFrame(
         [(version, index_path)], "version int, index_path string"

@@ -522,7 +522,7 @@ def test_connected_components_broadcast_equals_shuffle(spark, sf_dir):
         + [(200, 200 + i) for i in range(1, 6)],
         "id_a long, id_b long",
     )
-    for edges in (chain.unionByName(shapes),):
+    for edges in (chain, shapes, chain.unionByName(shapes)):
         bc = {
             (r.node, r.component)
             for r in dedup.connected_components(edges, max_iter=50).collect()

@@ -769,11 +769,16 @@ def test_ivf_null_vectors_never_enter_the_index(spark, tmp_path):
 def test_blocked_cosine_tile_cap_output_invariant(spark, sf_dir):
     """r17 (ADVICE r16): past the partition bound, block-pair tiles share
     partitions instead of scheduling B(B+1)/2 single-tile tasks. Output
-    must be invariant — force a tile count past the cap (B=40 → 820
-    tiles > max(8·parallelism, 256) here) and pin pair-for-pair equality
-    with a small-B run."""
+    must be invariant — force a tile count past the cap
+    max(8·defaultParallelism, 256) and pin pair-for-pair equality with a
+    small-B run. B is derived from this host's cap (at least 40), so
+    the capped branch runs on any core count."""
     from building_a_rag_pipeline_with_airflow_spark.operators import similarity
 
+    cap = max(8 * spark.sparkContext.defaultParallelism, 256)
+    # smallest B with B(B+1)/2 > cap
+    n_blocks = max(40, (math.isqrt(8 * cap + 1) - 1) // 2 + 1)
+    assert n_blocks * (n_blocks + 1) // 2 > cap
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     lo = sorted(
         map(tuple, similarity.blocked_cosine_pairs(
@@ -781,6 +786,6 @@ def test_blocked_cosine_tile_cap_output_invariant(spark, sf_dir):
     )
     hi = sorted(
         map(tuple, similarity.blocked_cosine_pairs(
-            emb, threshold=0.4, n_blocks=40).collect())
+            emb, threshold=0.4, n_blocks=n_blocks).collect())
     )
     assert lo == hi and lo

@@ -17,6 +17,11 @@ stream — so the mechanics are pinned ONCE, for all gates at once:
    mutated baseline / contract / bucketing RAISES instead of silently
    mixing partial definitions.
 
+Two further legs run over every gate that has the shape: the init-crash
+self-heal (artifact written, meta not yet) for the gates that freeze an
+artifact before meta, and the zero-batch read for every reader (a
+started gate whose stream delivered only an empty file).
+
 Each gate keeps its own deeper individual tests (soak, schema edge
 cases); this file is the cross-gate mechanics net that catches the NEXT
 gate's wiring bug once, like the index family's contract test did.
@@ -364,45 +369,127 @@ def test_sketch_report_arbitrary_grain_and_baseline_guard(spark, sf_dir, tmp_pat
         )
 
 
-def test_sketch_gate_self_heals_from_init_crash(spark, sf_dir, tmp_path):
-    """First-invocation writes go baseline FIRST, meta LAST — so a crash
-    between the two leaves state (baseline only, no meta) that the next
+def _split_spec(spark, sf_dir):
+    from building_a_rag_pipeline_with_airflow_spark.operators import sampling
+
+    docs = schemas.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # families of 3 consecutive ids, over the even ids only
+    comp = docs.where(F.col("doc_id") % 2 == 0).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        (F.col("doc_id") - F.col("doc_id") % 3).cast("string").alias("component"),
+    )
+    cols = ("doc_id", "split_key", "split")
+    return dict(
+        b1=docs.where(F.col("doc_id") % 3 == 1),
+        b2=docs.where(F.col("doc_id") % 3 == 2),
+        schema="doc_id bigint, text string",
+        start=lambda raw, state, ck: ingest.streaming_cluster_safe_split(
+            raw, comp, state, ck, eval_fraction=0.3
+        ),
+        expected=lambda df: _rows(
+            sampling.cluster_safe_split(
+                df.withColumn("doc_id", F.col("doc_id").cast("string")),
+                comp, eval_fraction=0.3,
+            ),
+            cols,
+        ),
+        fold=lambda state: _rows(ingest.read_split_assignments(spark, state), cols),
+    )
+
+
+def _stamp_spec(spark, sf_dir):
+    prod = spark.createDataFrame(
+        [(i, round(0.025 + (i % 20) / 20.0, 3)) for i in range(60)],
+        "doc_id bigint, p double",
+    )
+    fit = spark.createDataFrame(
+        [(round(0.05 + (i % 10) / 10.0, 2), 1 if i % 10 >= 6 else 0)
+         for i in range(50)],
+        "p double, y int",
+    )
+    cols = ("doc_id", "cal", "keep")
+    kw = dict(min_precision=0.8, n_bins=10, decimals=2)
+    return dict(
+        b1=prod.where(F.col("doc_id") % 2 == 0),
+        b2=prod.where(F.col("doc_id") % 2 == 1),
+        schema="doc_id bigint, p double",
+        start=lambda raw, state, ck: ingest.streaming_classifier_stamp(
+            raw, fit, state, ck, **kw
+        ),
+        expected=lambda df: _rows(
+            curation.classifier_gate(
+                df, fit, "p", "y", cal_col="cal", keep_col="keep", **kw
+            )[0],
+            cols,
+        ),
+        fold=lambda state: _rows(ingest.read_stamped_assignments(spark, state), cols),
+    )
+
+
+def _incremental_agg_spec(spark, sf_dir):
+    ev = schemas.load_table(spark, sf_dir, "events").select("event_type", "value")
+    cols = ("event_type", "n", "min_v", "max_v")
+    return dict(
+        b1=ev.where(F.col("value") < 50),
+        b2=ev.where(F.col("value") >= 50),
+        schema="event_type string, value double",
+        start=lambda raw, state, ck: ingest.streaming_incremental_agg(raw, state, ck),
+        expected=lambda df: _rows(
+            df.groupBy("event_type").agg(
+                F.count("*").alias("n"),
+                F.min("value").alias("min_v"),
+                F.max("value").alias("max_v"),
+            ),
+            cols,
+        ),
+        fold=lambda state: _rows(ingest.read_incremental_agg(spark, state), cols),
+    )
+
+
+# the gates that freeze an artifact BEFORE meta (baseline sample,
+# component map, stamp mapping): the init-crash ordering is pinned for each
+_ARTIFACT_GATES = {
+    "sketch": ("baseline", _sketch_spec),
+    "split": ("components", _split_spec),
+    "stamp": ("mapping", _stamp_spec),
+}
+
+
+@pytest.mark.parametrize("gate", sorted(_ARTIFACT_GATES))
+def test_sketch_gate_self_heals_from_init_crash(spark, sf_dir, tmp_path, gate):
+    """First-invocation writes go artifact FIRST, meta LAST — so a crash
+    between the two leaves state (artifact only, no meta) that the next
     invocation treats as fresh and re-initializes, instead of the
     pre-fix failure mode (orphaned meta -> every restart reads the
-    missing baseline and dies on PATH_NOT_FOUND forever)."""
+    missing artifact and dies on PATH_NOT_FOUND forever)."""
     import shutil
 
-    from building_a_rag_pipeline_with_airflow_spark.operators import sketch
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    ev = schemas.load_table(spark, sf_dir, "events").select("event_id", "value")
-    baseline = ev.where(F.col("event_id") % 3 == 0)
-    b1 = ev.where(F.col("event_id") % 3 == 1)
+    artifact, spec = _ARTIFACT_GATES[gate]
+    ctx = spec(spark, sf_dir)
     src = tmp_path / "src"
     src.mkdir()
+    ctx["b1"].coalesce(1).write.parquet(str(src / "d1"))
+
+    def run(state, ckpt):
+        raw = spark.readStream.schema(ctx["schema"]).parquet(f"{src}/*")
+        assert ctx["start"](raw, state, ckpt).awaitTermination(120)
+
+    # a complete initialization elsewhere supplies the artifact bytes
+    whole = str(tmp_path / "whole")
+    run(whole, str(tmp_path / "ck_whole"))
+    # Simulate the mid-init crash: artifact written, meta not yet.
     state = str(tmp_path / "state")
-    b1.coalesce(1).write.parquet(str(src / "d1"))
+    shutil.copytree(f"{whole}/{artifact}", f"{state}/{artifact}")
 
-    # Simulate the mid-init crash: baseline written, meta not yet.
-    sketch.bottomk_sample(baseline, "value", "event_id", 64).coalesce(
-        1
-    ).write.parquet(f"{state}/baseline")
-
-    raw = spark.readStream.schema("event_id bigint, value double").parquet(f"{src}/*")
-    q = ingest.streaming_quantile_sketch(
-        raw, baseline, "value", "event_id", state, str(tmp_path / "ck"), k=64
+    run(state, str(tmp_path / "ck"))
+    # healed: the same meta a clean first invocation froze, and the fold
+    # is the batch operator over the delivered rows
+    assert index_layout.read_meta(spark, state) == index_layout.read_meta(
+        spark, whole
     )
-    q.awaitTermination(120)
-    assert int(index_layout.read_meta(spark, state)["k"]) == 64  # healed
-    got = {
-        (r["event_id"], r["_prio"])
-        for r in ingest.read_sketch_sample(spark, state).collect()
-    }
-    exp = {
-        (r["event_id"], r["_prio"])
-        for r in sketch.bottomk_sample(b1, "value", "event_id", 64).collect()
-    }
-    assert got == exp
+    assert ctx["fold"](state) == ctx["expected"](ctx["b1"])
     shutil.rmtree(str(tmp_path / "ck"), ignore_errors=True)
 
 
@@ -738,3 +825,90 @@ def test_compact_gate_state_refuses_uri_alias_of_live_state(spark, tmp_path):
             ingest.compact_duplication_state(spark, str(state), alias)
     with pytest.raises(ValueError, match="fresh directory"):
         ingest.compact_duplication_state(spark, f"file://{state}", str(state))
+
+
+def _outcome(fn):
+    """``fn()``, or ValueError when it raises one. Any other exception —
+    a raw AnalysisException [PATH_NOT_FOUND] above all — propagates and
+    fails the test."""
+    try:
+        return fn()
+    except ValueError:
+        return ValueError
+
+
+def _psi_trend_spec(spark, sf_dir):
+    cols = ("batch_id", "n_rows", "psi")
+    return dict(
+        _psi_spec(spark, sf_dir),
+        fold=lambda state: _rows(ingest.read_psi_trend(spark, state), cols),
+        expected=lambda df: [],  # a per-batch series over no batch
+    )
+
+
+def _sketch_report_spec(spark, sf_dir):
+    from building_a_rag_pipeline_with_airflow_spark.operators import sketch
+
+    ev = schemas.load_table(spark, sf_dir, "events").select("event_id", "value")
+    base = sketch.bottomk_sample(
+        ev.where(F.col("event_id") % 3 == 0), "value", "event_id", 64
+    )
+    cols = ("bin", "n_base", "n_new", "psi_contrib")
+    return dict(
+        _sketch_spec(spark, sf_dir),
+        fold=lambda state: _rows(ingest.read_sketch_report(spark, state), cols),
+        expected=lambda df: _rows(
+            sketch.sketch_psi(
+                base, sketch.bottomk_sample(df, "value", "event_id", 64), "value"
+            ),
+            cols,
+        ),
+    )
+
+
+# every gate reader: SPECS' folds plus the readers no SPECS entry covers
+_ZERO_BATCH_SPECS = {
+    **SPECS,
+    "incremental_agg": _incremental_agg_spec,
+    "split": _split_spec,
+    "stamp": _stamp_spec,
+    "psi_trend": _psi_trend_spec,
+    "sketch_report": _sketch_report_spec,
+}
+# readers whose frozen state holds enough to build the batch operator's
+# empty-input answer, so they must return it rather than refuse
+_ZERO_BATCH_ANSWERED = {
+    "calibration", "duplication", "expectations", "psi_trend", "sketch",
+    "split", "threshold",
+}
+
+
+@pytest.mark.parametrize("gate", sorted(_ZERO_BATCH_SPECS))
+def test_zero_batch_readers_answer_like_the_batch_operator(
+    spark, sf_dir, tmp_path, gate
+):
+    """A STARTED gate whose landing directory held only an empty parquet
+    file has frozen state but no partials. Every reader then returns
+    what its batch operator returns over the empty accumulated stream,
+    or raises a ValueError saying no non-empty batch has arrived (where
+    the state cannot build that answer, or the batch operator itself
+    refuses empty input) — never a raw AnalysisException."""
+    ctx = _ZERO_BATCH_SPECS[gate](spark, sf_dir)
+    src = tmp_path / "src"
+    src.mkdir()
+    empty = ctx["b1"].limit(0)
+    empty.coalesce(1).write.parquet(str(src / "d1"))
+    assert len(list((src / "d1").glob("*.parquet"))) == 1
+    state = str(tmp_path / "state")
+    raw = spark.readStream.schema(ctx["schema"]).parquet(f"{src}/*")
+    assert ctx["start"](raw, state, str(tmp_path / "ck")).awaitTermination(120)
+
+    want = _outcome(lambda: ctx["expected"](empty))
+    got = _outcome(lambda: ctx["fold"](state))
+    # a reader may refuse (no frozen schema to answer with), but it never
+    # invents an answer the batch operator refuses to give
+    assert got is ValueError or (want is not ValueError and got == want), (
+        got, want,
+    )
+    if gate in _ZERO_BATCH_ANSWERED:
+        assert got == want != ValueError
