@@ -169,23 +169,37 @@ def upsert_documents(
     old-or-new per bucket (parquet has no multi-partition transaction —
     the same visibility contract as every dynamic-overwrite sink here);
     a table format (Delta/Iceberg) would make the swap atomic without
-    changing this plan."""
+    changing this plan.
+
+    The affected buckets are those of the changed doc ids, not of their
+    fresh chunks: a document revised to blank text has no chunks, and its
+    old ones must still go. A bucket left with no rows at all is absent
+    from the dynamic overwrite's output, so the write would keep its old
+    files; such a bucket directory is deleted after the write."""
     bucket_of = F.pmod(
         F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)
     ).cast("int")
-    fresh = build_index(changed_docs, strategy=strategy, dim=dim).withColumn(
-        "doc_bucket", bucket_of
-    )
+    changed_ids = changed_docs.select("doc_id").distinct()
     affected = sorted(
         r.doc_bucket
-        for r in fresh.select("doc_bucket").distinct().collect()
+        for r in changed_ids.select(bucket_of.alias("doc_bucket")).distinct().collect()
     )  # bucket ids — metadata-scale driver list, becomes the partition filter
     if not affected:
         return []
-    changed_ids = changed_docs.select("doc_id").distinct()
+    fresh = build_index(changed_docs, strategy=strategy, dim=dim).withColumn(
+        "doc_bucket", bucket_of
+    )
     current = spark.read.parquet(path).where(F.col("doc_bucket").isin(affected))
     kept = current.join(F.broadcast(changed_ids), "doc_id", "left_anti")
     out = kept.unionByName(fresh.select(*kept.columns))
+    # one current file per affected bucket: a rewritten bucket loses it
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    pattern = f"{path.rstrip('/')}/doc_bucket={{{','.join(map(str, affected))}}}/*"
+    probe_file = {
+        st.getPath().getParent().getName(): st.getPath().toString()
+        for st in fs.globStatus(Path(pattern)) or []
+    }
     (
         out.repartition(len(affected), "doc_bucket")
         .write.mode("overwrite")
@@ -193,6 +207,10 @@ def upsert_documents(
         .partitionBy("doc_bucket")
         .parquet(path)
     )
+    for name in probe_file.values():
+        stale = Path(name)
+        if fs.exists(stale):  # not rewritten: no row of this bucket is left
+            fs.delete(stale.getParent(), True)
     return affected
 
 

@@ -466,14 +466,14 @@ def start_postings_extender(
     hand-copied ``write_batch`` bodies, now the single implementation
     the module docstring promises. Per batch:
 
-    1. skip empty batches; read the frozen build meta;
+    1. read the frozen build meta;
     2. ``derive_rows(batch_df, meta)`` explodes the batch to posting
        rows (must contain ``key_col``); a narrow eager
        ``localCheckpoint`` pins them (three downstream references);
-    3. a NON-empty batch can still derive to zero rows (all-blank
-       docs, every doc under the frozen k...) — skip WITHOUT flipping
-       the index off its pushed-predicate fast path, releasing the
-       checkpoint either way (a stream of such batches must not leak
+    3. a batch that derives to zero rows (an empty batch, all-blank
+       docs, every doc under the frozen k...) is skipped WITHOUT
+       flipping the index off its pushed-predicate fast path, releasing
+       the checkpoint either way (a stream of such batches must not leak
        one pinned RDD per batch);
     4. flip ``meta.extended`` BEFORE the rows land (``flip_meta_df``
        builds the index's meta row) — the family crash-ordering rule: a
@@ -496,8 +496,6 @@ def start_postings_extender(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         meta = read_meta(spark, index_path)
         rows = derive_rows(batch_df, meta).localCheckpoint(eager=True)

@@ -15,6 +15,15 @@ def count_jobs(spark, fn) -> int:
     return scheduler.nextJobId() - before
 
 
+def count_compiles(spark, fn) -> int:
+    """Number of classes Janino compiles while ``fn()`` runs (code
+    generation cache misses)."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = timer.getCount()
+    fn()
+    return timer.getCount() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     from building_a_rag_pipeline_with_airflow_spark import get_spark

@@ -226,6 +226,52 @@ def test_upsert_documents_rewrites_only_affected_buckets(spark, sf_dir, tmp_path
         assert os.path.getmtime(p) == mtimes_before[p], f"rewrote {p}"
 
 
+def test_upsert_documents_removes_chunks_of_emptied_documents(spark, sf_dir, tmp_path):
+    """A document revised to blank text has no fresh chunks; its bucket is
+    still rewritten, and a bucket left with no rows at all loses its
+    directory. Upserting it together with a grown document leaves the
+    index equal to a rebuild of the revised corpus."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import (
+        build_index,
+        read_index_bucketed,
+        upsert_documents,
+        write_index_bucketed,
+    )
+
+    n_buckets = 64
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+    path = str(tmp_path / "bucketed_index")
+    write_index_bucketed(build_index(docs), path, n_doc_buckets=n_buckets)
+    bucket_of = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
+    sizes = docs.groupBy(bucket_of.alias("b")).agg(
+        F.min("doc_id").alias("doc_id"), F.count("*").alias("n")
+    )
+    alone = sizes.where("n = 1").orderBy("doc_id").first()
+    shared = sizes.where("n > 1").orderBy("doc_id").first()
+    assert alone and shared, "test needs a bucket of one document and one of more"
+    grown = docs.where(~F.col("doc_id").isin([alone.doc_id, shared.doc_id])).first().doc_id
+
+    emptied = [alone.doc_id, shared.doc_id]
+    changed = docs.where(F.col("doc_id").isin([grown] + emptied)).withColumn(
+        "text",
+        F.when(F.col("doc_id") == grown, F.concat(F.col("text"), F.lit(" more "), F.col("text")))
+        .otherwise(F.lit("")),
+    )
+    affected = upsert_documents(spark, path, changed, n_doc_buckets=n_buckets)
+    assert {alone.b, shared.b} <= set(affected)
+
+    revised = docs.where(~F.col("doc_id").isin([grown] + emptied)).unionByName(changed)
+    cols = ("chunk_id", "doc_id", "text")
+    want = sorted(tuple(r) for r in build_index(revised).select(*cols).collect())
+    got = sorted(tuple(r) for r in read_index_bucketed(spark, path).select(*cols).collect())
+    assert got == want
+    assert not glob.glob(f"{path}/doc_bucket={alone.b}")
+
+
 def test_layout_report_audits_files_and_spans(spark, sf_dir, tmp_path):
     from building_a_rag_pipeline_with_airflow_spark import schemas
     from building_a_rag_pipeline_with_airflow_spark.sources import io as sio

@@ -1,6 +1,7 @@
-"""``session.local_frame``: driver-side rows as an Arrow-built LocalRelation."""
+"""Session set-up: ``session.local_frame`` (driver-side rows as an
+Arrow-built LocalRelation) and the code generation cache."""
 
-from conftest import count_jobs
+from conftest import count_compiles, count_jobs
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.session import local_frame
@@ -54,3 +55,16 @@ def test_local_frame_keeps_collected_timestamps(spark, monkeypatch):
     finally:
         monkeypatch.undo()
         time.tzset()
+
+
+def test_codegen_cache_holds_more_than_100_query_shapes(spark):
+    """A long-lived session re-running a cycle of more than 100 stage
+    shapes (one ingest drop cycle is ~95 compiles) must find every one
+    of them in the code generation cache the second time round."""
+
+    def run_shapes():
+        for i in range(150):
+            spark.range(4).selectExpr(f"id * {i + 2} + {i} AS x").where(f"x > {i}").collect()
+
+    assert count_compiles(spark, run_shapes) >= 150
+    assert count_compiles(spark, run_shapes) == 0
