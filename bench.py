@@ -1,715 +1,31 @@
-"""Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: times the engine's HEADLINE registry rows and
+prints the result as JSON lines.
 
-Methodology (since r3): 3 INTERLEAVED rounds over the whole headline list
-in one shared session; ``queries`` holds the per-query MEDIAN (plan build +
-execution + collect of the small result) and ``value`` is the sum of
-medians. ``cold_queries`` keeps the first-run (cold) time. Rationale: with
-n=1 in a shared session, a query's number absorbs whatever the previous
-query left behind (JIT, Python worker churn, GC) — r2's apparent
-`doc_quality_scores` 2.7× "regression" was exactly that: isolated runs
-showed 0.11 s warm / 1.1 s cold, and reordering the two Python-UDF chunkers
-before/after it moved the n=1 reading between 1.5 s and 2.4 s with an
-identical physical plan. And the runs are interleaved rather than
-back-to-back because this VM shows sporadic multi-second scheduling spikes
-(same plan, 0.25 s → 5.4 s): three consecutive runs share the spike's
-wall-clock window, three spread runs don't, so the median survives it.
+Method: one shared Spark session on ``local[$SPARK_GRAFT_CPUS]`` first
+builds the four session-cached durable indexes (untimed, reported as
+``index_warmup_s``), then runs the whole HEADLINE list in INTERLEAVED
+rounds, so a host-side noise burst lands on one run of a query rather
+than all of them. Each query's number is the median of its runs (plan
+build + execution + collect of the small result); a round that would
+not fit the wall-clock budget is skipped. One
+``curate_corpus_gated_audit`` run follows as the end-to-end curation
+tail.
 
-Output contract: a verbose JSON line (cold times + methodology) first, then
-the canonical compact line {"metric", "value", "unit", "queries", "sf"}
-LAST — the driver archives only the final ~2000 chars of stdout, and in r3
-the medians were printed first and truncated away. The last line is the one
-that must survive.
+Environment:
 
-Noise calibration (r3, judge-measured): the same commit benched 105.3 s
-concurrent with the pytest suite vs 67.4 s solo — a 1.56× swing on
-identical plans within one hour. Round-over-round totals are NOT comparable
-without solo runs; only per-query deltas that concentrate (rather than
-spread uniformly across unchanged JVM-only plans) indicate a plan
-regression.
+* ``SPARK_GRAFT_SF_DIR``: data directory (default: the sf0.1 test data);
+* ``SPARK_GRAFT_CPUS``: local cores (read by ``session.get_spark``);
+* ``SPARK_GRAFT_BENCH_RUNS``: interleaved rounds (default 3);
+* ``SPARK_GRAFT_BENCH_BUDGET_S``: wall-clock budget for warm-up plus
+  rounds (default 480).
 
-r5 noise watch (judge directive #8, mixture_reweight_documents): isolated
-re-profile at sf0.1 on the r5 code — cold 5.3 s, warm 1.4/1.5/1.9 s across
-three repeats, matching the r3 solo median (1.99 s) on the unchanged plan.
-The 3.0 s (r4) / ~5.7 s (r5 interim, partially concurrent with pytest)
-interleaved medians are session-neighborhood inflation (the headline list
-itself has grown past 90 entries), not a plan regression. Number recorded
-here either way, as directed.
-
-r6 noise watch CLOSED (judge directive #3, dedup_clusters_documents,
-4.77 -> 4.8 -> 5.5 s drift across r3/r4/r5 interleaved medians): isolated
-solo re-profile at sf0.1 on the r6 code — cold 11.1 s, warm 4.3/4.1/3.4 s
-across three repeats (median 4.1 s), back UNDER the r3 reading on the
-unchanged plan. The drift was session-neighborhood inflation (the r5 round
-added two 5-9 s cluster queries adjacent in the headline list), not a plan
-regression. Verdict: noise; watch closed.
-
-r7 noise watches CLOSED (r6 judge directive #5, chunk_recursive_documents
-1.3 -> 2.5 s and cooccur_recommend_parts 1.8 -> 2.8 s interleaved-median
-swings on plans untouched in r6): isolated solo re-profiles at sf0.1 on
-the r7 code — chunk_recursive cold 5.2 s, warm 1.46/1.28/1.22 (median
-1.28, matching its r5 reading); cooccur_recommend cold 4.19 s, warm
-2.19/1.81/1.86 (median 1.86, matching its r5 reading). Both r6
-interleaved medians were session-neighborhood inflation (the two
-Python-UDF / MLlib-ALS-adjacent rows are the repo's most
-neighbor-sensitive, per the r2 calibration above). Verdict: noise on
-both; true warm numbers recorded here so future rounds compare against
-these, not the interleaved swings.
-
-Curation composition (judge directive #7): the full `curate_corpus`
-end-to-end cost is measured ONCE per bench run and printed as its own tail
-line ("curate_corpus_e2e_s" through r13; "curate_corpus_gated_e2e_s" — the
-5-stage gated lineage — since r14) right before the compact line — visible every
-round without spending 3 interleaved headline slots (~30 s/run, the budget
-rationale above the headline list stands). The r8 `release_cycle_report`
-capstone stays OUT of HEADLINE for the same budget rule: it runs the
-curation composition TWICE per call (two releases) plus two publishes and
-a diff — its cost is the curate_corpus_e2e tail line ×2 plus small
-constant, already tracked; the driver's sf0.01 correctness row (~16 s)
-is its per-round evidence.
-
-r9 notes:
-
-* NEW headline row substring_dedup_documents (the Lee et al. 2021
-  ExactSubstr rung, k=8): ~1.2 s warm at sf0.1 in a quiet session
-  (measured at landing). Scale curve, both decades, via
-  scripts/scale_check_r9.py (token-suffix organic replicas so
-  dup-window mass grows linearly): 5x data -> 1.60x full / 1.09x
-  spans-only; 25x data -> 3.48x full / 4.40x spans-only (2.61 ->
-  9.08 s full, 1.55 -> 6.82 s spans in one session) — the windows ->
-  count-agg -> equi-join -> per-doc-islands plan is linear as designed,
-  with fixed session overhead dominating the base point; no cliff, no
-  further stage split needed.
-* r9 CLOSING quiet-window run: 147.9 s total vs r8's published 141.4 —
-  net of the new substring_dedup row (2.6 s) the comparable surface is
-  flat; the only >0.5 s mover on an untouched plan (pagerank 7.1->8.9)
-  oscillates 5.2-9.5 across sessions per the noise record below.
-* Mid-round the host ran HOT and UNSTABLE: three bench runs of
-  identical code read 184 / 165 / 297 s total, with the inflation
-  spread uniformly across untouched JVM-only plans (q4 0.8->1.3, q21
-  1.9->3.0, pagerank 7.1->9.5 in the 184 s run), and the same
-  substring_dedup query measured 1.2 s in a morning session vs
-  2.8-3.7 s later — same commit, same plan: host-side contention, the
-  r3 calibration pattern at larger amplitude. Solo re-profiles of the
-  movers showed no query-level regression of r9's making
-  (jaccard_index_pairs 1.9 solo warm vs r8's 2.0 published;
-  mixture_reweight_documents 1.4 vs 1.5 after its plan-identical
-  refactor). Trust per-query deltas only against same-session
-  neighbors; the driver's interleaved-median run is the number of
-  record.
-
-r10 notes:
-
-* One-story rule (r9 verdict "what's wrong" #1): the r9 number of
-  record is BENCH_r09.json's 140.6 s (driver interleaved-median run).
-  The 147.9 s closing quiet-window reading logged below was a
-  builder-side observation in a session the host-instability record
-  already covers; the published number supersedes it.
-* Rolling-hash tier, measured where it matters
-  (scripts/scale_check_r10.py, ~1000-token glued docs so k=50 windows
-  exist; spans-only, warm best-of-2, one session): k=50 rolling 3.6 s
-  vs md5 5.9 s (the O(n) per-token scheme wins exactly where the
-  O(n·k) concat constant bites); k=8 the two tiers tie within noise —
-  which is why the headline registry rows (k=8) are expected to read
-  nearly identical. A doc-partitioned window-function formulation of
-  the rolling scan measured SLOWER than md5 (8.8 s at k=50, the
-  WindowExec sort tax) and was dropped; negative result kept in the
-  UDF docstring.
-* FOUR new headline rows this round, ~+6 s of genuinely new work per
-  round (builder-side solo run at landing, 145.1 s total vs the r9
-  published 140.6 — flat net of the new rows):
-  substring_index_spans 0.7 s warm median / 7.2 s cold incl. the
-  one-time session index build (the from-index row the r9 verdict
-  asked for — the pushed-h_count fast path reads ~3x faster than its
-  2.2 s in-plan twin); substring_dedup_rolling 2.9 s
-  (output-identical to the 2.2 s md5 row; at k=8 the tiers tie within
-  noise as predicted — the k=50 win is the scale-check note above);
-  duplication_profile_documents 1.3 s;
-  trigram_search_parts_from_index 1.1 s (vs 1.1 s in-plan at this
-  corpus size — the sf0.1 part table collapses to only 64 DISTINCT
-  names, so the two paths tie; scripts/scale_check_r10_trigram.py
-  measures where the index pays: at 64k names in-plan 2.7 s vs
-  from-index 1.3 s, at 320k names 10.7 s vs 2.6 s — the in-plan
-  re-gram-explode grows 4.0x over that 5x step while the pruned
-  postings read grows 2.1x; build once 9.6/16.5 s).
-  Compare r10's published total against r9 net of these; the
-  early-stop budget logic may drop the third interleaved round as the
-  roster grows — 2-round medians are the documented fallback (r8
-  precedent). These five rows are PINNED out of the compact line's
-  _others fold so their medians survive in the archived line.
-* r10 CLOSING builder-side observation (after the review-fix commit —
-  NULL-gram trigram semantics, shared ExactSubstr count subplan): solo
-  run 136.8 s total, every touched row flat or better (trigram in-plan
-  1.0 / from-index 0.9, substring md5 1.9 / rolling 2.7 / from-index
-  0.7, duplication profile 1.6). Observation only — the r10 number of
-  record is whatever BENCH_r10.json publishes (one-story rule; quote
-  it in the r11 note once known).
-
-r11 notes:
-
-* One-story rule: the r10 number of record is BENCH_r10.json's
-  149.5 s (driver interleaved-median run). The 136.8 s closing reading
-  logged above was a builder-side observation; the published number
-  supersedes it.
-* mixture_reweight_documents noise watch CLOSED (r10 verdict
-  "what's wrong" #1 — the published 3.9 s on a plan untouched since
-  r9): solo re-profile at sf0.1 on the r11 code
-  (scripts/scale_check_r11.py, own session): cold 0.69 s, warm
-  0.60/0.53/0.52 s; the r11 closing builder bench read 1.4 s
-  interleaved median — matching the r9 1.2 s record. Host noise
-  confirmed; watch closed.
-* NEW headline row rank_eval_ndcg_mrr ~1.4 s (per-customer NDCG@5 /
-  MRR@5 over orders: two bounded per-query passes + one hash agg).
-* The three r11 lifecycle rows (jaccard_pairs_consolidated_index,
-  trigram_search_parts_consolidated, duplication_profile_streamed) are
-  NOT in HEADLINE (roster note above the list): their read plans are
-  identical to already-benched siblings. The maintenance op itself,
-  measured at sf0.1 (scripts/scale_check_r11.py, half-corpus build +
-  streamed other half): shingle extended-mode query 3.31 s →
-  consolidate 12.2 s one-time → consolidated query 1.41 s (the
-  in-plan recount tax is ~1.9 s/query, so consolidation pays for
-  itself in ~7 queries); trigram 1.24 s → 10.3 s → 0.95 s. Context:
-  the half-corpus shingle build itself is 14.1 s and the streamed
-  extension 9.0 s, so consolidation costs about one re-build — what it
-  buys over re-building is reading ONLY the stored postings (no corpus
-  re-tokenization) plus the manifest swap.
-* r11 LATE additions (same one-story rule — BENCH_r11.json remains the
-  number of record): two headline rows joined after the closing
-  observation below — epoch_shard_plan_orders (~1.6 s cold: one shuffle
-  + per-shard window) and mixture_interleave_documents (~0.9 s cold:
-  grouped prefix-count rank, one data-scale shuffle). Two late solo
-  builder runs also landed 272.7 s / 318.2 s totals — both were ONE
-  all-cold round (the 480 s budget early-stop fired after round 1; the
-  318 was additionally concurrent with a review fleet), with the four
-  session-cached index BUILDS inside the timed round
-  (jaccard_index_pairs 17.7 published ≈ 15 s build + read; targeted
-  warm solos on the same code: jaccard 2.3-2.7, substring_index_spans
-  0.9, line_dedup 3.5-4.0, ngram_jaccard 3.1-4.3 — all at their
-  records, so no plan regressed). Structural fix, not a shrug: the
-  warmup phase now PRE-BUILDS the four session-cached indexes (builds
-  are eager at query-call time) and prints index_warmup_s, so even a
-  1-round session publishes read-cost medians — the roster's stated
-  intent. Expect BENCH_r11.json's from-index rows to read as reads,
-  whatever the host mood.
-* Post-fix solo validation run (still a noisy-host session, 1 round,
-  221.2 s): warmup pre-build 41 s, and the from-index rows now publish
-  as reads even in that 1-round session — jaccard_index_pairs 3.5,
-  substring_index_spans 1.0, bm25_batch 1.6, trigram_from_index 1.2;
-  new rows epoch_shard 1.8 / mixture_interleave 2.0 / rank_eval 1.7.
-  Scale curve for the two order operators
-  (scripts/scale_check_r11_order.py, orders re-keyed 5x/25x): 150k
-  rows 0.77/0.90 s → 3.75M rows 1.38/1.84 s — 25x data at ~2x wall,
-  linear with amortizing overheads, and bucket_chars/n_shards knob
-  changes leave the assignment byte-identical (content-addressed).
-  One burst row in that run: line_dedup_documents 36.4 on an untouched
-  plan — immediate solo re-profile read 11.4 cold / 4.0 / 3.8 warm
-  (the record), the documented 5-10x scheduling-spike signature, same
-  class as the r9 184/165/297 record. The host was unstable throughout
-  this session's closing runs; the driver's BENCH_r11.json is the
-  number of record.
-* FINAL quiet-session validation (host calmed, post-warmup-fix code):
-  2-round medians returned, total 166.2 s — every watch row at its
-  record (jaccard_index_pairs 2.5, substring_index_spans 1.0,
-  line_dedup 3.0, mixture_reweight 2.5, rank_eval 1.3, epoch_shard
-  0.6, mixture_interleave 0.4 warm). The same code read 272.7 s
-  (1 round, all-cold, pre-fix) and 221.2 s (1 round, post-fix) in the
-  noisy window above — the 166.2/272.7 spread on identical plans is
-  the session-noise amplitude to keep in mind when adjudicating
-  BENCH_r11.json, which remains the number of record.
-* r11 CLOSING builder-side observation: solo run 141.0 s total vs the
-  r10 published 149.5 — net of the new rank_eval row (+1.4) the
-  comparable surface reads ~10 s FASTER, spread across the usual
-  noise-sensitive rows (mixture 3.9→1.4 adjudicated above,
-  embedding_dup_clusters 8.6→7.5, pagerank 7.3→6.2, ngram_jaccard
-  3.5→2.4, dedup_clusters 4.2→3.6, jaccard_index 2.3→1.7) —
-  consistent with the 136.8 s quiet r10 closing reading, i.e. the r10
-  published total carried session noise, not a regression this round
-  un-did. One mover the other way: substring_index_spans 1.4→2.0 —
-  this run's budget early-stop yielded 2-round medians, so the
-  first-call session index build (cold 7.3 s) still weighs on the
-  median; warm solo stays ~0.7 s per the r10 note. The r11 number of
-  record is whatever BENCH_r11.json publishes (quote it in the r12
-  note).
-
-r12 notes:
-
-* One-story rule: the r11 number of record is BENCH_r11.json's
-  144.5 s (vs r10's 149.5, with four new rows added — net comparable
-  surface ~5 s faster per the r11 verdict's adjudication).
-* pagerank_supplier_cosupply noise watch (r11 verdict "what's wrong"
-  #1 — published 8.3 s vs r10's 7.3 on a plan untouched since r7):
-  directed solo re-profile at sf0.1 on the r12 code, own session:
-  cold 14.0 s, warm 8.9 / 7.1 / 7.4 s. The warm reading sits inside
-  the documented 6.2–8.9 s oscillation band this row has shown across
-  sessions on identical code (r8 note: 7.6 interleaved vs 5.2/6.7
-  solo; r11: 8.3 published vs 6.2 closing solo). Host-noise amplitude
-  confirmed, no plan change indicated — watch closed; the row stays
-  the ledger's largest recurring swing and any future >9 s reading
-  should trigger a plan profile, not another solo.
-* NEW headline row calibrate_binned_orders (measured solo at sf0.1:
-  5.7 s cold / ~1.9 s warm): histogram-binning calibration fit on
-  even-key orders + broadcast bin-lookup apply to the odd-key holdout
-  + 10-row re-audit agg — three pruned scans of orders (the corpus-max
-  normalizer, the fit half, the probe half) and three ≤10-row aggs.
-* Gate-state compaction (r11 directive #3) measured at sf0.1, own
-  session: the two-batch streamed duplication state (documents split
-  even/odd doc_id, k=8, bands 2/3/10) folds 10 state files into the
-  2-file base in 1.5 s; read_duplication_profile reads warm
-  1.03-1.26 s uncompacted (2 batches) vs 1.09-1.28 s compacted —
-  statistically flat at TWO batches, as expected. The batch-count
-  curves (scripts/scale_check_r12.py + the duplicated-stream variant
-  in the r12 log, both at sf0.1, best-of-3 warm folds, fold ≡
-  compacted asserted at every checkpoint): (a) corpus SPLIT into
-  2/4/8/12 batches — fold flat at 0.8-1.1 s, because total partial
-  rows ≈ corpus distinct hashes regardless of split (near-unique
-  hashes land in exactly one batch's partials); (b) the SAME corpus
-  arriving 2/4/8/16 times (the all-duplicate stream the gate exists
-  to surface — partials grow linearly, ~16× rows at 16 batches):
-  uncompacted fold 1.06 → 1.28 s while the compacted fold stays
-  1.1-1.2 s, and compact_once grows 1.6 → 2.5 s (it reads the same
-  accumulated partials). Honest reading: at sf0.1-local the fold is
-  dominated by fixed job overhead, so the measured gap at 16 batches
-  is ~10-20%; the mechanism the op removes is the linear partial-row
-  growth itself, which compounds at production batch counts and
-  cross-batch duplication factors where the scan term, not the
-  scheduler, dominates. The replay guard adds zero read-path cost
-  (one meta column).
-* Scale spot-check for the two new r12 eval operators (orders
-  replicated 5×/25× with disjoint keys, localCheckpoint-pinned input,
-  best-of-3 warm, own session): threshold_curve (2dp grid) 0.57 s at
-  5× → 0.64 s at 25× (3.75M rows), calibrate+re-audit 1.13 → 1.19 s —
-  flat, as the shapes predict: the only per-row work is the map-side
-  round/bin + hash agg; the window (threshold) runs over ≤101 grid
-  rows and the apply join broadcasts ≤10 mapping rows regardless of
-  corpus size.
-* r12 CLOSING builder-side observation (quiet host, warmup 40.1 s,
-  interleaved medians): total 162.8 s vs the r11 closing 141.0 on a
-  roster that added ONE row (calibrate_binned_orders 1.3 s) — the
-  ~20 s spread is across untouched JVM-only plans (dedup_clusters
-  3.6→5.2, winnow 2.1, pagerank 9.2 vs the same-session solo 7.1-7.4
-  above, embedding_dup_clusters 7.9), the classic session-neighborhood
-  signature, not any plan change (this round touched no benched plan
-  except adding the calibration row). An earlier same-code run that
-  overlapped the test suite's tail read 228.0 s / 1 all-cold round —
-  discarded per the one-story rule; the r12 number of record is
-  whatever BENCH_r12.json publishes (quote it in the r13 note).
-* Late-session host degradation, for the BENCH_r12 adjudication: four
-  same-day builder runs on near-identical code read 162.8 → 228.0 →
-  237.7 → 268.8 s total, monotonically worsening over ~3 h with every
-  untouched JVM-only row inflating together (embedding_dup_clusters
-  7.9→12.2, pagerank 9.2→10.8; the late runs also collapsed to ONE
-  all-cold round as the slower rounds blew the 480 s budget). Identical
-  plans, idle load at each start — the documented session-noise
-  amplitude at its widest. The 162.8 s quiet reading above remains the
-  closing observation; if BENCH_r12.json lands high, compare per-row
-  against that run before suspecting any plan.
-
-r13 notes:
-
-* One-story rule: the r12 number of record is BENCH_r12.json's
-  153.9 s (adjudicated host-side by the r12 verdict: +3.9% spread
-  thin across ~60 untouched JVM-only plans, no concentration).
-* SOLO ANCHOR TABLE published (r12 judge directive #3):
-  SOLO_ANCHOR_r13.json at the repo root — every headline row's
-  best-of-3 warm SOLO (1 untimed warm pass + 3 timed back-to-back
-  runs, keep the min; noise only inflates) in ONE quiet session on
-  r13 code, generated by scripts/solo_anchor.py. Anchor total
-  150.1 s over 123 rows, zero errors. Future rounds classify a
-  >0.5 s interleaved-median mover in one lookup against this table
-  instead of re-litigating scattered ledger notes; re-anchor a row
-  only when its plan actually changes. Known anchor-vs-interleaved
-  spread, same hour, same code: embedding_dup_clusters 10.4 anchor
-  vs 6.5 interleaved (back-to-back runs of the O(n²) job share GC
-  pressure that interleaving spreads out) and pagerank 7.9 anchor
-  vs 7.5 interleaved — both inside their documented bands; the
-  anchor's value is row-over-ROUND comparison on one methodology,
-  not agreement with the interleaved number.
-* pagerank_supplier_cosupply: 7.5 s interleaved / 7.9 s solo anchor
-  this round — inside the 6.2-8.9 band on the unchanged plan; the
-  r12 rule stands (>9 s triggers a plan profile).
-* NEW headline row classifier_gated_curation (3.8 s interleaved,
-  3.6 s solo anchor at sf0.1): NB train+score (the benched
-  nb_lang_classify shape at binary labels) + algebraic-sigmoid map +
-  binned-calibration fit + precision-floor threshold pick + gated
-  production slice — the fit/threshold stages are driver-side
-  metadata collects over a narrow lazily-checkpointed scored frame;
-  without the cut the NB re-ran 4x (6.3 s, measured; the
-  phash/r8 recompute rule applied at the caller).
-* Scale spot-check for the two new r13 operator families
-  (scripts/scale_check_r13.py at sf0.1, best-of-3 warm, own session,
-  fold ≡ batch asserted at every checkpoint): (a) streaming
-  threshold-curve gate — the scored orders split into 2/4/8/16
-  micro-batches, read_threshold_curve fold flat at 0.44-1.08 s
-  (state is ≤101 grid rows × batches, metadata-scale as contracted;
-  compacted fold 0.40-0.64 s, compact_once 0.69-1.33 s — file
-  hygiene, not read cost, is the payoff here); (b) capstone at
-  1×/5×/25× replicated documents (disjoint ids, checkpoint-pinned
-  scored frame): score stage 0.18 → 0.39 s (the data-scale scan),
-  gate stages FLAT 1.56 → 1.72 s — the calibration mapping, curve,
-  pick, and verdict join are metadata-scale regardless of corpus
-  size, exactly the split the operator docstrings claim.
-* r13 CLOSING builder-side observation (quiet host, warmup 43.3 s,
-  2-round early-stop medians): total 167.8 s with
-  curate_corpus_e2e_s reading 118.2 at the session tail — solo
-  re-profile minutes later on identical code: 42.6 cold /
-  27.2 / 28.3 warm (normal band). The 118 s is the documented
-  session-tail host degradation, not a plan change (this round's
-  diff touches no curation stage the composition runs). The r13
-  number of record is whatever BENCH_r13.json publishes; adjudicate
-  per-row against SOLO_ANCHOR_r13.json first.
-
-r14 notes:
-
-* SOLO-ANCHOR MAINTENANCE PROTOCOL (r13 judge directive #3, the r14+
-  rule of record): re-anchor ONLY rows whose physical plan actually
-  changed that round — one quiet session, the same
-  1-untimed-warm + best-of-3 method scripts/solo_anchor.py documents —
-  and APPEND the re-anchored rows to the anchor file with the old and
-  new values side by side (never rewrite unchanged rows: a
-  fully-regenerated table re-samples every row's noise and decays the
-  anchor into a second interleaved ledger). Rows whose plans are
-  untouched keep their existing anchor verbatim, whatever the current
-  session would read. A NEW headline row gets its first anchor the
-  round it lands, in the same quiet session as any re-anchors. The
-  protocol is EXECUTABLE: ``python scripts/solo_anchor.py <N> --only
-  rowA,rowB`` re-measures just those rows, carries everything else
-  verbatim from the latest anchor table, and stamps each re-anchored
-  row with reanchored_r + prev_solo_best3 (old/new side by side).
-* r14 re-anchor audit: ZERO rows owed — this round's diff (classifier
-  gate error attribution, the audit_checksum opt-in, the 5-stage
-  composition oracle, the rotation tables) touches no benched row's
-  plan; classifier_gated_curation's Spark plan is byte-untouched (only
-  its DuckDB oracle string gained the loud-fail pick).
-  SOLO_ANCHOR_r13.json remains the anchor table of record.
-* Curation tail swap: the per-round end-to-end composition timing now
-  runs curate_corpus_gated_audit (JSON key curate_corpus_gated_e2e_s)
-  — the 5-stage gates → classifier gate → dedup → decontamination →
-  mixture lineage with per-stage id_xor audit — superseding the
-  4-stage curate_corpus_audit tail (a strict subset; its stages remain
-  individually benched as headline rows). Cost delta ~+4 s on the
-  ~28 s composition (the NB score pass is the benched nb_lang_classify
-  shape; the gate stages are metadata-scale). Round-over-round: compare
-  gated-vs-gated from r14 on; the last 4-stage reading is r13's
-  curate_corpus_e2e_s.
-* Capstone scale check at the REAL deployment shape (r13 judge
-  directive #4; scripts/scale_check_r14.py at sf0.1, best-of-3 warm,
-  own session): the labeled holdout FIXED at 1× (1000 docs, natural
-  4.9% positive rate — never rebalanced) while production replicates
-  1×/5×/25× (disjoint ids): score stage 0.08 → 0.19 s (the data-scale
-  scan), fit+threshold-pick FLAT 1.02/0.79/0.86 s (they only ever see
-  the fixed holdout), production stamp 0.36/0.27/0.29 s (broadcast
-  bin-lookup + map), threshold 1.0 and flagged = 42×mult at every
-  scale — the 0.9 precision floor stays reachable at skew, no
-  empty-bin or unreachable-floor path triggered.
-
-* r14 CLOSING builder-side observation (quiet host, full 3-round
-  interleaved medians): total 146.6 s over 123 rows; the 61-row
-  common roster vs BENCH_r13's published compact line reads 121.6 →
-  113.8 s (−6%, spread across untouched JVM-only plans — the quiet-host
-  side of the session-noise band, nothing concentrated), with zero
-  >0.5 s upward movers (largest: ivf_topk_cosine +0.26 s, inside its
-  band). curate_corpus_gated_e2e_s first reading: 27.73 s (vs the
-  r13 4-stage tail's 27.2-28.3 warm band +  the predicted ~+4 s NB/gate
-  increment netting against this session's quieter dedup stages). The
-  r14 number of record is whatever BENCH_r14.json publishes;
-  adjudicate per-row against SOLO_ANCHOR_r13.json (still the anchor
-  table of record — zero plans changed).
-
-r17 notes (optimization round 2 of 2):
-
-* One-story rule: the r16 number of record is BENCH_r16.json's
-  153.87 s (60-row roster; 5 improved rows = exactly the 5 r16-touched
-  plans; the 23 "regressions" were adjudicated by the r16 verdict as
-  one-sided host drift on untouched plans). SOLO_ANCHOR_r16's
-  embedding_dup_clusters/nb rows were taken on the degraded host (r16
-  verdict "what's wrong" #3) — r17 re-anchors them (SOLO_ANCHOR_r17,
-  maintenance pass) together with the two rows whose plans r17 changed
-  (gopher_quality_flags, duplication_profile_documents — the
-  capture-free zip_with bigram form, see OPTIMIZATION_r17.md #1).
-* r17 baseline on this round's host: 194.2 s total /
-  curate_corpus_gated_e2e_s 39.73 — the host reads ~25-30 % over the
-  driver's r16 session on byte-identical code, so every r17 claim is an
-  adjacent same-session A/B, not a cross-round total.
-* The big r17 change is invisible to the headline roster by
-  construction: curate stage 1's `keep`-filtered gates frame paid an
-  O(tokens²) pushdown-inlined re-split (20.0 s vs 0.8 s unfiltered at
-  sf0.1) that only the curate tail runs — after the capture-free bigram
-  fix the tail reads ~13-18 s warm (39.73 baseline this host; the
-  historical 27-35 s band on quieter hosts should drop proportionally).
-  Expect curate_corpus_gated_e2e_s, NOT the headline total, to carry
-  this round's improvement.
-* No HEADLINE roster change, no timed-region change, no methodology
-  change this round.
-* r17 CLOSING builder-side observation (same host as the 194.2 s
-  baseline, 900 s budget): total 185.4 s with curate_corpus_gated_e2e_s
-  15.36 s (vs 39.73 baseline — the touched-plan win); per-row movers
-  two-sided on untouched plans (winnow −1.3 / media_phash +2.9 in one
-  run), the usual session-noise signature. The r17 number of record is
-  whatever BENCH_r17.json publishes; adjudicate per-row against
-  SOLO_ANCHOR_r17.json (which re-anchors gopher_quality_flags 1.89,
-  duplication_profile_documents 1.665 — the two r17 plan changes — and
-  replaces the r16 host-degraded embedding_dup_clusters 13.47 anchor
-  with 4.666 and nb_lang_classify 1.846 with 1.58) and
-  SOLO_ANCHOR_r13.json for everything else.
-
-r16 notes:
-
-* Legacy tail-key alias DROPPED as scheduled (r15 notes committed the
-  drop; VERDICT r15 "What's wrong" #1 made it the follow-through): the
-  compact tail now emits ONLY curate_corpus_gated_e2e_s. Any consumer
-  still parsing curate_corpus_e2e_s breaks this round, by design — the
-  r15 round was the documented one-round migration window.
-* r16 re-anchor audit: ZERO rows owed — this round's diff (the r16
-  rotation tables, the stamp-state compaction wrapper
-  compact_stamp_state — offline maintenance, no benched plan reads it
-  — the read_stamped_assignments cross-batch dedup hardening, and the
-  awaitTermination guards in tests) touches no benched row's physical
-  plan. SOLO_ANCHOR_r13.json remains the anchor table of record. The
-  late-r16 family-wide compaction coverage (compact_nb_state /
-  compact_sketch_state / compact_split_state + the writers'
-  compacted_through skip guards) is the same class: offline
-  maintenance plus a no-op guard (fresh states read compacted_through
-  = -1), with the split read's dedup mirroring the stamp's; none of
-  these paths appear in a benched plan (the streamed lifecycle rows
-  are excluded from HEADLINE by the documented budget rules, and the
-  duplication gate's writer is untouched).
-* Stamp-compaction scale check (scripts/scale_check_r16.py at sf0.1,
-  own quiet session; deterministic hash-derived scores, batches
-  produced via maxFilesPerTrigger=1 so the per-restart constant
-  doesn't swamp the axis): batch-COUNT axis at fixed 125k verdict
-  rows — uncompacted read 0.71 s at 16 files -> 0.90 s at 64 files
-  (the per-file listing/open tax compaction exists to stop; linear in
-  file count, so ~10^5 batches is minutes of pure listing), compacted
-  read flat 0.34-0.55 s at ONE base file either way, compaction
-  itself 1.2-1.9 s. row-SCALE axis at fixed 16 batches — compaction
-  flat at ~0.85 s for 5k/25k/125k rows (constant-dominated; the fold
-  is a verbatim narrow-row rewrite, no shuffle) with the compacted
-  read flat ~0.26 s. Post-compaction, a new batch under the original
-  checkpoint lands beside the base and the read sees it (replay
-  no-op + read parity pinned in tests/test_streaming.py).
-* r16 CLOSING builder-side observation (full 3-round interleaved
-  medians, 62 rows): total 200.2 s vs r15's published 149.17 — but
-  ZERO rows concentrated: median per-row ratio vs SOLO_ANCHOR_r13 is
-  1.39 with the inflation spread uniformly across small (<=3 s)
-  JVM-only rows whose plans are byte-untouched this round (the r16
-  diff touches no benched plan — rotation tables, offline compaction
-  wrapper, unbenched read dedup, tests, docs). Immediate same-host
-  solo re-probe of the six biggest movers (warm best-of-3):
-  km_time_to_purchase 0.85 (interleaved 1.3, anchor 0.454),
-  threshold_curve_orders 0.73 (1.6, 0.57), psi_price_drift 1.18
-  (2.5, 0.971), ks_price_drift 1.31 (2.9, 1.144), winnow_fingerprints
-  0.87 (2.7, 1.154 — BELOW anchor), q21 1.37 (3.3, 1.503 — below
-  anchor): the interleaved swings collapse toward or below anchors
-  the moment the session neighborhood is removed — the r3/r14
-  adjudicated session-inflation pattern on a loaded host (this run
-  followed a 176-query sweep + two scale-check sessions). The r16
-  number of record is whatever BENCH_r16.json publishes; adjudicate
-  per-row against SOLO_ANCHOR_r13.json first, as always.
-
-r15 notes:
-
-* BENCH_r14 ADJUDICATION (r14 judge directive #4, the r3 105.3-vs-67.4
-  precedent recorded next to the number): the published 214.98 s
-  headline is a SESSION-INFLATED outlier on byte-unchanged plans, not
-  a regression. Three independent confirmations, all on record: (1)
-  the judge's own quiet-ish re-measurements of every >2×-anchor row —
-  pagerank_supplier_cosupply 6.0/6.39/6.51 s warm best-of-3 (published
-  41.3, solo anchor 7.93), anomaly_zscore 0.76 (1.5/0.48),
-  interval_join 0.71 (1.5/0.571), fuzzy_match 0.82 (1.6/0.711),
-  ivf_topk_cosine_kmeans 2.46 (4.1/1.936) — all in-band; (2) git diff
-  shows zero benched plan changed in r14 (operators/graph.py
-  byte-untouched since r5); (3) the r14 closing builder run above
-  (146.6 s total, common roster −6% vs r13). Compare r15 numbers
-  against SOLO_ANCHOR_r13.json per row, NOT against BENCH_r14's
-  inflated session; no re-anchor owed for the adjudication itself.
-* r15 re-anchor audit: ZERO rows owed — this round's diff (the gated
-  release-cycle row, the streamed classifier stamp, the stamp-core
-  factoring in curation.classifier_gate, the rotation tables, the
-  solo_anchor --only guards, the audit-checksum null-id assertion)
-  touches no benched row's physical plan. classifier_gated_curation's
-  plan is identical under the stamp_with_gate + fit_gate_operating_point
-  + _nb_dup_scores factorings (pure code motion: same expressions,
-  verified by value-identical oracle parity at sf0.001/sf0.01). The
-  audit rows (curate_corpus_audit / curate_corpus_gated_audit — the e2e
-  tail) now release their discarded kept/scored checkpoints after the
-  audit collects: post-collect session hygiene, zero plan change.
-  SOLO_ANCHOR_r13.json remains the anchor table of record.
-* NEW rows release_cycle_gated_report and classifier_stamp_streamed
-  are deliberately NOT in HEADLINE:
-  - release_cycle_gated_report runs the GATED curation composition
-    TWICE per call (two releases) plus two publishes, a diff, and an
-    independent gate pass — the release_cycle_report budget rule. Its
-    cost is the curate_corpus_gated_e2e_s tail line ×2 plus small
-    constant, already tracked; the driver's sf0.01 correctness row
-    (~40 s on a loaded host, both engines value-matching all 13
-    report rows) is its per-round evidence.
-  - classifier_stamp_streamed is a lifecycle row: its stamp plan IS
-    classifier_gated_curation's production stamp (broadcast ≤10-row
-    bin lookup + map, already benched); the streaming wrapper is the
-    one-time build→drain mechanics, measured once at sf0.1 on landing:
-    27.0 s session build (NB train+score dominates, the benched
-    nb_lang_classify shape), 0.45 s warm fold read, 1000 verdicts,
-    42 keeps — identical to the capstone's flagged count, as the
-    shared-core construction requires.
-* Tail-line transition: the compact tail emits BOTH
-  curate_corpus_gated_e2e_s and the legacy curate_corpus_e2e_s alias
-  (same value) for THIS round only (ADVICE r14 — downstream consumers
-  of the old key get one round to migrate); r16 drops the alias.
-* r15 CLOSING builder-side observation (quiet host, full 3-round
-  interleaved medians, 900 s budget): total 153.7 s over 62 rows —
-  back in the r13-published band (156.4 s) after r14's adjudicated
-  214.98 s outlier session, with ZERO rows reading >2× their
-  SOLO_ANCHOR_r13 row (>0.5 s materiality filter; pagerank included).
-  curate_corpus_gated_e2e_s 31.13 s this session vs 28.65/28.97/27.73
-  in other r15/r14 sessions — top of the gated band, session noise on
-  an unchanged composition (the checkpoint-release edit is
-  post-collect). The r15 number of record is whatever BENCH_r15.json
-  publishes; adjudicate per-row against SOLO_ANCHOR_r13.json first.
-* Streamed-stamp scale check (scripts/scale_check_r15.py at sf0.1, own
-  quiet session): batch-COUNT axis — the 1000-doc production slice
-  drained as 1/4/16 micro-batches reads 14.2s single-drain vs ~3-4s
-  per later drain at k=4 and k=16 (first drain carries the one-time
-  fit+freeze; later drains pay only the per-restart refit-and-verify
-  constant + micro-batch startup), with batch 16 ≈ batch 2 — NO growth
-  with accumulated state, as the no-fold design requires. batch-SIZE
-  axis — one drain at 1000/5000/25000 rows reads 12.4/12.3/12.9s:
-  flat, the constant dominates and the stamp itself (broadcast
-  ≤10-row lookup + map) is invisible at these sizes. State after every
-  run: 1 mapping file (≤10 rows) + the verdict rows themselves —
-  output-only, nothing evolves.
-
-r8 real cost changes (own them; everything else in the r8 closing run
-moved with the session-noise pattern of the r3 calibration — spread
-across untouched JVM-only plans, 2-round early-stop medians):
-
-* table_diff_orders_snapshots 1.2 -> 1.7 s (BENCH_r08 interleaved
-  median; the closing solo run read ~2.4 s — same plan, session
-  neighborhood): the operator now ENFORCES its primary-key contract by
-  default (two key-only column-pruned aggregates per call — a
-  duplicated key, including duplicated NULLs, fans the null-safe
-  full-outer join out many-to-many and silently mis-counts the delta).
-  assume_unique_keys=True skips the checks when uniqueness is gated
-  upstream; the registry row keeps the default because the default IS
-  the operator's honest cost.
-* mmr_rerank_embeddings ~1.0 s: new row (fetch_k=20 candidate cut +
-  20x20 pair sims + driver-side greedy, see operators/retrieval.py).
-
-The three largest OTHER movers in that closing run were solo
-re-profiled per protocol — all noise: pagerank 7.6 interleaved vs
-5.2/6.7 solo warm (r7: 6.5), media_phash 3.7 vs 2.7/3.0 solo (earlier
-r8 best-of-2: 3.2), k_core 3.5 vs 2.1/2.4 solo (r7: 2.5). Verdict:
-session-neighborhood inflation on unchanged plans, watches closed.
-
-r7 scale-curve spot check (r6 judge directives #1/#6, COMPLETE): one-off
-5x ORGANIC replication of sf0.1 (scripts/scale_curve.py — replica-disjoint
-keys/content so dedup pair structure doesn't inflate quadratically; see
-its docstring), best-of-2 after per-scale warmup, one session:
-
-  query                         sf0.1      5x   ratio
-  ngram_jaccard_pairs            2.04    4.59    2.25
-  dedup_clusters_documents       3.58    6.29    1.76
-  line_dedup_documents           3.25    4.62    1.42
-  media_phash_near_dups (c=1)    2.05   12.42    6.06  <- cliff, fixed below
-  bm25_batch_topk_documents      1.18    1.25    1.06
-  embedding_dup_clusters_lsh     3.38  243.96   72.2   <- cliff, fixed below
-  pagerank_supplier_cosupply     5.77    7.19    1.25
-  trigram_search_parts           1.09    1.12    1.03
-
-Six of eight rows grow at or below ~2.3x on 5x data (fixed session
-overhead still dominates at this scale) — the salting/banding/prefix-sum
-designs hold. The two superlinear rows are both CHANCE-COLLISION cliffs
-in banded candidate generation; both were diagnosed and their mitigations
-MEASURED on the same 5x data (scripts/scale_curve_mitigations.py):
-
-  phash c=1 @sf0.1 / @5x          2.29 / 13.77   (6.0x — repro)
-  phash c=2 @sf0.1 / @5x          3.03 /  3.33   (1.1x — mitigated)
-  lsh planes=8  @sf0.1 control    4.95
-  lsh planes=12 @5x re-tuned     15.73           (3.2x growth vs 72x)
-
-* media_phash_near_dups: single-8-bit-band candidates grow as
-  ~C(n,2)*n_bands*2^-8 — quadratic chance collisions. Fixed STRUCTURALLY:
-  phash_near_dups(min_shared_bands=2) keys candidates on band PAIRS
-  (16 effective bits over C(8,2)=28 combos); the exact pair set is
-  unchanged (pigeonhole: hamming<=6 leaves >=2 clean bands of 8 —
-  equality pinned by test) and the registry query now uses it: 5x data
-  costs +10% instead of +500%.
-* embedding_dup_clusters_lsh: at threshold 0.4, 8-plane sign-LSH bands
-  pass ~2*2^-8 of RANDOM pairs, so fresh corpus mass makes candidates
-  O(n^2 * 2^-planes); the percolated candidate graph also exceeds the CC
-  20-round diameter cap (raised only for the scale row — the production
-  cap raising loudly is correct). Mitigation is PARAMETRIC, the standing
-  LSH contract: planes-per-band scales ~2*log2(n) to hold the collision
-  budget; planes=12 at 5x cuts the row 15.5x. Recorded as the production
-  tuning rule (like IVF re-clustering as the corpus grows), not a code
-  change — recall at a fixed threshold is a banding-parameter budget.
-  (Since enforced in code: similarity.check_plane_budget, the r8 guard.)
-
-25x pass (r7 judge directive #6; scripts/scale_curve_25x.py — one more
-decade on the two mitigated cliffs, where chance-collision effects
-compound; single timed run after session warmup, n_emb=50k,
-n_media=125k):
-
-  row                              sec
-  phash c=2 @25x (as first run)  45.01   <- diagnosed below; 9.09 fixed
-  lsh planes=16 @25x (guard-ok) 263.75
-  lsh planes=12 @25x (rejected) 271.73
-
-Both rows were DIAGNOSED with a stage-split instrumentation run rather
-than recorded at face value — each found something real:
-
-* phash c=2: the banding itself holds one decade up — on pre-hashed
-  input the whole matcher (candidates + hamming verify + 737,764 output
-  pairs: the token-suffix replicas form genuine 25-clique near-dup
-  families) runs in 10 s, and hashing 125k payloads is 4.7 s of linear
-  Arrow-batched work. The 45 s was the REGISTRY QUERY re-running the
-  DCT hash stage per input reference of phash_near_dups (bucket-size
-  agg + both self-join sides = 3 runs): fixed with a narrow (id, hash)
-  lazy checkpoint between the stages (pinned blocks are 8 bytes/row,
-  the CC returned-labels precedent). Re-measured with the fix,
-  best-of-2, collect() protocol: sf0.1 3.23 s / 5x 3.78 s / 25x 9.09 s
-  — 2.8x wall for 25x data, most of it collecting the 737k true pairs.
-* lsh: the plane-budget guard bounds exactly what it claims — the
-  CANDIDATE mass (measured 12.2M compliant vs 43.0M rejected, the
-  rejected config ~86% chance collisions; candidate stage 13.0 s vs
-  47.2 s) — but at THIS corpus's threshold the wall-times equalize
-  because verified-edge work dominates both: the md5-uniform fresh mass
-  passes cos>=0.4 on ~3e-3 of random candidates (the synthetic vectors
-  are far noisier at that threshold than real embeddings at ~0.9), so
-  38k-88k chance-VERIFIED edges feed the exact-cosine shuffle (174 s /
-  190 s incl. candidate regen) and percolate CC (91 s at 3,098
-  components vs 188 s at 196 — the rejected config's graph collapses
-  toward giant components). Banding can only buy back the chance
-  CANDIDATE term; pair density at the threshold is the corpus's own.
-  The guard's scope note (similarity.check_plane_budget docstring)
-  records this. Two side effects of this pass landed as fixes: the
-  Catalyst sizeInBytes overflow past ~27 CC rounds (stats-capped
-  checkpoints, see connected_components) and the phash checkpoint above.
-
-r7-family scale spot check (scripts/scale_curve_r7.py, same organic
-5x replication rules as the r6 curve; best-of-2 after per-scale warmup,
-one session):
-
-  query                         sf0.1      5x   ratio
-  expectations_orders            0.67    0.67    1.00
-  table_diff_orders_snapshots    1.03    1.75    1.69
-  dsir_weights_documents         1.54    1.69    1.10
-  nb_lang_classify_documents     1.79    2.18    1.22
-  embedding_drift_snapshots      0.67    0.67    1.01
-
-All five at or under 1.7x on 5x data — the single-agg / broadcast-model
-/ one-key-join shapes hold (session overhead still dominates); no
-hidden all-pairs or corpus-scale window in the r7 family.
-
-r7 headline-roster note: SIX new rows joined the list this round
-(bloom_prefilter_supplier_revenue ~1.4 s, expectations_orders ~0.8 s,
-table_diff_orders_snapshots ~1.1 s, dsir_weights_documents ~1.8 s,
-nb_lang_classify_documents ~2.1 s, embedding_drift_snapshots <1 s) —
-about +7 s of genuinely new work. Compare the headline TOTAL across
-rounds net of these, or per-query; a total moving from ~136 s (r6
-roster) to ~137-143 s (r7 roster) is the roster change, not a
-regression.
+Output, in this order: ``{"index_warmup_s"}``; a verbose line with cold
+times, 3-dp medians and the methodology; ``{"curate_corpus_gated_e2e_s"}``;
+and LAST the compact line ``{"metric", "value", "unit", "queries",
+"sf"}``, where ``value`` is the sum of medians. Only the tail of stdout
+is archived, so the compact line must come last and stay within 1,880
+chars: medians drop to 1 dp, then the cheapest rows fold into
+``_others`` until it fits.
 """
 
 from __future__ import annotations
@@ -766,36 +82,22 @@ HEADLINE = [
     "dedup_clusters_documents",
     "pack_training_sequences",
     "mixture_reweight_documents",
-    # corpus_release_report / curate_corpus_audit are deliberately NOT
-    # benched: even after the r5 stage-checkpoint fix (each curation
-    # stage now runs ONCE — 240 s -> 35.5 s at sf0.1, measured) the
-    # composition still costs ~30 s/run, ~20% of the bench budget over
-    # three rounds; correctness lives in CORRECTNESS_r{N}, and each
-    # stage's cost is benched individually (gopher/dedup_clusters/
-    # decontaminate/mixture rows above).
-    # cross_encoder_rerank_documents is deliberately NOT benched: ~95%
-    # of its cost is the flagship build_index chunk+embed path, already
-    # covered by the chunker and embedding rows above; the rerank stage
-    # itself is a fetch_k(=5)-row pandas_udf — sub-100ms, invisible at
-    # headline granularity. Its per-round evidence is the driver's
-    # sf0.01 correctness row (full value oracle).
+    # corpus_release_report / curate_corpus_audit are NOT benched: the
+    # composition costs ~30 s/run at sf0.1, ~20% of the budget over
+    # three rounds; each stage is benched on its own (gopher/
+    # dedup_clusters/decontaminate/mixture rows above).
+    # cross_encoder_rerank_documents is NOT benched: ~95% of its cost is
+    # the chunk+embed path the chunker and embedding rows cover; the
+    # rerank stage itself is a 5-row pandas_udf.
     "pivot_priority_by_status",
     "ngram_jaccard_pairs",
     "jaccard_index_pairs",
     "minhash_signatures",
     "winnow_fingerprints",
     "substring_dedup_documents",
-    # r10: the from-index twin gets its own number (r9 verdict
-    # "what's wrong" #2 — it entered the r9 driver window after the
-    # roster froze). The session-cached index is pre-built in the
-    # warmup phase (r11; see main()), so every round — including a
-    # 1-round budget-stopped session — measures the
-    # pushed-h_count-predicate reads.
+    # the session-cached index is pre-built in the warm-up (see main()),
+    # so every round measures the pushed-h_count-predicate reads
     "substring_index_spans",
-    # r10: the rolling-hash production tier (identical output to the
-    # md5 anchor row above; at the registry's k=8 the O(n·k) vs O(n)
-    # hash-stage gap is small — the k=50 comparison where it matters
-    # lives in scripts/scale_check_r10.py).
     "substring_dedup_rolling",
     "duplication_profile_documents",
     # lexical retrieval / LM stats / tokenizer
@@ -817,51 +119,21 @@ HEADLINE = [
     "binary_quant_topk",
     "mmr_rerank_embeddings",
     "lsh_recall_at_k",
-    # r11: rank-quality evaluation (NDCG@5/MRR@5 per customer) — a new
-    # plan shape (two bounded per-query windows + hash agg), unlike the
-    # three r11 lifecycle rows below which are deliberately NOT benched.
     "rank_eval_ndcg_mrr",
-    # r11 (late adds): the two training-order rows — the shard manifest
-    # (one shuffle + per-shard window) and the stride-scheduled mixture
-    # interleave (grouped prefix-count rank, one data-scale shuffle) —
-    # both new plan shapes, both cheap (~1-2 s at sf0.1).
     "epoch_shard_plan_orders",
     "mixture_interleave_documents",
-    # r12: calibration fit+apply+re-audit (broadcast ≤10-row bin lookup
-    # over the odd-key holdout, then the 10-row report agg) and the
-    # threshold decision table (hash agg to a ≤101-row grid + prefix
-    # sums over grid rows only). duplication_profile_compacted is
-    # deliberately NOT benched (lifecycle-row rule above): its READ plan
-    # is the duplication fold over fewer partitions; the compaction op
-    # itself is a one-time maintenance fold, measured in the r12 notes.
     "calibrate_binned_orders",
     "threshold_curve_orders",
-    # r13: the classifier-gated curation capstone (NB train+score ->
-    # margin->probability -> binned calibration fit -> precision-floor
-    # threshold -> keep/drop composition): a genuinely new composition
-    # shape — its fit-mapping and threshold picks are driver-side
-    # metadata collects over a narrow lazily-checkpointed scored frame
-    # (without the cut the NB re-ran 4x: 6.3 s -> ~3.8 s warm at sf0.1,
-    # measured). threshold_curve_streamed is deliberately NOT benched
-    # (lifecycle-row rule): its READ plan is the threshold_curve fold
-    # over the same ≤101-row grid, already benched via
-    # threshold_curve_orders; the one-time stream build is a
-    # maintenance op, and its correctness is the driver's sf0.01 row
-    # (shares _THRESHOLD_CURVE_SQL verbatim).
     "classifier_gated_curation",
-    # rank_eval_lsh_vs_exact is deliberately NOT benched (sibling rule):
-    # it composes three already-benched plans — knn_join (exact),
-    # lsh_knn_join (banded), and the rank_eval_ndcg_mrr metric shape —
-    # with no new physical stage of its own.
-    # jaccard_pairs_consolidated_index / trigram_search_parts_consolidated
-    # / duplication_profile_streamed are deliberately NOT benched: their
-    # READ plans are identical to the already-benched fresh-index
-    # siblings (jaccard_index_pairs, trigram_search_parts_from_index,
-    # duplication_profile_documents' fold shape) — the new code is the
-    # one-time build→stream→consolidate lifecycle, a maintenance op, not
-    # a query; its cost is measured once at sf0.1 in
-    # scripts/scale_check_r11.py and its correctness is the driver's
-    # sf0.01 rows (each shares its sibling's oracle string verbatim).
+    # Lifecycle rows are NOT benched: duplication_profile_compacted,
+    # threshold_curve_streamed, duplication_profile_streamed,
+    # jaccard_pairs_consolidated_index and
+    # trigram_search_parts_consolidated read with the same plan as a
+    # benched sibling; what they add is a one-time build, stream or
+    # compaction, a maintenance op rather than a query.
+    # rank_eval_lsh_vs_exact is NOT benched: it composes knn_join,
+    # lsh_knn_join and the rank_eval_ndcg_mrr shape, all benched, with
+    # no physical stage of its own.
     # multimodal plumbing
     "media_image_meta",
     "embedding_norms",
@@ -876,9 +148,7 @@ HEADLINE = [
     # linkage / weighted sampling / sequence analytics
     "fuzzy_match_parts",
     "trigram_search_parts",
-    # r10: the durable-index twin (sixth index family member); first
-    # call builds the session-cached gram index, the median measures
-    # the O(matching-postings) from-index reads.
+    # pre-built in the warm-up, like substring_index_spans
     "trigram_search_parts_from_index",
     "bloom_prefilter_supplier_revenue",
     "weighted_sample_documents",
@@ -899,34 +169,32 @@ HEADLINE = [
     "trend_by_event_type",
     "benford_price_profile",
     "scd2_customer_segments",
-    # drift / robust-stats / survival family (r5)
+    # drift / robust-stats / survival family
     "psi_price_drift_orders",
     "ks_price_drift_orders",
     "chi2_priority_drift_orders",
     "js_divergence_docs_by_lang",
     "mad_outlier_prices",
     "km_time_to_purchase",
-    # mergeable sketches (r5)
+    # mergeable sketches
     "hll_weekly_rollup_events",
     "kll_quantile_profile_orders",
     "theta_overlap_customers",
-    # multimodal dedup (r5)
+    # multimodal dedup
     "media_phash_near_dups",
-    # attribution / dense-substructure (r5)
+    # attribution / dense-substructure
     "attribution_last_touch_events",
     "k_core_part_graph",
-    # data-contract validation / snapshot reconciliation (r7)
+    # data-contract validation / snapshot reconciliation
     "expectations_orders",
     "table_diff_orders_snapshots",
-    # DSIR importance weights + NB domain classifier (r7)
+    # DSIR importance weights + NB domain classifier
     "dsir_weights_documents",
     "nb_lang_classify_documents",
-    # embedding drift (r7)
+    # embedding drift
     "embedding_drift_snapshots",
     "expectations_by_lang_documents",
-    # deterministic bottom-k quantile sketch (r8; the approx-KLL profile
-    # above stays its rows-only sibling — this one is value-oracled and
-    # backs the 5th streaming gate)
+    # deterministic bottom-k quantile sketch
     "sketch_quantiles_events",
 ]
 
@@ -957,23 +225,11 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
     # Build the four session-cached durable indexes BEFORE the timed
-    # rounds (the builds run eagerly at query-function call time): the
-    # roster's stated intent is that interleaved medians measure the
-    # pushed-predicate READS, with the one-time build cost median-ed out
-    # by later rounds — but on a slow host the ~50 s of builds inflate
-    # round 1 past the early-stop threshold, collapsing the bench to ONE
-    # all-cold round (the r11 272.7 s solo reading: jaccard_index_pairs
-    # published 17.7 s of which ~15 s was the build; warm solo 2.3-2.7).
-    # Pre-building keeps the published medians read-cost even in
-    # 1-round sessions; build costs stay measured in scripts/scale_check_*
-    # and are printed here as index_warmup_s.
-    # The warmup counts against the SAME wall-clock budget as the timed
-    # rounds (bench_t0 starts here): the budget exists so the compact
-    # line prints before any harness kill, and an exempt 40-50 s warmup
-    # would quietly stretch the envelope past it. A failed build must
-    # not abort the whole bench (the in-loop failure-isolation rule):
-    # that row then just pays its build in round 1, as before the
-    # warmup existed.
+    # rounds, so the medians measure the pushed-predicate READS even in
+    # a 1-round session: on a slow host ~50 s of builds would push round
+    # 1 past the early-stop threshold. The warm-up counts against the
+    # same wall-clock budget (bench_t0 starts here). A failed build must
+    # not abort the bench: that row then pays its build in round 1.
     bench_t0 = time.time()
     for _warm in (
         "jaccard_index_pairs",
@@ -982,12 +238,8 @@ def main() -> None:
         "trigram_search_parts_from_index",
     ):
         try:
-            # .limit(1).collect() after the call: today each row's index
-            # build runs eagerly at function-call time, but if a build is
-            # ever made lazy (folded into the returned plan) the bare call
-            # would silently become a no-op warmup — the collect forces
-            # the plan, so a lazy regression still builds here instead of
-            # quietly re-inflating round-1 medians (r11 advice).
+            # the collect forces the plan, so a build that is ever made
+            # lazy still runs here
             REGISTRY[_warm][0](spark, sf_dir).limit(1).collect()
         except Exception as exc:
             print(f"bench: warmup build {_warm} failed: {exc}", file=sys.stderr)
@@ -995,18 +247,10 @@ def main() -> None:
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # Interleaved rounds: run the whole headline list once, then repeat.
-    # Three consecutive runs of one query all land in the same ~5 s of
-    # wall-clock, so a host-side noise burst (this VM shows sporadic 5-10×
-    # scheduling spikes) corrupts all three and the median with them;
-    # spreading a query's runs across rounds decorrelates the burst, and
-    # the median recovers the true time.
-    # Wall-clock budget: if the harness kills the process before the
-    # compact line prints, the round's medians are lost entirely (worse
-    # than fewer rounds). After each full round, stop early when another
-    # round would not fit the remaining budget.
+    # After each round, stop early when another would not fit the
+    # budget: a process killed before the compact line prints loses all
+    # its medians.
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "480"))
-    # bench_t0 started before the index warmup above, so the budget
-    # covers warmup + rounds — the whole session envelope.
     all_runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
     failed: set[str] = set()
     rounds_done = 0
@@ -1039,13 +283,8 @@ def main() -> None:
         # estimate (upper-middle would let one spike own the number)
         times[name] = sorted(runs)[(len(runs) - 1) // 2]
 
-    # one end-to-end curation composition timing per round (tail note —
-    # deliberately not a headline row, see the budget rationale above).
-    # r14+: the GATED 5-stage composition supersedes the 4-stage
-    # curate_corpus_audit here — same four stages plus the classifier
-    # gate and the per-stage id_xor audit, so one tail run covers the
-    # whole release lineage (~+4 s on the ~28 s composition; see the
-    # r14 notes).
+    # one end-to-end run of the gated curation composition (not a
+    # headline row, see the budget rationale in HEADLINE)
     try:
         t0 = time.time()
         REGISTRY["curate_corpus_gated_audit"][0](spark, sf_dir).collect()
@@ -1058,15 +297,13 @@ def main() -> None:
         curate_e2e = -1.0
 
     total = round(sum(t for t in times.values() if t >= 0), 3)
-    # Verbose line first (cold times + methodology), canonical compact line
-    # LAST: the driver keeps only the tail of stdout, so the medians — the
-    # numbers that matter — must be the final thing printed.
+    # Verbose line first (cold times + methodology), compact line LAST:
+    # only the tail of stdout is archived.
     print(
         json.dumps(
             {
                 "cold_queries": cold,
-                "queries_median_3dp": times,  # full-fidelity copy; the
-                # compact line below may coarsen to fit the driver's tail
+                "queries_median_3dp": times,  # the compact line may fold
                 "methodology": (
                     f"median of {rounds_done} (target {n_runs}, early-stop "
                     f"at {int(budget_s)}s budget) INTERLEAVED rounds over the "
@@ -1080,13 +317,9 @@ def main() -> None:
             }
         )
     )
-    # The compact line MUST fit the driver's 2000-char stdout tail whole —
-    # a line whose head is cut is unparseable and the round's medians are
-    # lost (that was r3's failure mode). With 60+ headline queries even
-    # 2-decimal medians brush the limit, so shrink adaptively: 2dp → 1dp →
-    # fold the cheapest entries into one "_others" bucket until it fits.
-    # Full-fidelity medians always ride the verbose line above
-    # (queries_median_3dp), which only loses its head, not its tail.
+    # The compact line must fit the archived ~2000-char stdout tail
+    # whole; a line whose head is cut is unparseable. Shrink adaptively:
+    # 2dp, then 1dp, then fold the cheapest rows into "_others".
     def compact_line(q: dict) -> str:
         return json.dumps(
             {
@@ -1099,11 +332,7 @@ def main() -> None:
             separators=(",", ":"),
         )
 
-    # curation tail line + compact line must BOTH fit the driver's
-    # ~2000-char stdout tail; keep the pair under budget
-    # r16: the one-round legacy alias (curate_corpus_e2e_s, emitted
-    # r15 only per the ADVICE-r14 migration window) is dropped as
-    # scheduled; curate_corpus_gated_e2e_s is the sole tail key.
+    # the curation tail line and the compact line must BOTH fit the tail
     print(
         json.dumps(
             {"curate_corpus_gated_e2e_s": curate_e2e},
@@ -1114,50 +343,14 @@ def main() -> None:
     line = compact_line({n: round(t, 2) for n, t in times.items()})
     if len(line) > budget:
         line = compact_line({n: round(t, 1) for n, t in times.items()})
-    if len(line) > budget:
-        # Rows under active judge watch are pinned out of the fold so
-        # their numbers survive in the archived compact line (r11: the
-        # closing mixture noise watch, the new rank-eval row, plus the
-        # r10 watch rows still settling); everything else folds
-        # cheapest-first, and a still-over-budget line folds the pins
-        # too (fallback below).
-        pinned = {
-            "mixture_reweight_documents",
-            "rank_eval_ndcg_mrr",
-            "substring_index_spans",
-            "substring_dedup_rolling",
-            "trigram_search_parts_from_index",
-            # r11 late adds — first bench appearance, keep their numbers
-            # visible in the archived line
-            "epoch_shard_plan_orders",
-            "mixture_interleave_documents",
-            # r13 new row — first bench appearance
-            "classifier_gated_curation",
-        }
-        by_cost = sorted(
-            (n for n in times if n not in pinned), key=lambda n: times[n]
-        )  # cheapest unpinned first
-        kept = {n: round(times[n], 1) for n in times}
-        folded = 0.0
-        for n in by_cost:
-            if len(line) <= budget:
-                break
-            folded += max(kept.pop(n), 0.0)
-            kept["_others"] = round(folded, 1)
-            line = compact_line(kept)
-        # Last-resort fallback (r10 advice): if every unpinned row is
-        # folded and the line STILL exceeds the budget (a pinned set
-        # grown past what ~1880 chars can hold), fold the pinned rows
-        # too, cheapest first — an over-budget line reproduces the r3
-        # truncated-tail failure this whole fold exists to prevent, and
-        # a folded pinned number still survives in the verbose
-        # queries_median_3dp line above (which only loses its head).
-        for n in sorted(pinned & kept.keys(), key=lambda n: times[n]):
-            if len(line) <= budget:
-                break
-            folded += max(kept.pop(n), 0.0)
-            kept["_others"] = round(folded, 1)
-            line = compact_line(kept)
+    kept = {n: round(t, 1) for n, t in times.items()}
+    folded = 0.0
+    for n in sorted(times, key=times.get):  # cheapest first
+        if len(line) <= budget:
+            break
+        folded += max(kept.pop(n), 0.0)
+        kept["_others"] = round(folded, 1)
+        line = compact_line(kept)
     print(line)
 
 

@@ -318,11 +318,6 @@ def consolidate_shingle_index(
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.index_layout.consolidate_index`."""
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    meta = index_layout.read_meta(spark, path)
-    fresh_meta = spark.createDataFrame(
-        [(int(meta.n), int(meta.n_buckets), False)],
-        "n int, n_buckets int, extended boolean",
-    )
     return index_layout.consolidate_index(
         spark,
         path,
@@ -330,7 +325,7 @@ def consolidate_shingle_index(
         rows_subdir="postings",
         key_col="shingle",
         count_col="shingle_df",
-        fresh_meta_df=fresh_meta,
+        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
         extra_subdirs=("doc_sizes",),
         manifest_path=manifest_path,
     )
@@ -1108,11 +1103,6 @@ def consolidate_substring_index(
     the family-shared ``index_layout.consolidate_index``."""
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    meta = index_layout.read_meta(spark, path)
-    fresh_meta = spark.createDataFrame(
-        [(int(meta.k), int(meta.n_buckets), int(meta.max_doc_tokens), False)],
-        "k int, n_buckets int, max_doc_tokens long, extended boolean",
-    )
     return index_layout.consolidate_index(
         spark,
         path,
@@ -1120,7 +1110,7 @@ def consolidate_substring_index(
         rows_subdir="windows",
         key_col="h",
         count_col="h_count",
-        fresh_meta_df=fresh_meta,
+        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
         manifest_path=manifest_path,
     )
 

@@ -717,7 +717,6 @@ def consolidate_postings_index(
     the family-shared ``index_layout.consolidate_index``."""
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    meta = index_layout.read_meta(spark, path)
     bs = spark.read.parquet(f"{path}/batch_stats")
     stored_t = {f.name: f.dataType for f in bs.schema.fields}
     fresh_stats = bs.agg(
@@ -726,9 +725,8 @@ def consolidate_postings_index(
     )
     tot = fresh_stats.first()  # one row — metadata-scale by contract
     n_docs, sum_dl = int(tot["n_docs"]), float(tot["sum_dl"])
-    fresh_meta = spark.createDataFrame(
-        [(n_docs, sum_dl / n_docs, int(meta["n_buckets"]), False)],
-        "n_docs bigint, avgdl double, n_buckets int, extended boolean",
+    fresh_meta = index_layout.replace_meta(
+        spark, path, n_docs=n_docs, avgdl=sum_dl / n_docs, extended=False
     )
     version = index_layout.consolidate_index(
         spark,

@@ -359,10 +359,6 @@ def consolidate_trigram_index(
     family-shared ``index_layout.consolidate_index``."""
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    meta = index_layout.read_meta(spark, path)
-    fresh_meta = spark.createDataFrame(
-        [(int(meta.n_buckets), False)], "n_buckets int, extended boolean"
-    )
     return index_layout.consolidate_index(
         spark,
         path,
@@ -370,7 +366,7 @@ def consolidate_trigram_index(
         rows_subdir="postings",
         key_col="gram",
         count_col="gram_df",
-        fresh_meta_df=fresh_meta,
+        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
         extra_subdirs=("names",),
         manifest_path=manifest_path,
     )

@@ -127,9 +127,9 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
 #: candidates are ~C(n,2)·2^-(planes/bands) per band; requiring
 #: planes/bands >= log2(n / _PLANE_BUDGET) caps them at ~n·_PLANE_BUDGET/2
 #: per band (linear in corpus size). 256 is calibrated to the measured r7
-#: scale curve (bench.py): planes=8 at n=2000 passes (measured fine,
-#: 4.95 s), planes=8 at n=10000 raises (measured 72× melt), planes=12 at
-#: n=10000 passes (measured re-tuned fix, 3.2× growth).
+#: scale curve (bench.py's git history): planes=8 at n=2000 passes
+#: (measured fine, 4.95 s), planes=8 at n=10000 raises (measured 72×
+#: melt), planes=12 at n=10000 passes (measured re-tuned fix, 3.2× growth).
 _PLANE_BUDGET = 256
 
 
@@ -144,16 +144,16 @@ def check_plane_budget(
     measured planes ≈ 2·log₂(n) tuning rule — re-tune as the corpus
     grows, like IVF re-clustering).
 
-    Scope (the r8 25× measurement, bench.py): the budget bounds the
-    CANDIDATE superset — at 25× the compliant config carried 3.5× fewer
-    candidates than the rejected one (12.2M vs 43.0M, the rejected mass
-    ~86% chance collisions). It cannot bound the VERIFIED-edge mass:
-    every pair genuinely at/above the cosine threshold is downstream
-    work (verify shuffle + component depth) whatever the banding, so a
-    corpus whose intrinsic pair density at the threshold is high — e.g.
-    a loose threshold over noisy vectors — keeps its cost even at a
-    compliant plane count. Banding parameters buy back only the chance
-    term; the threshold buys the rest.
+    Scope (the r8 25× measurement, bench.py's git history): the budget
+    bounds the CANDIDATE superset — at 25× the compliant config carried
+    3.5× fewer candidates than the rejected one (12.2M vs 43.0M, the
+    rejected mass ~86% chance collisions). It cannot bound the
+    VERIFIED-edge mass: every pair genuinely at/above the cosine
+    threshold is downstream work (verify shuffle + component depth)
+    whatever the banding, so a corpus whose intrinsic pair density at
+    the threshold is high — e.g. a loose threshold over noisy vectors —
+    keeps its cost even at a compliant plane count. Banding parameters
+    buy back only the chance term; the threshold buys the rest.
 
     Raises ``ValueError`` naming the minimum compliant ``n_planes``;
     ``enforce=False`` (the explicit caller override, e.g. a scale-curve

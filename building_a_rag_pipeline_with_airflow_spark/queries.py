@@ -9428,544 +9428,13 @@ def expectations_by_lang_documents(spark, sf_dir):
     )
 
 
-# r7 rotation (r6 judge directive #3): the driver checks the FIRST 50
-# registry entries; this tuple IS that window for r7, enumerated
-# explicitly. Selection is data-driven from CORRECTNESS_r01..r06 green
-# history, by (never-checked first, then last-green-round asc,
-# green-count asc):
-# (a) the 2 oracle queries with NO driver row yet — binary_quant_topk
-#     (oracled late in r6, the _NEW_R6 queue) and the r7-new
-#     bloom_prefilter_supplier_revenue;
-# (b) the 38 stalest anchors, all last driver-green in r4 (26 double-,
-#     5 triple-, 7 quadruple-green), and the first 10 of the r5
-#     single-green cohort. Everything rotating OUT carries a green r5 or
-#     r6 driver row (both windows went 50/50 green), so every oracle
-#     keeps recent driver evidence while the stale tail refreshes. All
-#     oracles remain value-checked every round by
-#     tests/test_oracle_parity.py regardless of window position. (r6's
-#     window is preserved in git history at this spot; its 50/50 green
-#     rows are CORRECTNESS_r06.json.)
-# r11 rotation (r10 judge directive #1 — continue the staleness
-# rotation): the driver window refreshes with (a) the 4
-# never-driver-checked oracles, all added in r11 (the two
-# consolidation-lifecycle rows jaccard_pairs_consolidated_index and
-# trigram_search_parts_consolidated from directive #2, the streamed
-# duplication-profile gate row duplication_profile_streamed from
-# directive #4, and rank_eval_ndcg_mrr from directive #6), then (b) the
-# FULL 9-cohort of next-stalest anchors — every oracle whose last
-# driver-green row is r7 and that was not covered in r10, exactly the
-# nine the r10 rotation displaced with siblings — then (c) 37 of the 50
-# r8-last-green cohort (4 + 9 + 37 = 50). The 13 displaced r8 anchors
-# each keep an in-window (or r10-fresh) same-family sibling and carry
-# multi-round green history:
-#   jaccard_index_pairs ↔ jaccard_pairs_consolidated_index (in-window
-#   and never-checked: it shares this row's oracle string VERBATIM and
-#   reads the same postings layout, so the shared read path is
-#   value-checked through the sibling this very round);
-#   q10_returned_revenue ↔ q18_large_orders (in-window r7 cohort — the
-#   same join→agg→sort-desc-top-k revenue family, the r3-precedented
-#   pairing);
-#   simhash_documents ↔ minhash_lsh_pairs (in-window r7 cohort; the
-#   same md5-derived per-doc fingerprint core, the r4+ precedent);
-#   heavy_hitter_tokens ↔ repetition_stats_documents (in-window r7
-#   cohort; the same shared-tokenization frequency projections);
-#   tfidf_top_terms_documents ↔ bm25_batch_topk_documents (in-window;
-#   the same tokenize→df-count postings core at different weighting);
-#   vocab_coverage_documents ↔ zipf_profile_documents (in-window; both
-#   are the _ranked_vocab frequency-rank core);
-#   chunk_semantic_refconst ↔ chunk_stats (in-window r7 cohort) +
-#   chunk_semantic_documents (r10-green, the IDENTICAL oracle generator
-#   at different constants);
-#   expectations_orders ↔ expectations_by_lang_documents (in-window;
-#   the same expectation-suite fold, grouped form);
-#   weighted_sample_documents ↔ hash_sample_orders (in-window r7
-#   cohort; the same deterministic md5-hash-uniform assignment core) +
-#   weighted_sample_per_lang (the grouped form of this very operator);
-#   q4_priority_exists ↔ q21_sole_late_supplier (in-window; the same
-#   EXISTS/anti-join subquery family);
-#   q12_late_shipment_priority ↔ q14_promo_revenue (in-window r7
-#   cohort; the same conditional-agg-over-join lineitem family);
-#   embedding_dup_clusters_lsh ↔ minhash_lsh_pairs (in-window; the same
-#   banding core) + embedding_dup_clusters (r10-green — the exact
-#   anchor this LSH tier is equality-tested against);
-#   event_transition_matrix ↔ top_event_paths (in-window; the same
-#   per-user ordered lag/lead sequence family).
-# Everything rotating OUT carries a green r8, r9, or r10 driver row; all
-# oracles remain value-checked every round by
-# tests/test_oracle_parity.py regardless of window position. (The r10
-# window that sat here is preserved in git history; its 50/50 green
-# rows are CORRECTNESS_r10.json.)
-_R11_WINDOW = (
-    # (a) never driver-checked, first in line (new in r11): 4
-    "duplication_profile_streamed",
-    "jaccard_pairs_consolidated_index",
-    "rank_eval_ndcg_mrr",
-    "trigram_search_parts_consolidated",
-    # (b) stalest anchors: last driver-green r7 (the full 9-cohort)
-    "chunk_stats",
-    "hash_sample_orders",
-    "minhash_lsh_pairs",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q5_region_revenue",
-    "q6_revenue_forecast",
-    "rag_retrieve_context",
-    "repetition_stats_documents",
-    # (c) next-stalest: last driver-green r8 (37 of the 50-cohort)
-    "anomaly_zscore_events_daily",
-    "attribution_last_touch_events",
-    "bm25_batch_topk_documents",
-    "curate_corpus_audit",
-    "dsir_weights_documents",
-    "embedding_drift_snapshots",
-    "entropy_profile_orders",
-    "expectations_by_lang_documents",
-    "frequent_part_pairs",
-    "funnel_view_click_purchase",
-    "fuzzy_match_parts",
-    "grouping_sets_priority_segment",
-    "label_centroids_embeddings",
-    "line_dedup_documents",
-    "media_frame_counts",
-    "nb_lang_classify_documents",
-    "ohlc_events_daily",
-    "pagerank_supplier_cosupply",
-    "percent_rank_nation_balance",
-    "q11_important_nation_share",
-    "q16_supplier_variety",
-    "q20_volume_part_suppliers",
-    "q21_sole_late_supplier",
-    "q2_min_cost_supplier",
-    "quantile_segment_customer_value",
-    "release_cycle_report",
-    "resample_interpolate_purchases",
-    "rrf_fusion_topk",
-    "scd2_customer_segments",
-    "scrub_pii_documents",
-    "sketch_quantiles_events",
-    "table_diff_orders_snapshots",
-    "top_event_paths",
-    "trend_by_event_type",
-    "triangle_count_part_graph",
-    "winsorized_price_stats",
-    "zipf_profile_documents",
-)
-
-# Oracle queries ADDED in r11 after the window above froze queue here
-# (the _NEW_R8.._NEW_R10 mechanism), first in line for the r12 rotation.
-_NEW_R11: "tuple[str, ...]" = (
-    "calibration_report_orders",
-    "calibration_report_streamed",
-    "epoch_shard_plan_orders",
-    "mixture_interleave_documents",
-    "rank_eval_lsh_vs_exact",
-)
-
-# r12 rotation (r11 judge directive #1): (a) the 7 oracles with NO
-# driver row yet — the five _NEW_R11 entries the r11 window froze out,
-# plus the two NEW r12 lifecycle oracles (`calibrate_binned_orders`,
-# the fit→apply→re-audit calibration row from directive #2, and
-# `duplication_profile_compacted`, the gate-compaction row from
-# directive #3 — both sharing/replaying full value oracles); then
-# (b) the FULL 13-cohort of next-stalest anchors — every oracle whose
-# last driver-green row is r8, exactly the thirteen the r11 rotation
-# displaced with siblings; then (c) 30 of the 50 r9-last-green cohort,
-# selected by green-count asc (all seven single-green and all twelve
-# double-green r9 anchors are IN; eleven of the quadruple-green fill
-# the remainder). 7 + 13 + 30 = 50. The 20 displaced r9 anchors (11
-# quadruple-, 9 quintuple-green) each keep an in-window or
-# recent-green same-family sibling:
-#   chunk_recursive_documents ↔ chunk_semantic_refconst (in-window:
-#   the semantic chunker's stage 1 IS the recursive splitter, the r4
-#   precedent) + chunk_fixed_documents (in-window);
-#   distinct_nation_segments ↔ intersect_nation_segments (r10-green;
-#   the same set-op family, the r4 pairing);
-#   events_hourly ↔ events_props_json (in-window; same events JSON/
-#   window family) + events_sessionize (r10-green);
-#   latest_order_per_customer ↔ asof_join_events_orders (r10-green;
-#   the same latest-per-key ordered carry, generalized — r3 pairing);
-#   minhash_signatures ↔ minhash_lsh_pairs (r11-green; the banding
-#   consumes the signatures — the r3 pairing);
-#   nations_without_suppliers ↔ q22_idle_rich_customers (r10-green;
-#   the left_anti NOT-EXISTS shape);
-#   ngram_jaccard_pairs ↔ jaccard_index_pairs (in-window; the same
-#   pair pipeline in durable-index form) + dedup_clusters_documents
-#   (r10-green; embeds the identical pair pipeline);
-#   orders_date_validation ↔ filter_pushdown_orders (r10-green; the
-#   same date-coercion/dispatch core);
-#   orders_year_quarter ↔ quarter_classification (r10-green; the same
-#   quarter-from-date core);
-#   pagination_orders ↔ filter_pushdown_orders (r10-green; the same
-#   fetch_filtered path);
-#   value_counts_mktsegment ↔ q13_order_count_distribution (r10-green;
-#   count-per-group distribution);
-#   chunk_overlap_adjacent ↔ pairwise_overlap_stats (in-window; the
-#   same overlap measurement) + chunk_stats (r11-green);
-#   doc_quality_scores ↔ gopher_quality_flags (r10-green) +
-#   token_counts_documents (in-window; the shared-tokenization core);
-#   hybrid_topk_cosine ↔ topk_cosine (in-window; the identical
-#   norm-precompute top-k core) + rag_retrieve_context (r11-green);
-#   ivf_topk_cosine ↔ topk_cosine (in-window; identical scoring core)
-#   + lsh_knn_join (r10-green);
-#   lang_id_documents ↔ gopher_quality_flags (r10-green; the
-#   shared-tokenization core — the r4 anchor update);
-#   pivot_priority_status ↔ pivot_priority_by_status (r10-green; the
-#   same PIVOT reshape, operator- vs SQL-form);
-#   q1_pricing_summary ↔ percentiles_by_returnflag (r10-green; the
-#   same lineitem returnflag/status group-agg);
-#   q3_shipping_priority ↔ q18_large_orders (r11-green; the same
-#   join→agg→sort-desc-top-k revenue family);
-#   winnow_fingerprints ↔ simhash_documents (in-window; md5-derived
-#   per-doc fingerprint maps — the r4 pairing).
-# Everything rotating OUT carries a green r9 driver row; all oracles
-# remain value-checked every round by tests/test_oracle_parity.py
-# regardless of window position. (The r11 window stays enumerated
-# above; its 50/50 green rows are CORRECTNESS_r11.json.)
-_R12_WINDOW = (
-    # (a) never driver-checked: the 5 _NEW_R11 + the 2 new-in-r12
-    "calibration_report_orders",
-    "calibration_report_streamed",
-    "epoch_shard_plan_orders",
-    "mixture_interleave_documents",
-    "rank_eval_lsh_vs_exact",
-    "calibrate_binned_orders",
-    "duplication_profile_compacted",
-    # (b) stalest anchors: last driver-green r8 (the full 13-cohort)
-    "chunk_semantic_refconst",
-    "embedding_dup_clusters_lsh",
-    "event_transition_matrix",
-    "expectations_orders",
-    "heavy_hitter_tokens",
-    "jaccard_index_pairs",
-    "q10_returned_revenue",
-    "q12_late_shipment_priority",
-    "q4_priority_exists",
-    "simhash_documents",
-    "tfidf_top_terms_documents",
-    "vocab_coverage_documents",
-    "weighted_sample_documents",
-    # (c) next-stalest: last driver-green r9 — the single-green seven
-    "cluster_safe_split_documents",
-    "html_to_text_documents",
-    "mmr_rerank_embeddings",
-    "rag_sentence_window_context",
-    "substring_dedup_documents",
-    "substring_index_spans",
-    "temperature_mixture_documents",
-    # the double-green twelve
-    "bpe_encode_fixed_documents",
-    "chi2_priority_drift_orders",
-    "corpus_release_report",
-    "js_divergence_docs_by_lang",
-    "km_time_to_purchase",
-    "ks_price_drift_orders",
-    "lsh_recall_at_k",
-    "mad_outlier_prices",
-    "psi_price_drift_orders",
-    "readability_documents",
-    "trigram_search_parts",
-    "weighted_sample_per_lang",
-    # eleven of the quadruple-green cohort fill the window
-    "brand_revenue_topk",
-    "chunk_fixed_documents",
-    "column_profile_orders",
-    "dedup_exact_documents",
-    "events_props_json",
-    "knn_join",
-    "near_dup_embeddings_exact",
-    "pairwise_overlap_stats",
-    "rollup_returnflag_status",
-    "token_counts_documents",
-    "topk_cosine",
-)
-
-# Oracle queries added in r12 AFTER the window above froze (the
-# established queue mechanism) — first in line for the r13 rotation.
-_NEW_R12: "tuple[str, ...]" = ("threshold_curve_orders",)
-
-# r13 rotation (r12 judge directive #1): (a) the 3 oracles with NO
-# driver row yet — `threshold_curve_orders` (the one owed oracle, the
-# _NEW_R12 queue) plus the two NEW r13 oracles
-# (`classifier_gated_curation`, the train→calibrate→threshold→gate
-# capstone from directive #2, and `threshold_curve_streamed`, the 8th
-# streaming gate from directive #4 — both full value oracles); then
-# (b) the FULL 20-cohort of stalest anchors — every oracle whose last
-# driver-green row is r9, exactly the twenty the r12 rotation
-# displaced with siblings; then (c) 27 of the 50 r10-last-green
-# cohort, selected by green-count asc (all four single-green, both
-# double-green, and all ten triple-green r10 anchors are IN; the
-# alphabetically-first eleven of the quadruple-green fill the
-# remainder). 3 + 20 + 27 = 50. The 16 displaced r10 anchors (all
-# quadruple-green) each keep an in-window or recent-green same-family
-# sibling:
-#   ntile_customer_value ↔ quantile_segment_customer_value (r11-green;
-#   the same customer-value quantile segmentation);
-#   pack_training_sequences ↔ epoch_shard_plan_orders +
-#   mixture_interleave_documents (r12-green; the training-order
-#   construction family);
-#   percentiles_by_returnflag ↔ q1_pricing_summary (in-window; the
-#   same lineitem returnflag/status group-agg);
-#   pivot_priority_by_status ↔ pivot_priority_status (in-window; the
-#   same PIVOT reshape, SQL- vs operator-form);
-#   q13_order_count_distribution ↔ value_counts_mktsegment (in-window;
-#   count-per-group distribution);
-#   q15_top_supplier ↔ q2_min_cost_supplier (r11-green; the same
-#   min/max-subquery-over-join shape);
-#   q17_small_quantity_revenue ↔ q20_volume_part_suppliers (r11-green;
-#   the same per-part avg-quantity correlated-subquery family);
-#   q19_disjunctive_revenue ↔ q14_promo_revenue (r11-green; the same
-#   lineitem×part conditional-agg join);
-#   q22_idle_rich_customers ↔ nations_without_suppliers (in-window;
-#   the left_anti NOT-EXISTS shape);
-#   q7_volume_shipping / q8_market_share / q9_profit_by_nation_year ↔
-#   q5_region_revenue (r11-green; the multi-join revenue/profit rollup
-#   family; q8's conditional share numerator also ↔ q14, r11-green);
-#   rolling_revenue_7d ↔ trend_by_event_type (r11-green; the same
-#   date-bucketed rolling-window family) + decayed_user_value
-#   (in-window);
-#   stratified_sample_customers ↔ weighted_sample_per_lang (r12-green;
-#   the same per-stratum deterministic-hash sampling core) +
-#   cv_folds_orders (in-window);
-#   topk_orders ↔ brand_revenue_topk (r12-green; sort-desc-take-k);
-#   union_distinct_values ↔ intersect_nation_segments (in-window; the
-#   same set-op family).
-# Everything rotating OUT carries a green r10 driver row; all oracles
-# remain value-checked every round by tests/test_oracle_parity.py
-# regardless of window position. (The r12 window stays enumerated
-# above; its 50/50 green rows are CORRECTNESS_r12.json.)
-_R13_WINDOW = (
-    # (a) never driver-checked: the _NEW_R12 queue + the 2 new-in-r13
-    "threshold_curve_orders",
-    "classifier_gated_curation",
-    "threshold_curve_streamed",
-    # (b) stalest anchors: last driver-green r9 (the full 20-cohort)
-    "chunk_overlap_adjacent",
-    "chunk_recursive_documents",
-    "distinct_nation_segments",
-    "doc_quality_scores",
-    "events_hourly",
-    "hybrid_topk_cosine",
-    "ivf_topk_cosine",
-    "lang_id_documents",
-    "latest_order_per_customer",
-    "minhash_signatures",
-    "nations_without_suppliers",
-    "ngram_jaccard_pairs",
-    "orders_date_validation",
-    "orders_year_quarter",
-    "pagination_orders",
-    "pivot_priority_status",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "value_counts_mktsegment",
-    "winnow_fingerprints",
-    # (c) next-stalest: last driver-green r10 — the single-green four
-    "cross_encoder_rerank_documents",
-    "duplication_profile_documents",
-    "substring_dedup_rolling",
-    "trigram_search_parts_from_index",
-    # the double-green two
-    "binary_quant_topk",
-    "bloom_prefilter_supplier_revenue",
-    # the triple-green ten
-    "benford_price_profile",
-    "bigram_lm_ppl_documents",
-    "bm25_topk_documents",
-    "cohort_retention_weekly",
-    "cooccur_recommend_parts",
-    "corr_lineitem_metrics",
-    "cumulative_new_users_daily",
-    "cv_folds_orders",
-    "decayed_user_value",
-    "embedding_dup_clusters",
-    # eleven of the quadruple-green cohort fill the window
-    "asof_join_events_orders",
-    "chunk_semantic_documents",
-    "cube_priority_segment",
-    "decontaminate_documents",
-    "dedup_clusters_documents",
-    "embedding_norms",
-    "gopher_quality_flags",
-    "intersect_nation_segments",
-    "interval_join_purchase_follow",
-    "lsh_knn_join",
-    "mixture_reweight_documents",
-)
-
-# Oracle queries added in r13 AFTER the window above froze (the
-# established queue mechanism) — first in line for the r14 rotation.
-_NEW_R13: "tuple[str, ...]" = ()
-
-# r14 driver window (r13 judge directive #1): staleness-first. The 50
-# slots are (a) the 1 never-driver-checked new r14 oracle
-# (curate_corpus_gated_audit — the 5-stage gated composition, this
-# round's capstone); (b) the FULL 23-query r10-last-green cohort, which
-# would hit age 4 this round if unrotated — the ≤3-round staleness
-# invariant binds them all in; (c) 26 of the 50 r11-last-green cohort
-# by green-count asc (all four single-green, all seven double-green,
-# and the alphabetically-first fifteen of the twenty-one triple-green).
-# 1 + 23 + 26 = 50. The 24 displaced r11 anchors (the remaining six
-# triple-green, twelve quadruple-green, three quintuple-green, three
-# sextuple-green) stay at age 3 this round — inside the bound — and
-# lead the r15 rotation by the same rule; all oracles remain
-# value-checked every round by tests/test_oracle_parity.py regardless
-# of window position. (The r13 window stays enumerated above; its
-# 50/50 green rows are CORRECTNESS_r13.json.)
-_R14_WINDOW = (
-    # (a) never driver-checked: new in r14
-    "curate_corpus_gated_audit",
-    # (b) stalest anchors: last driver-green r10 (the full 23-cohort)
-    "chunk_first_positions",
-    "events_sessionize",
-    "filter_pushdown_orders",
-    "histogram_quantity",
-    "media_image_meta",
-    "ntile_customer_value",
-    "pack_training_sequences",
-    "percentiles_by_returnflag",
-    "pivot_priority_by_status",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "q22_idle_rich_customers",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "quarter_classification",
-    "rolling_revenue_7d",
-    "sql_top_customers_per_nation",
-    "stratified_sample_customers",
-    "topk_orders",
-    "union_distinct_values",
-    # (c) next-stalest: last driver-green r11 — the single-green four
-    "duplication_profile_streamed",
-    "jaccard_pairs_consolidated_index",
-    "rank_eval_ndcg_mrr",
-    "trigram_search_parts_consolidated",
-    # the double-green seven
-    "dsir_weights_documents",
-    "embedding_drift_snapshots",
-    "expectations_by_lang_documents",
-    "nb_lang_classify_documents",
-    "release_cycle_report",
-    "sketch_quantiles_events",
-    "table_diff_orders_snapshots",
-    # the alphabetically-first fifteen of the triple-green twenty-one
-    "attribution_last_touch_events",
-    "bm25_batch_topk_documents",
-    "entropy_profile_orders",
-    "frequent_part_pairs",
-    "funnel_view_click_purchase",
-    "fuzzy_match_parts",
-    "grouping_sets_priority_segment",
-    "label_centroids_embeddings",
-    "line_dedup_documents",
-    "ohlc_events_daily",
-    "percent_rank_nation_balance",
-    "q20_volume_part_suppliers",
-    "q21_sole_late_supplier",
-    "rrf_fusion_topk",
-    "scd2_customer_segments",
-)
-
-# Oracle queries added in r14 AFTER the window above froze (the
-# established queue mechanism) — first in line for the r15 rotation.
-_NEW_R14: "tuple[str, ...]" = ()
-
-# r15 driver window (r14 judge directive #1): staleness-first. The 50
-# slots are (a) the 2 never-driver-checked new r15 oracles
-# (release_cycle_gated_report — the gated publish→resolve→diff cycle,
-# this round's capstone — and classifier_stamp_streamed, the streamed
-# gate stamp); (b) the FULL 24-query r11-last-green cohort, which
-# would hit age 4 this round if unrotated — the ≤3-round staleness
-# invariant binds them all in; (c) 24 of the 50 r12-last-green cohort
-# by green-count asc then alphabetical (all seven single-green, all
-# eight double-green, and the alphabetically-first nine of the
-# eighteen triple-green). 2 + 24 + 24 = 50. The 26 displaced r12
-# anchors stay at age 3 this round — inside the bound — and lead the
-# r16 rotation by the same rule; all oracles remain value-checked
-# every round by tests/test_oracle_parity.py regardless of window
-# position. (The r14 window stays enumerated above; its 50/50 green
-# rows are CORRECTNESS_r14.json.)
-_R15_WINDOW = (
-    # (a) never driver-checked: new in r15
-    "release_cycle_gated_report",
-    "classifier_stamp_streamed",
-    # (b) stalest anchors: last driver-green r11 (the full 24-cohort)
-    "anomaly_zscore_events_daily",
-    "chunk_stats",
-    "curate_corpus_audit",
-    "hash_sample_orders",
-    "media_frame_counts",
-    "minhash_lsh_pairs",
-    "pagerank_supplier_cosupply",
-    "q11_important_nation_share",
-    "q14_promo_revenue",
-    "q16_supplier_variety",
-    "q18_large_orders",
-    "q2_min_cost_supplier",
-    "q5_region_revenue",
-    "q6_revenue_forecast",
-    "quantile_segment_customer_value",
-    "rag_retrieve_context",
-    "repetition_stats_documents",
-    "resample_interpolate_purchases",
-    "scrub_pii_documents",
-    "top_event_paths",
-    "trend_by_event_type",
-    "triangle_count_part_graph",
-    "winsorized_price_stats",
-    "zipf_profile_documents",
-    # (c) next-stalest: last driver-green r12 — the single-green seven
-    "calibrate_binned_orders",
-    "calibration_report_orders",
-    "calibration_report_streamed",
-    "duplication_profile_compacted",
-    "epoch_shard_plan_orders",
-    "mixture_interleave_documents",
-    "rank_eval_lsh_vs_exact",
-    # the double-green eight
-    "cluster_safe_split_documents",
-    "expectations_orders",
-    "html_to_text_documents",
-    "mmr_rerank_embeddings",
-    "rag_sentence_window_context",
-    "substring_dedup_documents",
-    "substring_index_spans",
-    "temperature_mixture_documents",
-    # the alphabetically-first nine of the triple-green eighteen
-    "bpe_encode_fixed_documents",
-    "chi2_priority_drift_orders",
-    "corpus_release_report",
-    "embedding_dup_clusters_lsh",
-    "event_transition_matrix",
-    "heavy_hitter_tokens",
-    "js_divergence_docs_by_lang",
-    "km_time_to_purchase",
-    "ks_price_drift_orders",
-)
-
-# Oracle queries added in r15 AFTER the window above froze (the
-# established queue mechanism) — first in line for the r16 rotation.
-_NEW_R15: "tuple[str, ...]" = ()
-
-# r16 driver window (r15 judge directive #1): staleness-first, no owed
-# oracles (_NEW_R15 is empty; cumulative oracled coverage 176/176). The
-# 50 slots are (a) the FULL 26-query r12-last-green cohort displaced by
-# the r15 rotation — it would hit age 4 this round if unrotated, so the
-# ≤3-round staleness invariant binds all 26 in; (b) the 24 stalest of
-# the 50 r13-last-green cohort by the documented green-count-asc then
-# alphabetical order (all three single-green, all four double-green,
-# both triple-green, all ten quadruple-green, and the alphabetically-
-# first five of the quintuple-green). 26 + 24 = 50. The 26 displaced
-# r13 anchors stay at age 3 this round — inside the bound — and lead
-# the r17 rotation by the same rule; all oracles remain value-checked
-# every round by tests/test_oracle_parity.py regardless of window
-# position. (The r15 window stays enumerated above; its 50/50 green
-# rows are CORRECTNESS_r15.json.)
+# The correctness harness checks the FIRST 50 all_queries() entries.
+# _R16_WINDOW is that window, enumerated: staleness first (oracles whose
+# last green check is oldest), then fewest green rounds, then
+# alphabetical.
+# Every oracle is value-checked by tests/test_oracle_parity.py wherever
+# it sits.
 _R16_WINDOW = (
-    # (a) stalest anchors: last driver-green r12 (the full 26-cohort)
     "brand_revenue_topk",
     "chunk_fixed_documents",
     "chunk_semantic_refconst",
@@ -9992,19 +9461,15 @@ _R16_WINDOW = (
     "vocab_coverage_documents",
     "weighted_sample_documents",
     "weighted_sample_per_lang",
-    # (b) next-stalest: last driver-green r13 — the single-green three
     "classifier_gated_curation",
     "threshold_curve_orders",
     "threshold_curve_streamed",
-    # the double-green four
     "cross_encoder_rerank_documents",
     "duplication_profile_documents",
     "substring_dedup_rolling",
     "trigram_search_parts_from_index",
-    # the triple-green two
     "binary_quant_topk",
     "bloom_prefilter_supplier_revenue",
-    # the quadruple-green ten
     "benford_price_profile",
     "bigram_lm_ppl_documents",
     "bm25_topk_documents",
@@ -10015,7 +9480,6 @@ _R16_WINDOW = (
     "cv_folds_orders",
     "decayed_user_value",
     "embedding_dup_clusters",
-    # the alphabetically-first five of the quintuple-green twenty-two
     "asof_join_events_orders",
     "chunk_recursive_documents",
     "chunk_semantic_documents",
@@ -10023,81 +9487,12 @@ _R16_WINDOW = (
     "decontaminate_documents",
 )
 
-# Oracle queries added in r16 AFTER the window above froze (the
-# established queue mechanism) — first in line for the r17 rotation.
+# Oracle queries added after _R16_WINDOW froze: first in line for the
+# next rotation.
 _NEW_R16: "tuple[str, ...]" = ()
 
-
-# With more oracle-bearing queries (77 as of late r3) than the driver's
-# ~50-entry check window, the overflow is an explicit choice, not
-# definition-order accident — and it ROTATES each round so every oracle
-# query gets driver evidence at least once. r3 rotation: r2's overflow
-# (cube_priority_segment, union_distinct_values), the two newly-oracled
-# queries (rag_retrieve_context, lsh_knn_join), and the eight NEW r3
-# queries (as-of/interval joins, hash sampling, q7/q13/q15/q17) move INTO
-# the window; twelve long-stable queries move out, every one carrying a
-# green CORRECTNESS_r02 row and a same-family sibling still inside:
-#   rollup ↔ cube grouping sets; distinct + anti ↔ union set ops;
-#   topk_orders / brand_revenue_topk ↔ q3/q10/q18 sort-desc-take-k;
-#   embedding_norms / near_dup_embeddings_exact ↔ the in-window cosine
-#   queries (norms are a sub-expression of each) + minhash_lsh_pairs for
-#   the near-dup banding; minhash_signatures ↔ minhash_lsh_pairs (the
-#   banding consumes the signatures); orders_year_quarter ↔
-#   quarter_classification (same quarter-from-date core); q5/q6/q14 ↔
-#   q7 (multi-join revenue rollup) and q17 (single-row conditional agg);
-#   pagination_orders ↔ filter_pushdown_orders (same fetch_filtered path);
-#   histogram_quantity ↔ percentiles_by_returnflag (quantile/binning
-#   family over the same column); media_frame_counts ↔ media_image_meta
-#   (same one-way-Arrow multimodal meta path).
-# All 64 stay fully value-checked by tests/test_oracle_parity.py every
-# round regardless of window position.
-# r4 rotation (judge directive #7): q5_region_revenue, q6_revenue_forecast,
-# q14_promo_revenue, histogram_quantity move BACK INTO the window for fresh
-# driver evidence (their last green rows were aging at r1/r2), together
-# with the three newly-oracled queries (curate_corpus_audit,
-# quantile_segment_customer_value, chunk_semantic_refconst — never had a
-# driver row). Five triple-green (r1+r2+r3) queries move out to make room,
-# each with an in-window anchor:
-#   chunk_first_positions ↔ chunk_stats + chunk_overlap_adjacent (same
-#   chunk-derived measurement over the same chunker output);
-#   lang_id_documents ↔ doc_quality_scores + gopher_quality_flags (same
-#   shared-tokenization text-analysis core);
-#   q1_pricing_summary ↔ percentiles_by_returnflag (same lineitem
-#   returnflag/status group-agg) + q18 (agg family);
-#   ivf_topk_cosine ↔ hybrid_topk_cosine (identical norm-precompute
-#   scoring core) + lsh_knn_join;
-#   events_props_json ↔ events_hourly + events_sessionize (same events
-#   JSON/window family; props parsing also oracled via sessionize input).
-# Added when jaccard_index_pairs (durable shingle index) joined mid-r4:
-#   chunk_recursive_documents (green r2+r3) ↔ chunk_semantic_documents +
-#   chunk_semantic_refconst in-window (the semantic chunker's stage 1 IS
-#   the recursive splitter, exercised at two constant sets) + chunk_stats.
-# Added when the five TPC-H subquery shapes (q2/q4/q11/q12/q16) joined
-# late r4 — five multi-green queries rotate out, each anchored in-window:
-#   doc_quality_scores (r1+r2+r3) ↔ gopher_quality_flags +
-#   repetition_stats_documents (the same shared-tokenization projections;
-#   lang_id's deprioritization anchor updates to gopher accordingly);
-#   events_hourly (r2+r3) ↔ events_sessionize (same events window family);
-#   chunk_semantic_documents (r2+r3) ↔ chunk_semantic_refconst (IDENTICAL
-#   oracle generator at different constants, in-window and never-green —
-#   the freshest possible sibling);
-#   union_distinct_values (r1+r3) ↔ intersect_nation_segments (same set-op
-#   family; distinct_nation_segments' anchor updates to intersect);
-#   winnow_fingerprints (r1+r2+r3) ↔ minhash_lsh_pairs + minhash
-#   signatures' md5-derived fingerprint core (dedup_exact's anchor updates
-#   to dedup_clusters_documents, whose exact-normalize-hash stage is the
-#   same core).
-# Added when the time-series/graph trio (resample_interpolate_purchases,
-# anomaly_zscore_events_daily, pagerank_supplier_cosupply — never had a
-# driver row) joined late r4: three triple-green (r1+r2+r3) queries move
-# out, each with an in-window anchor:
-#   pivot_priority_status ↔ pivot_priority_by_status (the same PIVOT
-#   reshape over the same columns, operator- vs SQL-form);
-#   chunk_overlap_adjacent ↔ chunk_stats (same chunk-derived windowed
-#   measurement over the same chunker output);
-#   hybrid_topk_cosine ↔ rag_retrieve_context + lsh_knn_join (both
-#   in-window, both exercising the identical norm-precompute cosine
-#   scoring core; hybrid's prefilter is also plan-tested).
+# Oracles with several green checked rounds and an in-window sibling
+# that exercises the same core: they sort last among the oracles.
 _DEPRIORITIZED = (
     "pivot_priority_status",
     "chunk_overlap_adjacent",
@@ -10123,83 +9518,35 @@ _DEPRIORITIZED = (
     "q1_pricing_summary",
     "ivf_topk_cosine",
     "events_props_json",
-    # Added when the four new TPC-H shapes (q8/q9/q19/q22) joined mid-r3:
-    # without these the window cut would have pushed out q19/q22 and the
-    # two NEW analytics oracles (percentiles_by_returnflag,
-    # rolling_revenue_7d) that have never had driver evidence. Each of
-    # the four below carries TWO green driver rounds (r1+r2) and an
-    # in-window sibling: q10 ↔ q3/q18 (sort-desc-top-k revenue joins);
-    # value_counts_mktsegment ↔ q13 (count-per-group distribution);
-    # topk_cosine ↔ hybrid_topk_cosine (prefilter + the identical top-k
-    # core) and knn_join; dedup_exact_documents ↔ winnow_fingerprints
-    # (same md5-of-normalized-text fingerprint core).
     "q10_returned_revenue",
     "value_counts_mktsegment",
     "topk_cosine",
     "dedup_exact_documents",
-    # Added when the curation trio (repetition/gopher/decontaminate)
-    # joined late in r3 — same rule: two green driver rounds (r1+r2) and
-    # an in-window sibling each. chunk_fixed_documents ↔ chunk_stats
-    # (aggregates the fixed chunker's output) + both other chunkers;
-    # token_counts_documents ↔ doc_quality_scores + gopher_quality_flags
-    # (same shared-tokenization core); column_profile_orders ↔
-    # sketch_distinct_profile (the same profile over the same columns,
-    # sketch-backed).
     "chunk_fixed_documents",
     "token_counts_documents",
     "column_profile_orders",
-    # Added when pack_training_sequences joined: latest_order_per_customer
-    # (green r1+r2) ↔ asof_join_events_orders in-window (the same
-    # latest-per-key ordered-window carry, generalized).
     "latest_order_per_customer",
-    # Added when mixture_reweight_documents joined: q3 (green r1+r2) ↔
-    # q18 in-window (the same join→agg→sort-desc-top-k revenue family;
-    # q10's deprioritization already leans on q18 the same way).
     "q3_shipping_priority",
-    # Added when dedup_clusters_documents joined: knn_join (green r1+r2)
-    # ↔ hybrid_topk_cosine in-window (identical norm-precompute scoring
-    # core + per-query window) and lsh_knn_join (the same join surface,
-    # banded).
     "knn_join",
-    # Added when pivot/ntile joined (76 oracles now compete for 50
-    # slots; every query here has two green rounds and an in-window
-    # anchor): pairwise_overlap_stats ↔ chunk_overlap_adjacent (the same
-    # overlap measurement, windowed); nations_without_suppliers ↔
-    # q22_idle_rich_customers (left_anti NOT-EXISTS shape);
-    # ngram_jaccard_pairs ↔ dedup_clusters_documents (the cluster query
-    # embeds the identical pair pipeline before the closure); simhash ↔
-    # winnow_fingerprints (md5-derived per-doc fingerprint maps).
     "pairwise_overlap_stats",
     "nations_without_suppliers",
     "ngram_jaccard_pairs",
     "simhash_documents",
-    # Added when intersect_nation_segments joined: orders_date_validation
-    # (green r1+r2) ↔ filter_pushdown_orders in-window (the same
-    # date-coercion/dispatch core, F4/F8/T12).
     "orders_date_validation",
-    # (The late-r4 never-driver-checked block that used to sit here —
-    # 34 entries, heavy_hitter_tokens through scd2_customer_segments —
-    # moved into _R5_WINDOW above: it IS the r5 driver window now.)
 )
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry ordering for the driver harness (checks the FIRST 50
-    entries): the enumerated _R16_WINDOW sorts first (this round's
-    driver window — the full 26-cohort of r12-last-green anchors, then
-    24 of the 50 r13-last-green cohort by green-count asc then
-    alphabetical), then _NEW_R16 (oracles added after the window froze
-    — first in line for r17; empty at freeze time), then the
-    multi-green rotation pool (_DEPRIORITIZED last among oracles), then
-    rows-only queries. All oracles are value-checked every round by
-    tests/test_oracle_parity.py regardless of window position."""
+    """Registry ordering for the correctness harness, which checks the FIRST
+    50 entries: _R16_WINDOW, then _NEW_R16, then the other oracles
+    (_DEPRIORITIZED last among them), then rows-only queries."""
     ordered = sorted(
         REGISTRY.items(),
         key=lambda kv: (
             kv[1][1] is None,          # rows-only queries last
-            kv[0] not in _R16_WINDOW,  # the enumerated r16 window first
-            kv[0] not in _NEW_R16,     # new-in-r16 oracles next (r17 queue)
-            kv[0] in _DEPRIORITIZED,   # multi-green rotation pool last
+            kv[0] not in _R16_WINDOW,
+            kv[0] not in _NEW_R16,
+            kv[0] in _DEPRIORITIZED,
         ),
     )
     return {name: spec[0] for name, spec in ordered}

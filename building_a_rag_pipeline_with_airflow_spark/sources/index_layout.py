@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
+from building_a_rag_pipeline_with_airflow_spark.session import local_frame
+
 #: the base build's batch id — streaming extensions use the stream's own
 #: (non-negative) batch ids, so -1 can never collide with one
 BASE_BATCH_ID = -1
@@ -233,6 +235,18 @@ def _read_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
         return None
 
 
+def replace_meta(spark: SparkSession, path: str, **fields) -> DataFrame:
+    """The meta row stored at ``<path>/meta`` with ``fields`` replaced, in
+    the stored schema — so each family's meta schema is written only by
+    its builder. The frame is built from the collected row, never lazily
+    over ``<path>/meta``, so it can overwrite the meta it was read from."""
+    stored = spark.read.parquet(f"{path}/meta")
+    row = {**stored.first().asDict(), **fields}
+    return local_frame(
+        spark, [tuple(row[f.name] for f in stored.schema.fields)], stored.schema
+    )
+
+
 def read_meta_or_none(spark: SparkSession, path: str):
     """:func:`read_meta`, returning ``None`` when the meta does not exist
     yet (a gate's first invocation) — :func:`_read_or_none`'s rule."""
@@ -353,7 +367,7 @@ def consolidate_index(
 ) -> "int | None":
     """Re-base an EXTENDED postings-style index into a fresh single-batch
     layout at ``out_path`` — the text-side twin of the vector side's
-    ``recluster_ivf_index`` (r10 judge directive #2), closing the one
+    ``recluster_ivf_index``, closing the one
     operational gap streaming growth left: once an extender flips
     ``meta.extended``, the denormalized per-row count column
     (``shingle_df`` / ``h_count`` / ``gram_df`` / ``df_t``) is
@@ -377,9 +391,8 @@ def consolidate_index(
     sorted-by-key bucketed files; ``extra_subdirs`` side tables
     (shingle doc sizes, trigram names) are batch-independent payloads —
     copied under batch ``-1`` with their ``_batch_id`` dropped.
-    ``fresh_meta_df`` is the caller-built meta row with
-    ``extended=False`` (each family owns its meta schema; BM25
-    additionally folds corpus stats — see
+    ``fresh_meta_df`` is the source meta with ``extended=False``
+    (:func:`replace_meta`; BM25 also replaces its corpus stats — see
     ``lexical.consolidate_postings_index``).
 
     Publishing: ``out_path`` must be a NEW directory (never ``path``
@@ -457,14 +470,12 @@ def start_postings_extender(
     key_col: str,
     count_col: str,
     rows_subdir: str,
-    flip_meta_df: Callable,
     extra_outputs: "Callable | None" = None,
     available_now: bool = True,
 ):
     """The ONE extension dance every bucketed-postings index shares
-    (shingle / ExactSubstr windows / trigram grams) — previously three
-    hand-copied ``write_batch`` bodies, now the single implementation
-    the module docstring promises. Per batch:
+    (shingle / ExactSubstr windows / trigram grams / BM25 terms). Per
+    batch:
 
     1. read the frozen build meta;
     2. ``derive_rows(batch_df, meta)`` explodes the batch to posting
@@ -475,8 +486,8 @@ def start_postings_extender(
        flipping the index off its pushed-predicate fast path, releasing
        the checkpoint either way (a stream of such batches must not leak
        one pinned RDD per batch);
-    4. flip ``meta.extended`` BEFORE the rows land (``flip_meta_df``
-       builds the index's meta row) — the family crash-ordering rule: a
+    4. flip ``meta.extended`` BEFORE the rows land (:func:`replace_meta`
+       keeps the builder's meta schema) — the family crash-ordering rule: a
        reader between the writes must never see extension rows under
        ``extended=False``, where the pushed batch-local count guard
        would miss a key crossing its cap only ACROSS batches; the
@@ -507,7 +518,7 @@ def start_postings_extender(
             if rows.isEmpty():
                 return
             if not meta.extended:
-                write_meta(flip_meta_df(spark, meta), index_path)
+                write_meta(replace_meta(spark, index_path, extended=True), index_path)
             dfreq = rows.groupBy(key_col).agg(
                 F.count("*").cast("bigint").alias(count_col)
             )

@@ -362,10 +362,6 @@ index_layout.start_postings_extender` — shared with the ExactSubstr
         key_col="shingle",
         count_col="shingle_df",
         rows_subdir="postings",
-        flip_meta_df=lambda spark, meta: spark.createDataFrame(
-            [(int(meta.n), int(meta.n_buckets), True)],
-            "n int, n_buckets int, extended boolean",
-        ),
         extra_outputs=lambda batch_df, rows, meta: [
             (
                 "doc_sizes",
@@ -423,11 +419,6 @@ index_layout.start_postings_extender` (a non-empty batch can still
         key_col="h",
         count_col="h_count",
         rows_subdir="windows",
-        flip_meta_df=lambda spark, meta: spark.createDataFrame(
-            [(int(meta.k), int(meta.n_buckets),
-              int(meta.max_doc_tokens), True)],
-            "k int, n_buckets int, max_doc_tokens long, extended boolean",
-        ),
         available_now=available_now,
     )
 
@@ -442,13 +433,12 @@ def streaming_extend_trigram_index(
 ):
     """Keep a :func:`~building_a_rag_pipeline_with_airflow_spark.operators.\
 linkage.build_trigram_index` layout fresh — the fuzzy-search twin of
-    :func:`streaming_extend_shingle_index` (r9 judge directive #3, the
-    sixth family member): each micro-batch of NEW names gram-explodes
-    once and appends (gram, name_id, n_grams, gram_df) postings into
-    the same ``bucket=B`` directories under its own ``_batch_id``
-    (dynamic overwrite → replayed batches are idempotent), plus the
-    batch's (name_id, name) payload rows. Contract: append-only new
-    name ids, like every other extender.
+    :func:`streaming_extend_shingle_index`: each micro-batch of NEW
+    names gram-explodes once and appends (gram, name_id, n_grams,
+    gram_df) postings into the same ``bucket=B`` directories under its
+    own ``_batch_id`` (dynamic overwrite → replayed batches are
+    idempotent), plus the batch's (name_id, name) payload rows.
+    Contract: append-only new name ids, like every other extender.
 
     The batch writes batch-local ``gram_df`` (schema-compatible) and
     flips ``meta.extended``, which tells ``trigram_topk_from_index`` to
@@ -488,9 +478,6 @@ index_layout.start_postings_extender`; the (name_id, name) payload
         key_col="gram",
         count_col="gram_df",
         rows_subdir="postings",
-        flip_meta_df=lambda spark, meta: spark.createDataFrame(
-            [(int(meta.n_buckets), True)], "n_buckets int, extended boolean"
-        ),
         extra_outputs=lambda batch_df, rows, meta: [
             (
                 "names",
@@ -536,10 +523,8 @@ index_layout.start_postings_extender` — which also gives this extender
     the family's zero-derive skip (a batch of all-blank docs contributes
     no postings AND no docs to n_docs: ``_tokenized`` filters blank docs
     on the in-plan side too, so skipping preserves from-index ≡ in-plan)
-    and the flip-meta-first crash ordering (it used to flip LAST — a
-    reader between the writes saw extension rows under extended=False,
-    trusting batch-local df_t as corpus-wide idf; the reverse gap is
-    safe because the build's base batch_stats row (-1) reproduces meta's
+    and the flip-meta-first crash ordering (the reverse gap is safe
+    because the build's base batch_stats row (-1) reproduces meta's
     n_docs/avgdl exactly). The per-batch (n_docs, sum_dl) stats row
     rides as the extra output, derived from the SAME checkpointed
     posting rows as the postings (one tokenization pass per batch)."""
@@ -570,11 +555,6 @@ index_layout.start_postings_extender` — which also gives this extender
         # count conforms to it at the write boundary, values exact
         count_col="df_t",
         rows_subdir="postings",
-        flip_meta_df=lambda spark, meta: spark.createDataFrame(
-            [(int(meta["n_docs"]), float(meta["avgdl"]),
-              int(meta["n_buckets"]), True)],
-            "n_docs bigint, avgdl double, n_buckets int, extended boolean",
-        ),
         extra_outputs=lambda batch_df, rows, meta: [
             (
                 "batch_stats",
@@ -787,16 +767,14 @@ def streaming_extend_phash_index(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         meta = index_layout.read_meta(spark, index_path)
         hashed = _mm.perceptual_hash(
             batch_df, data_col=data_col, id_col=id_col
         )
         # eager localCheckpoint pins the derived band rows BEFORE the
-        # zero-derive probe (the start_postings_extender discipline, r10
-        # advice): without it the isEmpty() probe and the index write
+        # zero-derive probe (the start_postings_extender discipline):
+        # without it the isEmpty() probe and the index write
         # each re-run the perceptual-hash pandas UDF over the batch —
         # the phash_near_dups recompute-per-reference trap
         rows = _mm._phash_band_rows(
@@ -806,10 +784,10 @@ def streaming_extend_phash_index(
         # batch) must not leak the pinned blocks — one leaked RDD per
         # retry, same class as the zero-derive skip leak
         try:
-            # a non-empty batch can still hash to NOTHING (every payload
-            # NULL — perceptual_hash excludes them): skip like the
-            # postings extenders' zero-derive rule; there is no meta
-            # flip to guard here, this just avoids a pointless write
+            # an empty batch, or one whose payloads are all NULL
+            # (perceptual_hash excludes them), hashes to NOTHING: skip
+            # like the postings extenders' zero-derive rule; there is no
+            # meta flip to guard here, this just avoids a pointless write
             if rows.isEmpty():
                 return
             index_layout.write_index_rows(

@@ -1,11 +1,11 @@
-"""Capture `.explain('formatted')` for headline queries into plans/r17/.
+"""Capture `.explain('formatted')` for headline queries into plans/r<round>/.
 
-Optimization-round tooling (r17): writes `plans/r17/<name>_<tag>.txt` for
-each named query (default: every HEADLINE row) so plan diffs (Exchange
-count, join strategy, PushedFilters, Python-eval nodes) can be asserted
-before/after each change without re-running the bench.
+Writes `plans/r<round>/<name>_<tag>.txt` for each named query (default:
+every HEADLINE row) so plan diffs (Exchange count, join strategy,
+PushedFilters, Python-eval nodes) can be asserted before/after each
+change without re-running the bench.
 
-Usage: python scripts/capture_plans_r17.py <tag> [name ...]
+Usage: python scripts/capture_plans.py <round> <tag> [name ...]
 """
 
 from __future__ import annotations
@@ -21,15 +21,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
+    if len(sys.argv) < 3:
+        sys.exit("usage: capture_plans.py <round> <tag> [name ...]")
+    round_no, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from building_a_rag_pipeline_with_airflow_spark import get_spark
     from building_a_rag_pipeline_with_airflow_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="capture-plans-r17")
-    out_dir = os.path.join(REPO, "plans", "r17")
+    spark = get_spark(app_name=f"capture-plans-r{round_no}")
+    out_dir = os.path.join(REPO, "plans", f"r{round_no}")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         fn, _ = REGISTRY[name]

@@ -33,8 +33,7 @@ pairs) and measures the wrong thing. Instead each replica r > 0:
   retrieval.
 
 Usage: python scripts/scale_curve.py  (writes scratch data under
-.scale_check/, prints the table, removes the scratch dir). Results are
-recorded in bench.py's docstring tail.
+.scale_check/, prints the table, removes the scratch dir).
 """
 
 from __future__ import annotations

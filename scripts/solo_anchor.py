@@ -15,7 +15,7 @@ future round classifies a >0.5 s interleaved-median mover in one
 lookup: if its solo anchor is flat on unchanged code, the move is
 session noise; re-anchor only when the plan actually changes.
 
-MAINTENANCE MODE (the r14 protocol, bench.py r14 notes): a full
+MAINTENANCE MODE (the r14 protocol): a full
 regeneration re-samples every row's noise and decays the anchor into a
 second interleaved ledger, so from r14 on rounds re-anchor ONLY the
 rows whose plans actually changed::

@@ -308,6 +308,7 @@ def test_consolidate_restores_fast_path(spec, spark, sf_dir, tmp_path):
     key = F.col(spec.split_col)
     path = str(tmp_path / "idx")
     spec.build(full.where(key % 3 == 0), path)
+    built_meta = spark.read.parquet(f"{path}/meta").dtypes
     _bind_runtime_queries(spec, spark, full)
 
     # extend with the second third, one micro-batch
@@ -318,6 +319,9 @@ def test_consolidate_restores_fast_path(spec, spark, sf_dir, tmp_path):
     stream = spark.readStream.schema(schema).parquet(f"{landing1}/*")
     spec.extend(stream, path, str(tmp_path / "ck1")).awaitTermination(120)
     assert bool(index_layout.read_meta(spark, path)["extended"]) is True
+    assert spark.read.parquet(f"{path}/meta").dtypes == built_meta, (
+        f"{spec.name}: extended meta schema != built meta schema"
+    )
     extended_rows = _rows(spec.query(spark, path))
     assert extended_rows == _rows(spec.inplan(full.where(key % 3 != 2))), (
         f"{spec.name}: extended != in-plan (precondition)"
@@ -336,6 +340,9 @@ def test_consolidate_restores_fast_path(spec, spark, sf_dir, tmp_path):
         f"{spec.name}: consolidated != extended"
     )
     assert bool(index_layout.read_meta(spark, out)["extended"]) is False
+    assert spark.read.parquet(f"{out}/meta").dtypes == built_meta, (
+        f"{spec.name}: consolidated meta schema != built meta schema"
+    )
     plan = (
         spec.prune_plan(spark, out)
         ._jdf.queryExecution()
