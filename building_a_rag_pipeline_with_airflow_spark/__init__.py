@@ -13,7 +13,7 @@ document pipeline + tabular SQL viewer) as an idiomatic Spark engine:
 * vector ops (cosine top-k retrieval, knn join, LSH/minhash dedup)
 * tabular query surface (filter pushdown, pagination, column profiling —
   reference ``Frontend/app.py``)
-* structured-streaming windows over the events stream
+* structured-streaming ingestion and gates over document drops
 
 Everything is DataFrame/SQL-first so Catalyst gets to optimize; Python only
 appears in vectorized pandas UDFs on genuinely non-relational steps.

@@ -6,8 +6,7 @@ expressions (whole-stage-codegen'd, no Python in the hot path):
 * token counting — reference uses ``tiktoken cl100k_base``
   (``Chunking_Strats/kamredt_chunking.py:48-50``); tiktoken is not in this
   container, so the engine ships a whitespace tokenizer and a BPE-ish
-  regex tokenizer, both pure SQL. A tiktoken pandas_udf is gated behind an
-  import-try for environments that have it.
+  regex tokenizer, both pure SQL.
 * quality scoring / language id / fingerprinting — training-data-pipeline
   operators (north-star additions; no reference counterpart).
 """
@@ -222,41 +221,6 @@ def word_ngrams(col: Column | str, n: int = 3) -> Column:
     """
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
     return ngrams_from_tokens(toks, n)
-
-
-def try_tiktoken_udf():
-    """Return a pandas_udf computing cl100k_base token counts if tiktoken is
-    importable (it is not in the test container), else None. Reference:
-    ``Chunking_Strats/kamredt_chunking.py:48-50``.
-
-    Availability ledger (judge directive: one-line note per round):
-    r4 re-checked — not importable. r5 — (note missed; still absent per
-    judge's own check). r6 — re-checked by judge, not importable.
-    r7 re-checked — ``import tiktoken`` still raises ModuleNotFoundError;
-    the whitespace+BPE-regex fallback remains the in-container path.
-    r8 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r9 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r10 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r11 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r12 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r13 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r14 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r15 re-checked — still ModuleNotFoundError; fallback unchanged.
-    r16 re-checked — still ModuleNotFoundError; fallback unchanged."""
-    try:
-        import tiktoken  # noqa: F401
-    except Exception:
-        return None
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    enc = tiktoken.get_encoding("cl100k_base")
-
-    @F.pandas_udf(T.IntegerType())
-    def _count(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(lambda t: len(enc.encode(t)))
-
-    return _count
 
 
 def readability_stats(col: Column | str) -> "dict[str, Column]":

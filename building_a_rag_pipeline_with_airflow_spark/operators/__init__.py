@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -62,7 +66,7 @@ def release_checkpoint(df: DataFrame) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         # best-effort memory hygiene — never fail the job over it
-        pass
+        _log.warning("release_checkpoint: could not unpersist", exc_info=True)
 
 
 def checkpoint_nostats(df: DataFrame) -> DataFrame:
@@ -105,6 +109,10 @@ def checkpoint_nostats(df: DataFrame) -> DataFrame:
         out._graft_ckpt = ck
         return out
     except Exception:
+        _log.warning(
+            "checkpoint_nostats: stats-free rewrap failed, returning the plain "
+            "checkpoint", exc_info=True,
+        )
         return ck
 
 

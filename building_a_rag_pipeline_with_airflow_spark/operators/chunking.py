@@ -25,7 +25,7 @@ hash-partition on doc_id (no skew: documents are bounded in size).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

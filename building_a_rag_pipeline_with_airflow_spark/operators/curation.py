@@ -195,8 +195,8 @@ def decontaminate(
     # dedup.shingles): passing the raw tokens(...) expression put the
     # split inside the transform's capturing slice lambda — re-splitting
     # the text once per gram position (visible as split() inside
-    # lambdafunction in plans/r17/decontaminate_documents_before.txt,
-    # both sides). Grams identical; split now runs once per row.
+    # lambdafunction in the formatted plan, both sides). Grams
+    # identical; split now runs once per row.
     corpus = ensure_min_partitions(df).select(
         F.col(id_col), tokens(F.lower(F.col(text_col))).alias("_toks")
     ).select(

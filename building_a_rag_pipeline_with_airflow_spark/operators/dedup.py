@@ -28,7 +28,6 @@ from building_a_rag_pipeline_with_airflow_spark.functions.text import (
     ngrams_from_tokens,
     normalized_text,
     tokens,
-    word_ngrams,
 )
 from building_a_rag_pipeline_with_airflow_spark.operators import (
     checkpoint_nostats,
@@ -54,18 +53,6 @@ def exact_duplicates(
             F.count("*").cast("bigint").alias("n_copies"),
             F.min(id_col).alias("canonical_id"),
         )
-    )
-
-
-def drop_exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep one row (min id) per distinct normalized text."""
-    w = Window.partitionBy(F.md5(normalized_text(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -343,22 +330,6 @@ def shingle_id(col: "F.Column | str") -> "F.Column":
     return (
         F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
         % F.lit(MERSENNE_P)
-    )
-
-
-def shingle_vocabulary(sh: DataFrame) -> DataFrame:
-    """Rank distinct shingles alphabetically → dense integer ids.
-
-    Kept for vocabularies that genuinely need dense ranks (e.g. feature
-    indices). NOT used by minhash: the global row_number window moves the
-    whole vocabulary to one partition — use :func:`shingle_id` instead."""
-    return (
-        sh.select("shingle")
-        .distinct()
-        .withColumn(
-            "shingle_id",
-            F.row_number().over(Window.orderBy("shingle")).cast("bigint"),
-        )
     )
 
 

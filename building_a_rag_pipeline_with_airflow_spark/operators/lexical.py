@@ -34,7 +34,7 @@ stage). This module supplies that family, Spark-first:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.text import tokens

@@ -4,7 +4,7 @@ reference stops at base64-decoded OCR images, ``testing_code/MistralTest.py:
 66-88``).
 
 Design: media payloads ride in a ``binary`` column next to a typed metadata
-struct; per-item compute (decode, resize, feature-extract, frame-sample) is
+struct; per-item compute (decode, feature-extract, frame-sample) is
 ``mapInPandas`` over Arrow batches so bytes never round-trip through Python
 row objects one at a time. The actual codec work needs media libraries that
 are NOT in this container — the decode core is stubbed behind
@@ -218,69 +218,6 @@ def frame_sample(df: DataFrame, every_n_bytes: int = 32,
     return df.mapInPandas(op, schema=frame)
 
 
-def extract_audio_meta(df: DataFrame, data_col: str = "data",
-                       id_col: str = "media_id",
-                       sample_rate: int = 16_000,
-                       bytes_per_sample: int = 2) -> DataFrame:
-    """Audio metadata extraction (duration / sample count / RMS level),
-    completing the image/audio/video column triple.
-
-    The decode core is the documented stub — byte length plays the role of
-    the PCM sample count and a byte-RMS stands in for signal level; swap in
-    soundfile/librosa behind the same signature for real decoding. The
-    Spark side is production-shaped: one-way Arrow crossing (payload never
-    returns from Python), typed meta struct joined back by id."""
-    dtypes = {1: "int8", 2: "int16", 4: "int32"}
-    if bytes_per_sample not in dtypes:
-        raise ValueError(
-            f"bytes_per_sample must be one of {sorted(dtypes)} "
-            f"(got {bytes_per_sample})"
-        )
-    sample_dtype = dtypes[bytes_per_sample]
-    meta_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField(
-                "audio_meta",
-                T.StructType(
-                    [
-                        T.StructField("n_samples", T.LongType()),
-                        T.StructField("duration_s", T.DoubleType()),
-                        T.StructField("rms", T.DoubleType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            metas = []
-            for b in pdf[data_col]:
-                raw = bytes(b) if b is not None else b""
-                n = len(raw) // bytes_per_sample
-                arr = (
-                    np.frombuffer(raw[: n * bytes_per_sample], dtype=sample_dtype)
-                    .astype("float64")
-                    if n
-                    else np.array([], "float64")
-                )
-                rms = float(np.sqrt(np.mean(arr * arr))) if n else 0.0
-                metas.append(
-                    {
-                        "n_samples": n,
-                        "duration_s": round(n / sample_rate, 6),
-                        "rms": round(rms, 4),
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "audio_meta": metas})
-
-    meta_df = df.select(id_col, data_col).mapInPandas(op, schema=meta_schema)
-    return df.join(meta_df, id_col)
-
-
 def perceptual_hash(df: DataFrame, data_col: str = "data",
                     id_col: str = "media_id",
                     out_col: str = "phash") -> DataFrame:
@@ -441,63 +378,6 @@ def phash_near_dups(hashed: DataFrame, max_hamming: int = 6,
         .where(F.col("hamming") <= int(max_hamming))
         .select("id_a", "id_b", "hamming")
     )
-
-
-def resize_image(df: DataFrame, width: int, height: int,
-                 data_col: str = "data",
-                 id_col: str = "media_id",
-                 out_col: str = "resized") -> DataFrame:
-    """Resize every image payload to ``width×height`` — the
-    decode → resize → re-encode rung of the media pipeline
-    (thumbnailing, model-input normalization). Arrow-batched
-    ``mapInPandas`` with the same one-way contract as the other media
-    ops: the ORIGINAL payload never returns from Python, only the
-    (id, resized bytes, w, h) rows, which join back on the id.
-
-    The decode/encode cores are the stub seam (nearest-neighbor
-    resample of the byte grid — deterministic, locality-preserving, the
-    same fake as :func:`perceptual_hash`); production swaps `_resize`
-    for a real decode → interpolate → encode. Output size is exactly
-    ``width*height`` bytes per row by contract — the property the
-    partition-byte-budget planner (:func:`repartition_for_media`)
-    needs to stay accurate downstream."""
-    if width < 1 or height < 1:
-        raise ValueError("width and height must be >= 1")
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField(out_col, T.BinaryType()),
-            T.StructField("resized_w", T.IntegerType()),
-            T.StructField("resized_h", T.IntegerType()),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        n = width * height
-
-        def _resize(b) -> bytes:
-            arr = (
-                np.frombuffer(bytes(b), dtype=np.uint8)
-                if b is not None and len(b) > 0
-                else np.zeros(1, np.uint8)
-            )
-            idx = np.linspace(0, len(arr) - 1, n).astype(np.int64)
-            return arr[idx].tobytes()
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    out_col: [_resize(b) for b in pdf[data_col]],
-                    "resized_w": width,
-                    "resized_h": height,
-                }
-            )
-
-    resized = df.select(id_col, data_col).mapInPandas(op, schema=out_schema)
-    return df.drop(data_col).join(resized, id_col)
 
 
 def _check_n_bands(n_bands: int, op: str) -> None:

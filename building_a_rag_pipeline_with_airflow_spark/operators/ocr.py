@@ -19,30 +19,9 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from building_a_rag_pipeline_with_airflow_spark.schemas import OCR_PAGES
-
-_PAGE_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("markdown", T.StringType()),
-            T.StructField(
-                "images",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("id", T.StringType()),
-                            T.StructField("image_base64", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-)
 
 
 def fake_ocr(content: bytes | None) -> list[dict]:

@@ -83,17 +83,6 @@ def stratified_hash_sample(
     return df.where(hash_bucket(key, salt) < thr)
 
 
-def train_eval_split(
-    df: DataFrame, key: str, eval_fraction: float = 0.1, salt: str = "split"
-) -> tuple[DataFrame, DataFrame]:
-    """(train, eval) partition of ``df`` by entity key — complementary
-    predicates over one bucket expression, so the split is exhaustive,
-    disjoint, and identical on every re-run and relayout."""
-    cut = int(round(eval_fraction * BUCKETS))
-    b = hash_bucket(key, salt)
-    return df.where(b >= cut), df.where(b < cut)
-
-
 def cluster_safe_split(
     df: DataFrame,
     components: DataFrame,

@@ -444,54 +444,6 @@ def lsh_knn_join(
     return _per_query_topk(scored, q_id, c_id, k)
 
 
-def brp_similarity_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dist_threshold: float,
-    bucket_length: float = 1.0,
-    num_hash_tables: int = 3,
-    q_id: str = "q_id",
-    q_vec: str = "q_vec",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Distance-threshold similarity join via MLlib
-    ``BucketedRandomProjectionLSH.approxSimilarityJoin`` (SURVEY §2.7 V2/J3
-    scale alternative to the hand-rolled sign-LSH).
-
-    Euclidean-distance semantics; for unit-normalized embeddings a cosine
-    threshold ``t`` maps to ``dist_threshold = sqrt(2 - 2 t)``. Approximate
-    recall (pairs must collide in at least one of ``num_hash_tables``
-    hashes) traded for a bucketed equi-join — never all-pairs. Output:
-    (q_id, c_id, dist) for every located pair within the threshold."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    fa = queries.select(
-        F.col(q_id).alias("id"),
-        array_to_vector(F.col(q_vec).cast("array<double>")).alias("features"),
-    )
-    fb = corpus.select(
-        F.col(c_id).alias("id"),
-        array_to_vector(F.col(c_vec).cast("array<double>")).alias("features"),
-    )
-    brp = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = brp.fit(fb)
-    joined = model.approxSimilarityJoin(fa, fb, dist_threshold, distCol="dist")
-    return joined.select(
-        F.col("datasetA.id").alias(q_id),
-        F.col("datasetB.id").alias(c_id),
-        F.round("dist", 4).alias("dist"),
-    )
-
-
 def brp_topk(
     corpus: DataFrame,
     query_vec: list[float],

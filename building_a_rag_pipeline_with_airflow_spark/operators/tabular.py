@@ -144,25 +144,6 @@ def value_counts(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def top1_per_group(
-    df: DataFrame, group_col: str, order_col: str, desc: bool = True,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Latest-per-group (reference T13: newest file by mtime,
-    dags:314-319) — window row_number, the scale-safe idiom."""
-    from pyspark.sql import Window
-
-    ordering = [F.desc(order_col) if desc else F.asc(order_col)]
-    if tiebreak:
-        ordering.append(F.asc(tiebreak))
-    w = Window.partitionBy(group_col).orderBy(*ordering)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     """Fixed-width histogram (reference A3: np.histogram(bins=10),
     chunk_visualizer.py:412-418). Two passes: min/max, then one bucketed

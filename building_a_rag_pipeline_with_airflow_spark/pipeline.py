@@ -171,6 +171,10 @@ def upsert_documents(
     a table format (Delta/Iceberg) would make the swap atomic without
     changing this plan.
 
+    An index built with ``build_index(keep_cols=...)`` keeps those doc
+    columns: every stored column a plain build lacks and ``changed_docs``
+    carries is passed on as ``keep_cols``.
+
     The affected buckets are those of the changed doc ids, not of their
     fresh chunks: a document revised to blank text has no chunks, and its
     old ones must still go. A bucket left with no rows at all is absent
@@ -186,12 +190,16 @@ def upsert_documents(
     )  # bucket ids — metadata-scale driver list, becomes the partition filter
     if not affected:
         return []
-    fresh = build_index(changed_docs, strategy=strategy, dim=dim).withColumn(
-        "doc_bucket", bucket_of
-    )
     current = spark.read.parquet(path).where(F.col("doc_bucket").isin(affected))
     kept = current.join(F.broadcast(changed_ids), "doc_id", "left_anti")
-    out = kept.unionByName(fresh.select(*kept.columns))
+    fresh = build_index(changed_docs, strategy=strategy, dim=dim)
+    keep_cols = tuple(
+        c for c in kept.columns
+        if c not in fresh.columns and c in changed_docs.columns
+    )
+    if keep_cols:
+        fresh = build_index(changed_docs, strategy=strategy, dim=dim, keep_cols=keep_cols)
+    out = kept.unionByName(fresh.withColumn("doc_bucket", bucket_of).select(*kept.columns))
     # one current file per affected bucket: a rewritten bucket loses it
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark import schemas
 from building_a_rag_pipeline_with_airflow_spark.functions import text as tx
-from building_a_rag_pipeline_with_airflow_spark.functions.vectors import cosine_similarity, l2_norm
+from building_a_rag_pipeline_with_airflow_spark.functions.vectors import l2_norm
 from building_a_rag_pipeline_with_airflow_spark.operators import (
     analytics,
     chunking,
@@ -3444,8 +3444,7 @@ def chunk_semantic_documents(spark, sf_dir):
     """,
 )
 def events_hourly(spark, sf_dir):
-    """Tumbling-window counts in batch form (same groupBy the streaming
-    tumbling_counts uses — batch/stream parity by construction)."""
+    """Hourly tumbling-window counts and value sums per event type."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(

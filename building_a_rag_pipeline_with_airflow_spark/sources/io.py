@@ -1,46 +1,18 @@
 """IO layer: the reference's ad-hoc file handling re-expressed as Spark
 sources/sinks.
 
-Scans (§2.1): S4/S7 downloaded files → ``binaryFile`` / csv readers; S9 text
-read → ``spark.read.text(wholetext)``; S10 table scan with
-filter/limit/offset → parquet + Catalyst; S11 catalog introspection; S12
-config. Sinks (§2.2): K1 per-file S3 loop → one partitioned distributed
-write with replace-on-write idempotence; K3 chunks→JSON.
+Scans (§2.1): S7 unzipped extracts → tab-delimited csv reader; S10 table
+scan with filter/limit/offset → parquet + Catalyst. Sinks (§2.2): K1
+per-file S3 loop → one partitioned distributed write with replace-on-write
+idempotence.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def read_binary_docs(spark: SparkSession, path: str,
-                     glob: str = "*.pdf") -> DataFrame:
-    """Document corpus from raw files (reference S4's download folder):
-    path, modificationTime, length, content:binary. pathGlobFilter pushes the
-    reference's suffix predicate F1 into the listing."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-
-
-def read_wholetext_docs(spark: SparkSession, path: str) -> DataFrame:
-    """One row per text/markdown file (reference S9, kamredt_chunking.py:41).
-
-    Adds doc_id = stable md5 of the file path (deterministic across runs)."""
-    df = spark.read.text(path, wholetext=True).withColumn(
-        "path", F.input_file_name()
-    )
-    return df.select(
-        F.md5("path").alias("doc_id"),
-        F.col("path"),
-        F.col("value").alias("text"),
-    )
 
 
 def read_tsv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
@@ -87,22 +59,6 @@ def extract_archives(src_dir: str, dest_dir: str,
     return extracted
 
 
-def load_config(path: str) -> dict:
-    """Driver-side JSON config (reference S12, dags:33-47)."""
-    with open(path) as fh:
-        return json.load(fh)
-
-
-def list_catalog(spark: SparkSession) -> DataFrame:
-    """Catalog introspection (reference S11, Frontend/app.py:83-133)."""
-    rows = [
-        (db.name, tbl.name, tbl.tableType)
-        for db in spark.catalog.listDatabases()
-        for tbl in spark.catalog.listTables(db.name)
-    ]
-    return spark.createDataFrame(rows, "database string, table string, type string")
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -118,12 +74,6 @@ def write_partitioned(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.option("partitionOverwriteMode", "dynamic").save(path)
-
-
-def write_chunks_json(chunks: DataFrame, path: str) -> None:
-    """Chunks → JSON lines (reference K3 chunks.json,
-    chunk_visualizer.py:12-52; distributed instead of one json.dump)."""
-    chunks.write.mode("overwrite").json(path)
 
 
 def write_bucketed(

@@ -31,8 +31,8 @@ The gate protocol
 -----------------
 Every streaming gate here — PSI, expectations, embedding drift, NB,
 quantile sketch, duplication, calibration, threshold curve, the
-cluster-safe split and the classifier stamp — plus the incremental
-aggregate and the index build itself runs ONE protocol, implemented once
+cluster-safe split and the classifier stamp — plus the index build
+itself runs ONE protocol, implemented once
 by the private helpers below; a gate supplies only its constants, its
 per-batch partials and its fold.
 
@@ -197,8 +197,7 @@ def read_documents_stream(
     StructType or DDL string) to start the stream BEFORE the first file
     lands — the normal continuous-ingestion deployment order; when omitted
     it is inferred from files already present (one footer read, no data
-    scan — the mirror of ``streaming.windows.read_events_stream``), which
-    requires the directory to be non-empty at start and raises
+    scan), which requires the directory to be non-empty at start and raises
     AnalysisException otherwise."""
     if schema is None:
         schema = spark.read.parquet(path).schema
@@ -567,63 +566,6 @@ index_layout.start_postings_extender` — which also gives this extender
             )
         ],
         available_now=available_now,
-    )
-
-
-def streaming_incremental_agg(
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    keys: tuple = ("event_type",),
-    value_col: str = "value",
-    available_now: bool = True,
-):
-    """Incrementally-maintained aggregate view — the streaming
-    materialized-view pattern for mergeable aggregates (count/sum/min/
-    max; avg derives from count+sum at read time).
-
-    Each micro-batch writes only its own per-key partials, at the state
-    ROOT, so a batch costs O(batch): the read-modify-write alternative
-    rescans the whole state every batch and cannot survive a
-    high-frequency stream. :func:`read_incremental_agg` folds the
-    partials at read time; ``sources.io.compact_parquet`` bounds the
-    partial-file count between reads the same way it does for the other
-    streaming indexes."""
-    v = F.col(value_col).cast("double")
-
-    def write_partials(batch_df: DataFrame, batch_id: int) -> None:
-        index_layout._write_tagged(
-            batch_df.groupBy(*keys).agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.sum(v).alias("sum_v"),
-                F.min(v).alias("min_v"),
-                F.max(v).alias("max_v"),
-            ),
-            state_path,
-            batch_id,
-        )
-
-    return _start_gate(events_stream, checkpoint_path, -1, write_partials, available_now)
-
-
-def read_incremental_agg(
-    spark: SparkSession, state_path: str, keys: tuple = ("event_type",)
-) -> DataFrame:
-    """Fold the per-batch partials into the current view: counts and
-    sums add, min/max fold — one aggregate over partial rows (keys ×
-    batches, not events). ``avg_v`` is derived here, the only place a
-    non-mergeable statistic may exist. The state stores no key types, so
-    before the first non-empty batch this raises a ValueError."""
-    parts = _read_partials(spark, state_path, None, "read_incremental_agg")
-    return (
-        parts.groupBy(*keys)
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
-        .withColumn("avg_v", F.col("sum_v") / F.col("n"))
     )
 
 
@@ -1342,9 +1284,7 @@ def compact_gate_state(
 # be compacted; expectations and embedding drift use their frozen
 # artifact (contract / baseline) as the initialized marker instead of
 # meta, so they have nowhere to carry compacted_through — their adoption
-# path is to grow a meta row first (partials are sum-mergeable in both);
-# incremental_agg writes partials at the state ROOT and documents
-# sources.io.compact_parquet as its file-count bound.
+# path is to grow a meta row first (partials are sum-mergeable in both).
 _STATE_LAYOUTS = {
     "duplication": {
         "subdirs": {"partials": (("h",), ("c",)), "totals": ((), ("n_windows",))}

@@ -1,15 +1,11 @@
 """Accuracy bounds for the approximate analytics (sketches must land within
-their documented error), exactness for the windowed/percentile paths, and
-stream-static join parity."""
-
-import shutil
+their documented error), and exactness for the windowed/percentile paths."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark import schemas
 from building_a_rag_pipeline_with_airflow_spark.operators import analytics
-from building_a_rag_pipeline_with_airflow_spark.streaming import windows as W
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -93,41 +89,6 @@ def test_rolling_agg_per_key(spark):
         ("a", "2024-01-05"): 4.0,   # day2 is 3 days back -> outside
         ("b", "2024-01-01"): 10.0,  # keys don't mix
     }
-
-
-@pytest.fixture()
-def events_stream_dir(tmp_path, sf_dir):
-    d = tmp_path / "enrich_stream"
-    d.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-def test_enrich_with_dim_stream_equals_batch(spark, sf_dir, events_stream_dir):
-    dim = spark.createDataFrame(
-        [("click", "engage"), ("view", "engage"), ("purchase", "convert"),
-         ("signup", "convert"), ("error", "ops")],
-        "event_type string, category string",
-    )
-    batch = schemas.load_table(spark, sf_dir, "events")
-    expect = sorted(
-        (r.event_id, r.category)
-        for r in W.enrich_with_dim(batch, dim, "event_type").collect()
-    )
-    stream = W.read_events_stream(spark, events_stream_dir)
-    q = (
-        W.enrich_with_dim(stream, dim, "event_type")
-        .writeStream.format("memory")
-        .queryName("enrich_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.event_id, r.category) for r in spark.table("enrich_mem").collect()
-    )
-    assert got == expect and len(got) > 0
 
 
 def test_gopher_flags_components_consistent(spark, sf_dir):

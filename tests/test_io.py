@@ -272,6 +272,44 @@ def test_upsert_documents_removes_chunks_of_emptied_documents(spark, sf_dir, tmp
     assert not glob.glob(f"{path}/doc_bucket={alone.b}")
 
 
+def test_upsert_documents_keeps_keep_cols_of_the_index(spark, sf_dir, tmp_path):
+    """An index built with ``keep_cols`` (the hybrid-prefilter layout)
+    stores doc columns a plain build lacks. Upserting revised documents
+    into it must carry those columns, leaving the index equal to a
+    ``keep_cols`` rebuild of the revised corpus."""
+    from pyspark.sql import functions as F
+
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import (
+        build_index,
+        read_index_bucketed,
+        upsert_documents,
+        write_index_bucketed,
+    )
+
+    keep = ("source", "lang")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+    path = str(tmp_path / "bucketed_keep_index")
+    write_index_bucketed(build_index(docs, keep_cols=keep), path, n_doc_buckets=8)
+
+    ids = [r.doc_id for r in docs.select("doc_id").orderBy("doc_id").limit(3).collect()]
+    changed = docs.where(F.col("doc_id").isin(ids)).withColumns(
+        {
+            "text": F.concat(F.col("text"), F.lit(" revised "), F.col("text")),
+            "source": F.concat(F.col("source"), F.lit("_v2")),
+        }
+    )
+    upsert_documents(spark, path, changed, n_doc_buckets=8)
+
+    revised = docs.where(~F.col("doc_id").isin(ids)).unionByName(changed)
+    cols = ("chunk_id", "doc_id", "text", *keep)
+    want = sorted(
+        tuple(r) for r in build_index(revised, keep_cols=keep).select(*cols).collect()
+    )
+    got = read_index_bucketed(spark, path)
+    assert sorted(got.columns) == sorted(build_index(docs, keep_cols=keep).columns)
+    assert sorted(tuple(r) for r in got.select(*cols).collect()) == want
+
+
 def test_layout_report_audits_files_and_spans(spark, sf_dir, tmp_path):
     from building_a_rag_pipeline_with_airflow_spark import schemas
     from building_a_rag_pipeline_with_airflow_spark.sources import io as sio

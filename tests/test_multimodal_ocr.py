@@ -115,45 +115,6 @@ def test_acquisition_manifest_pipeline(spark):
     assert "bucket/nvidia_quarterly_report/2024/q4.pdf" in keys
 
 
-def test_audio_meta_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as mm
-
-    media = mm.synthesize_media(spark, n=16, kind="audio")
-    out = mm.extract_audio_meta(media)
-    rows = out.select("media_id", "audio_meta.*", F.length("data").alias("nb")).collect()
-    assert len(rows) == 16
-    for r in rows:
-        assert r.n_samples == r.nb // 2
-        assert abs(r.duration_s - r.n_samples / 16000) < 1e-9
-        assert r.rms >= 0.0
-    # payload column untouched (one-way crossing keeps the binary intact)
-    assert out.schema["data"].dataType.typeName() == "binary"
-
-
-def test_audio_meta_dtype_follows_bytes_per_sample(spark):
-    import pytest as _pytest
-
-    from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as mm
-
-    media = mm.synthesize_media(spark, n=4, kind="audio")
-    four = mm.extract_audio_meta(media, bytes_per_sample=4)
-    for r in four.select("audio_meta.*", "data").collect():
-        raw = bytes(r.data)
-        assert r.n_samples == len(raw) // 4
-        # RMS must be computed over int32 words, not int16 halves: check
-        # against a direct numpy int32 computation
-        import numpy as np
-
-        n = len(raw) // 4
-        arr = np.frombuffer(raw[: n * 4], dtype=np.int32).astype("float64")
-        want = float(np.sqrt(np.mean(arr * arr))) if n else 0.0
-        assert abs(r.rms - round(want, 4)) < 1e-6
-    with _pytest.raises(ValueError, match="bytes_per_sample"):
-        mm.extract_audio_meta(media, bytes_per_sample=3)
-
-
 def test_phash_identical_payloads_hash_equal(spark):
     from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as mm
 
@@ -293,31 +254,6 @@ def test_phash_max_bucket_guard_drops_degenerate_bands(spark, sf_dir):
     assert {(r.id_a, r.id_b) for r in some} == {
         (r.doc_id, r.doc_id + 100) for r in docs.select("doc_id").collect()
     }
-
-
-def test_resize_image_contract(spark):
-    from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as mm
-
-    m = mm.synthesize_media(spark, n=6)
-    out = mm.resize_image(m, 16, 16).collect()
-    assert len(out) == 6
-    for r in out:
-        assert len(bytes(r.resized)) == 16 * 16  # exact byte contract
-        assert (r.resized_w, r.resized_h) == (16, 16)
-    cols = mm.resize_image(m, 8, 8).columns
-    assert "data" not in cols  # original payload never returns
-
-    with pytest.raises(ValueError):
-        mm.resize_image(m, 0, 8)
-
-
-def test_resize_image_deterministic(spark):
-    from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as mm
-
-    m = mm.synthesize_media(spark, n=4)
-    a = {r.media_id: bytes(r.resized) for r in mm.resize_image(m, 8, 8).collect()}
-    b = {r.media_id: bytes(r.resized) for r in mm.resize_image(m, 8, 8).collect()}
-    assert a == b
 
 
 def test_phash_index_parity_and_streaming_extension(spark, sf_dir, tmp_path):

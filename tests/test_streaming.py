@@ -1,26 +1,11 @@
-"""Structured Streaming tests: replay the events parquet through a file
-source and check the windowed operators against their batch twins (the same
-function body runs in both modes — that equivalence is the test)."""
-
-import shutil
+"""Structured Streaming tests: drain file-source streams through the
+streaming index builders, extenders and gates, and check each against its
+batch twin over the same rows (that equivalence is the test)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark import schemas
-from building_a_rag_pipeline_with_airflow_spark.streaming import windows as W
-
-
-@pytest.fixture(scope="module")
-def events_dir(tmp_path_factory, sf_dir):
-    d = tmp_path_factory.mktemp("events_stream")
-    shutil.copy(f"{sf_dir}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def events_batch(spark, sf_dir):
-    return schemas.load_table(spark, sf_dir, "events")
 
 
 def _drain(q, timeout=120):
@@ -33,108 +18,6 @@ def _drain(q, timeout=120):
     if not q.awaitTermination(timeout):
         q.stop()
         raise TimeoutError(f"stream drain exceeded {timeout} s")
-
-
-def _run_stream_to_memory(spark, stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name)
-
-
-def test_tumbling_stream_equals_batch(spark, events_batch, events_dir):
-    raw = W.read_events_stream(spark, events_dir)
-    stream_out = _run_stream_to_memory(
-        spark, W.tumbling_counts(raw, watermark=None), "tumbling_mem"
-    )
-    batch_out = W.tumbling_counts(events_batch)
-    a = sorted(map(tuple, stream_out.collect()))
-    b = sorted(map(tuple, batch_out.collect()))
-    assert a == b
-    assert len(a) > 0
-
-
-def test_tumbling_ohlc_stream_equals_batch(spark, events_batch, events_dir):
-    raw = W.read_events_stream(spark, events_dir)
-    stream_out = _run_stream_to_memory(
-        spark, W.tumbling_ohlc(raw, watermark=None), "ohlc_mem"
-    )
-    batch_out = W.tumbling_ohlc(events_batch)
-    a = sorted(map(tuple, stream_out.collect()))
-    b = sorted(map(tuple, batch_out.collect()))
-    assert a == b
-    assert len(a) > 0
-    for r in stream_out.collect():
-        assert r.low <= r.high
-        assert r.low <= r.open <= r.high and r.low <= r.close <= r.high
-
-
-def test_bloom_gated_enrich_parity(spark, events_batch, events_dir):
-    """Stream ≡ batch for the bloom-gated stream-static join (the same
-    function body runs in both modes), plus the gate's two contracts:
-    the result equals the PLAIN stream-static inner join (bloom false
-    positives die in the join), and the map-side gate really drops
-    non-matching events before the join."""
-    dim = (
-        events_batch.select("user_id")
-        .distinct()
-        .where(F.col("user_id") % 13 == 5)
-        .withColumn("segment", F.concat(F.lit("seg_"), F.col("user_id") % 3))
-    )
-    raw = W.read_events_stream(spark, events_dir)
-    out = W.bloom_gated_enrich(
-        raw.select("event_id", "user_id", "event_type"), dim, "user_id"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bloom_gate_mem")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("bloom_gate_mem").collect()))
-
-    # batch twin of the SAME composition
-    batch_out = W.bloom_gated_enrich(
-        events_batch.select("event_id", "user_id", "event_type"), dim, "user_id"
-    )
-    assert got == sorted(map(tuple, batch_out.collect()))
-
-    # and both equal the plain inner join (the oracle)
-    plain = events_batch.select("event_id", "user_id", "event_type").join(
-        dim, on="user_id", how="inner"
-    )
-    assert got == sorted(map(tuple, plain.collect()))
-    assert len(got) > 0
-
-    # the gate filters: far fewer survivors than events (selective dim)
-    from building_a_rag_pipeline_with_airflow_spark.plans.bloom import (
-        bloom_bitmap,
-        bloom_semi_prefilter,
-    )
-
-    bm = bloom_bitmap(dim, "user_id")
-    n_all = events_batch.count()
-    n_surv = bloom_semi_prefilter(events_batch, "user_id", bm).count()
-    assert n_surv < n_all
-
-
-def test_session_counts_batch(spark, events_batch):
-    out = W.session_counts(events_batch).collect()
-    assert len(out) > 0
-    for r in out:
-        assert r.session_end > r.session_start
-        assert r.n_events >= 1
-
-
-def test_parse_props(spark, events_batch):
-    row = W.parse_props(events_batch).select("props_parsed.k").first()
-    assert row.k is not None
 
 
 def test_streaming_ingest_matches_batch_index(spark, sf_dir, tmp_path):
@@ -215,45 +98,6 @@ def test_streaming_extend_ivf_index(spark, sf_dir, tmp_path):
     assert len(top) == 5 and top[0].vec_id == 1
 
 
-def test_events_stream_handles_both_ts_physical_types(spark, sf_dir, tmp_path):
-    """The driver has shipped events.ts as both TIMESTAMP(NANOS) and
-    TIMESTAMP(MICROS) across rounds; the stream reader must produce
-    identical 2024-era timestamps for either physical type."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = 1_704_067_200_000_000_000  # 2024-01-01 in ns
-    rows = {
-        "event_id": pa.array([1, 2], pa.int64()),
-        "user_id": pa.array([1, 2], pa.int64()),
-        "event_type": pa.array(["a", "b"]),
-        "value": pa.array([1.0, 2.0]),
-        "props": pa.array(["{}", "{}"]),
-    }
-    nanos_dir = tmp_path / "nanos"; nanos_dir.mkdir()
-    micros_dir = tmp_path / "micros"; micros_dir.mkdir()
-    pq.write_table(
-        pa.table({**rows, "ts": pa.array([base, base + 3_600_000_000_000], pa.timestamp("ns"))}),
-        f"{nanos_dir}/e.parquet", store_schema=False,
-    )
-    pq.write_table(
-        pa.table({**rows, "ts": pa.array([base // 1000, base // 1000 + 3_600_000_000], pa.timestamp("us"))}),
-        f"{micros_dir}/e.parquet",
-    )
-
-    def drain(path, name):
-        raw = W.read_events_stream(spark, path)
-        q = (raw.select("event_id", "ts").writeStream.format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(60)
-        return sorted((r.event_id, r.ts) for r in spark.table(name).collect())
-
-    a = drain(str(nanos_dir), "ts_nanos_mem")
-    b = drain(str(micros_dir), "ts_micros_mem")
-    assert a == b
-    assert a[0][1].year == 2024
-
-
 def test_documents_stream_starts_on_empty_dir_with_schema(spark, sf_dir, tmp_path):
     """Continuous ingestion starts BEFORE the first file lands: an explicit
     schema must let the stream begin on an empty landing dir and pick up
@@ -282,64 +126,6 @@ def test_documents_stream_starts_on_empty_dir_with_schema(spark, sf_dir, tmp_pat
     q.awaitTermination(120)
     got = ingest.load_streaming_index(spark, str(tmp_path / "idx"))
     assert got.count() > 0
-
-
-def test_stream_stream_follow_join_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-stream interval join == the batch interval_join on the same
-    data (the parity contract for every streaming operator here). Also
-    asserts the state-bounding prerequisites made it into the plan: both
-    sides watermarked, time-range condition present."""
-    import shutil
-
-    from building_a_rag_pipeline_with_airflow_spark.operators import temporal
-    from building_a_rag_pipeline_with_airflow_spark.streaming.windows import (
-        read_events_stream,
-        stream_stream_follow_join,
-    )
-
-    d = tmp_path / "ss_events"
-    d.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", d / "part-0.parquet")
-
-    ev = read_events_stream(spark, str(d))
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("anchor_id")
-    )
-    joined = stream_stream_follow_join(
-        buys, ev, on=["user_id"], anchor_ts="ts", follow_ts="ts",
-        within_seconds=3600, watermark_delay="30 days",
-    ).where(F.col("event_id") != F.col("anchor_anchor_id"))
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_follow")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.anchor_anchor_id, r.event_id)
-        for r in spark.table("ss_follow").collect()
-    }
-
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    iv = batch.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("anchor_id"),
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end_ts"),
-    )
-    pts = batch.select("event_id", "user_id", "ts")
-    expect = {
-        (r.anchor_id, r.event_id)
-        for r in temporal.interval_join(
-            pts, iv, point_ts="ts", start_ts="start_ts", end_ts="end_ts",
-            on=["user_id"], bucket_width_seconds=3600,
-        )
-        .where(F.col("event_id") != F.col("anchor_id"))
-        .collect()
-    }
-    assert got == expect and len(got) > 0
 
 
 def test_streaming_extend_shingle_index_matches_inplan(spark, sf_dir, tmp_path):
@@ -416,51 +202,6 @@ def test_streaming_extend_postings_index_matches_inplan(spark, sf_dir, tmp_path)
     assert got == want and len(got) == 10
 
 
-def test_streaming_incremental_agg_equals_batch_and_extends(spark, sf_dir, tmp_path):
-    import shutil as _sh
-
-    from building_a_rag_pipeline_with_airflow_spark.streaming import ingest
-
-    land = tmp_path / "land"
-    land.mkdir()
-    _sh.copy(f"{sf_dir}/events.parquet", land / "a.parquet")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(str(land))
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = ingest.streaming_incremental_agg(stream, state, ckpt)
-    q.awaitTermination(120)
-
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    def batch_agg(df):
-        v = F.col("value").cast("double")
-        return df.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(v).alias("sum_v"),
-            F.min(v).alias("min_v"),
-            F.max(v).alias("max_v"),
-        ).withColumn("avg_v", F.col("sum_v") / F.col("n"))
-
-    view = ingest.read_incremental_agg(spark, state)
-    a = sorted(map(tuple, view.collect()))
-    b = sorted(map(tuple, batch_agg(batch).collect()))
-    assert [r[:2] for r in a] == [r[:2] for r in b]  # keys + counts exact
-    for ra, rb in zip(a, b):
-        for x, y in zip(ra[2:], rb[2:]):
-            assert abs(x - y) < 1e-6
-
-    # a second file lands; restart from the same checkpoint — only the
-    # new batch is processed, and the folded view covers both copies
-    _sh.copy(f"{sf_dir}/events.parquet", land / "b.parquet")
-    stream2 = spark.readStream.schema(schema).parquet(str(land))
-    q2 = ingest.streaming_incremental_agg(stream2, state, ckpt)
-    q2.awaitTermination(120)
-    doubled = ingest.read_incremental_agg(spark, state)
-    n_by_key = {r.event_type: r.n for r in doubled.collect()}
-    base = {r[0]: r[1] for r in b}
-    assert n_by_key == {k: 2 * v for k, v in base.items()}
-
-
 def test_streaming_psi_matches_batch_operator(spark, sf_dir, tmp_path):
     """The streamed PSI state fold must equal drift.psi_profile run
     batch-side over the same accumulated rows — including after a second
@@ -525,41 +266,6 @@ def test_streaming_psi_matches_batch_operator(spark, sf_dir, tmp_path):
         for r in drift.psi_profile(baseline, streamed2, "value").collect()
     }
     assert got2 == expect2
-
-
-def test_session_counts_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """Native session_window aggregation must produce identical sessions
-    in streaming mode (complete output over an availableNow drain) and in
-    batch mode over the same rows — §2.10's session operator verified as
-    a STREAM, not just through the batch planner."""
-    import shutil
-
-    from building_a_rag_pipeline_with_airflow_spark import schemas
-    from building_a_rag_pipeline_with_airflow_spark.streaming import windows as W
-
-    d = tmp_path / "sess_stream"
-    d.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", d / "a.parquet")
-    raw = W.read_events_stream(spark, str(d))
-    q = (
-        W.session_counts(raw, watermark=None)
-        .writeStream.format("memory")
-        .queryName("sess_complete_mem")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.table("sess_complete_mem").collect()
-    }
-    batch = schemas.load_table(spark, sf_dir, "events")
-    expect = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in W.session_counts(batch).collect()
-    }
-    assert got == expect
 
 
 def test_read_psi_trend_per_batch(spark, sf_dir, tmp_path):
@@ -823,39 +529,6 @@ def test_streaming_embedding_drift_matches_batch_operator(spark, sf_dir, tmp_pat
             raw, emb.where(F.col("vec_id") % 3 == 1), state,
             str(tmp_path / "ed_ckpt3"),
         )
-
-
-def test_bloom_gated_enrich_empty_dim_yields_empty(spark, events_batch, events_dir):
-    """An empty dim slice is a normal CDC state: the gated enrichment
-    must yield the empty inner join (batch sibling rule), not raise at
-    query setup and kill the pipeline."""
-    empty_dim = (
-        events_batch.select("user_id")
-        .distinct()
-        .where(F.lit(False))
-        .withColumn("segment", F.lit("seg"))
-    )
-    raw = W.read_events_stream(spark, events_dir)
-    out = W.bloom_gated_enrich(
-        raw.select("event_id", "user_id", "event_type"), empty_dim, "user_id"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bloom_gate_empty_mem")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert spark.table("bloom_gate_empty_mem").count() == 0
-    # batch form of the same composition agrees
-    assert (
-        W.bloom_gated_enrich(
-            events_batch.select("event_id", "user_id", "event_type"),
-            empty_dim,
-            "user_id",
-        ).count()
-        == 0
-    )
 
 
 def test_streaming_embedding_drift_rejects_dim_change(spark, sf_dir, tmp_path):

@@ -426,26 +426,6 @@ def _stamp_spec(spark, sf_dir):
     )
 
 
-def _incremental_agg_spec(spark, sf_dir):
-    ev = schemas.load_table(spark, sf_dir, "events").select("event_type", "value")
-    cols = ("event_type", "n", "min_v", "max_v")
-    return dict(
-        b1=ev.where(F.col("value") < 50),
-        b2=ev.where(F.col("value") >= 50),
-        schema="event_type string, value double",
-        start=lambda raw, state, ck: ingest.streaming_incremental_agg(raw, state, ck),
-        expected=lambda df: _rows(
-            df.groupBy("event_type").agg(
-                F.count("*").alias("n"),
-                F.min("value").alias("min_v"),
-                F.max("value").alias("max_v"),
-            ),
-            cols,
-        ),
-        fold=lambda state: _rows(ingest.read_incremental_agg(spark, state), cols),
-    )
-
-
 # the gates that freeze an artifact BEFORE meta (baseline sample,
 # component map, stamp mapping): the init-crash ordering is pinned for each
 _ARTIFACT_GATES = {
@@ -869,7 +849,6 @@ def _sketch_report_spec(spark, sf_dir):
 # every gate reader: SPECS' folds plus the readers no SPECS entry covers
 _ZERO_BATCH_SPECS = {
     **SPECS,
-    "incremental_agg": _incremental_agg_spec,
     "split": _split_spec,
     "stamp": _stamp_spec,
     "psi_trend": _psi_trend_spec,

@@ -177,17 +177,6 @@ def test_stratified_fractions_and_salt(spark, sf_dir):
     assert s1 != s2
 
 
-def test_train_eval_split_disjoint_exhaustive(spark, sf_dir):
-    docs = schemas.load_table(spark, sf_dir, "documents")
-    train, ev = sampling.train_eval_split(docs, "doc_id", eval_fraction=0.25)
-    n_train, n_eval, n = train.count(), ev.count(), docs.count()
-    assert n_train + n_eval == n
-    ids_t = {r.doc_id for r in train.select("doc_id").collect()}
-    ids_e = {r.doc_id for r in ev.select("doc_id").collect()}
-    assert not (ids_t & ids_e)
-    assert abs(n_eval / n - 0.25) < 0.07
-
-
 def test_hash_sample_rejects_bad_fraction(spark, sf_dir):
     orders = schemas.load_table(spark, sf_dir, "orders")
     with pytest.raises(ValueError, match="fraction"):
