@@ -4,8 +4,8 @@ A from-scratch re-expression of the data-processing capabilities of the
 reference repo ``BigDataTeam5/Building-a-RAG-Pipeline-with-Airflow`` (a RAG
 document pipeline + tabular SQL viewer) as an idiomatic Spark engine:
 
-* canonical schemas for documents / chunks / embeddings / events
-  (SURVEY.md §1 D1–D6)
+* table loaders for documents / embeddings / events and the tabular
+  star schema (SURVEY.md §1 D1–D6)
 * chunking operators (fixed / recursive / semantic — reference
   ``Chunking_Strats/chromadb_rag.py:49-93``)
 * text analysis (token counting, quality scoring, language id,

@@ -16,7 +16,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,25 +61,3 @@ def embed_documents(df, text_col: str = "text", out_col: str = "embedding",
     with a per-executor broadcast model)."""
     udf = embed_fn if embed_fn is not None else hashed_embedder_udf(dim)
     return df.withColumn(out_col, udf(F.col(text_col)))
-
-
-def try_sentence_transformer_udf(model_name: str = "all-MiniLM-L6-v2"):
-    """Real-model embedder (reference parity: all-MiniLM-L6-v2, 384-dim,
-    ``chromadb_rag.py:25``). Returns None when sentence-transformers is not
-    installed (it is not in the test container). The model loads lazily once
-    per executor process — the standard broadcast-model pattern."""
-    try:
-        import sentence_transformers  # noqa: F401
-    except Exception:
-        return None
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _embed(it):
-        from sentence_transformers import SentenceTransformer
-
-        model = SentenceTransformer(model_name)
-        for s in it:
-            mat = model.encode(s.fillna("").tolist(), normalize_embeddings=True)
-            yield pd.Series([np.asarray(row, dtype=np.float32).tolist() for row in mat])
-
-    return _embed

@@ -64,11 +64,6 @@ def stopword_hits_from_tokens(toks: Column, lang: str = "en") -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("int")
 
 
-def stopword_hits(col: Column | str, lang: str = "en") -> Column:
-    """Number of tokens (with multiplicity) found in the language's list."""
-    return stopword_hits_from_tokens(tokens(col), lang)
-
-
 def quality_score_from_tokens(col: Column | str, toks: Column) -> Column:
     """Quality score over a pre-materialized token array (one tokenization
     feeds token count and stopword ratio)."""

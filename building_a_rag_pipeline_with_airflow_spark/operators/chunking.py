@@ -40,8 +40,9 @@ SEPARATORS = ["\n\n", "\n", ".", "?", "!", " ", ""]  # chromadb_rag.py:70
 
 
 def _finish(chunks: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Attach the canonical chunk columns (schema CHUNKS; chunk_id mirrors the
-    reference's f"{source_id}_chunk_{i}", chromadb_rag.py:116)."""
+    """Attach the canonical chunk columns (chunk_id, doc_id, chunk_index,
+    text, char_length, token_length — the reference's chunks.json entry;
+    chunk_id mirrors its f"{source_id}_chunk_{i}", chromadb_rag.py:116)."""
     return chunks.select(
         F.concat(F.col(id_col).cast("string"), F.lit("_chunk_"), F.col("chunk_index"))
         .alias("chunk_id"),

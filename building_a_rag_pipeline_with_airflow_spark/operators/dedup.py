@@ -33,7 +33,9 @@ from building_a_rag_pipeline_with_airflow_spark.operators import (
     checkpoint_nostats,
     ensure_min_partitions,
     release_checkpoint,
+    require_nonempty,
 )
+from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
 MERSENNE_P = 2147483647  # 2^31 - 1: permutation modulus for minhash
 
@@ -143,6 +145,23 @@ def ngram_jaccard_pairs(
     )
 
 
+#: the shingle index as a bucketed-postings family: (doc_id, shingle)
+#: rows keyed by shingle, its posting-list length stored as ``shingle_df``,
+#: and per-doc shingle counts in ``doc_sizes``
+_SHINGLE_POSTINGS = index_layout.PostingsFamily(
+    rows_subdir="postings", key="shingle", count="shingle_df", count_type="bigint",
+    derive=lambda df, p: shingles(
+        df, p["text_col"], p["id_col"], int(p["n"])
+    ).select(F.col(p["id_col"]).alias("doc_id"), "shingle"),
+    sides=((
+        "doc_sizes",
+        lambda df, rows, p: rows.groupBy("doc_id").agg(
+            F.count("*").cast("bigint").alias("n_shingles")
+        ),
+    ),),
+)
+
+
 def build_shingle_index(
     df: DataFrame,
     path: str,
@@ -177,38 +196,20 @@ def build_shingle_index(
     * ``<path>/meta/`` — one row recording (n, n_buckets) so readers
       validate compatibility.
 
-    Layout mechanics (``_batch_id`` tagging, partitioned write, dynamic
-    replay overwrite) come from the family-shared
-    :mod:`~building_a_rag_pipeline_with_airflow_spark.sources.index_layout`
-    contract, pinned by ``tests/test_index_contract.py``.
+    The rows, counts and doc sizes come from :data:`_SHINGLE_POSTINGS`,
+    the one spec the build, ``streaming_extend_shingle_index`` and
+    :func:`consolidate_shingle_index` all write through
+    (``index_layout.write_postings``).
     """
-    from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     index_layout.check_n_buckets(n_buckets, "build_shingle_index")
-    sh = shingles(df, text_col, id_col, n).select(
-        F.col(id_col).alias("doc_id"), "shingle"
+    params = {"text_col": text_col, "id_col": id_col, "n": n}
+    rows = require_nonempty(
+        _SHINGLE_POSTINGS.derive(df, params), "shingle index postings"
     )
-    require_nonempty(sh, "shingle index postings")
-    dfreq = sh.groupBy("shingle").agg(
-        F.count("*").cast("bigint").alias("shingle_df")
+    index_layout.write_postings(
+        _SHINGLE_POSTINGS, rows, path, n_buckets,
+        _SHINGLE_POSTINGS.side_frames(df, rows, params),
     )
-    sizes = sh.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_shingles")
-    )
-    postings = sh.join(dfreq, "shingle").withColumn(
-        "bucket", F.pmod(F.xxhash64("shingle"), F.lit(n_buckets)).cast("int")
-    )
-    # one shuffle into the bucket layout; sort within files for row-group
-    # skipping on shingle point lookups
-    index_layout.write_index_rows(
-        postings,
-        f"{path}/postings",
-        partition_cols=("bucket",),
-        sort_col="shingle",
-        n_files=n_buckets,
-    )
-    index_layout.write_index_rows(sizes, f"{path}/doc_sizes")
     index_layout.write_meta(
         df.sparkSession.createDataFrame(
             [(int(n), int(n_buckets), False)],
@@ -242,8 +243,6 @@ def jaccard_pairs_from_index(
     in-plan recount (group postings by shingle, filter, semi-join back) —
     still zero corpus re-tokenization, one extra agg over the same
     (bucket, shingle) shuffle key."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     meta = index_layout.read_meta(spark, path)
     raw = spark.read.parquet(f"{path}/postings")
     if meta and meta.extended:
@@ -303,18 +302,8 @@ def consolidate_shingle_index(
     alone, never a corpus re-shingle. Mechanics + swap-then-expire publishing
     via the family-shared
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.index_layout.consolidate_index`."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     return index_layout.consolidate_index(
-        spark,
-        path,
-        out_path,
-        rows_subdir="postings",
-        key_col="shingle",
-        count_col="shingle_df",
-        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
-        extra_subdirs=("doc_sizes",),
-        manifest_path=manifest_path,
+        spark, _SHINGLE_POSTINGS, path, out_path, manifest_path
     )
 
 
@@ -955,6 +944,18 @@ def scrub_with_spans(
     )
 
 
+#: the ExactSubstr index as a bucketed-postings family: (doc_id, pos, h)
+#: window-hash rows keyed by h, the hash's occurrence count stored as
+#: ``h_count``; ``max_doc_tokens`` -1 stands for no cap (the meta's form)
+_SUBSTRING_WINDOWS = index_layout.PostingsFamily(
+    rows_subdir="windows", key="h", count="h_count", count_type="bigint",
+    derive=lambda df, p: _window_hashes(
+        df, p["text_col"], p["id_col"], int(p["k"]),
+        None if int(p["max_doc_tokens"]) < 0 else int(p["max_doc_tokens"]),
+    ).select(F.col(p["id_col"]).alias("doc_id"), "pos", F.col("_h").alias("h")),
+)
+
+
 def build_substring_index(
     df: DataFrame,
     path: str,
@@ -971,7 +972,8 @@ def build_substring_index(
     job starts from the stored hashes instead of re-hashing O(n·k)
     window text per run.
 
-    Layout (family-shared mechanics from ``sources/index_layout``):
+    Layout (written through :data:`_SUBSTRING_WINDOWS` and
+    ``index_layout.write_postings``, like its extender and consolidation):
 
     * ``<path>/windows/bucket=B/`` — (h, doc_id, pos, h_count) rows,
       hash-bucketed by the window hash so one hash's occurrences live in
@@ -985,32 +987,17 @@ def build_substring_index(
       window size is FROZEN into the index (hashes from different k
       cannot mix, and span reconstruction needs k for the end offset).
     """
-    from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     _check_substring_params(k, None, "build_substring_index")
     index_layout.check_n_buckets(n_buckets, "build_substring_index")
-    wins = _window_hashes(df, text_col, id_col, k, max_doc_tokens).select(
-        F.col(id_col).alias("doc_id"), "pos", F.col("_h").alias("h")
+    mdt = -1 if max_doc_tokens is None else int(max_doc_tokens)
+    params = {"text_col": text_col, "id_col": id_col, "k": k, "max_doc_tokens": mdt}
+    rows = require_nonempty(
+        _SUBSTRING_WINDOWS.derive(df, params), "substring index windows"
     )
-    require_nonempty(wins, "substring index windows")
-    counts = wins.groupBy("h").agg(
-        F.count("*").cast("bigint").alias("h_count")
-    )
-    rows = wins.join(counts, "h").withColumn(
-        "bucket", F.pmod(F.xxhash64("h"), F.lit(n_buckets)).cast("int")
-    )
-    index_layout.write_index_rows(
-        rows,
-        f"{path}/windows",
-        partition_cols=("bucket",),
-        sort_col="h",
-        n_files=n_buckets,
-    )
+    index_layout.write_postings(_SUBSTRING_WINDOWS, rows, path, n_buckets)
     index_layout.write_meta(
         df.sparkSession.createDataFrame(
-            [(int(k), int(n_buckets),
-              -1 if max_doc_tokens is None else int(max_doc_tokens), False)],
+            [(int(k), int(n_buckets), mdt, False)],
             "k int, n_buckets int, max_doc_tokens long, extended boolean",
         ),
         path,
@@ -1036,8 +1023,6 @@ def spans_from_index(
     key (the `jaccard_pairs_from_index` recount contract). Re-running
     :func:`build_substring_index` offline restores the pushed fast
     path."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     _check_substring_params(None, min_count, "spans_from_index")
     meta = index_layout.read_meta(spark, path)
     raw = spark.read.parquet(f"{path}/windows")
@@ -1072,17 +1057,8 @@ def consolidate_substring_index(
     the stored window hashes alone, never a corpus re-tokenization; the frozen
     (k, max_doc_tokens) carry over unchanged. Mechanics + publishing via
     the family-shared ``index_layout.consolidate_index``."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     return index_layout.consolidate_index(
-        spark,
-        path,
-        out_path,
-        rows_subdir="windows",
-        key_col="h",
-        count_col="h_count",
-        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
-        manifest_path=manifest_path,
+        spark, _SUBSTRING_WINDOWS, path, out_path, manifest_path
     )
 
 

@@ -38,8 +38,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.text import tokens
-from building_a_rag_pipeline_with_airflow_spark.operators import ensure_min_partitions
+from building_a_rag_pipeline_with_airflow_spark.operators import (
+    ensure_min_partitions,
+    require_nonempty,
+)
 from building_a_rag_pipeline_with_airflow_spark.session import local_frame
+from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
 __all__ = [
     "bm25_score",
@@ -436,6 +440,41 @@ def zipf_profile(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     )
 
 
+def _bm25_rows(df: DataFrame, p) -> DataFrame:
+    """(doc_id, term, tf, dl) postings of the non-blank documents."""
+    return (
+        _tokenized(df, p["id_col"], p["text_col"])
+        .select(
+            F.col(p["id_col"]).alias("doc_id"), "dl", F.explode("toks").alias("term")
+        )
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").cast("double").alias("tf"), F.first("dl").alias("dl"))
+    )
+
+
+#: the BM25 index as a bucketed-postings family: (doc_id, term, tf, dl)
+#: rows keyed by term, document frequency stored as double ``df_t``, and
+#: one (n_docs, sum_dl) ``batch_stats`` row per batch — the
+#: replay-idempotent way to keep n_docs/avgdl exact under extension:
+#: extended-mode queries SUM the batch rows (each batch owns its
+#: ``_batch_id`` partition) instead of trusting a mutable meta fold that
+#: a replayed batch would double-count. Every posted document has at
+#: least one term, so counting the rows' documents counts the corpus.
+_BM25_POSTINGS = index_layout.PostingsFamily(
+    rows_subdir="postings", key="term", count="df_t", count_type="double",
+    derive=_bm25_rows,
+    sides=((
+        "batch_stats",
+        lambda df, rows, p: rows.groupBy("doc_id")
+        .agg(F.first("dl").alias("dl"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("dl").alias("sum_dl"),
+        ),
+    ),),
+)
+
+
 def build_postings_index(
     df: DataFrame,
     path: str,
@@ -460,33 +499,22 @@ def build_postings_index(
       and ``dl`` (doc length) are denormalized into the row so a query
       needs NO side joins beyond the one-row corpus stats: idf and the
       length normalization both come off the posting row itself.
+    * ``<path>/batch_stats/`` — one (n_docs, sum_dl) row per batch.
     * ``<path>/meta/`` — one row (n_docs, avgdl, n_buckets): the BM25
       globals, read driver-side (metadata-scale, like the IVF centroid
       resolve).
-    """
-    from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
+    Postings and batch stats are written through :data:`_BM25_POSTINGS`,
+    the spec its extender and consolidation share.
+    """
     index_layout.check_n_buckets(n_buckets, "build_postings_index")
-    base = ensure_min_partitions(_tokenized(df, id_col, text_col))
-    require_nonempty(base, "postings index corpus")
-    tf = (
-        base.select(
-            F.col(id_col).alias("doc_id"), "dl", F.explode("toks").alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"), F.first("dl").alias("dl"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df_t"))
-    postings = tf.join(dfreq, "term").withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    index_layout.write_index_rows(
-        postings,
-        f"{path}/postings",
-        partition_cols=("bucket",),
-        sort_col="term",
-        n_files=n_buckets,
+    df = ensure_min_partitions(df)
+    base = require_nonempty(_tokenized(df, id_col, text_col), "postings index corpus")
+    params = {"id_col": id_col, "text_col": text_col}
+    rows = _BM25_POSTINGS.derive(df, params)
+    index_layout.write_postings(
+        _BM25_POSTINGS, rows, path, n_buckets,
+        _BM25_POSTINGS.side_frames(df, rows, params),
     )
     stats = (
         base.agg(
@@ -497,18 +525,20 @@ def build_postings_index(
         .withColumn("extended", F.lit(False))
     )
     index_layout.write_meta(stats, path)
-    # per-batch corpus stats, the replay-idempotent way to keep n_docs /
-    # avgdl exact under streaming extension: each batch owns one
-    # _batch_id partition (dynamic overwrite), and extended-mode queries
-    # SUM the batch rows (metadata-scale) instead of trusting a mutable
-    # meta fold that a replayed batch would double-count
-    batch_stats = base.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
+
+
+def _corpus_stats(spark, path: str, meta) -> "tuple[float, float]":
+    """``(n_docs, avgdl)`` of a :func:`build_postings_index` layout: the
+    meta row's on a fresh index; once extended, summed over the per-batch
+    ``batch_stats`` rows (one row per batch, driver-side)."""
+    if not bool(meta["extended"]):
+        return float(meta["n_docs"]), float(meta["avgdl"])
+    bs = (
+        spark.read.parquet(f"{path}/batch_stats")
+        .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
+        .first()
     )
-    index_layout.write_index_rows(
-        batch_stats, f"{path}/batch_stats", coalesce=1
-    )
+    return float(bs["n"]), float(bs["s"]) / float(bs["n"])
 
 
 def bm25_topk_from_index(
@@ -540,20 +570,9 @@ def bm25_topk_from_index(
     meta fold would double-count a replayed batch).
     """
     terms = _check_query_terms(query_terms, "bm25_topk_from_index")
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
-    if bool(meta["extended"]):
-        # exact corpus stats from the per-batch rows (one row per batch)
-        bs = (
-            spark.read.parquet(f"{path}/batch_stats")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .first()
-        )
-        n_docs_val, avgdl_val = float(bs["n"]), float(bs["s"]) / float(bs["n"])
-    else:
-        n_docs_val, avgdl_val = float(meta["n_docs"]), float(meta["avgdl"])
+    n_docs_val, avgdl_val = _corpus_stats(spark, path, meta)
     # resolve the terms' buckets with the same JVM hash the build used;
     # |terms| rows in a driver-local frame, folded at plan time (no job)
     bucket_rows = (
@@ -620,20 +639,10 @@ def bm25_topk_many_from_index(
     cut down. Final top-k is a per-query window (partition = one query's
     candidate docs — bounded), never a global sort.
     """
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
     extended = bool(meta["extended"])
-    if extended:
-        bs = (
-            spark.read.parquet(f"{path}/batch_stats")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .first()
-        )
-        n_docs_val, avgdl_val = float(bs["n"]), float(bs["s"]) / float(bs["n"])
-    else:
-        n_docs_val, avgdl_val = float(meta["n_docs"]), float(meta["avgdl"])
+    n_docs_val, avgdl_val = _corpus_stats(spark, path, meta)
     # (q_id, term) pairs, deduped within a query (a repeated query term
     # must not double a posting's contribution — same set semantics as
     # the single-query path's sorted(set(...)))
@@ -715,34 +724,14 @@ def consolidate_postings_index(
     as after a fresh build. Computed from the stored postings alone,
     never a corpus re-tokenization. Mechanics + swap-then-expire publishing via
     the family-shared ``index_layout.consolidate_index``."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
-    bs = spark.read.parquet(f"{path}/batch_stats")
-    stored_t = {f.name: f.dataType for f in bs.schema.fields}
-    fresh_stats = bs.agg(
-        F.sum("n_docs").cast(stored_t["n_docs"]).alias("n_docs"),
-        F.sum("sum_dl").cast(stored_t["sum_dl"]).alias("sum_dl"),
+    fresh_stats = spark.read.parquet(f"{path}/batch_stats").agg(
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("sum_dl").cast("double").alias("sum_dl"),
     )
     tot = fresh_stats.first()  # one row — metadata-scale by contract
     n_docs, sum_dl = int(tot["n_docs"]), float(tot["sum_dl"])
-    fresh_meta = index_layout.replace_meta(
-        spark, path, n_docs=n_docs, avgdl=sum_dl / n_docs, extended=False
+    return index_layout.consolidate_index(
+        spark, _BM25_POSTINGS, path, out_path, manifest_path,
+        meta_fields={"n_docs": n_docs, "avgdl": sum_dl / n_docs},
+        folded={"batch_stats": fresh_stats},
     )
-    version = index_layout.consolidate_index(
-        spark,
-        path,
-        out_path,
-        rows_subdir="postings",
-        key_col="term",
-        count_col="df_t",
-        fresh_meta_df=fresh_meta,
-        manifest_path=None,  # publish only after batch_stats also lands
-    )
-    index_layout.write_index_rows(
-        fresh_stats, f"{out_path.rstrip('/')}/batch_stats", coalesce=1
-    )
-    if manifest_path is not None:
-        return index_layout.publish_index(
-            spark, manifest_path, out_path.rstrip("/")
-        )
-    return version

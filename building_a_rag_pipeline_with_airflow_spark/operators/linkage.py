@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
+
 
 def last_token_block(col: str | Column) -> Column:
     """Blocking key: the last whitespace token (for "modifier noun"
@@ -181,6 +183,26 @@ def trigram_topk(
     ).select("q_id", "name_id", "name", "score", "rank")
 
 
+#: the trigram index as a bucketed-postings family: (name_id, n_grams,
+#: gram) rows keyed by gram, its posting-list length stored as
+#: ``gram_df``, and every input row's (name_id, name) payload in
+#: ``names`` — NULL names gram to nothing but keep their payload row
+_TRIGRAM_POSTINGS = index_layout.PostingsFamily(
+    rows_subdir="postings", key="gram", count="gram_df", count_type="bigint",
+    derive=lambda df, p: df.select(
+        F.col(p["c_id"]).alias("name_id"), trigram_set(p["c_text"]).alias("_g")
+    ).select(
+        "name_id", F.size("_g").alias("n_grams"), F.explode("_g").alias("gram")
+    ),
+    sides=((
+        "names",
+        lambda df, rows, p: df.select(
+            F.col(p["c_id"]).alias("name_id"), F.col(p["c_text"]).alias("name")
+        ),
+    ),),
+)
+
+
 def build_trigram_index(
     corpus: DataFrame,
     path: str,
@@ -212,37 +234,25 @@ def build_trigram_index(
     * ``<path>/names/`` — (name_id, name): the result payload, joined
       back after the per-query cut (top-k rows only).
     * ``<path>/meta/`` — (n_buckets, extended).
+
+    Postings and names are written through :data:`_TRIGRAM_POSTINGS`, the
+    spec its extender and consolidation share.
     """
     from building_a_rag_pipeline_with_airflow_spark.operators import (
         ensure_min_partitions,
         require_nonempty,
     )
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
     index_layout.check_n_buckets(n_buckets, "build_trigram_index")
-    cg = ensure_min_partitions(corpus).select(
-        F.col(c_id).alias("name_id"),
-        F.col(c_text).alias("name"),
-        trigram_set(c_text).alias("_g"),
+    corpus = ensure_min_partitions(corpus)
+    params = {"c_id": c_id, "c_text": c_text}
+    rows = require_nonempty(
+        _TRIGRAM_POSTINGS.derive(corpus, params), "trigram index postings"
     )
-    post = cg.select(
-        "name_id", F.size("_g").alias("n_grams"), F.explode("_g").alias("gram")
+    index_layout.write_postings(
+        _TRIGRAM_POSTINGS, rows, path, n_buckets,
+        _TRIGRAM_POSTINGS.side_frames(corpus, rows, params),
     )
-    require_nonempty(post, "trigram index postings")
-    dfreq = post.groupBy("gram").agg(
-        F.count("*").cast("bigint").alias("gram_df")
-    )
-    rows = post.join(dfreq, "gram").withColumn(
-        "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
-    )
-    index_layout.write_index_rows(
-        rows,
-        f"{path}/postings",
-        partition_cols=("bucket",),
-        sort_col="gram",
-        n_files=n_buckets,
-    )
-    index_layout.write_index_rows(cg.select("name_id", "name"), f"{path}/names")
     index_layout.write_meta(
         corpus.sparkSession.createDataFrame(
             [(int(n_buckets), False)], "n_buckets int, extended boolean"
@@ -282,7 +292,6 @@ def trigram_topk_from_index(
     from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
         _per_query_topk,
     )
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -357,16 +366,6 @@ def consolidate_trigram_index(
     the fresh base batch. Computed from the stored postings alone,
     never a corpus re-gram. Mechanics + swap-then-expire publishing via the
     family-shared ``index_layout.consolidate_index``."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     return index_layout.consolidate_index(
-        spark,
-        path,
-        out_path,
-        rows_subdir="postings",
-        key_col="gram",
-        count_col="gram_df",
-        fresh_meta_df=index_layout.replace_meta(spark, path, extended=False),
-        extra_subdirs=("names",),
-        manifest_path=manifest_path,
+        spark, _TRIGRAM_POSTINGS, path, out_path, manifest_path
     )

@@ -315,8 +315,8 @@ def token_overlap_scorer_udf():
     text, as an Arrow-batched pandas_udf with the ``(query, text) ->
     double`` signature every :func:`rerank_with` scorer must have — the
     stand-in the test container uses where a real cross-encoder model
-    would load (the ``try_sentence_transformer_udf`` seam discipline,
-    functions/embed.py).
+    would load (the ``embed_fn`` seam of ``functions.embed.embed_documents``:
+    a real model is passed in, never required).
 
     Oracle determinism: the score is one IEEE division of two small
     integers (|A∩B| / |A∪B|) — bit-identical on any engine, so it needs
@@ -362,8 +362,8 @@ def try_cross_encoder_udf(
 ):
     """Real-model cross-encoder scorer (the public two-stage retrieval
     recipe's precision stage). Returns None when sentence-transformers is
-    not installed (it is not in the test container) — the same gated-seam
-    discipline as ``functions.embed.try_sentence_transformer_udf``. The
+    not installed (it is not in the test container), so the optional
+    model dependency is probed, never required. The
     model loads lazily ONCE per python worker process via the
     module-level :data:`_CE_MODEL_CACHE` (the generator body itself
     re-runs per task, so construction cannot live there); batches arrive

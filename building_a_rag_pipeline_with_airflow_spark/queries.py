@@ -1272,61 +1272,62 @@ def minhash_signatures_q(spark, sf_dir):
     return dedup.minhash_signatures(docs, num_perm=8, seed=42).orderBy("doc_id")
 
 
-def _minhash_lsh_oracle_sql(
-    num_perm: int = 8, bands: int = 4, seed: int = 42, verify: float = 0.05
-) -> str:
-    """Full LSH-banding oracle (r4 — closes the last dedup-ladder oracle
-    gap): every stage is deterministic, so DuckDB reproduces the banded
-    candidate set and the candidate-only verify exactly — signatures from
-    the bit-exact minhash oracle, band keys as the same
-    'band:mh_i:mh_j' string concatenation, candidates via band equi-join,
-    true-Jaccard verify computed ONLY for candidates (the oracle mirrors
-    the operator's O(candidates) shape, not an all-pairs baseline)."""
+def _minhash_lsh_oracle_sql(num_perm: int = 8, bands: int = 4,
+                            seed: int = 42, threshold: float = 0.05) -> str:
+    """Full LSH-banding oracle: every stage is deterministic, so DuckDB
+    reproduces the banded candidate set exactly — signatures from the
+    bit-exact minhash oracle, band keys as the same 'band:mh_i:mh_j'
+    string concatenation, candidates via band equi-join, each candidate
+    pair's true Jaccard (0 when no shingle is shared) kept at or above
+    ``threshold``."""
     params = dedup._permutation_params(num_perm, seed)
-    mh_cols = ",\n           ".join(
+    rows_per_band = num_perm // bands
+    mh_exprs = ",\n             ".join(
         f"CAST(min(({a} * sid + {b}) % {dedup.MERSENNE_P}) AS BIGINT) AS mh{j}"
         for j, (a, b) in enumerate(params)
     )
-    rpb = num_perm // bands
-    band_list = ",\n        ".join(
-        f"'{b}:' || "
+    band_selects = "\n      UNION ALL\n".join(
+        "      SELECT doc_id, '{b}:' || "
+        .format(b=bidx)
         + " || ':' || ".join(
-            f"CAST(mh{b * rpb + r} AS VARCHAR)" for r in range(rpb)
+            f"CAST(mh{bidx * rows_per_band + r} AS VARCHAR)"
+            for r in range(rows_per_band)
         )
-        for b in range(bands)
+        + " AS band FROM sigs"
+        for bidx in range(bands)
     )
     return (
         _SHINGLE_CTE
         + f"""
     , ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM grams),
-    sig AS (SELECT doc_id, {mh_cols} FROM ids GROUP BY doc_id),
+    sigs AS (
+      SELECT doc_id, {mh_exprs}
+      FROM ids GROUP BY doc_id
+    ),
     banded AS (
-      SELECT doc_id, unnest([
-        {band_list}]) AS band
-      FROM sig
+{band_selects}
     ),
     cand AS (
       SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
       FROM banded x JOIN banded y ON x.band = y.band AND x.doc_id < y.doc_id
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-    common AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_common
-      FROM cand c
-      JOIN grams ga ON ga.doc_id = c.id_a
-      JOIN grams gb ON gb.doc_id = c.id_b AND gb.shingle = ga.shingle
-      GROUP BY c.id_a, c.id_b
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+      FROM grams a JOIN grams b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ),
+    jac AS (
+      SELECT i.id_a, i.id_b,
+             round(CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common), 4) AS jaccard
+      FROM inter i
+      JOIN sizes sa ON sa.doc_id = i.id_a
+      JOIN sizes sb ON sb.doc_id = i.id_b
     )
-    SELECT id_a, id_b, jaccard FROM (
-      SELECT c.id_a, c.id_b,
-             round(CAST(coalesce(m.n_common, 0) AS DOUBLE)
-                   / (sa.n + sb.n - coalesce(m.n_common, 0)), 4) AS jaccard
-      FROM cand c
-      LEFT JOIN common m ON m.id_a = c.id_a AND m.id_b = c.id_b
-      JOIN sizes sa ON sa.doc_id = c.id_a
-      JOIN sizes sb ON sb.doc_id = c.id_b
-    ) v WHERE jaccard >= {verify}
-    ORDER BY id_a, id_b
+    SELECT c.id_a, c.id_b, coalesce(j.jaccard, 0.0) AS jaccard
+    FROM cand c LEFT JOIN jac j ON j.id_a = c.id_a AND j.id_b = c.id_b
+    WHERE coalesce(j.jaccard, 0.0) >= {threshold}
+    ORDER BY c.id_a, c.id_b
     """
     )
 
@@ -3755,67 +3756,6 @@ def pivot_priority_status(spark, sf_dir):
         )
         .orderBy("o_orderpriority")
     )
-
-
-def _minhash_lsh_oracle_sql(num_perm: int = 8, bands: int = 4,
-                            seed: int = 42, threshold: float = 0.05) -> str:
-    params = dedup._permutation_params(num_perm, seed)
-    rows_per_band = num_perm // bands
-    mh_exprs = ",\n             ".join(
-        f"CAST(min(({a} * sid + {b}) % {dedup.MERSENNE_P}) AS BIGINT) AS mh{j}"
-        for j, (a, b) in enumerate(params)
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        "      SELECT doc_id, '{b}:' || "
-        .format(b=bidx)
-        + " || ':' || ".join(
-            f"CAST(mh{bidx * rows_per_band + r} AS VARCHAR)"
-            for r in range(rows_per_band)
-        )
-        + " AS band FROM sigs"
-        for bidx in range(bands)
-    )
-    return (
-        _SHINGLE_CTE
-        + f"""
-    , ids AS (SELECT doc_id, {_SID_SQL} AS sid FROM grams),
-    sigs AS (
-      SELECT doc_id, {mh_exprs}
-      FROM ids GROUP BY doc_id
-    ),
-    banded AS (
-{band_selects}
-    ),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-      FROM banded x JOIN banded y ON x.band = y.band AND x.doc_id < y.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM grams a JOIN grams b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    jac AS (
-      SELECT i.id_a, i.id_b,
-             round(CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common), 4) AS jaccard
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.id_a
-      JOIN sizes sb ON sb.doc_id = i.id_b
-    )
-    SELECT c.id_a, c.id_b, coalesce(j.jaccard, 0.0) AS jaccard
-    FROM cand c LEFT JOIN jac j ON j.id_a = c.id_a AND j.id_b = c.id_b
-    WHERE coalesce(j.jaccard, 0.0) >= {threshold}
-    ORDER BY c.id_a, c.id_b
-    """
-    )
-
-
-# upgrade minhash_lsh_pairs from rows-only to a full oracle check
-REGISTRY["minhash_lsh_pairs"] = (
-    REGISTRY["minhash_lsh_pairs"][0],
-    _minhash_lsh_oracle_sql(8, 4, 42, 0.05),
-)
 
 
 # --------------------------------------------------------------------------

@@ -1,85 +1,12 @@
-"""Canonical schemas + table loaders.
-
-The reference keeps schemas implicit (SURVEY.md §1); this engine pins explicit
-StructTypes for the canonical RAG-path tables (documents / chunks /
-embeddings — reference shapes at ``Chunking_Strats/chunk_visualizer.py:29-44``
-and ``Chunking_Strats/chromadb_rag.py:96-124``) and for the tabular star
-schema the E3 path queries (``Frontend/app.py:180-220``).
+"""Table loaders for the synthetic corpus: the RAG-path tables
+(documents, embeddings, events) and the tabular star schema the E3 path
+queries (``Frontend/app.py:180-220``). Each table's schema is the one its
+parquet file stores.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-# D1: a document per row (reference: one markdown/PDF per (year, quarter)).
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-# D3: chunk record — mirrors the reference chunks.json entry
-# {id, text, char_length, token_length} plus vector-store metadata
-# {source, chunk_index} with id f"{source_id}_chunk_{i}".
-CHUNKS = T.StructType(
-    [
-        T.StructField("chunk_id", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("chunk_index", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("char_length", T.IntegerType(), True),
-        T.StructField("token_length", T.IntegerType(), True),
-    ]
-)
-
-# D4: embedding per chunk/doc, cosine space.
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-# Streaming events table (SURVEY §2.10).
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),  # JSON string
-    ]
-)
-
-# D2: OCR page — nested, per reference testing_code/MistralTest.py:32-39.
-OCR_PAGES = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("page_no", T.IntegerType(), False),
-        T.StructField("markdown", T.StringType(), True),
-        T.StructField(
-            "images",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("id", T.StringType(), True),
-                        T.StructField("data", T.BinaryType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)
 
 TABLES = (
     "region",
@@ -93,8 +20,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -88,7 +88,7 @@ def fetch_documents(manifest: DataFrame, fetch_fn=fake_fetch,
 def landing_keys(docs: DataFrame, base: str, year: str) -> DataFrame:
     """Compute the partitioned object-store key per document (reference K1
     layout ``{base}/nvidia_quarterly_report/{year}/{quarter}.pdf``,
-    dags:321-328,358) — the write itself is io.write_partitioned."""
+    dags:321-328,358) — the write itself is one ``partitionBy`` write."""
     return docs.withColumn(
         "key",
         F.concat_ws(

@@ -25,11 +25,15 @@ postings — ``operators.dedup.build_shingle_index``; BM25 postings —
   balance drifts, never per arrival).
 
 These helpers are the single implementation of that contract; a fix to
-the write/replay mechanics lands in all six indexes at once.
-Extenders that flip ``extended`` write the meta flip BEFORE their data
-rows (a reader between the two writes must never see extension rows
-under a stale flag — the recount-over-base gap is the safe one), and
-skip the batch entirely when it contributes zero rows.
+the write/replay mechanics lands in all six indexes at once. The four
+bucketed-postings indexes (shingle, ExactSubstr, trigram, BM25) are each
+one :class:`PostingsFamily` spec, and their build, extension and
+consolidation all write through :func:`write_postings`. Extenders pin a
+batch's derived rows and skip it entirely when it derives zero rows
+(:func:`start_pinned_extender`); those that flip ``extended`` write the
+meta flip BEFORE their data rows (a reader between the two writes must
+never see extension rows under a stale flag — the recount-over-base gap
+is the safe one).
 ``tests/test_index_contract.py`` pins the contract itself, parameterized
 over every index: build ≡ in-plan, extension replay is idempotent, and
 point queries prune the scan.
@@ -38,7 +42,8 @@ point queries prune the scan.
 from __future__ import annotations
 
 import os
-from typing import Callable, Sequence
+from dataclasses import dataclass
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -353,93 +358,6 @@ def canonical_dir(spark: SparkSession, path: str) -> str:
     return uri.toString().rstrip("/")
 
 
-def consolidate_index(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    *,
-    rows_subdir: str,
-    key_col: str,
-    count_col: str,
-    fresh_meta_df: DataFrame,
-    extra_subdirs: Sequence[str] = (),
-    manifest_path: "str | None" = None,
-) -> "int | None":
-    """Re-base an EXTENDED postings-style index into a fresh single-batch
-    layout at ``out_path`` — the text-side twin of the vector side's
-    ``recluster_ivf_index``, closing the one
-    operational gap streaming growth left: once an extender flips
-    ``meta.extended``, the denormalized per-row count column
-    (``shingle_df`` / ``h_count`` / ``gram_df`` / ``df_t``) is
-    batch-local forever and every query pays the in-plan recount instead
-    of the pushed-predicate fast path. Consolidation recomputes that
-    column CORPUS-WIDE over all accumulated ``_batch_id`` partitions and
-    rewrites the layout as a fresh base build (batch ``-1``,
-    ``extended=False``), so queries regain the pushed guard.
-
-    Mechanics — the stored rows are the ONLY input, never a corpus
-    re-tokenization (the from-index queries' contract; the postings
-    parquet is scanned twice — once by the recount aggregate, once by
-    the rewrite's join probe — a deliberate trade: pinning corpus-scale
-    posting rows to force a single scan would violate the
-    narrow-output-only checkpoint rule, and a per-key window
-    formulation puts a degenerate key's whole posting list in one
-    task): read ``<path>/<rows_subdir>``, drop the stale ``count_col``,
-    recount per ``key_col`` (cast to the STORED column type so the
-    consolidated layout is schema-identical to a fresh build),
-    re-bucket by ``pmod(xxhash64(key), meta.n_buckets)`` and write
-    sorted-by-key bucketed files; ``extra_subdirs`` side tables
-    (shingle doc sizes, trigram names) are batch-independent payloads —
-    copied under batch ``-1`` with their ``_batch_id`` dropped.
-    ``fresh_meta_df`` is the source meta with ``extended=False``
-    (:func:`replace_meta`; BM25 also replaces its corpus stats — see
-    ``lexical.consolidate_postings_index``).
-
-    Publishing: ``out_path`` must be a NEW directory (never ``path``
-    itself — Spark cannot overwrite its own scan input; raised loudly).
-    Readers keep resolving the OLD index until the swap: pass
-    ``manifest_path`` to :func:`publish_index` the finished layout (the
-    swap half of swap-then-expire; returns the new version), then retire
-    the old directory later with :func:`expire_index_versions`. Like the
-    IVF rebuild, consolidation is a single-writer offline maintenance
-    operation — run it when extension volume has eroded query latency,
-    never per arrival. A new extender (fresh checkpoint) can then grow
-    the consolidated index from batch 0 again."""
-    norm_in, norm_out = canonical_dir(spark, path), canonical_dir(spark, out_path)
-    if norm_out == norm_in or norm_out.startswith(norm_in + "/"):
-        raise ValueError(
-            f"consolidate_index: out_path {out_path!r} must be a fresh "
-            f"directory outside the source layout {path!r} (a write into "
-            "its own scan input would corrupt the index mid-read)"
-        )
-    norm_out = out_path.rstrip("/")  # write under the caller's spelling
-    meta = read_meta(spark, path)
-    n_buckets = int(meta["n_buckets"])
-    raw = spark.read.parquet(f"{path}/{rows_subdir}")
-    stored_count_t = {f.name: f.dataType for f in raw.schema.fields}[count_col]
-    base = raw.drop(count_col, "bucket", "_batch_id")
-    fresh_counts = base.groupBy(key_col).agg(
-        F.count("*").cast(stored_count_t).alias(count_col)
-    )
-    rows = base.join(fresh_counts, key_col).withColumn(
-        "bucket", F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
-    )
-    write_index_rows(
-        rows,
-        f"{norm_out}/{rows_subdir}",
-        partition_cols=("bucket",),
-        sort_col=key_col,
-        n_files=n_buckets,
-    )
-    for sub in extra_subdirs:
-        side = spark.read.parquet(f"{path}/{sub}").drop("_batch_id")
-        write_index_rows(side, f"{norm_out}/{sub}")
-    write_meta(fresh_meta_df, norm_out)
-    if manifest_path is not None:
-        return publish_index(spark, manifest_path, norm_out)
-    return None
-
-
 def start_extender(
     stream: DataFrame,
     checkpoint_path: str,
@@ -461,89 +379,175 @@ def start_extender(
     return writer.start()
 
 
-def start_postings_extender(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    *,
-    derive_rows: Callable,
-    key_col: str,
-    count_col: str,
-    rows_subdir: str,
-    extra_outputs: "Callable | None" = None,
-    available_now: bool = True,
-):
-    """The ONE extension dance every bucketed-postings index shares
-    (shingle / ExactSubstr windows / trigram grams / BM25 terms). Per
-    batch:
+@dataclass(frozen=True)
+class PostingsFamily:
+    """One bucketed-postings index family (shingle, ExactSubstr windows,
+    trigram grams, BM25 terms) as data: where its rows live, their key
+    and denormalized count column (with the count's STORED type), the
+    one row derivation its builder and its extender both run, and its
+    side tables.
 
-    1. read the frozen build meta;
-    2. ``derive_rows(batch_df, meta)`` explodes the batch to posting
-       rows (must contain ``key_col``); a narrow eager
-       ``localCheckpoint`` pins them (three downstream references);
-    3. a batch that derives to zero rows (an empty batch, all-blank
-       docs, every doc under the frozen k...) is skipped WITHOUT
-       flipping the index off its pushed-predicate fast path, releasing
-       the checkpoint either way (a stream of such batches must not leak
-       one pinned RDD per batch);
-    4. flip ``meta.extended`` BEFORE the rows land (:func:`replace_meta`
-       keeps the builder's meta schema) — the family crash-ordering rule: a
-       reader between the writes must never see extension rows under
-       ``extended=False``, where the pushed batch-local count guard
-       would miss a key crossing its cap only ACROSS batches; the
-       reverse gap is safe (recount over base-only rows reproduces the
-       stored counts exactly);
-    5. batch-local ``count_col`` doc-freqs join back (schema-compatible
-       with the build's corpus-wide column), rows hash-bucket by
-       ``pmod(xxhash64(key), meta.n_buckets)`` and append under this
-       ``_batch_id`` with dynamic overwrite (replay idempotence), sorted
-       by key for row-group skipping;
-    6. ``extra_outputs(batch_df, rows, meta)`` yields (subdir, df) side
-       tables (shingle doc sizes, trigram name payload), written under
-       the same batch id.
-    """
-    from building_a_rag_pipeline_with_airflow_spark.operators import (
-        release_checkpoint,
+    ``derive(df, params)`` explodes documents to posting rows holding
+    ``key``; ``params`` are the family's column names plus its frozen
+    build constants (a builder passes its arguments, an extender the
+    stored meta row — the same field names). ``sides`` are
+    ``(subdir, make)`` pairs, ``make(df, rows, params)`` giving the side
+    table a batch writes beside its postings (shingle doc sizes, trigram
+    names, BM25 batch stats)."""
+
+    rows_subdir: str
+    key: str
+    count: str
+    count_type: str
+    derive: Callable[[DataFrame, Mapping], DataFrame]
+    sides: "tuple[tuple[str, Callable], ...]" = ()
+
+    def side_frames(self, df: DataFrame, rows: DataFrame, params: Mapping):
+        return [(sub, make(df, rows, params)) for sub, make in self.sides]
+
+
+def write_postings(
+    family: PostingsFamily, rows: DataFrame, path: str, n_buckets: int,
+    sides=(), *, batch_id: int = BASE_BATCH_ID, extend: bool = False,
+) -> None:
+    """THE postings write of a :class:`PostingsFamily`: count ``rows`` per
+    key (cast to the family's stored count type), join the counts back,
+    hash-bucket by ``pmod(xxhash64(key), n_buckets)`` and write sorted by
+    key under ``<path>/<rows_subdir>``; then each ``(subdir, frame)`` side
+    table under the same batch. Its three callers differ only in what
+    they hand it: a base build gives the corpus' rows (batch ``-1``,
+    corpus-wide counts), an extender a micro-batch's rows (``extend``,
+    batch-local counts), consolidation the stored rows minus their count
+    (a corpus-wide recount)."""
+    key, n_buckets = family.key, int(n_buckets)
+    counts = rows.groupBy(key).agg(
+        F.count("*").cast(family.count_type).alias(family.count)
     )
+    bucket = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+    write_index_rows(
+        rows.join(counts, key).withColumn("bucket", bucket),
+        f"{path}/{family.rows_subdir}", partition_cols=("bucket",),
+        sort_col=key, n_files=n_buckets, batch_id=batch_id, extend=extend,
+    )
+    for sub, frame in sides:
+        write_index_rows(frame, f"{path}/{sub}", batch_id=batch_id, extend=extend)
+
+
+def start_pinned_extender(
+    stream: DataFrame, index_path: str, checkpoint_path: str,
+    derive: Callable, write: Callable, available_now: bool = True,
+    params: "Mapping | None" = None,
+):
+    """The extension skeleton of the derived-row indexes. Per batch: bind
+    the frozen build meta and the caller's ``params`` into one dict ``p``
+    (params win); ``derive(batch_df, p)`` the index rows and pin them
+    with a narrow eager ``localCheckpoint`` (the write reads them more
+    than once: counts, rows, side tables); skip a batch that derives to
+    zero rows (an empty batch, all-blank docs, every doc under the frozen
+    k...); else ``write(batch_df, rows, p, batch_id)``. The pinned blocks
+    are released on every path — a skipped batch or a failed write
+    (Structured Streaming retries it) must not leak one pinned RDD per
+    batch."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import release_checkpoint
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        meta = read_meta(spark, index_path)
-        rows = derive_rows(batch_df, meta).localCheckpoint(eager=True)
-        # try/finally: a write failure (type-narrowing refusal, transient
-        # FS error — Structured Streaming retries the batch) must not
-        # leak the pinned blocks; one leaked RDD per retry is the same
-        # class as the zero-row skip leak
+        meta = read_meta(batch_df.sparkSession, index_path)
+        p = {**meta.asDict(), **(params or {})}
+        rows = derive(batch_df, p).localCheckpoint(eager=True)
         try:
-            if rows.isEmpty():
-                return
-            if not meta.extended:
-                write_meta(replace_meta(spark, index_path, extended=True), index_path)
-            dfreq = rows.groupBy(key_col).agg(
-                F.count("*").cast("bigint").alias(count_col)
-            )
-            out = rows.join(dfreq, key_col).withColumn(
-                "bucket",
-                F.pmod(
-                    F.xxhash64(key_col), F.lit(int(meta.n_buckets))
-                ).cast("int"),
-            )
-            write_index_rows(
-                out,
-                f"{index_path}/{rows_subdir}",
-                partition_cols=("bucket",),
-                sort_col=key_col,
-                n_files=int(meta.n_buckets),
-                batch_id=batch_id,
-                extend=True,
-            )
-            for subdir, df in (
-                extra_outputs(batch_df, rows, meta) if extra_outputs else ()
-            ):
-                write_index_rows(
-                    df, f"{index_path}/{subdir}", batch_id=batch_id, extend=True
-                )
+            if not rows.isEmpty():
+                write(batch_df, rows, p, batch_id)
         finally:
             release_checkpoint(rows)
 
     return start_extender(stream, checkpoint_path, write_batch, available_now)
+
+
+def start_postings_extender(
+    stream: DataFrame, index_path: str, checkpoint_path: str,
+    family: PostingsFamily, params: Mapping, available_now: bool = True,
+):
+    """Grow a :class:`PostingsFamily` index from a stream of NEW documents
+    (:func:`start_pinned_extender`): each non-empty batch derives with the
+    family's own ``derive`` under the stored meta, flips
+    ``meta.extended`` BEFORE its rows land (:func:`replace_meta` keeps the
+    builder's meta schema), then writes batch-local counts and side
+    tables under its ``_batch_id`` (:func:`write_postings`, dynamic
+    overwrite → a replayed batch replaces its own rows).
+
+    The flip-first order is the family's crash rule: a reader between the
+    writes must never see extension rows under ``extended=False``, where
+    the pushed batch-local count guard would miss a key crossing its cap
+    only ACROSS batches; the reverse gap is safe (a recount over
+    base-only rows reproduces the stored counts exactly). A zero-row
+    batch leaves the index on its pushed-predicate fast path."""
+
+    def write(batch_df: DataFrame, rows: DataFrame, p: dict, batch_id: int) -> None:
+        if not p["extended"]:
+            spark = batch_df.sparkSession
+            write_meta(replace_meta(spark, index_path, extended=True), index_path)
+        write_postings(
+            family, rows, index_path, p["n_buckets"],
+            family.side_frames(batch_df, rows, p), batch_id=batch_id, extend=True,
+        )
+
+    return start_pinned_extender(
+        stream, index_path, checkpoint_path, family.derive, write, available_now,
+        params,
+    )
+
+
+def consolidate_index(
+    spark: SparkSession, family: PostingsFamily, path: str, out_path: str,
+    manifest_path: "str | None" = None, *, meta_fields: "Mapping | None" = None,
+    folded: "Mapping[str, DataFrame] | None" = None,
+) -> "int | None":
+    """Re-base an EXTENDED :class:`PostingsFamily` index into a fresh
+    single-batch layout at ``out_path`` — the text-side twin of the
+    vector side's ``recluster_ivf_index``. Once an extender flips
+    ``meta.extended``, the stored count column is batch-local and every
+    query pays the in-plan recount instead of the pushed-predicate fast
+    path. Consolidation recounts it CORPUS-WIDE over every ``_batch_id``
+    partition and rewrites the layout as a fresh base build (batch
+    ``-1``, ``extended=False``), so queries regain the pushed guard.
+
+    The stored rows are the ONLY input, never a corpus re-tokenization:
+    they lose their stale count and go through :func:`write_postings`
+    like a build's rows (the postings parquet is scanned twice — by the
+    recount and by the rewrite's join probe — a deliberate trade: pinning
+    corpus-scale rows would break the narrow-output-only checkpoint
+    rule). Side tables are batch-independent payloads, copied under
+    batch ``-1`` — except those a caller passes already ``folded`` (BM25's
+    summed ``batch_stats``). The meta is the source's with
+    ``extended=False`` plus ``meta_fields``.
+
+    Publishing: ``out_path`` must be a NEW directory (never ``path``
+    itself — Spark cannot overwrite its own scan input; raised loudly).
+    Readers keep resolving the OLD index until the swap: pass
+    ``manifest_path`` to :func:`publish_index` the finished layout (the
+    swap half of swap-then-expire; returns the new version), then retire
+    the old directory later with :func:`expire_index_versions`. Like the
+    IVF rebuild, consolidation is a single-writer offline maintenance
+    operation — run it when extension volume has eroded query latency,
+    never per arrival. A new extender (fresh checkpoint) can then grow
+    the consolidated index from batch 0 again."""
+    norm_in, norm_out = canonical_dir(spark, path), canonical_dir(spark, out_path)
+    if norm_out == norm_in or norm_out.startswith(norm_in + "/"):
+        raise ValueError(
+            f"consolidate_index: out_path {out_path!r} must be a fresh "
+            f"directory outside the source layout {path!r} (a write into "
+            "its own scan input would corrupt the index mid-read)"
+        )
+    out = out_path.rstrip("/")  # write under the caller's spelling
+    n_buckets = read_meta(spark, path)["n_buckets"]
+    folded = folded or {}
+    rows = spark.read.parquet(f"{path}/{family.rows_subdir}")
+    sides = [
+        (sub, folded.get(sub) or spark.read.parquet(f"{path}/{sub}").drop("_batch_id"))
+        for sub, _ in family.sides
+    ]
+    write_postings(
+        family, rows.drop(family.count, "bucket", "_batch_id"), out, n_buckets, sides
+    )
+    write_meta(replace_meta(spark, path, extended=False, **(meta_fields or {})), out)
+    return None if manifest_path is None else publish_index(spark, manifest_path, out)

@@ -59,23 +59,6 @@ def extract_archives(src_dir: str, dest_dir: str,
     return extracted
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Distributed partitioned write — replaces the reference's per-file S3
-    upload loop (K1, dags:339-439) and its ``replace=True`` idempotence.
-    With ``partitionOverwriteMode=dynamic`` only touched partitions rewrite,
-    which is the 100 TB-safe re-ingestion story."""
-    writer = df.write.mode(mode).format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.option("partitionOverwriteMode", "dynamic").save(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -343,33 +343,17 @@ dedup.build_shingle_index` layout fresh — the text-side twin of
     Re-running ``build_shingle_index`` (offline, like IVF re-clustering)
     restores the pushed-guard fast path.
 
-    Mechanics (empty-batch skips, the flip-meta-first crash ordering,
-    batch-local doc-freq join, replay-idempotent bucketed write,
-    checkpoint release on every path) live in ONE place —
+    Mechanics (zero-row skips, the flip-meta-first crash ordering,
+    replay-idempotent bucketed write, checkpoint release on every path)
+    live in ONE place —
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.\
-index_layout.start_postings_extender` — shared with the ExactSubstr
-    and trigram extenders."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.dedup import shingles
+index_layout.start_postings_extender` — which derives each batch with
+    the builder's own spec (``dedup._SHINGLE_POSTINGS``)."""
+    from building_a_rag_pipeline_with_airflow_spark.operators.dedup import _SHINGLE_POSTINGS
 
     return index_layout.start_postings_extender(
-        docs_stream,
-        index_path,
-        checkpoint_path,
-        derive_rows=lambda batch_df, meta: shingles(
-            batch_df, text_col, id_col, int(meta.n)
-        ).select(F.col(id_col).alias("doc_id"), "shingle"),
-        key_col="shingle",
-        count_col="shingle_df",
-        rows_subdir="postings",
-        extra_outputs=lambda batch_df, rows, meta: [
-            (
-                "doc_sizes",
-                rows.groupBy("doc_id").agg(
-                    F.count("*").cast("bigint").alias("n_shingles")
-                ),
-            )
-        ],
-        available_now=available_now,
+        docs_stream, index_path, checkpoint_path, _SHINGLE_POSTINGS,
+        {"text_col": text_col, "id_col": id_col}, available_now,
     )
 
 
@@ -397,28 +381,17 @@ dedup.build_substring_index` layout fresh — the ExactSubstr twin of
     corpus grows) would evade a pushed batch-local predicate. Re-running
     ``build_substring_index`` offline restores the pushed fast path.
 
-    Mechanics shared via
+    One spec (``dedup._SUBSTRING_WINDOWS``) derives the build's and each
+    batch's windows through
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.\
 index_layout.start_postings_extender` (a non-empty batch can still
     window to NOTHING — every doc below the frozen k, or above
     max_doc_tokens — and must skip without flipping the fast path)."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.dedup import _window_hashes
-
-    def derive(batch_df: DataFrame, meta) -> DataFrame:
-        mdt = None if int(meta.max_doc_tokens) < 0 else int(meta.max_doc_tokens)
-        return _window_hashes(
-            batch_df, text_col, id_col, int(meta.k), mdt
-        ).select(F.col(id_col).alias("doc_id"), "pos", F.col("_h").alias("h"))
+    from building_a_rag_pipeline_with_airflow_spark.operators.dedup import _SUBSTRING_WINDOWS
 
     return index_layout.start_postings_extender(
-        docs_stream,
-        index_path,
-        checkpoint_path,
-        derive_rows=derive,
-        key_col="h",
-        count_col="h_count",
-        rows_subdir="windows",
-        available_now=available_now,
+        docs_stream, index_path, checkpoint_path, _SUBSTRING_WINDOWS,
+        {"text_col": text_col, "id_col": id_col}, available_now,
     )
 
 
@@ -448,44 +421,21 @@ linkage.build_trigram_index` layout fresh — the fuzzy-search twin of
     Re-running ``build_trigram_index`` offline restores the pushed-guard
     fast path.
 
-    Mechanics shared via
+    One spec (``linkage._TRIGRAM_POSTINGS``) derives the build's and each
+    batch's postings through
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.\
 index_layout.start_postings_extender`; the (name_id, name) payload
-    rows ride as the extra output (ALL rows of a batch that derives any
+    rows ride as its side table (ALL rows of a batch that derives any
     posting — the payload mirrors the corpus, the postings mirror its
     grams; NULL names gram to nothing, so a batch of ONLY NULL names is
     a zero-derive skip like an all-blank ExactSubstr batch — it writes
     neither postings nor payload and leaves the pushed-guard fast path
     untouched)."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.linkage import trigram_set
-
-    def derive(batch_df: DataFrame, meta) -> DataFrame:
-        return batch_df.select(
-            F.col(c_id).alias("name_id"),
-            F.col(c_text).alias("name"),
-            trigram_set(c_text).alias("_g"),
-        ).select(
-            "name_id", F.size("_g").alias("n_grams"),
-            F.explode("_g").alias("gram"),
-        )
+    from building_a_rag_pipeline_with_airflow_spark.operators.linkage import _TRIGRAM_POSTINGS
 
     return index_layout.start_postings_extender(
-        names_stream,
-        index_path,
-        checkpoint_path,
-        derive_rows=derive,
-        key_col="gram",
-        count_col="gram_df",
-        rows_subdir="postings",
-        extra_outputs=lambda batch_df, rows, meta: [
-            (
-                "names",
-                batch_df.select(
-                    F.col(c_id).alias("name_id"), F.col(c_text).alias("name")
-                ),
-            )
-        ],
-        available_now=available_now,
+        names_stream, index_path, checkpoint_path, _TRIGRAM_POSTINGS,
+        {"c_id": c_id, "c_text": c_text}, available_now,
     )
 
 
@@ -516,7 +466,8 @@ lexical.build_postings_index` layout fresh — the BM25 twin of
     counting. Re-running ``build_postings_index`` offline restores the
     stored-df fast path.
 
-    Mechanics shared via
+    One spec (``lexical._BM25_POSTINGS``) derives the build's and each
+    batch's postings through
     :func:`~building_a_rag_pipeline_with_airflow_spark.sources.\
 index_layout.start_postings_extender` — which also gives this extender
     the family's zero-derive skip (a batch of all-blank docs contributes
@@ -525,47 +476,13 @@ index_layout.start_postings_extender` — which also gives this extender
     and the flip-meta-first crash ordering (the reverse gap is safe
     because the build's base batch_stats row (-1) reproduces meta's
     n_docs/avgdl exactly). The per-batch (n_docs, sum_dl) stats row
-    rides as the extra output, derived from the SAME checkpointed
-    posting rows as the postings (one tokenization pass per batch)."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.lexical import _tokenized
-
-    def derive(batch_df: DataFrame, meta) -> DataFrame:
-        return (
-            _tokenized(batch_df, id_col, text_col)
-            .select(
-                F.col(id_col).alias("doc_id"),
-                "dl",
-                F.explode("toks").alias("term"),
-            )
-            .groupBy("doc_id", "term")
-            .agg(
-                F.count("*").cast("double").alias("tf"),
-                F.first("dl").alias("dl"),
-            )
-        )
+    rides as the side table, derived from the SAME checkpointed posting
+    rows as the postings (one tokenization pass per batch)."""
+    from building_a_rag_pipeline_with_airflow_spark.operators.lexical import _BM25_POSTINGS
 
     return index_layout.start_postings_extender(
-        docs_stream,
-        index_path,
-        checkpoint_path,
-        derive_rows=derive,
-        key_col="term",
-        # stored df_t is double (the build's schema); the helper's bigint
-        # count conforms to it at the write boundary, values exact
-        count_col="df_t",
-        rows_subdir="postings",
-        extra_outputs=lambda batch_df, rows, meta: [
-            (
-                "batch_stats",
-                rows.groupBy("doc_id")
-                .agg(F.first("dl").alias("dl"))
-                .agg(
-                    F.count("*").cast("bigint").alias("n_docs"),
-                    F.sum("dl").alias("sum_dl"),
-                ),
-            )
-        ],
-        available_now=available_now,
+        docs_stream, index_path, checkpoint_path, _BM25_POSTINGS,
+        {"id_col": id_col, "text_col": text_col}, available_now,
     )
 
 
@@ -703,49 +620,26 @@ def streaming_extend_phash_index(
     needed: the pairs query derives bucket sizes in-plan from the stored
     rows, so there is no batch-local denormalized statistic to go
     stale."""
-    from building_a_rag_pipeline_with_airflow_spark.operators import (
-        multimodal as _mm,
-        release_checkpoint,
-    )
+    from building_a_rag_pipeline_with_airflow_spark.operators import multimodal as _mm
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        meta = index_layout.read_meta(spark, index_path)
-        hashed = _mm.perceptual_hash(
-            batch_df, data_col=data_col, id_col=id_col
+    def derive(batch_df: DataFrame, p: dict) -> DataFrame:
+        # an empty batch, or one whose payloads are all NULL
+        # (perceptual_hash excludes them), hashes to NOTHING and is
+        # skipped; the skeleton pins the band rows, so the zero-row probe
+        # and the write do not each re-run the perceptual-hash pandas UDF
+        # (the phash_near_dups recompute-per-reference trap)
+        hashed = _mm.perceptual_hash(batch_df, data_col=data_col, id_col=id_col)
+        return _mm._phash_band_rows(hashed, int(p["n_bands"]), id_col=id_col)
+
+    def write(batch_df: DataFrame, rows: DataFrame, p: dict, batch_id: int) -> None:
+        index_layout.write_index_rows(
+            rows, f"{index_path}/bands", partition_cols=("band_i",),
+            sort_col="band_v", n_files=int(p["n_bands"]),
+            batch_id=batch_id, extend=True,
         )
-        # eager localCheckpoint pins the derived band rows BEFORE the
-        # zero-derive probe (the start_postings_extender discipline):
-        # without it the isEmpty() probe and the index write
-        # each re-run the perceptual-hash pandas UDF over the batch —
-        # the phash_near_dups recompute-per-reference trap
-        rows = _mm._phash_band_rows(
-            hashed, int(meta["n_bands"]), id_col=id_col
-        ).localCheckpoint(eager=True)
-        # try/finally: a write failure (Structured Streaming retries the
-        # batch) must not leak the pinned blocks — one leaked RDD per
-        # retry, same class as the zero-derive skip leak
-        try:
-            # an empty batch, or one whose payloads are all NULL
-            # (perceptual_hash excludes them), hashes to NOTHING: skip
-            # like the postings extenders' zero-derive rule; there is no
-            # meta flip to guard here, this just avoids a pointless write
-            if rows.isEmpty():
-                return
-            index_layout.write_index_rows(
-                rows,
-                f"{index_path}/bands",
-                partition_cols=("band_i",),
-                sort_col="band_v",
-                n_files=int(meta["n_bands"]),
-                batch_id=batch_id,
-                extend=True,
-            )
-        finally:
-            release_checkpoint(rows)
 
-    return index_layout.start_extender(
-        media_stream, checkpoint_path, write_batch, available_now
+    return index_layout.start_pinned_extender(
+        media_stream, index_path, checkpoint_path, derive, write, available_now
     )
 
 

@@ -13,7 +13,10 @@ path cannot silently miss the others:
    through a fresh checkpoint (the crash-replay scenario) changes
    nothing;
 3. **the query's scan prunes** — partition filters (or pushed parquet
-   predicates, for the shingle stop-guard) appear in the executed plan.
+   predicates, for the shingle stop-guard) appear in the executed plan;
+4. **build, extend and consolidate store one layout** — for the four
+   postings families, a whole-corpus build and a half build extended
+   with the other half then consolidated store the same rows.
 
 The per-index tests (test_streaming / test_lexical / test_multimodal /
 test_scale_plans) keep their deeper operator-specific assertions; this
@@ -368,6 +371,49 @@ def test_consolidate_restores_fast_path(spec, spark, sf_dir, tmp_path):
     assert _rows(spec.query(spark, out)) == _rows(spec.inplan(full)), (
         f"{spec.name}: re-extended consolidated index != in-plan"
     )
+
+
+@pytest.mark.parametrize(
+    "spec", _CONSOLIDATABLE, ids=[s.name for s in _CONSOLIDATABLE]
+)
+def test_build_extend_consolidate_store_one_layout(spec, spark, sf_dir, tmp_path):
+    """Build, extend and consolidate are one algorithm: building the whole
+    corpus stores exactly what building half of it, streaming the other
+    half in and consolidating stores — every subdir holds the same rows
+    with the same dtypes (``_batch_id`` aside), and the meta rows are
+    equal (``avgdl``, a float quotient, to 1e-9 relative)."""
+    import os
+
+    full = spec.corpus(spark, sf_dir)
+    key = F.col(spec.split_col)
+    whole, half = str(tmp_path / "whole"), str(tmp_path / "half")
+    spec.build(full, whole)
+    spec.build(full.where(key % 2 == 1), half)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    full.where(key % 2 == 0).write.parquet(str(landing / "d1"))
+    schema = spark.read.parquet(str(landing / "d1")).schema
+    stream = spark.readStream.schema(schema).parquet(f"{landing}/*")
+    spec.extend(stream, half, str(tmp_path / "ck")).awaitTermination(120)
+    merged = str(tmp_path / "merged")
+    spec.consolidate(spark, half, merged, None)
+
+    subdirs = sorted(d for d in os.listdir(whole) if not d.startswith((".", "_")))
+    assert subdirs == sorted(
+        d for d in os.listdir(merged) if not d.startswith((".", "_"))
+    )
+    for sub in subdirs:
+        a = spark.read.parquet(f"{whole}/{sub}").drop("_batch_id")
+        b = spark.read.parquet(f"{merged}/{sub}").drop("_batch_id")
+        assert a.dtypes == b.dtypes, f"{spec.name}/{sub}: dtypes differ"
+        if sub == "meta":
+            ma, mb = a.first().asDict(), b.first().asDict()
+            assert ma.pop("avgdl", 0.0) == pytest.approx(
+                mb.pop("avgdl", 0.0), rel=1e-9
+            )
+            assert ma == mb, f"{spec.name}: meta rows differ"
+        else:
+            assert _rows(a) == _rows(b), f"{spec.name}/{sub}: rows differ"
 
 
 def test_compaction_preserves_index_contract(spark, sf_dir, tmp_path):

@@ -9,7 +9,6 @@ from __future__ import annotations
 import ast
 import importlib.util
 import py_compile
-import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -46,30 +45,62 @@ def _source_files() -> "list[Path]":
     )
 
 
+def _code_references(tree) -> "list[tuple[str, int]]":
+    """(name, line) of every name the code USES: ``ast.Name`` loads,
+    attribute names and imported names — including the expressions
+    inside f-strings, never a word in a docstring, comment or string."""
+    refs = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            refs.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            refs.append((node.attr, node.lineno))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            refs += [(a.name.split(".")[-1], node.lineno) for a in node.names]
+    return refs
+
+
+def _top_level_names(tree) -> "list[tuple[str, ast.stmt]]":
+    """The package module's own top-level definitions: ``def``s (minus
+    ``@q`` registry rows, reached through REGISTRY) and assigned names
+    (minus dunders such as ``__all__``)."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            if not any(
+                ast.unparse(d).split("(")[0] == "q" for d in node.decorator_list
+            ):
+                out.append((node.name, node))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [
+                (t.id, node)
+                for t in targets
+                if isinstance(t, ast.Name) and not t.id.startswith("__")
+            ]
+    return out
+
+
 def test_every_package_function_is_referenced():
-    """Each top-level ``def`` in the package must be named, as a word,
-    somewhere in the repo's Python sources other than on its own ``def``
-    line: an uncalled function is dead surface. Registry queries
-    (``@q``) are reached through REGISTRY and are exempt."""
-    where = defaultdict(set)  # word -> {(file, line number)}
+    """Each top-level ``def`` and module-level assignment in the package
+    must be used by code somewhere in the repo's Python sources outside
+    its own definition: an unused name is dead surface. A name that only
+    a docstring, comment or SQL string mentions does not count."""
+    where = defaultdict(set)  # name -> {(file, line number)}
     defs = []
     for path in _source_files():
-        text = path.read_text()
-        for i, line in enumerate(text.splitlines(), 1):
-            for word in re.findall(r"[A-Za-z_]\w*", line):
-                where[word].add((path, i))
+        tree = ast.parse(path.read_text())
+        for name, line in _code_references(tree):
+            where[name].add((path, line))
         if PACKAGE in path.parents:
-            defs += [
-                (path, node)
-                for node in ast.parse(text).body
-                if isinstance(node, ast.FunctionDef)
-                and not any(
-                    ast.unparse(d).split("(")[0] == "q" for d in node.decorator_list
-                )
-            ]
+            defs += [(path, name, node) for name, node in _top_level_names(tree)]
     unreferenced = sorted(
-        f"{path.relative_to(REPO)}:{node.name}"
-        for path, node in defs
-        if not where[node.name] - {(path, node.lineno)}
+        f"{path.relative_to(REPO)}:{name}"
+        for path, name, node in defs
+        if not {
+            (p, line)
+            for p, line in where[name]
+            if p != path or not node.lineno <= line <= node.end_lineno
+        }
     )
-    assert not unreferenced, f"functions nothing references: {unreferenced}"
+    assert not unreferenced, f"names nothing references: {unreferenced}"
