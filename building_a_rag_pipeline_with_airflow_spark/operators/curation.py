@@ -765,11 +765,33 @@ def nb_domain_classify(
     lab_tok = _nb_token_buckets(labeled_df, label_col, "_lbl", text_col, n_buckets)
     require_nonempty(lab_tok.limit(1), "nb labeled tokens")
     sc_tok = _nb_token_buckets(score_df, id_col, id_col, text_col, n_buckets)
-    a, bsz = float(alpha), float(n_buckets)
 
     cls_tok = lab_tok.groupBy("_lbl", "b").agg(
         F.count("*").cast("bigint").alias("n_lb")
     )
+    doc_counts = (
+        labeled_df.where(F.length(F.trim(F.col(text_col))) > 0)
+        .groupBy(F.col(label_col).alias("_lbl"))
+        .agg(F.count("*").cast("double").alias("n_docs"))
+    )
+    return _nb_score(cls_tok, doc_counts, sc_tok, id_col, n_buckets, alpha)
+
+
+def _nb_score(
+    cls_tok: DataFrame,
+    doc_counts: DataFrame,
+    sc_tok: DataFrame,
+    id_col: str,
+    n_buckets: int,
+    alpha: float,
+) -> DataFrame:
+    """Score ``sc_tok``'s ``(id_col, b)`` token rows with the naive-Bayes
+    model given by its counts — ``cls_tok`` ``(_lbl, b, n_lb)`` tokens per
+    (class, bucket) and ``doc_counts`` ``(_lbl, n_docs)`` documents per
+    class — as :func:`nb_domain_classify` documents; the batch operator
+    and ``streaming.ingest.classify_with_streamed_nb`` both end here, so
+    a streamed model scores exactly like a batch-trained one."""
+    a, bsz = float(alpha), float(n_buckets)
     # r16: per-class token totals are the SUM of the per-(class, bucket)
     # counts — re-aggregate the ≤ classes×buckets cls_tok frame instead
     # of re-exploding the labeled corpus a second time (one data-scale
@@ -777,13 +799,8 @@ def nb_domain_classify(
     cls_tot = cls_tok.groupBy("_lbl").agg(
         F.sum("n_lb").cast("double").alias("n_l")
     )
-    prior = (
-        labeled_df.where(F.length(F.trim(F.col(text_col))) > 0)
-        .groupBy(F.col(label_col).alias("_lbl"))
-        .agg(F.count("*").cast("double").alias("n_docs"))
-    )
-    prior = prior.crossJoin(
-        F.broadcast(prior.agg(F.sum("n_docs").alias("_td")))
+    prior = doc_counts.crossJoin(
+        F.broadcast(doc_counts.agg(F.sum("n_docs").alias("_td")))
     ).select("_lbl", F.log(F.col("n_docs") / F.col("_td")).alias("log_prior"))
     # grid: every (class, bucket) pair gets a smoothed log-prob,
     # including buckets unseen in that class. r16: for bounded feature
@@ -795,9 +812,8 @@ def nb_domain_classify(
     # so the output is identical. Unbounded/huge spaces keep the
     # observed-bucket distinct (the grid must stay metadata-scale).
     if int(n_buckets) <= 65536:
-        buckets = (
-            labeled_df.sparkSession.range(int(n_buckets))
-            .select(F.col("id").cast("bigint").alias("b"))
+        buckets = sc_tok.sparkSession.range(int(n_buckets)).select(
+            F.col("id").cast("bigint").alias("b")
         )
     else:
         buckets = sc_tok.select("b").distinct()

@@ -17,12 +17,24 @@ tab would tokenize differently between Spark and DuckDB. The synthetic
 corpora contain none; real corpora should normalize control whitespace
 at ingest (one ``regexp_replace`` ahead of the chain) rather than fork
 per-engine tokenizers.
+
+Session fixtures: a row that queries a durable artifact (an index, a
+streamed gate state, a consolidation lifecycle) builds it once per
+session through ``_session_artifact``, keyed by (artifact, sf_dir), and
+rebuilds it if a temp cleanup reaped its probe subdir; a row never keeps
+a cache of its own. Every stream a fixture runs goes through ``_drain``,
+which fails loudly on a timeout so no half-written state is cached. The
+two release-cycle rows, which must write fresh immutable versions on
+every call, share ``_release_cycle``, which deletes its temp root
+whatever happens.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -67,6 +79,49 @@ def q(name: str, oracle: str | None):
         return fn
 
     return deco
+
+
+# (artifact key, sf_dir) -> path of the artifact a row built this session
+_ARTIFACTS: dict[tuple[str, str], str] = {}
+
+
+def _session_artifact(sf_dir: str, key: str, probe: str, build) -> str:
+    """The artifact ``build(root)`` builds for ``sf_dir`` into a fresh
+    temp ``root`` and returns the path of, built once per session. The
+    cached path is reused while its ``probe`` subdir exists: a long
+    session's temp cleanup can reap it, and then it is rebuilt instead of
+    read half gone. A build that raises caches nothing and leaves no temp
+    root behind."""
+    path = _ARTIFACTS.get((key, sf_dir))
+    if path is None or not os.path.isdir(f"{path}/{probe}"):
+        root = tempfile.mkdtemp(prefix=f"{key}_")
+        try:
+            path = build(root)
+        except BaseException:
+            shutil.rmtree(root, ignore_errors=True)
+            raise
+        _ARTIFACTS[(key, sf_dir)] = path
+    return path
+
+
+def _drain(spark: SparkSession, root: str, drops, start) -> None:
+    """Land each frame of ``drops`` as its own file drop under
+    ``root/land`` and, after each one, run the query
+    ``start(stream, checkpoint)`` starts over the landing glob to the end,
+    so every drop is one micro-batch under the checkpoint ``root/ck``. A
+    drain that outlives 300 s stops its query and raises ``TimeoutError``:
+    state read over a still-running stream holds half-written batches and
+    surfaces as a baffling oracle mismatch."""
+    for i, drop in enumerate(drops, 1):
+        drop.write.parquet(f"{root}/land/d{i}")
+        if i == 1:
+            schema = spark.read.parquet(f"{root}/land/d1").schema
+        query = start(
+            spark.readStream.schema(schema).parquet(f"{root}/land/*"), f"{root}/ck"
+        )
+        if not query.awaitTermination(300):
+            query.stop()
+            raise TimeoutError(f"stream drain under {root} exceeded 300 s")
 
 
 # --------------------------------------------------------------------------
@@ -1148,12 +1203,6 @@ def ngram_jaccard_pairs_q(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(docs, threshold=0.1).orderBy("id_a", "id_b")
 
 
-# Session-scoped cache of built shingle indexes, one per sf_dir: the first
-# call pays the build (explode + bucket write), later calls measure pure
-# query-from-index cost — which is the point of the durable layout.
-_SHINGLE_INDEX_CACHE: dict[str, str] = {}
-
-
 @q("jaccard_index_pairs", _JACCARD_PAIRS_SQL)
 def jaccard_index_pairs_q(spark, sf_dir):
     """The durable-index twin of `ngram_jaccard_pairs`: pairs computed from
@@ -1161,52 +1210,38 @@ def jaccard_index_pairs_q(spark, sf_dir):
     temp dir) instead of re-tokenizing the corpus per plan branch — same
     oracle, identical results. The postings parquet is scanned once (AQE
     exchange reuse; asserted by test_shingle_index_scanned_once) with the
-    stop-shingle guard pushed into the scan."""
-    import os
-    import tempfile
+    stop-shingle guard pushed into the scan. The first call pays the
+    build (explode + bucket write); later calls measure pure
+    query-from-index cost, which is the point of the durable layout."""
 
-    path = _SHINGLE_INDEX_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(f"{path}/postings"):
-        path = tempfile.mkdtemp(prefix="shingle_idx_") + "/index"
-        docs = _t(spark, sf_dir, "documents")
-        dedup.build_shingle_index(docs, path, n=3)
-        _SHINGLE_INDEX_CACHE[sf_dir] = path
+    def build(root):
+        dedup.build_shingle_index(_t(spark, sf_dir, "documents"), f"{root}/index", n=3)
+        return f"{root}/index"
+
+    path = _session_artifact(sf_dir, "shingle_idx", "postings", build)
     return dedup.jaccard_pairs_from_index(spark, path, threshold=0.1).orderBy(
         "id_a", "id_b"
     )
 
 
 def _consolidated_lifecycle(
-    spark, sf_dir, cache, prefix, base_df, new_df, build, extend, consolidate
+    spark, sf_dir, key, base_df, new_df, build, extend, consolidate
 ):
-    """Shared scaffolding for the consolidation-lifecycle rows (one
-    implementation, review finding): build the index on ``base_df``,
-    stream ``new_df`` in through the family extender (one micro-batch —
-    flips `extended`), consolidate to a NEW path publishing through the
-    versioned manifest, resolve via `current_index`, and cache per
-    sf_dir so the lifecycle runs once per session."""
-    import os
-    import tempfile
-
+    """Shared scaffolding for the consolidation-lifecycle rows: build the
+    index on ``base_df``, stream ``new_df`` in through the family
+    extender (one micro-batch — flips `extended`), consolidate to a NEW
+    path publishing through the versioned manifest and resolve it via
+    `current_index`, once per session."""
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    path = cache.get(sf_dir)
-    if path is not None and os.path.isdir(f"{path}/postings"):
-        return path
-    root = tempfile.mkdtemp(prefix=prefix)
-    base_idx = f"{root}/index"
-    build(base_df, base_idx)
-    new_df.write.parquet(f"{root}/land/d1")
-    schema = spark.read.parquet(f"{root}/land/d1").schema
-    stream = spark.readStream.schema(schema).parquet(f"{root}/land/*")
-    extend(stream, base_idx, f"{root}/ck").awaitTermination(300)
-    consolidate(spark, base_idx, f"{root}/index_v2", f"{root}/manifest")
-    path = index_layout.current_index(spark, f"{root}/manifest")
-    cache[sf_dir] = path
-    return path
+    def lifecycle(root):
+        base_idx = f"{root}/index"
+        build(base_df, base_idx)
+        _drain(spark, root, [new_df], lambda stream, ck: extend(stream, base_idx, ck))
+        consolidate(spark, base_idx, f"{root}/index_v2", f"{root}/manifest")
+        return index_layout.current_index(spark, f"{root}/manifest")
 
-
-_CONS_SHINGLE_CACHE: dict[str, str] = {}
+    return _session_artifact(sf_dir, key, "postings", lifecycle)
 
 
 @q("jaccard_pairs_consolidated_index", _JACCARD_PAIRS_SQL)
@@ -1229,8 +1264,7 @@ def jaccard_pairs_consolidated_index(spark, sf_dir):
     path = _consolidated_lifecycle(
         spark,
         sf_dir,
-        _CONS_SHINGLE_CACHE,
-        "shingle_cons_",
+        "shingle_cons",
         docs.where(F.col("doc_id") % 2 == 0),
         docs.where(F.col("doc_id") % 2 == 1),
         lambda base, p: dedup.build_shingle_index(base, p, n=3),
@@ -1565,9 +1599,6 @@ def substring_dedup_rolling(spark, sf_dir):
     )
 
 
-_SUBSTRING_INDEX_CACHE: dict[str, str] = {}
-
-
 @q(
     "substring_index_spans",
     _SUBSTR_CTES
@@ -1585,15 +1616,12 @@ def substring_index_spans(spark, sf_dir):
     in-plan scrub, identical spans. The ≥min_count duplicate gate is a
     PUSHED h_count parquet predicate on the fresh index; an extended
     index recounts in-plan (cross-batch repeats)."""
-    import os
-    import tempfile
 
-    path = _SUBSTRING_INDEX_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(f"{path}/windows"):
-        path = tempfile.mkdtemp(prefix="substr_idx_") + "/index"
-        docs = _t(spark, sf_dir, "documents")
-        dedup.build_substring_index(docs, path, k=8)
-        _SUBSTRING_INDEX_CACHE[sf_dir] = path
+    def build(root):
+        dedup.build_substring_index(_t(spark, sf_dir, "documents"), f"{root}/index", k=8)
+        return f"{root}/index"
+
+    path = _session_artifact(sf_dir, "substr_idx", "windows", build)
     return dedup.spans_from_index(spark, path, min_count=2).orderBy(
         "doc_id", "span_start"
     )
@@ -1646,7 +1674,22 @@ def duplication_profile_documents(spark, sf_dir):
     ).orderBy("band_min_count")
 
 
-_DUP_STREAM_STATE: dict[str, str] = {}
+def _dup_gate_state(spark, sf_dir):
+    """The duplication gate's state after the documents arrive as two
+    micro-batches (even doc ids, then odd), built once per session."""
+    from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
+
+    def build(root):
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        _drain(
+            spark, root, [docs.where(F.col("doc_id") % 2 == i) for i in (0, 1)],
+            lambda raw, ck: _ing.streaming_duplication_profile(
+                raw, f"{root}/state", ck, k=8, bands=(2, 3, 10)
+            ),
+        )
+        return f"{root}/state"
+
+    return _session_artifact(sf_dir, "dup_gate", "totals", build)
 
 
 @q("duplication_profile_streamed", _DUP_PROFILE_SQL)
@@ -1662,35 +1705,11 @@ def duplication_profile_streamed(spark, sf_dir):
     accumulated stream is independently value-checked by the driver —
     the `substring_dedup_rolling` oracle-sharing pattern. State is
     built once per session (temp dir) and the fold re-read per call."""
-    import os
-    import tempfile
-
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    state = _DUP_STREAM_STATE.get(sf_dir)
-    if state is None or not os.path.isdir(f"{state}/totals"):
-        root = tempfile.mkdtemp(prefix="dup_gate_")
-        state, ck = f"{root}/state", f"{root}/ck"
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.where(F.col("doc_id") % 2 == 0).write.parquet(f"{root}/land/d1")
-        schema = spark.read.parquet(f"{root}/land/d1").schema
-
-        def drain():
-            raw = spark.readStream.schema(schema).parquet(f"{root}/land/*")
-            _ing.streaming_duplication_profile(
-                raw, state, ck, k=8, bands=(2, 3, 10)
-            ).awaitTermination(300)
-
-        drain()
-        docs.where(F.col("doc_id") % 2 == 1).write.parquet(f"{root}/land/d2")
-        drain()
-        _DUP_STREAM_STATE[sf_dir] = state
-    return _ing.read_duplication_profile(spark, state).orderBy(
-        "band_min_count"
-    )
-
-
-_DUP_COMPACT_STATE: dict[str, str] = {}
+    return _ing.read_duplication_profile(
+        spark, _dup_gate_state(spark, sf_dir)
+    ).orderBy("band_min_count")
 
 
 @q("duplication_profile_compacted", _DUP_PROFILE_SQL)
@@ -1707,22 +1726,15 @@ def duplication_profile_compacted(spark, sf_dir):
     same Python object), so build → stream → compact → read is
     value-checked end to end by the driver: any compaction loss or
     double-count breaks the hash."""
-    import tempfile
-
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    import os
-
-    compacted = _DUP_COMPACT_STATE.get(sf_dir)
-    # same staleness re-check as the streamed sibling: a long session's
-    # /tmp cleanup can reap the cached dir — rebuild, don't crash
-    if compacted is None or not os.path.isdir(f"{compacted}/totals"):
-        duplication_profile_streamed(spark, sf_dir)  # ensure state exists
-        compacted = tempfile.mkdtemp(prefix="dup_gate_c_") + "/state"
+    def build(root):
         _ing.compact_duplication_state(
-            spark, _DUP_STREAM_STATE[sf_dir], compacted
+            spark, _dup_gate_state(spark, sf_dir), f"{root}/state"
         )
-        _DUP_COMPACT_STATE[sf_dir] = compacted
+        return f"{root}/state"
+
+    compacted = _session_artifact(sf_dir, "dup_gate_c", "totals", build)
     return _ing.read_duplication_profile(spark, compacted).orderBy(
         "band_min_count"
     )
@@ -2519,7 +2531,31 @@ def calibrate_isotonic_orders(spark, sf_dir):
     )
 
 
-_CAL_STREAM_STATE: dict[str, str] = {}
+def _orders_gate_state(spark, sf_dir, gate, **kw):
+    """The state of the streamed ``gate(stream, state, checkpoint, **kw)``
+    after the scored orders arrive as two micro-batches (even order keys,
+    then odd), built once per session."""
+
+    def build(root):
+        scored = _calibration_scored_orders(spark, sf_dir)
+        _drain(
+            spark, root,
+            [scored.where(F.col("o_orderkey") % 2 == i).drop("o_orderkey") for i in (0, 1)],
+            lambda raw, ck: gate(raw, f"{root}/state", ck, **kw),
+        )
+        return f"{root}/state"
+
+    return _session_artifact(sf_dir, gate.__name__, "partials", build)
+
+
+def _threshold_gate_state(spark, sf_dir):
+    """The threshold-curve gate's state, which `threshold_curve_streamed`
+    folds and `gate_state_health_report` lists."""
+    from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
+
+    return _orders_gate_state(
+        spark, sf_dir, _ing.streaming_threshold_curve, decimals=2
+    )
 
 
 @q("calibration_report_streamed", _CALIBRATION_ORDERS_SQL)
@@ -2534,37 +2570,12 @@ def calibration_report_streamed(spark, sf_dir):
     independently value-checked by the driver — the
     `duplication_profile_streamed` oracle-sharing pattern. State is
     built once per session (temp dir) and the fold re-read per call."""
-    import os
-    import tempfile
-
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    state = _CAL_STREAM_STATE.get(sf_dir)
-    if state is None or not os.path.isdir(f"{state}/partials"):
-        root = tempfile.mkdtemp(prefix="cal_gate_")
-        state, ck = f"{root}/state", f"{root}/ck"
-        scored = _calibration_scored_orders(spark, sf_dir)
-        scored.where(F.col("o_orderkey") % 2 == 0).drop(
-            "o_orderkey"
-        ).write.parquet(f"{root}/land/d1")
-        schema = spark.read.parquet(f"{root}/land/d1").schema
-
-        def drain():
-            raw = spark.readStream.schema(schema).parquet(f"{root}/land/*")
-            _ing.streaming_calibration(
-                raw, state, ck, n_bins=10
-            ).awaitTermination(300)
-
-        drain()
-        scored.where(F.col("o_orderkey") % 2 == 1).drop(
-            "o_orderkey"
-        ).write.parquet(f"{root}/land/d2")
-        drain()
-        _CAL_STREAM_STATE[sf_dir] = state
+    state = _orders_gate_state(
+        spark, sf_dir, _ing.streaming_calibration, n_bins=10
+    )
     return _ing.read_calibration_report(spark, state).orderBy("bin")
-
-
-_THR_STREAM_STATE: dict[str, str] = {}
 
 
 @q("threshold_curve_streamed", _THRESHOLD_CURVE_SQL)
@@ -2582,36 +2593,11 @@ def threshold_curve_streamed(spark, sf_dir):
     independently value-checked by the driver — the
     `calibration_report_streamed` oracle-sharing pattern. State is
     built once per session (temp dir) and the fold re-read per call."""
-    import os
-    import tempfile
-
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    state = _THR_STREAM_STATE.get(sf_dir)
-    if state is None or not os.path.isdir(f"{state}/partials"):
-        root = tempfile.mkdtemp(prefix="thr_gate_")
-        state, ck = f"{root}/state", f"{root}/ck"
-        scored = _calibration_scored_orders(spark, sf_dir)
-        scored.where(F.col("o_orderkey") % 2 == 0).drop(
-            "o_orderkey"
-        ).write.parquet(f"{root}/land/d1")
-        schema = spark.read.parquet(f"{root}/land/d1").schema
-
-        def drain():
-            raw = spark.readStream.schema(schema).parquet(f"{root}/land/*")
-            _ing.streaming_threshold_curve(
-                raw, state, ck, decimals=2
-            ).awaitTermination(300)
-
-        drain()
-        scored.where(F.col("o_orderkey") % 2 == 1).drop(
-            "o_orderkey"
-        ).write.parquet(f"{root}/land/d2")
-        drain()
-        _THR_STREAM_STATE[sf_dir] = state
-    return _ing.read_threshold_curve(spark, state).orderBy(
-        F.desc("threshold")
-    )
+    return _ing.read_threshold_curve(
+        spark, _threshold_gate_state(spark, sf_dir)
+    ).orderBy(F.desc("threshold"))
 
 
 @q("gate_state_health_report", None)  # rows-only (r13 judge directive
@@ -2626,8 +2612,8 @@ def threshold_curve_streamed(spark, sf_dir):
 def gate_state_health_report(spark, sf_dir):
     """`streaming.ingest.gate_state_report` over REAL gate state each
     driver window it rotates into: the threshold-curve gate's two-batch
-    state (built by `threshold_curve_streamed`'s session-cached drain —
-    the same state the oracled fold reads), reported at directory grain.
+    state (the session fixture `threshold_curve_streamed`'s oracled fold
+    reads), reported at directory grain.
     Deterministic surface the driver's rows-only check sees: one row per
     state subdir (meta + partials), n_batches = 2 for the partials,
     no compaction base. Cost is O(#batches + #files) metadata listings —
@@ -2635,8 +2621,7 @@ def gate_state_health_report(spark, sf_dir):
     helper; `compact_threshold_state` is the DO)."""
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    threshold_curve_streamed(spark, sf_dir)  # ensure the 2-batch state
-    return _ing.gate_state_report(spark, _THR_STREAM_STATE[sf_dir])
+    return _ing.gate_state_report(spark, _threshold_gate_state(spark, sf_dir))
 
 
 # The classifier-gated-curation capstone oracle (r12 judge directive
@@ -2943,9 +2928,6 @@ _CLASSIFIER_STAMP_SQL = (
 )
 
 
-_STAMP_STREAM_STATE: dict[str, str] = {}
-
-
 @q("classifier_stamp_streamed", _CLASSIFIER_STAMP_SQL)
 def classifier_stamp_streamed(spark, sf_dir):
     """The STREAMED classifier-gate stamp (r14 judge directive #3) —
@@ -2967,17 +2949,10 @@ def classifier_stamp_streamed(spark, sf_dir):
     driver value-checks every streamed verdict AND calibrated score
     against the end-to-end DuckDB replay. State is built once per
     session (temp dir) and re-read per call."""
-    import os
-    import tempfile
-
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest as _ing
 
-    state = _STAMP_STREAM_STATE.get(sf_dir)
-    if state is None or not os.path.isdir(f"{state}/batches"):
-        root = tempfile.mkdtemp(prefix="clf_stamp_")
-        state, ck = f"{root}/state", f"{root}/ck"
-        docs = _t(spark, sf_dir, "documents")
-        _lab, rest, marg = _nb_dup_scores(docs)
+    def build(root):
+        _lab, rest, marg = _nb_dup_scores(_t(spark, sf_dir, "documents"))
         # narrow (id, p, y) lazy checkpoint: the stamp's fit-mapping and
         # threshold collects (run once per drain) plus the two landing
         # writes all reference the scored frame — without the cut each
@@ -2990,36 +2965,23 @@ def classifier_stamp_streamed(spark, sf_dir):
         )
         fit = scored.where(F.col("doc_id") % 5 == 3).select("p", "y")
         prod = scored.where(F.col("doc_id") % 5 == 4).select("doc_id", "p")
-        prod.where(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-            f"{root}/land/d1"
-        )
-        schema = spark.read.parquet(f"{root}/land/d1").schema
-
-        def drain():
-            raw = spark.readStream.schema(schema).parquet(f"{root}/land/*")
-            q_ = _ing.streaming_classifier_stamp(
-                raw, fit, state, ck,
-                min_precision=0.9, n_bins=10, decimals=2,
+        try:
+            _drain(
+                spark, root,
+                [prod.where(F.col("doc_id") % 2 == i).coalesce(1) for i in (0, 1)],
+                lambda raw, ck: _ing.streaming_classifier_stamp(
+                    raw, fit, f"{root}/state", ck,
+                    min_precision=0.9, n_bins=10, decimals=2,
+                ),
             )
-            # a drain that outlives the timeout must fail LOUDLY: state
-            # cached over a still-running stream reads half-written
-            # batches and surfaces as a baffling oracle mismatch
-            if not q_.awaitTermination(300):
-                q_.stop()
-                raise TimeoutError(
-                    "classifier_stamp_streamed: drain exceeded 300 s"
-                )
+        finally:
+            # the drains materialized everything into state parquet; the
+            # narrow checkpoint has no remaining readers — release it so
+            # per-session builds don't pin blocks for the session lifetime
+            release_checkpoint(scored)
+        return f"{root}/state"
 
-        drain()
-        prod.where(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-            f"{root}/land/d2"
-        )
-        drain()
-        # the drains materialized everything into state parquet; the
-        # narrow checkpoint has no remaining readers — release it so
-        # per-session builds don't pin blocks for the session lifetime
-        release_checkpoint(scored)
-        _STAMP_STREAM_STATE[sf_dir] = state
+    state = _session_artifact(sf_dir, "clf_stamp", "batches", build)
     return (
         _ing.read_stamped_assignments(spark, state)
         .select(
@@ -4443,6 +4405,37 @@ _CURATE_GATED_CTES = (
 )
 
 
+def _curate_kw(docs, gated: bool = False) -> dict:
+    """The `curation.curate_corpus` arguments every curate and release
+    row passes, matching the `_CURATE_CTES` oracles: the doc_id % 97
+    benchmark, src0..4 upweighted 2× and a 0.3 near-dup threshold. With
+    ``gated``, also the classifier gate (`_CURATE_CLF_STAGE_CTES`) over a
+    narrow (doc_id, p) lazy checkpoint of every document's NB score: the
+    gate's coverage probes, fit/threshold collects and production stamp
+    all reference the score table, and without the cut each reference
+    re-runs the NB train+score (the classifier_gated_curation precedent,
+    measured 6.3 s -> ~2 s). The caller releases
+    ``kw["classifier_gate_kw"]["scores"]`` once its result is collected."""
+    kw = {
+        "benchmark": docs.where(F.col("doc_id") % 97 == 0),
+        "mixture_weights": {f"src{i}": 2.0 for i in range(5)},
+        "near_dup_threshold": 0.3,
+    }
+    if gated:
+        lab, _pop, marg = _nb_dup_scores(docs, score_all=True)
+        scored = marg.select("doc_id", "p").localCheckpoint(eager=False)
+        kw["classifier_gate_kw"] = {
+            "scores": scored,
+            "fit": scored.join(lab.select("doc_id", "y"), "doc_id")
+            .where(F.col("doc_id") % 5 == 3)
+            .select("p", "y"),
+            "min_precision": 0.9,
+            "n_bins": 10,
+            "decimals": 2,
+        }
+    return kw
+
+
 @q(
     "curate_corpus_audit",
     # Full-pipeline composition oracle (r3 judge directive): each stage's
@@ -4471,13 +4464,7 @@ def curate_corpus_audit(spark, sf_dir):
     since r4 by composing the four green stage oracles over the staged
     survivor sets."""
     docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    kept, audit = curation.curate_corpus(
-        docs,
-        benchmark=bench,
-        mixture_weights={f"src{i}": 2.0 for i in range(5)},
-        near_dup_threshold=0.3,
-    )
+    kept, audit = curation.curate_corpus(docs, **_curate_kw(docs))
     # the audit is already a LOCAL relation (collected stage stats) and
     # this row discards the released docs — release the final stage
     # checkpoint, or every bench-tail/driver invocation pins its blocks
@@ -4543,39 +4530,14 @@ def curate_corpus_gated_audit(spark, sf_dir):
     audit is one single-row aggregate per stage over frames the counts
     already materialized."""
     docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    lab, _pop, marg = _nb_dup_scores(docs, score_all=True)
-    # narrow (id, p) lazy checkpoint between the classifier and the
-    # composition: the gate's coverage probes + fit/threshold collects
-    # + the production stamp all reference the score table — without
-    # the cut each reference re-runs the NB train+score (the
-    # classifier_gated_curation precedent, measured 6.3 s -> ~2 s)
-    scored = marg.select("doc_id", "p").localCheckpoint(eager=False)
-    fit = (
-        scored.join(lab.select("doc_id", "y"), "doc_id")
-        .where(F.col("doc_id") % 5 == 3)
-        .select("p", "y")
-    )
-    kept, audit = curation.curate_corpus(
-        docs,
-        benchmark=bench,
-        mixture_weights={f"src{i}": 2.0 for i in range(5)},
-        near_dup_threshold=0.3,
-        classifier_gate_kw={
-            "scores": scored,
-            "fit": fit,
-            "min_precision": 0.9,
-            "n_bins": 10,
-            "decimals": 2,
-        },
-        audit_checksum=True,
-    )
+    kw = _curate_kw(docs, gated=True)
+    kept, audit = curation.curate_corpus(docs, audit_checksum=True, **kw)
     # the audit is a LOCAL relation and this row discards the released
     # docs — release the final stage checkpoint AND the narrow score
     # checkpoint (no remaining readers), or the bench's per-round e2e
     # tail pins both for the session lifetime
     release_checkpoint(kept)
-    release_checkpoint(scored)
+    release_checkpoint(kw["classifier_gate_kw"]["scores"])
     return audit.orderBy("stage")
 
 
@@ -4606,13 +4568,7 @@ def corpus_release_report(spark, sf_dir):
     so the END-TO-END released SET — not just its size — is
     value-verified per source."""
     docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    kept, _audit = curation.curate_corpus(
-        docs,
-        benchmark=bench,
-        mixture_weights={f"src{i}": 2.0 for i in range(5)},
-        near_dup_threshold=0.3,
-    )
+    kept, _audit = curation.curate_corpus(docs, **_curate_kw(docs))
     rel = kept.select("doc_id").withColumn("_rel", F.lit(1))
     return (
         docs.join(rel, "doc_id", "left")
@@ -4637,6 +4593,130 @@ def corpus_release_report(spark, sf_dir):
         )
         .orderBy("source")
     )
+
+
+def _release_cycle(spark, sf_dir, gated: bool):
+    """The two-version release cycle both release rows run. v1 curates
+    `documents` with the `_curate_kw` constants (``gated`` adds the
+    classifier gate) and publishes it into a fresh versioned manifest;
+    v2 re-releases the corpus with `lang` remapped on
+    ``doc_id % 13 == 3``, resolving its predecessor through
+    `index_layout.current_index` and diffing against the published v1.
+    Returns both versions' contract reports, the changelog status counts
+    and, when ``gated``, the 'gate' section checked against the published
+    v2 artifact. The ~11–13 report rows are collected and the temp root
+    deleted before returning, whatever happens: the lazy report depends
+    on the released parquet, and a tree of two full-corpus releases
+    would leak per call otherwise. A fresh root per call keeps the
+    immutable-version write (`mode("error")`) honest."""
+    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
+
+    docs = _t(spark, sf_dir, "documents")
+    kw = _curate_kw(docs, gated=gated)
+    kw["expectations"] = [
+        {"name": "chars_range", "kind": "in_range", "col": "n_chars",
+         "lo": 1, "hi": 10_000_000},
+        {"name": "id_not_null", "kind": "not_null", "col": "doc_id"},
+        {"name": "id_unique", "kind": "unique", "col": "doc_id"},
+        {"name": "release_nonempty", "kind": "min_rows", "n": 1},
+    ]
+    root = tempfile.mkdtemp(prefix="release_cycle_")
+    try:
+        r1 = curation.release_corpus(
+            docs, f"{root}/releases", f"{root}/manifest", "v1", **kw
+        )
+        prev = index_layout.current_index(spark, f"{root}/manifest")
+        docs2 = docs.withColumn(
+            "lang",
+            F.when(
+                (F.col("doc_id") % 13 == 3) & F.col("lang").isNotNull(),
+                F.concat(F.col("lang"), F.lit("-x")),
+            ).otherwise(F.col("lang")),
+        )
+        r2 = curation.release_corpus(
+            docs2, f"{root}/releases", f"{root}/manifest", "v2",
+            prev_release_path=prev, **kw,
+        )
+
+        def tag(contract, version):
+            return contract.select(
+                F.lit("contract").alias("section"),
+                F.lit(version).alias("version"),
+                F.col("expectation").alias("item"),
+                F.col("n_violations").alias("n"),
+                "n_rows",
+                "passed",
+            )
+
+        statuses = spark.createDataFrame(
+            [("added",), ("changed",), ("removed",)], "item string"
+        )
+        dcnt = r2["diff"].groupBy("status").agg(
+            F.count("*").cast("bigint").alias("_n")
+        )
+        released_n = r2["contract"].select("n_rows").limit(1)
+        # no NULLs in the record (value-hash safety): diff rows carry the
+        # released row count and passed=true — informational, never a gate
+        diff_rows = (
+            statuses.join(dcnt, statuses.item == dcnt.status, "left")
+            .crossJoin(F.broadcast(released_n))
+            .select(
+                F.lit("diff").alias("section"),
+                F.lit("v2").alias("version"),
+                "item",
+                F.coalesce("_n", F.lit(0)).cast("bigint").alias("n"),
+                "n_rows",
+                F.lit(True).alias("passed"),
+            )
+        )
+        report = (
+            tag(r1["contract"], "v1")
+            .unionByName(tag(r2["contract"], "v2"))
+            .unionByName(diff_rows)
+        )
+        if gated:
+            # the gate section: resolve the PUBLISHED v2 artifact through
+            # the manifest (the consumer path) and check it against an
+            # INDEPENDENT gate pass — classifier_gate re-run on the full
+            # score table, not the composition's own stage output, so a
+            # stage that silently leaked flagged docs into the publish
+            # could not vouch for itself
+            pub = spark.read.parquet(
+                index_layout.current_index(spark, f"{root}/manifest")
+            )
+            gate = dict(kw["classifier_gate_kw"])
+            gated_df, _thr = curation.classifier_gate(
+                gate.pop("scores"), gate.pop("fit"), "p", "y", **gate
+            )
+            flagged = gated_df.where(F.col("keep")).select("doc_id")
+            grow = pub.select("doc_id").agg(
+                F.count(F.lit(1)).cast("bigint").alias("_pub_n"),
+                F.coalesce(F.bit_xor(F.col("doc_id")), F.lit(0))
+                .cast("bigint")
+                .alias("_pub_xor"),
+            ).collect()[0]
+            flag_n = pub.join(flagged, "doc_id", "left_semi").count()
+            report = report.unionByName(spark.createDataFrame(
+                [
+                    (
+                        "gate", "v2", "flagged_in_release",
+                        int(flag_n), int(grow["_pub_n"]), flag_n == 0,
+                    ),
+                    (
+                        "gate", "v2", "released_xor",
+                        int(grow["_pub_xor"]), int(grow["_pub_n"]), True,
+                    ),
+                ],
+                "section string, version string, item string, n bigint, "
+                "n_rows bigint, passed boolean",
+            ))
+        report = report.orderBy("section", "version", "item")
+        rows, schema = report.collect(), report.schema
+    finally:
+        if gated:
+            release_checkpoint(kw["classifier_gate_kw"]["scores"])
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(rows, schema)
 
 
 @q(
@@ -4712,86 +4792,7 @@ def release_cycle_report(spark, sf_dir):
     release record: both versions' contract reports plus the changelog
     status summary, one frame. A fresh temp root per call keeps the
     immutable-version write (`mode("error")`) honest."""
-    import tempfile
-
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
-    root = tempfile.mkdtemp(prefix="release_cycle_")
-    docs = _t(spark, sf_dir, "documents")
-    kw = dict(
-        benchmark=docs.where(F.col("doc_id") % 97 == 0),
-        mixture_weights={f"src{i}": 2.0 for i in range(5)},
-        near_dup_threshold=0.3,
-        expectations=[
-            {"name": "chars_range", "kind": "in_range", "col": "n_chars",
-             "lo": 1, "hi": 10_000_000},
-            {"name": "id_not_null", "kind": "not_null", "col": "doc_id"},
-            {"name": "id_unique", "kind": "unique", "col": "doc_id"},
-            {"name": "release_nonempty", "kind": "min_rows", "n": 1},
-        ],
-    )
-    r1 = curation.release_corpus(
-        docs, f"{root}/releases", f"{root}/manifest", "v1", **kw
-    )
-    prev = index_layout.current_index(spark, f"{root}/manifest")
-    docs2 = docs.withColumn(
-        "lang",
-        F.when(
-            (F.col("doc_id") % 13 == 3) & F.col("lang").isNotNull(),
-            F.concat(F.col("lang"), F.lit("-x")),
-        ).otherwise(F.col("lang")),
-    )
-    r2 = curation.release_corpus(
-        docs2, f"{root}/releases", f"{root}/manifest", "v2",
-        prev_release_path=prev, **kw,
-    )
-
-    def tag(contract, version):
-        return contract.select(
-            F.lit("contract").alias("section"),
-            F.lit(version).alias("version"),
-            F.col("expectation").alias("item"),
-            F.col("n_violations").alias("n"),
-            "n_rows",
-            "passed",
-        )
-
-    statuses = spark.createDataFrame(
-        [("added",), ("changed",), ("removed",)], "item string"
-    )
-    dcnt = r2["diff"].groupBy("status").agg(
-        F.count("*").cast("bigint").alias("_n")
-    )
-    released_n = r2["contract"].select("n_rows").limit(1)
-    # no NULLs in the record (value-hash safety): diff rows carry the
-    # released row count and passed=true — informational, never a gate
-    diff_rows = (
-        statuses.join(dcnt, statuses.item == dcnt.status, "left")
-        .crossJoin(F.broadcast(released_n))
-        .select(
-            F.lit("diff").alias("section"),
-            F.lit("v2").alias("version"),
-            "item",
-            F.coalesce("_n", F.lit(0)).cast("bigint").alias("n"),
-            "n_rows",
-            F.lit(True).alias("passed"),
-        )
-    )
-    report = (
-        tag(r1["contract"], "v1")
-        .unionByName(tag(r2["contract"], "v2"))
-        .unionByName(diff_rows)
-        .orderBy("section", "version", "item")
-    )
-    # Materialize the ~11 report rows and DELETE the temp root before
-    # returning: the lazy frame depends on the released parquet, and a
-    # two-full-corpus-release tree leaked per invocation (driver row ×
-    # sweep × parity, every round) otherwise. The returned local
-    # relation keeps the registry's lazy-DataFrame contract for the
-    # caller; the schema is preserved exactly.
-    rows, schema = report.collect(), report.schema
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return _release_cycle(spark, sf_dir, gated=False)
 
 
 @q(
@@ -4897,135 +4898,7 @@ def release_cycle_gated_report(spark, sf_dir):
     pinning the published id SET to the oracle's gated canonical set.
     One score table (narrow lazy checkpoint) feeds both releases and
     the independent check — the NB train+score runs once, not thrice."""
-    import tempfile
-
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
-    root = tempfile.mkdtemp(prefix="release_cycle_gated_")
-    docs = _t(spark, sf_dir, "documents")
-    lab, _pop, marg = _nb_dup_scores(docs, score_all=True)
-    scored = marg.select("doc_id", "p").localCheckpoint(eager=False)
-    fit = (
-        scored.join(lab.select("doc_id", "y"), "doc_id")
-        .where(F.col("doc_id") % 5 == 3)
-        .select("p", "y")
-    )
-    kw = dict(
-        benchmark=docs.where(F.col("doc_id") % 97 == 0),
-        mixture_weights={f"src{i}": 2.0 for i in range(5)},
-        near_dup_threshold=0.3,
-        classifier_gate_kw={
-            "scores": scored,
-            "fit": fit,
-            "min_precision": 0.9,
-            "n_bins": 10,
-            "decimals": 2,
-        },
-        expectations=[
-            {"name": "chars_range", "kind": "in_range", "col": "n_chars",
-             "lo": 1, "hi": 10_000_000},
-            {"name": "id_not_null", "kind": "not_null", "col": "doc_id"},
-            {"name": "id_unique", "kind": "unique", "col": "doc_id"},
-            {"name": "release_nonempty", "kind": "min_rows", "n": 1},
-        ],
-    )
-    r1 = curation.release_corpus(
-        docs, f"{root}/releases", f"{root}/manifest", "v1", **kw
-    )
-    prev = index_layout.current_index(spark, f"{root}/manifest")
-    docs2 = docs.withColumn(
-        "lang",
-        F.when(
-            (F.col("doc_id") % 13 == 3) & F.col("lang").isNotNull(),
-            F.concat(F.col("lang"), F.lit("-x")),
-        ).otherwise(F.col("lang")),
-    )
-    r2 = curation.release_corpus(
-        docs2, f"{root}/releases", f"{root}/manifest", "v2",
-        prev_release_path=prev, **kw,
-    )
-
-    def tag(contract, version):
-        return contract.select(
-            F.lit("contract").alias("section"),
-            F.lit(version).alias("version"),
-            F.col("expectation").alias("item"),
-            F.col("n_violations").alias("n"),
-            "n_rows",
-            "passed",
-        )
-
-    statuses = spark.createDataFrame(
-        [("added",), ("changed",), ("removed",)], "item string"
-    )
-    dcnt = r2["diff"].groupBy("status").agg(
-        F.count("*").cast("bigint").alias("_n")
-    )
-    released_n = r2["contract"].select("n_rows").limit(1)
-    diff_rows = (
-        statuses.join(dcnt, statuses.item == dcnt.status, "left")
-        .crossJoin(F.broadcast(released_n))
-        .select(
-            F.lit("diff").alias("section"),
-            F.lit("v2").alias("version"),
-            "item",
-            F.coalesce("_n", F.lit(0)).cast("bigint").alias("n"),
-            "n_rows",
-            F.lit(True).alias("passed"),
-        )
-    )
-    # the gate section: resolve the PUBLISHED v2 artifact through the
-    # manifest (the consumer path) and check it against an INDEPENDENT
-    # gate pass — classifier_gate re-run on the full score table, not
-    # the composition's own stage output, so a stage that silently
-    # leaked flagged docs into the publish could not vouch for itself
-    pub = spark.read.parquet(
-        index_layout.current_index(spark, f"{root}/manifest")
-    )
-    gated, _thr = curation.classifier_gate(
-        scored, fit, "p", "y", min_precision=0.9, n_bins=10, decimals=2
-    )
-    flagged = gated.where(F.col("keep")).select("doc_id")
-    grow = pub.select("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_pub_n"),
-        F.coalesce(F.bit_xor(F.col("doc_id")), F.lit(0))
-        .cast("bigint")
-        .alias("_pub_xor"),
-    ).collect()[0]
-    flag_n = pub.join(flagged, "doc_id", "left_semi").count()
-    gate_rows = spark.createDataFrame(
-        [
-            (
-                "gate", "v2", "flagged_in_release",
-                int(flag_n), int(grow["_pub_n"]), flag_n == 0,
-            ),
-            (
-                "gate", "v2", "released_xor",
-                int(grow["_pub_xor"]), int(grow["_pub_n"]), True,
-            ),
-        ],
-        "section string, version string, item string, n bigint, "
-        "n_rows bigint, passed boolean",
-    )
-    report = (
-        tag(r1["contract"], "v1")
-        .unionByName(tag(r2["contract"], "v2"))
-        .unionByName(diff_rows)
-        .unionByName(gate_rows)
-        .orderBy("section", "version", "item")
-    )
-    # materialize the ~13 report rows and DELETE the temp root before
-    # returning (the release_cycle_report leak rule): the lazy frame
-    # depends on the released parquet; the returned local relation
-    # keeps the registry's lazy-DataFrame contract for the caller.
-    # The narrow score checkpoint has no remaining readers after the
-    # collect — release it, or every invocation pins its blocks for
-    # the session lifetime (unlike classifier_gated_curation, whose
-    # RETURNED lazy frame still needs its checkpoint).
-    rows, schema = report.collect(), report.schema
-    release_checkpoint(scored)
-    shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    return _release_cycle(spark, sf_dir, gated=True)
 
 
 def _sketch_quantiles_oracle(k: int = 512, probs=(0.1, 0.25, 0.5, 0.75, 0.9)) -> str:
@@ -6750,9 +6623,6 @@ _BM25_WORKLOAD = (
     (3, ("shuffle", "spark")),  # shares terms with both other queries
 )
 
-_POSTINGS_INDEX_CACHE: dict[str, str] = {}
-
-
 def _bm25_batch_sql() -> str:
     qvals = ", ".join(
         f"({qid}, '{t}')" for qid, terms in _BM25_WORKLOAD for t in terms
@@ -6809,15 +6679,14 @@ def bm25_batch_topk_documents(spark, sf_dir):
     the `jaccard_index_pairs` pattern); the oracle recomputes every
     workload's BM25 from the raw corpus — so index build + batch query
     path are BOTH value-verified end to end."""
-    import os
-    import tempfile
 
-    path = _POSTINGS_INDEX_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(f"{path}/postings"):
-        path = tempfile.mkdtemp(prefix="postings_idx_") + "/index"
-        docs = _t(spark, sf_dir, "documents")
-        lexical.build_postings_index(docs, path, n_buckets=16)
-        _POSTINGS_INDEX_CACHE[sf_dir] = path
+    def build(root):
+        lexical.build_postings_index(
+            _t(spark, sf_dir, "documents"), f"{root}/index", n_buckets=16
+        )
+        return f"{root}/index"
+
+    path = _session_artifact(sf_dir, "postings_idx", "postings", build)
     queries_df = spark.createDataFrame(
         [(qid, list(terms)) for qid, terms in _BM25_WORKLOAD],
         "q_id int, terms array<string>",
@@ -7577,9 +7446,6 @@ def trigram_search_parts(spark, sf_dir):
     return linkage.trigram_topk(queries, corpus, k=5).orderBy("q_id", "rank")
 
 
-_TRIGRAM_INDEX_CACHE: dict[str, str] = {}
-
-
 @q("trigram_search_parts_from_index", _TRIGRAM_SEARCH_ORACLE)
 def trigram_search_parts_from_index(spark, sf_dir):
     """The durable-index twin of `trigram_search_parts` (r9 judge
@@ -7593,23 +7459,17 @@ def trigram_search_parts_from_index(spark, sf_dir):
     work is O(matching posting lists), corpus-size independent. Shares
     the in-plan row's oracle string verbatim — from-index ≡ in-plan is
     independently value-checked by the driver."""
-    import os
-    import tempfile
-
     queries, corpus = _trigram_parts_inputs(spark, sf_dir)
     from building_a_rag_pipeline_with_airflow_spark.operators import linkage
 
-    path = _TRIGRAM_INDEX_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(f"{path}/postings"):
-        path = tempfile.mkdtemp(prefix="trigram_idx_") + "/index"
-        linkage.build_trigram_index(corpus, path)
-        _TRIGRAM_INDEX_CACHE[sf_dir] = path
+    def build(root):
+        linkage.build_trigram_index(corpus, f"{root}/index")
+        return f"{root}/index"
+
+    path = _session_artifact(sf_dir, "trigram_idx", "postings", build)
     return linkage.trigram_topk_from_index(
         spark, path, queries, k=5
     ).orderBy("q_id", "rank")
-
-
-_CONS_TRIGRAM_CACHE: dict[str, str] = {}
 
 
 @q("trigram_search_parts_consolidated", _TRIGRAM_SEARCH_ORACLE)
@@ -7631,8 +7491,7 @@ def trigram_search_parts_consolidated(spark, sf_dir):
     path = _consolidated_lifecycle(
         spark,
         sf_dir,
-        _CONS_TRIGRAM_CACHE,
-        "trigram_cons_",
+        "trigram_cons",
         corpus.where(F.col("name_id") % 2 == 0),
         corpus.where(F.col("name_id") % 2 == 1),
         linkage.build_trigram_index,

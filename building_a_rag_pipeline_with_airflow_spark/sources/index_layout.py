@@ -159,7 +159,6 @@ def write_index_rows(
     n_files: "int | None" = None,
     batch_id: int = BASE_BATCH_ID,
     extend: bool = False,
-    coalesce: "int | None" = None,
 ) -> None:
     """Write one batch of index data rows under the family layout.
 
@@ -177,8 +176,7 @@ def write_index_rows(
         rows = _conform_to_existing(rows, path, skip=partition_cols)
     _write_tagged(
         rows, path, batch_id, partition_cols=partition_cols,
-        sort_col=sort_col, n_files=n_files, coalesce=coalesce,
-        dynamic=extend,
+        sort_col=sort_col, n_files=n_files, dynamic=extend,
     )
 
 
@@ -338,24 +336,42 @@ def expire_index_versions(
     return deleted
 
 
-def canonical_dir(spark: SparkSession, path: str) -> str:
-    """Canonical comparable form of a directory path for the
-    write-into-own-layout guards (:func:`consolidate_index`,
-    ``streaming.ingest.compact_gate_state``): qualify through the
+def require_fresh_output(
+    spark: SparkSession, op: str, source: str, out_path: str, what: str
+) -> str:
+    """The write-into-own-layout guard of :func:`consolidate_index` and
+    ``streaming.ingest.compact_gate_state``: raise unless ``out_path`` is
+    outside the ``source`` directory ``op`` reads (``what`` names it in
+    the message), since a write into or under its own scan input would
+    corrupt it mid-read. Returns ``out_path`` without a trailing slash,
+    the caller's spelling to write under.
+
+    Both paths are compared in a canonical form: qualified through the
     path's Hadoop filesystem — which resolves scheme, authority, and
     working directory, so ``file:///tmp/x``, ``file:/tmp/x`` and
     ``/tmp/x`` all compare EQUAL instead of a URI spelling slipping
-    past a string comparison into overwriting the layout it is
-    reading — then, for local file URIs, resolve symlinks/``..`` so
-    filesystem aliases of one directory compare equal too. Non-file
-    schemes (hdfs://, s3a://) keep the qualified URI form: realpath
-    cannot reason about them and object stores have no symlinks."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") or path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    uri = fs.makeQualified(jp).toUri()
-    if uri.getScheme() == "file":
-        return "file://" + os.path.realpath(uri.getPath())
-    return uri.toString().rstrip("/")
+    past a string comparison — then, for local file URIs, with
+    symlinks/``..`` resolved so filesystem aliases of one directory
+    compare equal too. Non-file schemes (hdfs://, s3a://) keep the
+    qualified URI form: realpath cannot reason about them and object
+    stores have no symlinks."""
+
+    def canonical(path):
+        jp = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") or path)
+        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+        uri = fs.makeQualified(jp).toUri()
+        if uri.getScheme() == "file":
+            return "file://" + os.path.realpath(uri.getPath())
+        return uri.toString().rstrip("/")
+
+    src, dst = canonical(source), canonical(out_path)
+    if dst == src or dst.startswith(src + "/"):
+        raise ValueError(
+            f"{op}: out_path {out_path!r} must be a fresh directory outside "
+            f"the {what} {source!r}: a write into (or under) its own scan "
+            "input would corrupt it mid-read"
+        )
+    return out_path.rstrip("/")
 
 
 def start_extender(
@@ -531,14 +547,9 @@ def consolidate_index(
     operation — run it when extension volume has eroded query latency,
     never per arrival. A new extender (fresh checkpoint) can then grow
     the consolidated index from batch 0 again."""
-    norm_in, norm_out = canonical_dir(spark, path), canonical_dir(spark, out_path)
-    if norm_out == norm_in or norm_out.startswith(norm_in + "/"):
-        raise ValueError(
-            f"consolidate_index: out_path {out_path!r} must be a fresh "
-            f"directory outside the source layout {path!r} (a write into "
-            "its own scan input would corrupt the index mid-read)"
-        )
-    out = out_path.rstrip("/")  # write under the caller's spelling
+    out = require_fresh_output(
+        spark, "consolidate_index", path, out_path, "source layout"
+    )
     n_buckets = read_meta(spark, path)["n_buckets"]
     folded = folded or {}
     rows = spark.read.parquet(f"{path}/{family.rows_subdir}")

@@ -1063,19 +1063,9 @@ def compact_gate_state(
     Returns ``compacted_through``."""
     from building_a_rag_pipeline_with_airflow_spark.sources import io
 
-    # the consolidate_index guard, shared: Hadoop-qualified + local
-    # realpath canonicalization, so URI spellings (file:///...) and
-    # symlink aliases of the live state cannot slip past the comparison
-    src = index_layout.canonical_dir(spark, state_path)
-    dst = index_layout.canonical_dir(spark, out_path)
-    if dst == src or dst.startswith(src + "/"):
-        raise ValueError(
-            f"compact_gate_state: out_path {out_path!r} must be a fresh "
-            f"directory outside the live state {state_path!r} — a write "
-            "into (or under) its own scan input would destroy the "
-            "partials mid-read (the consolidate_index rule)"
-        )
-    dst = out_path.rstrip("/")  # write under the caller's spelling
+    dst = index_layout.require_fresh_output(
+        spark, "compact_gate_state", state_path, out_path, "live state"
+    )
     meta_df = index_layout._read_or_none(spark, f"{state_path}/meta")
     if meta_df is None:
         raise ValueError(
@@ -1685,8 +1675,8 @@ def classify_with_streamed_nb(
     :func:`streaming_nb_update` — identical output (parity-tested) to
     `nb_domain_classify` trained batch-side on the same accumulated
     labeled rows. The fold is one aggregate over (classes × buckets ×
-    batches) metadata-scale partial rows; scoring reuses the exact
-    expressions of the batch operator (grid broadcast, 6dp-rounded
+    batches) metadata-scale partial rows; scoring is the batch
+    operator's own (`curation._nb_score`: grid broadcast, 6dp-rounded
     argmax with label tiebreak), so the streamed and batch models are
     interchangeable mid-pipeline. Like the batch operator over no
     labeled tokens, it raises a ValueError before the first non-empty
@@ -1699,8 +1689,6 @@ def classify_with_streamed_nb(
     ``alpha`` defaults to the meta row's recommended smoothing but is a
     legitimate fold-time knob (it is not baked into the partials), so an
     explicit value simply wins."""
-    from pyspark.sql import Window as _W
-
     from building_a_rag_pipeline_with_airflow_spark.operators import (
         curation as _cur,
         require_nonempty,
@@ -1729,59 +1717,14 @@ def classify_with_streamed_nb(
         .groupBy("_lbl", "b")
         .agg(F.sum("n").cast("bigint").alias("n_lb"))
     )
-    cls_tot = cls_tok.groupBy("_lbl").agg(
-        F.sum("n_lb").cast("double").alias("n_l")
-    )
-    prior = (
+    doc_counts = (
         _read_partials(spark, state_path, "doc_counts", who)
         .groupBy("_lbl")
         .agg(F.sum("n_docs").cast("double").alias("n_docs"))
     )
-    prior = prior.crossJoin(
-        F.broadcast(prior.agg(F.sum("n_docs").alias("_td")))
-    ).select("_lbl", F.log(F.col("n_docs") / F.col("_td")).alias("log_prior"))
-
     sc_tok = _cur._nb_token_buckets(score_df, id_col, id_col, text_col, n_buckets)
     require_nonempty(sc_tok.limit(1), "nb scoring tokens")
-    a, bsz = float(alpha), float(n_buckets)
-    buckets = sc_tok.select("b").distinct()
-    grid = (
-        buckets.crossJoin(F.broadcast(cls_tot))
-        .join(cls_tok, ["b", "_lbl"], "left")
-        .select(
-            "b",
-            "_lbl",
-            F.log(
-                (F.coalesce("n_lb", F.lit(0)) + F.lit(a))
-                / (F.col("n_l") + F.lit(a * bsz))
-            ).alias("log_p"),
-        )
-    )
-    per_class = (
-        sc_tok.join(F.broadcast(grid), "b")
-        .groupBy(id_col, "_lbl")
-        .agg(F.sum("log_p").alias("_ll"))
-        .join(F.broadcast(prior), "_lbl")
-        .select(
-            id_col,
-            "_lbl",
-            F.round(F.col("_ll") + F.col("log_prior"), 6).alias("score"),
-        )
-    )
-    w = _W.partitionBy(id_col).orderBy(F.desc("score"), F.asc("_lbl"))
-    return (
-        per_class.withColumn("_rk", F.row_number().over(w))
-        .withColumn("_next", F.lead("score").over(w))
-        .where(F.col("_rk") == 1)
-        .select(
-            id_col,
-            F.col("_lbl").alias("pred"),
-            "score",
-            F.round(
-                F.coalesce(F.col("score") - F.col("_next"), F.lit(0.0)), 6
-            ).alias("margin"),
-        )
-    )
+    return _cur._nb_score(cls_tok, doc_counts, sc_tok, id_col, n_buckets, alpha)
 
 
 def streaming_quantile_sketch(

@@ -731,7 +731,7 @@ def test_zero_row_extension_batch_releases_checkpoint(spark, tmp_path):
     batches would otherwise pin one checkpointed RDD per batch for the
     session's life (unpersist() is a no-op on locally-checkpointed
     frames; only release_checkpoint frees them). Exercises the shared
-    start_postings_extender skip path."""
+    index_layout.start_pinned_extender skip path."""
     from building_a_rag_pipeline_with_airflow_spark.operators import dedup
     from building_a_rag_pipeline_with_airflow_spark.streaming import ingest
 

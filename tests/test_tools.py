@@ -1,8 +1,9 @@
 """The command-line tools around the engine: the scripts under scripts/
 compile, and bench.py's HEADLINE roster (which the bench, solo_anchor.py
-and capture_plans.py all run) names registered queries once each. Also a
-static guard that every package function has a caller. No Spark
-session."""
+and capture_plans.py all run) names registered queries once each. Also
+static guards that every package function has a caller and that
+queries.py's rows keep their session fixtures in its fixture helpers. No
+Spark session."""
 
 from __future__ import annotations
 
@@ -104,3 +105,40 @@ def test_every_package_function_is_referenced():
         }
     )
     assert not unreferenced, f"names nothing references: {unreferenced}"
+
+
+def test_queries_keep_session_fixtures_in_their_helpers():
+    """queries.py builds durable artifacts only through its fixture
+    helpers: no module-level dict cache besides REGISTRY and the one
+    ``_ARTIFACTS`` store, no ``tempfile.mkdtemp`` outside
+    ``_session_artifact`` and ``_release_cycle``, and no
+    ``.awaitTermination(`` outside ``_drain``, the drain that fails on a
+    timeout instead of caching half-written state."""
+    allowed = {
+        "mkdtemp": {"_session_artifact", "_release_cycle"},
+        "awaitTermination": {"_drain"},
+    }
+    tree = ast.parse((PACKAGE / "queries.py").read_text())
+    found = []
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            value = node.value
+            if isinstance(value, ast.Dict) or (
+                isinstance(value, ast.Call)
+                and ast.unparse(value.func) in ("dict", "defaultdict")
+            ):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                found += [
+                    f"module-level dict {ast.unparse(t)} (line {node.lineno})"
+                    for t in targets
+                    if ast.unparse(t) not in ("REGISTRY", "_ARTIFACTS")
+                ]
+        owner = getattr(node, "name", "<module>")
+        found += [
+            f"{sub.attr} in {owner} (line {sub.lineno})"
+            for sub in ast.walk(node)
+            if isinstance(sub, ast.Attribute)
+            and sub.attr in allowed
+            and owner not in allowed[sub.attr]
+        ]
+    assert not found, f"session fixtures outside their helpers: {found}"
