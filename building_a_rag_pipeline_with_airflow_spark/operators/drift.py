@@ -48,6 +48,57 @@ from building_a_rag_pipeline_with_airflow_spark.operators.analytics import prefi
 __all__ = ["psi_profile", "ks_statistic", "chi2_drift", "js_divergence"]
 
 
+def _psi_bounds(df_base: DataFrame, value_col: str, n_bins: int) -> DataFrame:
+    """The one-row ``_bs`` frame of the baseline's ``n_bins`` quantile
+    bin boundaries: ONE exact-percentile aggregate."""
+    if n_bins < 2:
+        raise ValueError("n_bins must be >= 2")
+    qs = [i / n_bins for i in range(1, n_bins)]
+    return df_base.agg(
+        F.expr(
+            f"percentile({value_col}, array({', '.join(map(str, qs))}))"
+        ).alias("_bs")
+    )
+
+
+def _psi_bin(v, bounds):
+    """bin = number of boundaries strictly below the double value ``v``:
+    an (n_bins - 1)-element map-side fold, no explode, identical int on
+    any engine."""
+    return F.aggregate(
+        bounds, F.lit(0), lambda acc, bd: acc + F.when(v > bd, 1).otherwise(0)
+    )
+
+
+def _psi_terms(eps: float):
+    """``(pa, pb, contribution)`` over a frame holding per-bin counts
+    ``n_base``/``n_new`` and side totals ``_ta``/``_tb``: proportions
+    clamped at ``eps`` (so empty bins stay finite) and the unrounded
+    ``(pa−pb)·ln(pa/pb)``."""
+    pa = F.greatest(F.col("n_base") / F.col("_ta"), F.lit(float(eps)))
+    pb = F.greatest(F.col("n_new") / F.col("_tb"), F.lit(float(eps)))
+    return pa, pb, (pa - pb) * F.log(pa / pb)
+
+
+def _psi_finish(cells: DataFrame, eps: float) -> DataFrame:
+    """The per-bin PSI frame from ``(bin, n_base, n_new)`` count cells —
+    the finisher :func:`psi_profile` and the streamed PSI gate's reader
+    share. Totals come from the n_bins-row cell frame."""
+    totals = cells.agg(
+        F.sum("n_base").cast("double").alias("_ta"),
+        F.sum("n_new").cast("double").alias("_tb"),
+    )
+    pa, pb, contrib = _psi_terms(eps)
+    return cells.crossJoin(F.broadcast(totals)).select(
+        "bin",
+        "n_base",
+        "n_new",
+        (F.round(pa * 1_000_000) / 1_000_000).alias("p_base"),
+        (F.round(pb * 1_000_000) / 1_000_000).alias("p_new"),
+        (F.round(contrib * 1_000_000) / 1_000_000).alias("psi_contrib"),
+    )
+
+
 def psi_profile(
     df_base: DataFrame,
     df_new: DataFrame,
@@ -62,18 +113,11 @@ def psi_profile(
     ``sum(psi_contrib)`` is the headline scalar (rule of thumb: >0.25 =
     major shift). Proportions are clamped at ``eps`` so empty bins stay
     finite (the standard smoothing, applied identically in the oracle)."""
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
+    bounds = _psi_bounds(df_base, value_col, n_bins)
     # an empty side would surface as a mid-job ANSI DIVIDE_BY_ZERO from
     # the proportion math — fail loudly up front instead (O(first row))
     require_nonempty(df_base, "PSI baseline sample")
     require_nonempty(df_new, "PSI new sample")
-    qs = [i / n_bins for i in range(1, n_bins)]
-    bounds = df_base.agg(
-        F.expr(
-            f"percentile({value_col}, array({', '.join(map(str, qs))}))"
-        ).alias("_bs")
-    )
     # ONE counting scan over the tagged union (baseline pays one extra
     # pre-pass for the boundaries): bin + side-conditional counts in a
     # single hash agg, totals derived from the n_bins-row cell frame —
@@ -82,16 +126,9 @@ def psi_profile(
     u = df_base.select(v.alias("_v"), F.lit(0).alias("_side")).unionByName(
         df_new.select(v.alias("_v"), F.lit(1).alias("_side"))
     )
-    # bin = number of boundaries strictly below the value: a 9-element
-    # map-side fold, no explode, identical int on any engine
-    b = F.aggregate(
-        "_bs",
-        F.lit(0),
-        lambda acc, bd: acc + F.when(F.col("_v") > bd, 1).otherwise(0),
-    )
     cells = (
         u.crossJoin(F.broadcast(bounds))
-        .select(b.alias("bin"), "_side")
+        .select(_psi_bin(F.col("_v"), "_bs").alias("bin"), "_side")
         .groupBy("bin")
         .agg(
             F.sum(F.when(F.col("_side") == 0, 1).otherwise(0))
@@ -102,23 +139,7 @@ def psi_profile(
             .alias("n_new"),
         )
     )
-    totals = cells.agg(
-        F.sum("n_base").cast("double").alias("_ta"),
-        F.sum("n_new").cast("double").alias("_tb"),
-    )
-    joined = cells.crossJoin(F.broadcast(totals))
-    pa = F.greatest(F.col("n_base") / F.col("_ta"), F.lit(float(eps)))
-    pb = F.greatest(F.col("n_new") / F.col("_tb"), F.lit(float(eps)))
-    return joined.select(
-        "bin",
-        "n_base",
-        "n_new",
-        (F.round(pa * 1_000_000) / 1_000_000).alias("p_base"),
-        (F.round(pb * 1_000_000) / 1_000_000).alias("p_new"),
-        (F.round((pa - pb) * F.log(pa / pb) * 1_000_000) / 1_000_000).alias(
-            "psi_contrib"
-        ),
-    )
+    return _psi_finish(cells, eps)
 
 
 def ks_statistic(
@@ -332,7 +353,22 @@ def embedding_drift(
             F.count("*").cast("bigint").alias(f"n_{tag}"),
         )
 
-    j = _cent(base_df, "base").join(_cent(cur_df, "cur"), "_p")
+    norms = base_df.agg(
+        F.round(F.avg(l2_norm(c_vec)), 4).alias("mean_norm_base")
+    ).crossJoin(
+        cur_df.agg(F.round(F.avg(l2_norm(c_vec)), 4).alias("mean_norm_cur"))
+    )
+    return _centroid_drift(
+        _cent(base_df, "base").join(_cent(cur_df, "cur"), "_p"), norms
+    )
+
+
+def _centroid_drift(j: DataFrame, norms: DataFrame) -> DataFrame:
+    """The one-row drift report from the per-position centroid frame
+    ``j`` (``_p, c_base, n_base, c_cur, n_cur``) and the one-row
+    ``norms`` frame (``mean_norm_base, mean_norm_cur``) — the finisher
+    :func:`embedding_drift` and the streamed drift gate's reader share.
+    A zero centroid gives the ``NaN`` cosine sentinel."""
     cents = j.agg(
         F.max("n_base").alias("n_base"),
         F.max("n_cur").alias("n_cur"),
@@ -343,11 +379,6 @@ def embedding_drift(
             (F.col("c_base") - F.col("c_cur"))
             * (F.col("c_base") - F.col("c_cur"))
         ).alias("_sd"),
-    )
-    norms = base_df.agg(
-        F.round(F.avg(l2_norm(c_vec)), 4).alias("mean_norm_base")
-    ).crossJoin(
-        cur_df.agg(F.round(F.avg(l2_norm(c_vec)), 4).alias("mean_norm_cur"))
     )
     return cents.crossJoin(F.broadcast(norms)).select(
         "n_base",

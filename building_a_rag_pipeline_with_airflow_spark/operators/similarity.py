@@ -24,8 +24,10 @@ from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
     cosine_similarity,
+    dequantize_int8,
     dot_product,
     l2_norm,
+    quantize_int8,
 )
 
 TOP_K = 5  # reference default, chromadb_rag.py:18
@@ -515,10 +517,6 @@ def build_ivf_index(
     coded layout from the schema and dequantizes in-plan (pure Catalyst
     transform, no Python). Recall impact is pinned by test (≥0.8@10 on
     the test corpus)."""
-    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
-        dequantize_int8,
-        quantize_int8,
-    )
     from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
 
     if method == "kmeans":
@@ -537,17 +535,7 @@ def build_ivf_index(
     # an empty centroid set (e.g. a stride that misses every id in a
     # filtered corpus) would silently write an EMPTY index; fail loudly
     require_nonempty(centroids, "ivf centroids")
-    assigned = ivf_assign(corpus, centroids, c_id, c_vec)
-    if quantize:
-        assigned = (
-            assigned.withColumn("_q", quantize_int8(c_vec))
-            .withColumn("_codes", F.col("_q").getField("codes"))
-            .withColumn("_scale", F.col("_q").getField("scale"))
-            .withColumn("_vnorm", l2_norm(dequantize_int8("_q")))
-            .drop("_q", c_vec)
-        )
-    else:
-        assigned = assigned.withColumn("_vnorm", l2_norm(c_vec))
+    assigned = _ivf_rows(ivf_assign(corpus, centroids, c_id, c_vec), c_vec, quantize)
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
     # family-shared layout write (sources.index_layout): base build =
     # batch -1; streaming_extend_ivf_index appends under its own
@@ -556,6 +544,22 @@ def build_ivf_index(
 
     index_layout.write_index_rows(
         assigned, f"{path}/vectors", partition_cols=("cell_id",)
+    )
+
+
+def _ivf_rows(assigned: DataFrame, c_vec: str, quantize: bool) -> DataFrame:
+    """The stored IVF row encoding, for the build and the streamed
+    extender alike: the vector plus its precomputed norm ``_vnorm``, or,
+    when ``quantize``, int8 ``_codes`` + ``_scale`` in place of the
+    vector with ``_vnorm`` taken over the DEQUANTIZED vector."""
+    if not quantize:
+        return assigned.withColumn("_vnorm", l2_norm(c_vec))
+    return (
+        assigned.withColumn("_q", quantize_int8(c_vec))
+        .withColumn("_codes", F.col("_q").getField("codes"))
+        .withColumn("_scale", F.col("_q").getField("scale"))
+        .withColumn("_vnorm", l2_norm(dequantize_int8("_q")))
+        .drop("_q", c_vec)
     )
 
 

@@ -218,8 +218,16 @@ def write_meta(meta_df: DataFrame, path: str) -> None:
 
 
 def read_meta(spark: SparkSession, path: str):
-    """The index meta row (driver-side — metadata-scale by contract)."""
-    return spark.read.parquet(f"{path}/meta").first()
+    """The index or gate-state meta row (driver-side — metadata-scale by
+    contract). A path without meta is not an initialized index or gate
+    state: ValueError naming it, never a raw PATH_NOT_FOUND."""
+    meta = read_meta_or_none(spark, path)
+    if meta is None:
+        raise ValueError(
+            f"{path} has no meta — not an initialized index or gate state "
+            "(every builder and gate writes meta when it initializes)"
+        )
+    return meta
 
 
 def _read_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
@@ -232,7 +240,7 @@ def _read_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        err = getattr(exc, "getErrorClass", lambda: None)() or str(exc)
+        err = exc.getCondition() or str(exc)
         if "PATH_NOT_FOUND" not in err and "UNABLE_TO_INFER_SCHEMA" not in err:
             raise
         return None

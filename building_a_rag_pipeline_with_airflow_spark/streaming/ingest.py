@@ -37,15 +37,16 @@ by the private helpers below; a gate supplies only its constants, its
 per-batch partials and its fold.
 
 1. **Freeze** (:func:`_freeze_state`). The constants a fold depends on
-   are written at first invocation: frozen artifacts (sketch baseline,
-   split component map, stamp mapping) FIRST, ``<state>/meta`` LAST, so
-   meta presence marks a complete initialization and a crash between
-   the writes re-initializes on restart. A later invocation compares the
-   stored meta and artifacts with what it was given and raises one
-   ValueError naming what differs: partials or decisions frozen under
-   other constants must never mix with new ones (use a fresh state path
-   and checkpoint instead). PSI, expectations and embedding drift keep
-   their older marker — the frozen baseline or contract itself, no meta.
+   are written at first invocation: frozen artifacts (PSI baseline bins,
+   drift baseline sums, sketch baseline, split component map, stamp
+   mapping) FIRST, ``<state>/meta`` LAST, so meta presence marks a
+   complete initialization and a crash between the writes re-initializes
+   on restart. An artifact's identity rides in meta as a
+   :func:`_fingerprint`, so a later invocation compares the stored meta
+   alone with what it was given and raises one ValueError naming what
+   differs: partials or decisions frozen under other constants must
+   never mix with new ones (use a fresh state path and checkpoint
+   instead).
 2. **Guard** (:func:`_start_gate`). Batch ids ``<= compacted_through``
    are skipped: :func:`compact_gate_state` already folded their partials
    into the ``_batch_id = -1`` base, and re-writing them beside it would
@@ -100,6 +101,26 @@ def _fingerprint(df: DataFrame) -> "tuple[int, int]":
     return int(row["n"]), int(row["fp"])
 
 
+def _state_subdirs(spark: SparkSession, state_path: str) -> "dict[str, set[int]]":
+    """Each subdir of a state directory mapped to the ``_batch_id``
+    values of its partition directories (none for meta and frozen
+    artifacts); ``{}`` before anything is written. A filesystem listing,
+    no data read."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(state_path.rstrip("/"))
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return {}
+    return {
+        st.getPath().getName(): {
+            int(c.getPath().getName().split("=", 1)[1])
+            for c in fs.listStatus(st.getPath())
+            if c.isDirectory() and c.getPath().getName().startswith("_batch_id=")
+        }
+        for st in fs.listStatus(root)
+        if st.isDirectory()
+    }
+
+
 def _freeze_state(
     spark: SparkSession,
     state_path: str,
@@ -111,35 +132,40 @@ def _freeze_state(
     loose=(),
 ) -> int:
     """Protocol step 1, freeze-or-check. ``frozen`` is the meta row in
-    ``ddl`` column order; ``artifacts`` are ``(subdir, frame)`` pairs
-    frozen beside it. First invocation: artifacts, then meta. Later
-    invocations: every meta field not named in ``loose`` must equal its
-    ``frozen`` value and every artifact its stored copy (by
-    :func:`_fingerprint`), else ValueError naming the field or artifact
-    (``why`` says what mixing would break). Returns ``compacted_through``
-    (-1 until the state is compacted)."""
+    ``ddl`` column order, carrying the :func:`_fingerprint` of any
+    artifact whose identity matters; ``artifacts`` are ``(subdir,
+    frame)`` pairs frozen beside it. First invocation: artifacts, then
+    meta — unless the directory already holds ``_batch_id`` partials
+    without meta (state written before its gate froze meta, or a crashed
+    compaction), which raises instead of re-initializing over them.
+    Later invocations compare meta only: every field not named in
+    ``loose`` must equal its ``frozen`` value, else ValueError naming
+    the field (``why`` says what mixing would break). Returns
+    ``compacted_through`` (-1 until the state is compacted)."""
     meta_df = spark.createDataFrame([frozen], ddl)
     meta = index_layout.read_meta_or_none(spark, state_path)
     if meta is None:
+        stale = sorted(s for s, ids in _state_subdirs(spark, state_path).items() if ids)
+        if stale:
+            raise ValueError(
+                f"{who}: {state_path} holds per-batch partials in {stale} but "
+                "no meta, so they cannot be checked against this invocation's "
+                "constants (state written before its gate froze meta, or a "
+                "crashed compaction). Use a fresh state_path (and checkpoint)."
+            )
         for sub, df in artifacts:
             df.write.mode("overwrite").parquet(f"{state_path}/{sub}")
         index_layout.write_meta(meta_df, state_path)
         return -1
-    tail = f" — {why}. Use a fresh state_path (and checkpoint) to change it."
+    stored = meta.asDict()
     for name, want in zip(meta_df.columns, frozen):
-        if name not in loose and meta[name] != want:
+        if name not in loose and stored.get(name) != want:
             raise ValueError(
-                f"{who}: {state_path} froze {name}={meta[name]!r} but this "
-                f"invocation gives {want!r}{tail}"
+                f"{who}: {state_path} froze {name}={stored.get(name)!r} but "
+                f"this invocation gives {want!r} — {why}. Use a fresh "
+                "state_path (and checkpoint) to change it."
             )
-    for sub, df in artifacts:
-        stored = spark.read.parquet(f"{state_path}/{sub}").select(*df.columns)
-        if _fingerprint(stored) != _fingerprint(df):
-            raise ValueError(
-                f"{who}: {state_path}/{sub} holds a DIFFERENT {sub} than "
-                f"this invocation derives{tail}"
-            )
-    return int(meta.asDict().get("compacted_through", -1))
+    return int(stored.get("compacted_through", -1))
 
 
 def _start_gate(
@@ -261,14 +287,12 @@ similarity.build_ivf_index` layout fresh: assign each micro-batch of new
     as their batch commits, with the identical pruned-probe plan; a
     replayed batch id overwrites its own rows via the ``_batch_id`` tag
     (same idempotence contract as :func:`streaming_build_index`)."""
-    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import l2_norm
     from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+        _ivf_rows,
         ivf_assign,
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         centroids = spark.read.parquet(f"{index_path}/centroids")
         stored = spark.read.parquet(f"{index_path}/vectors").schema
@@ -288,35 +312,20 @@ similarity.build_ivf_index` layout fresh: assign each micro-batch of new
             skip=("cell_id",),
             stored_schema=stored,  # already read for the _codes probe
         )
-        assigned = ivf_assign(batch_df, centroids, c_id, c_vec)
         # match the existing layout: a quantized base index (int8 codes +
         # scale) must be extended with the same coded schema
-        if "_codes" in stored.names:
-            from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
-                dequantize_int8,
-                quantize_int8,
-            )
-
-            assigned = (
-                assigned.withColumn("_q", quantize_int8(c_vec))
-                .withColumn("_codes", F.col("_q").getField("codes"))
-                .withColumn("_scale", F.col("_q").getField("scale"))
-                .withColumn("_vnorm", l2_norm(dequantize_int8("_q")))
-                .drop("_q", c_vec)
-            )
-        else:
-            assigned = assigned.withColumn("_vnorm", l2_norm(c_vec))
         index_layout.write_index_rows(
-            assigned,
+            _ivf_rows(
+                ivf_assign(batch_df, centroids, c_id, c_vec), c_vec,
+                "_codes" in stored.names,
+            ),
             f"{index_path}/vectors",
             partition_cols=("cell_id",),
             batch_id=batch_id,
             extend=True,
         )
 
-    return index_layout.start_extender(
-        vec_stream, checkpoint_path, write_batch, available_now
-    )
+    return _start_gate(vec_stream, checkpoint_path, -1, write_batch, available_now)
 
 
 def streaming_extend_shingle_index(
@@ -499,75 +508,64 @@ def streaming_psi(
     BASELINE distribution — the continuous form of
     :func:`operators.drift.psi_profile`.
 
-    The baseline's quantile bin boundaries and bin counts freeze in
-    ``<state_path>/baseline`` (n_bins rows; the boundaries themselves are
-    the frozen marker, re-derived and compared on restart). Each batch
-    bins its rows against those boundaries with the batch operator's own
-    expression and writes per-bin counts under ``batches/``.
-    :func:`read_psi_report` folds them into the per-bin frame the batch
-    operator computes over the accumulated stream (parity-tested)."""
-    if n_bins < 2:
-        raise ValueError("n_bins must be >= 2")
-    qs = [i / n_bins for i in range(1, n_bins)]
-    brow = baseline_df.agg(
-        F.expr(
-            f"percentile({value_col}, array({', '.join(map(str, qs))}))"
-        ).alias("_bs")
-    ).first()
-    bounds = [float(x) for x in brow["_bs"]]
+    ``n_bins`` and the baseline's quantile bin bounds freeze in meta; the
+    baseline's bin counts freeze in ``<state_path>/baseline`` (n_bins
+    rows, with the bounds as ``_bounds``). Each batch bins its rows
+    against those bounds with the batch operator's own bin expression
+    and writes per-bin counts under ``batches/``. :func:`read_psi_report`
+    folds them through the batch operator's own finisher into the
+    per-bin frame it computes over the accumulated stream
+    (parity-tested)."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import drift
 
-    def bin_expr(col):
-        b = F.lit(0)
-        for bd in bounds:
-            b = b + F.when(F.col(col).cast("double") > F.lit(bd), 1).otherwise(0)
-        return b
+    bounds = [
+        float(x)
+        for x in drift._psi_bounds(baseline_df, value_col, n_bins).first()["_bs"]
+    ]
+    arr = F.array(*map(F.lit, bounds))
 
-    # Same bounds -> idempotent restart; different bounds would bin the
-    # accumulated batches/ and new ones inconsistently -> raise.
-    prev = index_layout._read_or_none(
-        baseline_df.sparkSession, f"{state_path}/baseline"
-    )
-    prev_row = None if prev is None else prev.select("_bounds").first()
-    if prev_row is None:
-        (
-            baseline_df.select(bin_expr(value_col).alias("bin"))
+    def binned(df: DataFrame, n_col: str) -> DataFrame:
+        return (
+            df.select(drift._psi_bin(F.col(value_col).cast("double"), arr).alias("bin"))
             .groupBy("bin")
-            .agg(F.count("*").cast("bigint").alias("n_base"))
-            .withColumn("_bounds", F.lit(str(bounds)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{state_path}/baseline")
+            .agg(F.count("*").cast("bigint").alias(n_col))
         )
-    elif prev_row["_bounds"] != str(bounds):
-        raise ValueError(
-            f"streaming_psi: {state_path}/baseline already holds bin "
-            f"bounds {prev_row['_bounds']} but the supplied baseline_df "
-            f"produces {bounds}; accumulated batch counts under "
-            f"{state_path}/batches would be binned inconsistently. "
-            "Use a fresh state_path (and checkpoint) to re-baseline."
-        )
+
+    compacted_through = _freeze_state(
+        baseline_df.sparkSession, state_path, "streaming_psi",
+        (int(n_bins), bounds), "n_bins int, bounds array<double>",
+        artifacts=[
+            ("baseline", binned(baseline_df, "n_base")
+             .withColumn("_bounds", F.lit(str(bounds))).coalesce(1))
+        ],
+        why="accumulated batch counts binned under other bounds would mix "
+        "incompatible bin definitions; re-baseline under a fresh state",
+    )
 
     def write_partials(batch_df: DataFrame, batch_id: int) -> None:
         index_layout._write_tagged(
-            batch_df.select(bin_expr(value_col).alias("bin"))
-            .groupBy("bin")
-            .agg(F.count("*").cast("bigint").alias("n_new")),
-            f"{state_path}/batches",
-            batch_id,
+            binned(batch_df, "n_new"), f"{state_path}/batches", batch_id
         )
 
-    return _start_gate(events_stream, checkpoint_path, -1, write_partials, available_now)
+    return _start_gate(
+        events_stream, checkpoint_path, compacted_through, write_partials,
+        available_now,
+    )
 
 
 def read_psi_report(
     spark: SparkSession, state_path: str, eps: float = 1e-6
 ) -> DataFrame:
     """Fold the streamed per-batch bin counts against the frozen baseline
-    into the current PSI profile — identical output schema (and values,
-    parity-tested) to `drift.psi_profile` run batch-side over the same
-    accumulated rows. One aggregate over (bins × batches) metadata-scale
-    rows; no raw-data rescan. Like the batch operator over an empty
-    sample, it raises a ValueError before the first non-empty batch."""
+    into the current PSI profile — `drift.psi_profile`'s own finisher
+    over the accumulated (bin, n_base, n_new) cells, so schema and values
+    match the batch operator over the same rows (parity-tested). One
+    aggregate over (bins × batches) metadata-scale rows; no raw-data
+    rescan. Like the batch operator over an empty sample, it raises a
+    ValueError before the first non-empty batch."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import drift
+
+    index_layout.read_meta(spark, state_path)  # refuses uninitialized state
     base = spark.read.parquet(f"{state_path}/baseline").select(
         "bin", "n_base"
     )
@@ -576,31 +574,12 @@ def read_psi_report(
         .groupBy("bin")
         .agg(F.sum("n_new").cast("bigint").alias("n_new"))
     )
-    joined = (
-        base.join(streamed, "bin", "full_outer")
-        .select(
-            "bin",
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-        )
-    )
-    tot = joined.agg(
-        F.sum("n_base").cast("double").alias("_ta"),
-        F.sum("n_new").cast("double").alias("_tb"),
-    )
-    w = joined.crossJoin(F.broadcast(tot))
-    pa = F.greatest(F.col("n_base") / F.col("_ta"), F.lit(float(eps)))
-    pb = F.greatest(F.col("n_new") / F.col("_tb"), F.lit(float(eps)))
-    return w.select(
+    cells = base.join(streamed, "bin", "full_outer").select(
         "bin",
-        "n_base",
-        "n_new",
-        (F.round(pa * 1_000_000) / 1_000_000).alias("p_base"),
-        (F.round(pb * 1_000_000) / 1_000_000).alias("p_new"),
-        (F.round((pa - pb) * F.log(pa / pb) * 1_000_000) / 1_000_000).alias(
-            "psi_contrib"
-        ),
+        F.coalesce("n_base", F.lit(0)).alias("n_base"),
+        F.coalesce("n_new", F.lit(0)).alias("n_new"),
     )
+    return drift._psi_finish(cells, eps)
 
 
 def streaming_extend_phash_index(
@@ -654,6 +633,9 @@ def read_psi_trend(
     (bins × batches) partial rows against the n_bins baseline frame plus
     one grouped fold — metadata-scale, no raw-data rescan. No batch yet,
     no row yet: the trend of a stream that delivered nothing is empty."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import drift
+
+    index_layout.read_meta(spark, state_path)  # refuses uninitialized state
     base = spark.read.parquet(f"{state_path}/baseline").select(
         "bin", "n_base"
     )
@@ -678,20 +660,14 @@ def read_psi_trend(
     per_batch_tot = grid.groupBy("_batch_id").agg(
         F.sum("n_new").cast("double").alias("_tb")
     )
-    w = (
+    _pa, _pb, contrib = drift._psi_terms(eps)
+    return (
         grid.join(per_batch_tot, "_batch_id")
         .crossJoin(F.broadcast(tb))
-    )
-    pa = F.greatest(F.col("n_base") / F.col("_ta"), F.lit(float(eps)))
-    pb = F.greatest(F.col("n_new") / F.col("_tb"), F.lit(float(eps)))
-    return (
-        w.groupBy(F.col("_batch_id").alias("batch_id"))
+        .groupBy(F.col("_batch_id").alias("batch_id"))
         .agg(
             F.sum("n_new").cast("bigint").alias("n_rows"),
-            (
-                F.round(F.sum((pa - pb) * F.log(pa / pb)) * 1_000_000)
-                / 1_000_000
-            ).alias("psi"),
+            (F.round(F.sum(contrib) * 1_000_000) / 1_000_000).alias("psi"),
         )
         .orderBy("batch_id")
     )
@@ -988,11 +964,7 @@ def compact_gate_state(
     spark: SparkSession,
     state_path: str,
     out_path: str,
-    *,
-    subdirs: "dict[str, tuple[tuple[str, ...], tuple[str, ...]]]",
-    concat_subdirs: "tuple[str, ...]" = (),
-    copy_subdirs: "tuple[str, ...]" = (),
-    fold_subdirs: "dict[str, object]" = {},
+    folds: "dict[str, object]",
 ) -> int:
     """Fold a gate's accumulated per-batch ``_batch_id`` partials into
     ONE base partition at a NEW state path — protocol step 6, the gate
@@ -1003,31 +975,31 @@ def compact_gate_state(
     accumulate one small file per batch (file-count hygiene). Compaction
     pre-folds history so a read costs O(state), not O(state × batches).
 
-    Mechanics: for each state subdir, the per-batch rows are summed
-    (``subdirs`` maps subdir → (group_cols, sum_cols) — every gate's
-    partials are mergeable SUMS by the family contract, which is exactly
-    why this fold is exact) and written as the reserved base partition
-    ``_batch_id = -1`` (real Structured Streaming batch ids are ≥ 0)
-    under ``out_path``; the unchanged read-side fold then sums base +
-    any newer batches, associativity making compacted ≡ uncompacted
-    (parity-tested in the gate-family contract's compaction leg).
-    Column dtypes are re-cast to the stored layout's own types, so the
-    compacted base is byte-compatible with future batch partitions.
+    ``folds`` maps every state subdir (meta aside) to its fold, one of:
 
-    Three further subdir shapes: ``concat_subdirs`` fold by
-    CONCATENATION — every per-batch row is rewritten verbatim under the
-    ``_batch_id = -1`` base (exact because the read-side fold of such a
-    subdir is plain union, and union is associative just like the sums;
-    the stamp's and split's verdict/assignment rows); ``fold_subdirs``
-    map subdir → a callable ``raw -> base`` for folds that are exact but
-    neither sums nor union (the sketch's global bottom-k — the caller
-    owns proving the fold matches its read-side semantics);
-    ``copy_subdirs`` hold frozen non-batch artifacts (the stamp's
-    ≤n_bins-row ``mapping``, the split's component map, the sketch's
-    ``baseline``) that are rewritten verbatim — sized from source bytes
-    like the fold outputs, since a frozen artifact can be data-scale
-    (the component map) — so the compacted layout stays self-contained.
-    All three count toward the coverage guard.
+    * ``(group_cols, sum_cols)`` — the per-batch rows are SUMMED (every
+      sum gate's partials are mergeable sums by the family contract,
+      which is exactly why this fold is exact), re-cast to the stored
+      dtypes so the base stays byte-compatible with future batches;
+    * ``"concat"`` — every per-batch row is rewritten verbatim (exact
+      because the read-side fold of such a subdir is plain union, and
+      union is associative just like the sums; the stamp's and split's
+      verdict/assignment rows);
+    * a callable ``(raw, meta) -> base`` for folds that are exact but
+      neither sums nor union (the sketch's global bottom-k — the layout
+      owns proving the fold matches its read-side semantics);
+    * ``"copy"`` — a frozen non-batch artifact (the stamp's mapping, the
+      split's component map, a baseline), rewritten verbatim so the
+      compacted layout stays self-contained.
+
+    Folded rows land as the reserved base partition ``_batch_id = -1``
+    (real Structured Streaming batch ids are ≥ 0) under ``out_path``;
+    the unchanged read-side fold then folds base + any newer batches,
+    associativity making compacted ≡ uncompacted (parity-tested in the
+    gate-family contract's compaction leg). Outputs are sized from the
+    source bytes, since a subdir can be data-scale (the duplication
+    partials, the component map). A subdir the map does not name
+    refuses the compaction (coverage guard).
 
     REPLAY IDEMPOTENCE — the invariant that makes this safe: the max
     folded batch id is recorded as ``compacted_through`` in the
@@ -1055,49 +1027,32 @@ def compact_gate_state(
 
     Write ordering: data subdirs first, meta LAST (the init-crash rule)
     — a crash mid-compaction leaves ``out_path`` without meta, which
-    every gate reader refuses, so half-compacted state can never be
-    read; the SOURCE state path is never touched (swap-then-expire: the
-    caller deletes it after the restarted gate is confirmed healthy).
-    NOT for the PSI gate: ``read_psi_trend``'s per-batch view IS the
-    product there; folding its partitions would destroy the trend.
-    Returns ``compacted_through``."""
+    every gate reader refuses and every gate's freeze refuses to
+    re-initialize over, so half-compacted state can never be read; the
+    SOURCE state path is never touched (swap-then-expire: the caller
+    deletes it after the restarted gate is confirmed healthy). NOT for
+    the PSI gate: ``read_psi_trend``'s per-batch view IS the product
+    there; folding its partitions would destroy the trend. Returns
+    ``compacted_through``."""
     from building_a_rag_pipeline_with_airflow_spark.sources import io
 
+    who = "compact_gate_state"
     dst = index_layout.require_fresh_output(
-        spark, "compact_gate_state", state_path, out_path, "live state"
+        spark, who, state_path, out_path, "live state"
     )
-    meta_df = index_layout._read_or_none(spark, f"{state_path}/meta")
-    if meta_df is None:
-        raise ValueError(
-            f"compact_gate_state: {state_path} has no meta — not an "
-            "initialized gate state (every gate writes meta at first "
-            "invocation); nothing to compact"
-        )
-    prev = -1
-    if "compacted_through" in meta_df.columns:
-        prev = int(meta_df.first()["compacted_through"])
+    meta = index_layout.read_meta(spark, state_path)  # refuses uninitialized state
     # coverage guard: every data subdir actually present under the live
-    # state must be named in the layout map — a gate layout that grew a
+    # state must be named in the fold map — a gate layout that grew a
     # subdir this map doesn't know would otherwise compact to a state
     # silently MISSING that data, and the readers' missing-dir fallbacks
     # would mask the loss as zeros (the loud-refusal rule)
-    jstate = spark._jvm.org.apache.hadoop.fs.Path(state_path.rstrip("/"))
-    fs = jstate.getFileSystem(spark._jsc.hadoopConfiguration())
-    present = {
-        st.getPath().getName()
-        for st in fs.listStatus(jstate)
-        if st.isDirectory()
-    }
-    folds = {**subdirs, **{s: None for s in concat_subdirs}, **fold_subdirs}
-    covered = set(folds) | set(copy_subdirs)
-    uncovered = sorted(present - covered - {"meta"})
+    uncovered = sorted(set(_state_subdirs(spark, state_path)) - set(folds) - {"meta"})
     if uncovered:
         raise ValueError(
-            f"compact_gate_state: {state_path} holds data subdir(s) "
-            f"{uncovered} not covered by the layout map "
-            f"{sorted(covered)} — compacting would silently drop them "
-            "(and the read-side missing-dir fallbacks would mask the "
-            "loss as zeros); extend the gate's state layout first"
+            f"{who}: {state_path} holds data subdir(s) {uncovered} not "
+            f"covered by the layout map {sorted(folds)} — compacting would "
+            "silently drop them (and the read-side missing-dir fallbacks "
+            "would mask the loss as zeros); extend the gate's state layout first"
         )
 
     def n_out_files(sub: str) -> int:
@@ -1108,87 +1063,72 @@ def compact_gate_state(
         # shrink the data, so source bytes are a safe upper bound;
         # metadata-scale subdirs land at the n_files=1 floor anyway.
         total = sum(
-            sz
-            for _, sz in io.list_parquet_leaf_files(
-                spark, f"{state_path}/{sub}"
-            )
+            sz for _, sz in io.list_parquet_leaf_files(spark, f"{state_path}/{sub}")
         )
         return max(1, -(-total // (128 * 1024 * 1024)))  # ceil div
 
-    # a subdir can legitimately not exist yet (every batch floored away,
-    # all-empty batches): _read_or_none skips it; any other failure raises
-    for sub in copy_subdirs:
-        frozen = index_layout._read_or_none(spark, f"{state_path}/{sub}")
-        if frozen is not None:
-            frozen.coalesce(n_out_files(sub)).write.mode("overwrite").parquet(
-                f"{dst}/{sub}"
-            )
-    max_bid = prev
-    for sub, spec in folds.items():
+    max_bid = int(meta.asDict().get("compacted_through", -1))
+    for sub, fold in folds.items():
+        # a subdir can legitimately not exist yet (every batch floored
+        # away, all-empty batches): skip it; any other failure raises
         raw = index_layout._read_or_none(spark, f"{state_path}/{sub}")
         if raw is None:
+            continue
+        if fold == "copy":
+            raw.coalesce(n_out_files(sub)).write.mode("overwrite").parquet(
+                f"{dst}/{sub}"
+            )
             continue
         mb = raw.agg(F.max("_batch_id").alias("m")).first()["m"]
         if mb is not None:
             max_bid = max(max_bid, int(mb))
-        if spec is None:  # concatenation fold: rows pass through verbatim
+        if fold == "concat":
             base = raw
-        elif callable(spec):  # custom exact fold (e.g. global bottom-k)
-            base = spec(raw)
+        elif callable(fold):
+            base = fold(raw, meta)
         else:
-            group_cols, sum_cols = spec
+            group_cols, sum_cols = fold
             types = {f.name: f.dataType for f in raw.schema.fields}
             aggs = [F.sum(c).cast(types[c]).alias(c) for c in sum_cols]
-            base = (
-                raw.groupBy(*group_cols).agg(*aggs)
-                if group_cols
-                else raw.agg(*aggs)
-            )
-        order = [f.name for f in raw.schema.fields if f.name != "_batch_id"]
+            base = raw.groupBy(*group_cols).agg(*aggs) if group_cols else raw.agg(*aggs)
+        order = [c for c in raw.columns if c != "_batch_id"]
         index_layout._write_tagged(
             base.select(*order), f"{dst}/{sub}", index_layout.BASE_BATCH_ID,
             coalesce=n_out_files(sub), dynamic=False,
         )
     index_layout.write_meta(
-        meta_df.drop("compacted_through").withColumn(
-            "compacted_through", F.lit(int(max_bid)).cast("bigint")
-        ),
+        spark.read.parquet(f"{state_path}/meta")
+        .drop("compacted_through")
+        .withColumn("compacted_through", F.lit(max_bid).cast("bigint")),
         dst,
     )
     return max_bid
 
 
-# Per-gate state layouts for compact_gate_state. Every META-bearing
-# gate has one: sum folds (subdir -> (group columns, sum columns)) for
-# duplication / calibration / threshold / NB, concatenation folds plus
-# a frozen-artifact copy for the split and the stamp; the sketch's
-# bottom-k fold needs its meta, so compact_sketch_state builds its own.
-# Still out, each for a stated reason: PSI exposes the per-batch
-# partition view as the product itself (read_psi_trend) and must never
-# be compacted; expectations and embedding drift use their frozen
-# artifact (contract / baseline) as the initialized marker instead of
-# meta, so they have nowhere to carry compacted_through — their adoption
-# path is to grow a meta row first (partials are sum-mergeable in both).
+def _bottomk_fold(raw: DataFrame, meta) -> DataFrame:
+    """The sketch's compaction fold: the global bottom-k of the
+    accumulated samples, exactly :func:`read_sketch_sample`'s fold."""
+    return (
+        raw.drop("_batch_id")
+        .orderBy(F.asc_nulls_last("_prio"), F.asc_nulls_last(meta["id_col"]))
+        .limit(int(meta["k"]))
+    )
+
+
+# One compact_gate_state fold map per compactable gate (see its
+# docstring for the fold kinds). PSI has none: its per-batch partition
+# view is the product itself (read_psi_trend) and must never be folded.
 _STATE_LAYOUTS = {
-    "duplication": {
-        "subdirs": {"partials": (("h",), ("c",)), "totals": ((), ("n_windows",))}
-    },
-    "calibration": {"subdirs": {"partials": (("bin",), ("n", "sum_p", "sum_y"))}},
-    "threshold": {"subdirs": {"partials": (("threshold",), ("n", "pos"))}},
+    "duplication": {"partials": (("h",), ("c",)), "totals": ((), ("n_windows",))},
+    "calibration": {"partials": (("bin",), ("n", "sum_p", "sum_y"))},
+    "threshold": {"partials": (("threshold",), ("n", "pos"))},
     "nb": {
-        "subdirs": {
-            "token_counts": (("_lbl", "b"), ("n",)),
-            "doc_counts": (("_lbl",), ("n_docs",)),
-        }
+        "token_counts": (("_lbl", "b"), ("n",)),
+        "doc_counts": (("_lbl",), ("n_docs",)),
     },
-    "split": {
-        "subdirs": {}, "concat_subdirs": ("batches",),
-        "copy_subdirs": ("components",),
-    },
-    "stamp": {
-        "subdirs": {}, "concat_subdirs": ("batches",),
-        "copy_subdirs": ("mapping",),
-    },
+    "sketch": {"batches": _bottomk_fold, "baseline": "copy"},
+    "split": {"batches": "concat", "components": "copy"},
+    "stamp": {"batches": "concat", "mapping": "copy"},
 }
 
 
@@ -1204,7 +1144,7 @@ def compact_duplication_state(
     write time; summing the survivors is exactly what the uncompacted
     fold does). Use :func:`gate_state_report` to decide WHEN (batches
     or files past a budget)."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["duplication"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["duplication"])
 
 
 def compact_calibration_state(
@@ -1213,7 +1153,7 @@ def compact_calibration_state(
     """:func:`compact_gate_state` for the calibration gate — its state
     is metadata-scale (n_bins × batches), so this is file-count hygiene
     rather than a read-cost fix."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["calibration"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["calibration"])
 
 
 def gate_state_report(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1228,24 +1168,14 @@ def gate_state_report(spark: SparkSession, state_path: str) -> DataFrame:
     Works on METADATA only: batch ids come from partition directory
     names and footprint from the filesystem listing — no data scan, so
     the report costs O(#batches + #files) regardless of state size (the
-    duplication gate's data-scale partials are never read). ``meta``
-    reports its file footprint with ``n_batches = 0``; an uninitialized
-    path (no meta) raises like every gate reader."""
+    duplication gate's data-scale partials are never read). ``meta`` and
+    frozen artifacts report their file footprint with ``n_batches = 0``;
+    an uninitialized path (no meta) raises like every gate reader."""
     from building_a_rag_pipeline_with_airflow_spark.sources import io
 
     index_layout.read_meta(spark, state_path)  # refuses uninitialized state
-    jstate = spark._jvm.org.apache.hadoop.fs.Path(state_path.rstrip("/"))
-    fs = jstate.getFileSystem(spark._jsc.hadoopConfiguration())
     rows = []
-    for st in fs.listStatus(jstate):
-        if not st.isDirectory():
-            continue
-        sub = st.getPath().getName()
-        batch_ids = {
-            int(c.getPath().getName().split("=", 1)[1])
-            for c in fs.listStatus(st.getPath())
-            if c.isDirectory() and c.getPath().getName().startswith("_batch_id=")
-        }
+    for sub, batch_ids in _state_subdirs(spark, state_path).items():
         files = io.list_parquet_leaf_files(spark, f"{state_path}/{sub}")
         rows.append(
             (
@@ -1270,7 +1200,7 @@ def compact_threshold_state(
     per-grid-score (n, pos) counts are plain sums, so the fold is exact
     and the state is metadata-scale (grid × batches): file-count
     hygiene."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["threshold"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["threshold"])
 
 
 def compact_nb_state(
@@ -1281,7 +1211,7 @@ def compact_nb_state(
     plain sums (the very property that makes the model streamable), so
     both subdirs fold exactly. State is metadata-scale ((classes ×
     buckets + classes) × batches): file-count hygiene."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["nb"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["nb"])
 
 
 def compact_sketch_state(
@@ -1296,24 +1226,7 @@ def compact_sketch_state(
     shrinks to ≤ k rows regardless of batch count — this compactor
     bounds STATE SIZE (#batches × k rows), not just file count. The
     frozen ``baseline`` sample travels verbatim."""
-    meta = index_layout.read_meta(spark, state_path)
-    k, idc = int(meta["k"]), meta["id_col"]
-
-    def bottomk_fold(raw: DataFrame) -> DataFrame:
-        return (
-            raw.drop("_batch_id")
-            .orderBy(F.asc_nulls_last("_prio"), F.asc_nulls_last(idc))
-            .limit(k)
-        )
-
-    return compact_gate_state(
-        spark,
-        state_path,
-        out_path,
-        subdirs={},
-        fold_subdirs={"batches": bottomk_fold},
-        copy_subdirs=("baseline",),
-    )
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["sketch"])
 
 
 def compact_split_state(
@@ -1324,7 +1237,7 @@ def compact_split_state(
     split)`` assignments), so the fold is CONCATENATION, with the frozen
     component map copied verbatim (data-scale — sized from source bytes,
     never one task)."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["split"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["split"])
 
 
 def streaming_expectations(
@@ -1352,9 +1265,9 @@ def streaming_expectations(
     accumulated table (`expectations_report`) or stream it through the
     stateful dedup operator instead.
 
-    The contract itself is the frozen marker (``<state_path>/contract``):
-    a restart with a different contract raises — mixed counter
-    definitions would make the folded report meaningless."""
+    The contract freezes in meta (sorted JSON): a restart with a
+    different contract raises — mixed counter definitions would make the
+    folded report meaningless."""
     import json
 
     from building_a_rag_pipeline_with_airflow_spark.operators import validation
@@ -1379,20 +1292,12 @@ def streaming_expectations(
         ],
         sort_keys=True,
     )
-    spark = rows_stream.sparkSession
-    prev = index_layout._read_or_none(spark, f"{state_path}/contract")
-    prev_row = None if prev is None else prev.select("_contract").first()
-    if prev_row is None:
-        spark.createDataFrame(
-            [(contract_str,)], "_contract string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{state_path}/contract")
-    elif prev_row["_contract"] != contract_str:
-        raise ValueError(
-            f"streaming_expectations: {state_path}/contract already "
-            "holds a different contract; accumulated counters under "
-            f"{state_path}/batches would mix counter definitions. Use "
-            "a fresh state_path (and checkpoint) to change the contract."
-        )
+    compacted_through = _freeze_state(
+        rows_stream.sparkSession, state_path, "streaming_expectations",
+        (contract_str,), "contract string",
+        why="accumulated counters under a different contract would mix "
+        "counter definitions",
+    )
 
     def write_partials(batch_df: DataFrame, batch_id: int) -> None:
         index_layout._write_tagged(
@@ -1400,7 +1305,10 @@ def streaming_expectations(
             f"{state_path}/batches", batch_id, coalesce=1,
         )
 
-    return _start_gate(rows_stream, checkpoint_path, -1, write_partials, available_now)
+    return _start_gate(
+        rows_stream, checkpoint_path, compacted_through, write_partials,
+        available_now,
+    )
 
 
 def read_expectations_report(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1414,11 +1322,11 @@ def read_expectations_report(spark: SparkSession, state_path: str) -> DataFrame:
     import json
 
     def zero_counts() -> DataFrame:
-        contract = spark.read.parquet(f"{state_path}/contract").first()
+        contract = index_layout.read_meta(spark, state_path)["contract"]
         return local_frame(
             spark,
             [(e["name"], e["kind"], e.get("col", "*"), 0, 0)
-             for e in json.loads(contract["_contract"])],
+             for e in json.loads(contract)],
             "expectation string, kind string, col_name string, "
             "n_violations bigint, n_rows bigint",
         )
@@ -1458,17 +1366,19 @@ def streaming_embedding_drift(
     ``similarity.recluster_ivf_index`` instead of anyone polling).
 
     The baseline's per-position value sums, counts and norm sum freeze
-    in ``<state_path>/baseline`` (dim-bounded rows — metadata, and the
-    frozen marker). Each batch writes the same MERGEABLE partials for
-    its own rows under ``batches/``; :func:`read_embedding_drift` folds
-    them into the SAME one-row report ``drift.embedding_drift`` computes
-    batch-side over baseline vs the accumulated stream (parity-tested).
+    in ``<state_path>/baseline`` (dim-bounded rows — metadata). Each
+    batch writes the same MERGEABLE partials for its own rows under
+    ``batches/``; :func:`read_embedding_drift` folds them through the
+    batch operator's own finisher into the one-row report
+    ``drift.embedding_drift`` computes over baseline vs the accumulated
+    stream (parity-tested).
 
-    A restart whose baseline matches the stored sums (relative
-    tolerance: double sums are order-nondeterministic across
-    partitionings) keeps it; a different baseline raises. The stream's
-    vectors must share the baseline's dimension — checked per batch,
-    because the fold join is positional."""
+    Meta freezes the dimension and the baseline's identity: a
+    :func:`_fingerprint` of its ``(vector, multiplicity)`` rows (the sums
+    themselves depend on summation order, and grouping keeps two equal
+    vectors from cancelling in the xor fold). A restart with a different
+    baseline raises. The stream's vectors must share the baseline's
+    dimension — checked per batch, because the fold join is positional."""
     from building_a_rag_pipeline_with_airflow_spark.functions.vectors import l2_norm
     from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
 
@@ -1486,27 +1396,15 @@ def streaming_embedding_drift(
             F.sum("_nrm").alias("sum_norm"),
         )
 
-    base = _partials(baseline_df)
-    prev = index_layout._read_or_none(
-        baseline_df.sparkSession, f"{state_path}/baseline"
+    identity = baseline_df.groupBy(c_vec).agg(F.count("*").alias("n"))
+    compacted_through = _freeze_state(
+        baseline_df.sparkSession, state_path, "streaming_embedding_drift",
+        (dim_base, *_fingerprint(identity)),
+        "dim int, base_n bigint, base_fp bigint",
+        artifacts=[("baseline", _partials(baseline_df).coalesce(1))],
+        why="accumulated batch partials compared against a different "
+        "baseline centroid would measure drift from swapped geometry",
     )
-    if prev is None:
-        base.coalesce(1).write.mode("overwrite").parquet(f"{state_path}/baseline")
-    else:
-        stored = {r["_p"]: (r["sum_v"], r["n"]) for r in prev.collect()}
-        fresh = {r["_p"]: (r["sum_v"], r["n"]) for r in base.collect()}
-        if set(stored) != set(fresh) or not all(
-            abs(stored[p][0] - fresh[p][0])
-            <= 1e-9 * max(1.0, abs(stored[p][0]), abs(fresh[p][0]))
-            and stored[p][1] == fresh[p][1]
-            for p in stored
-        ):
-            raise ValueError(
-                f"streaming_embedding_drift: {state_path}/baseline holds a "
-                "different baseline centroid; accumulated batch partials "
-                "would be compared against swapped geometry. Use a fresh "
-                "state_path (and checkpoint) to re-baseline."
-            )
 
     def write_partials(batch_df: DataFrame, batch_id: int) -> None:
         # the batch twin's dim guard, per batch (one metadata probe): a
@@ -1524,85 +1422,57 @@ def streaming_embedding_drift(
             _partials(batch_df), f"{state_path}/batches", batch_id, coalesce=1
         )
 
-    return _start_gate(vec_stream, checkpoint_path, -1, write_partials, available_now)
+    return _start_gate(
+        vec_stream, checkpoint_path, compacted_through, write_partials,
+        available_now,
+    )
 
 
 def read_embedding_drift(spark: SparkSession, state_path: str) -> DataFrame:
     """Fold the streamed per-position partials against the frozen
-    baseline into the current one-row drift report — identical schema
-    (and values, parity-tested) to ``drift.embedding_drift(baseline,
-    accumulated_stream)``. One aggregate over (dim × batches)
-    metadata-scale rows; no raw-vector rescan. Like the batch operator
-    over an empty side, it raises a ValueError before the first
-    non-empty batch."""
-    base = spark.read.parquet(f"{state_path}/baseline").select(
-        "_p",
-        (F.col("sum_v") / F.col("n")).alias("c_base"),
-        F.col("n").alias("n_base"),
-        (F.col("sum_norm") / F.col("n")).alias("norm_base"),
-    )
-    cur = (
+    baseline into the current one-row drift report — per-position
+    centroids and mean norms through ``drift.embedding_drift``'s own
+    finisher, so schema and values match the batch operator over
+    ``(baseline, accumulated_stream)`` (parity-tested). One aggregate
+    over (dim × batches) metadata-scale rows; no raw-vector rescan. Like
+    the batch operator over an empty side, it raises a ValueError before
+    the first non-empty batch."""
+    from building_a_rag_pipeline_with_airflow_spark.operators import drift
+
+    def centroid(sums: DataFrame, tag: str) -> DataFrame:
+        return sums.select(
+            "_p",
+            (F.col("sum_v") / F.col("n")).alias(f"c_{tag}"),
+            F.col("n").alias(f"n_{tag}"),
+            (F.col("sum_norm") / F.col("n")).alias(f"norm_{tag}"),
+        )
+
+    dim = int(index_layout.read_meta(spark, state_path)["dim"])
+    base = centroid(spark.read.parquet(f"{state_path}/baseline"), "base")
+    cur = centroid(
         _read_partials(spark, state_path, "batches", "read_embedding_drift")
         .groupBy("_p")
         .agg(
             F.sum("sum_v").alias("sum_v"),
             F.sum("n").cast("bigint").alias("n"),
             F.sum("sum_norm").alias("sum_norm"),
-        )
-        .select(
-            "_p",
-            (F.col("sum_v") / F.col("n")).alias("c_cur"),
-            F.col("n").alias("n_cur"),
-            (F.col("sum_norm") / F.col("n")).alias("norm_cur"),
-        )
+        ),
+        "cur",
     )
     # fold-side backstop for the same dim contract the writer enforces:
     # a positional inner join over mismatched dims would silently keep
-    # the common prefix (both frames are dim-bounded; counts are cheap)
-    n_base_pos, n_cur_pos = base.count(), cur.count()
-    if n_base_pos != n_cur_pos:
+    # the common prefix (the frame is dim-bounded; the count is cheap)
+    n_cur_pos = cur.count()
+    if n_cur_pos != dim:
         raise ValueError(
-            f"read_embedding_drift: baseline holds {n_base_pos} positions "
-            f"but the accumulated stream holds {n_cur_pos}; the state at "
+            f"read_embedding_drift: baseline holds {dim} positions but the "
+            f"accumulated stream holds {n_cur_pos}; the state at "
             f"{state_path} mixes embedding dimensions."
         )
-    j = base.join(cur, "_p")
-    return j.agg(
-        F.max("n_base").alias("n_base"),
-        F.max("n_cur").alias("n_cur"),
-        # zero-centroid sentinel: NaN, never a silent NULL (the batch
-        # operator's embedding_drift contract — keep the fold identical)
-        F.when(
-            (
-                F.sum(F.col("c_base") * F.col("c_base"))
-                * F.sum(F.col("c_cur") * F.col("c_cur"))
-            )
-            == 0,
-            F.lit(float("nan")),
-        )
-        .otherwise(
-            F.round(
-                F.sum(F.col("c_base") * F.col("c_cur"))
-                / F.sqrt(
-                    F.sum(F.col("c_base") * F.col("c_base"))
-                    * F.sum(F.col("c_cur") * F.col("c_cur"))
-                ),
-                6,
-            )
-        )
-        .alias("centroid_cos"),
-        F.round(
-            F.sqrt(
-                F.sum(
-                    (F.col("c_base") - F.col("c_cur"))
-                    * (F.col("c_base") - F.col("c_cur"))
-                )
-            ),
-            6,
-        ).alias("centroid_l2_dist"),
-        F.round(F.max("norm_base"), 4).alias("mean_norm_base"),
-        F.round(F.max("norm_cur"), 4).alias("mean_norm_cur"),
-    )
+    norms = base.agg(
+        F.round(F.max("norm_base"), 4).alias("mean_norm_base")
+    ).crossJoin(cur.agg(F.round(F.max("norm_cur"), 4).alias("mean_norm_cur")))
+    return drift._centroid_drift(base.join(cur, "_p"), norms)
 
 
 def streaming_nb_update(
@@ -1695,23 +1565,18 @@ def classify_with_streamed_nb(
     )
 
     who = "classify_with_streamed_nb"
-    meta = index_layout.read_meta_or_none(spark, state_path)
-    if meta is not None:  # a pre-meta state dir takes caller values only
-        frozen = int(meta["n_buckets"])
-        if n_buckets is not None and int(n_buckets) != frozen:
-            raise ValueError(
-                f"{who}: partials at {state_path} were written with "
-                f"n_buckets={frozen} but the fold asks for {int(n_buckets)}; "
-                "stored bucket values are mod the frozen modulus, so this "
-                "fold would be silently wrong."
-            )
-        n_buckets = frozen
-        if alpha is None:
-            alpha = float(meta["alpha"])
-    if n_buckets is None:
-        n_buckets = 1024
+    meta = index_layout.read_meta(spark, state_path)
+    frozen = int(meta["n_buckets"])
+    if n_buckets is not None and int(n_buckets) != frozen:
+        raise ValueError(
+            f"{who}: partials at {state_path} were written with "
+            f"n_buckets={frozen} but the fold asks for {int(n_buckets)}; "
+            "stored bucket values are mod the frozen modulus, so this "
+            "fold would be silently wrong."
+        )
+    n_buckets = frozen
     if alpha is None:
-        alpha = 1.0
+        alpha = float(meta["alpha"])
     cls_tok = (
         _read_partials(spark, state_path, "token_counts", who)
         .groupBy("_lbl", "b")
@@ -1752,18 +1617,21 @@ def streaming_quantile_sketch(
     :func:`read_sketch_report` picks ``n_bins`` at READ time (any
     grain, any time, from the same state).
 
-    Frozen: ``(k, value_col, id_col)`` in meta and the baseline's
-    bottom-k sample in ``<state_path>/baseline`` — mixed-k partials do
-    not merge losslessly, and a swapped baseline would silently
-    re-anchor every PSI read."""
+    Frozen: ``(k, value_col, id_col)`` and the baseline sample's
+    :func:`_fingerprint` in meta, the baseline's bottom-k sample itself
+    in ``<state_path>/baseline`` — mixed-k partials do not merge
+    losslessly, and a swapped baseline would silently re-anchor every
+    PSI read."""
     from building_a_rag_pipeline_with_airflow_spark.operators import sketch
 
+    base = sketch.bottomk_sample(baseline_df, value_col, id_col, k)
     compacted_through = _freeze_state(
         baseline_df.sparkSession, state_path, "streaming_quantile_sketch",
-        (int(k), value_col, id_col), "k int, value_col string, id_col string",
-        artifacts=[
-            ("baseline", sketch.bottomk_sample(baseline_df, value_col, id_col, k).coalesce(1))
-        ],
+        (int(k), value_col, id_col, *_fingerprint(base)),
+        "k int, value_col string, id_col string, base_n bigint, base_fp bigint",
+        artifacts=[("baseline", base.coalesce(1))],
+        why="mixed-k partials do not merge losslessly, and a DIFFERENT "
+        "baseline sample would silently re-anchor every PSI read",
     )
 
     def write_partials(batch_df: DataFrame, batch_id: int) -> None:
@@ -1950,7 +1818,8 @@ def streaming_classifier_stamp(
     recipe the batch gate uses (``curation.fit_gate_operating_point``,
     loud unreachable-floor raise included); the ≤``n_bins``-row mapping
     freezes in ``<state_path>/mapping`` and ``(id_col, prob_col, n_bins,
-    decimals, min_precision, threshold)`` in meta. Every invocation
+    decimals, min_precision, threshold)`` plus the mapping's
+    :func:`_fingerprint` in meta. Every invocation
     re-derives both from the PROVIDED fit frame, so a drifted fit frame
     raises like a changed parameter: re-calibrating means a NEW stamp
     under a fresh state_path — an intentional, visible re-gating.
@@ -1976,15 +1845,19 @@ def streaming_classifier_stamp(
         min_precision=min_precision, n_bins=int(n_bins),
         decimals=int(decimals), cal_col="_cal_probe", who=who,
     )
-    fitted = sorted((int(r["bin"]), float(r["p_cal"])) for r in mapping_rows)
+    mapping = local_frame(
+        spark,
+        sorted((int(r["bin"]), float(r["p_cal"])) for r in mapping_rows),
+        "_cal_bin int, _cal_p double",
+    )
     compacted_through = _freeze_state(
         spark, state_path, who,
-        (id_col, prob_col, int(n_bins), int(decimals), float(min_precision), float(thr)),
+        (id_col, prob_col, int(n_bins), int(decimals), float(min_precision),
+         float(thr), *_fingerprint(mapping)),
         "id_col string, prob_col string, n_bins int, decimals int, "
-        "min_precision double, threshold double",
-        artifacts=[
-            ("mapping", local_frame(spark, fitted, "_cal_bin int, _cal_p double").coalesce(1))
-        ],
+        "min_precision double, threshold double, mapping_n bigint, "
+        "mapping_fp bigint",
+        artifacts=[("mapping", mapping.coalesce(1))],
         why="gating late arrivals against a DIFFERENT operating point "
         "breaks the audited precision floor for every batch",
     )
@@ -2061,4 +1934,4 @@ def compact_stamp_state(
     degrades on listing alone — the reference's re-ingestion idempotence
     (``dags/nvidia_quarterly_reports_pipeline.py:372``,
     ``replace=True``) at stream grain."""
-    return compact_gate_state(spark, state_path, out_path, **_STATE_LAYOUTS["stamp"])
+    return compact_gate_state(spark, state_path, out_path, _STATE_LAYOUTS["stamp"])

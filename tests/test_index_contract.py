@@ -611,3 +611,20 @@ def test_extension_refuses_integral_narrowing(spark, tmp_path):
         index_layout.write_index_rows(
             wide, path, partition_cols=("bucket",), batch_id=0, extend=True
         )
+
+
+def test_missing_path_reads_warn_nothing_and_name_the_path(spark, tmp_path):
+    """The missing-path rule reads the error condition without the
+    deprecated accessor (no FutureWarning), and a path without meta is
+    refused with a ValueError naming it, not a raw PATH_NOT_FOUND."""
+    import warnings
+
+    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
+
+    missing = str(tmp_path / "missing")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert index_layout._read_or_none(spark, missing) is None
+    assert not [w for w in caught if issubclass(w.category, FutureWarning)]
+    with pytest.raises(ValueError, match=f"{missing} has no meta"):
+        index_layout.read_meta(spark, missing)

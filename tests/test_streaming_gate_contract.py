@@ -891,3 +891,75 @@ def test_zero_batch_readers_answer_like_the_batch_operator(
     )
     if gate in _ZERO_BATCH_ANSWERED:
         assert got == want != ValueError
+
+
+@pytest.mark.parametrize("gate", sorted(SPECS))
+def test_gate_state_report_over_every_gate(spark, sf_dir, tmp_path, gate):
+    """gate_state_report is generic over gate states: after one batch,
+    every gate's state has meta, and the report lists each subdir on
+    disk with its batch-partition count (meta and frozen artifacts at
+    zero), no compaction base, and its parquet footprint."""
+    import os
+
+    ctx = SPECS[gate](spark, sf_dir)
+    src = tmp_path / "src"
+    src.mkdir()
+    state = str(tmp_path / "state")
+    ctx["b1"].coalesce(1).write.parquet(str(src / "d1"))
+    raw = spark.readStream.schema(ctx["schema"]).parquet(f"{src}/*")
+    assert ctx["start"](raw, state, str(tmp_path / "ck")).awaitTermination(120)
+
+    rep = {r["subdir"]: r for r in ingest.gate_state_report(spark, state).collect()}
+    on_disk = {
+        sub: sum(d.startswith("_batch_id=") for d in os.listdir(f"{state}/{sub}"))
+        for sub in os.listdir(state)
+        if os.path.isdir(f"{state}/{sub}")
+    }
+    assert {s: r["n_batches"] for s, r in rep.items()} == on_disk
+    assert rep["meta"]["n_batches"] == 0
+    assert 1 in on_disk.values()  # the batch's partials
+    assert not any(r["has_base"] for r in rep.values())
+    assert all(r["n_files"] >= 1 and r["n_bytes"] > 0 for r in rep.values())
+
+
+def test_metaless_psi_state_with_partials_raises(spark, sf_dir, tmp_path):
+    """A PSI state directory laid out by a gate that kept no meta (a
+    frozen baseline plus ``_batch_id`` partials) cannot be checked
+    against the invocation's constants: the gate raises instead of
+    re-initializing over the partials, and writes nothing."""
+    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
+
+    ctx = _psi_spec(spark, sf_dir)
+    state = str(tmp_path / "state")
+    spark.createDataFrame(
+        [(i, 10, "[1.0]") for i in range(2)], "bin int, n_base bigint, _bounds string"
+    ).write.parquet(f"{state}/baseline")
+    index_layout._write_tagged(
+        spark.createDataFrame([(0, 7)], "bin int, n_new bigint"),
+        f"{state}/batches", 0,
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    raw = spark.readStream.schema(ctx["schema"]).parquet(f"{src}/*")
+    with pytest.raises(ValueError, match="partials.*no meta"):
+        ctx["start"](raw, state, str(tmp_path / "ck"))
+    assert index_layout.read_meta_or_none(spark, state) is None
+    assert spark.read.parquet(f"{state}/baseline").count() == 2
+
+
+@pytest.mark.parametrize(
+    "reader",
+    [
+        "read_psi_report", "read_psi_trend", "read_expectations_report",
+        "read_embedding_drift", "read_duplication_profile",
+        "read_calibration_report", "read_threshold_curve",
+        "read_sketch_sample", "read_sketch_report", "read_split_assignments",
+        "read_stamped_assignments", "gate_state_report",
+    ],
+)
+def test_readers_refuse_uninitialized_state(spark, tmp_path, reader):
+    """Every gate reader given a path no gate initialized raises a
+    ValueError naming it — never a raw PATH_NOT_FOUND."""
+    nope = str(tmp_path / "nope")
+    with pytest.raises(ValueError, match=f"{nope} has no meta"):
+        getattr(ingest, reader)(spark, nope).collect()

@@ -142,3 +142,36 @@ def test_queries_keep_session_fixtures_in_their_helpers():
             and owner not in allowed[sub.attr]
         ]
     assert not found, f"session fixtures outside their helpers: {found}"
+
+
+def test_every_streaming_gate_freezes_through_the_core():
+    """Each public ``streaming_*`` in ingest.py that keeps a
+    ``state_path`` freezes its constants through ``_freeze_state``, and
+    no other function probes for state that may not exist yet — only
+    ``_freeze_state`` reads an optional meta row, and only the partial
+    reader and the compactor read an optional subdir — so no gate
+    hand-rolls its own freeze-or-check."""
+    allowed = {
+        "read_meta_or_none": {"_freeze_state"},
+        "_read_or_none": {"_read_partials", "compact_gate_state"},
+    }
+    tree = ast.parse((PACKAGE / "streaming" / "ingest.py").read_text())
+    found = []
+    for node in tree.body:
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        called = {
+            ast.unparse(sub.func).split(".")[-1]
+            for sub in ast.walk(node)
+            if isinstance(sub, ast.Call)
+        }
+        args = {a.arg for a in node.args.args + node.args.kwonlyargs}
+        if node.name.startswith("streaming_") and "state_path" in args:
+            if "_freeze_state" not in called:
+                found.append(f"{node.name} does not call _freeze_state")
+        found += [
+            f"{name} in {node.name}"
+            for name in sorted(called & set(allowed))
+            if node.name not in allowed[name]
+        ]
+    assert not found, f"gate state probed outside the freeze core: {found}"
