@@ -91,16 +91,24 @@ def cosine_scores_pandas(query_vec: list[float]):
     return _score
 
 
+def cosine_or_zero(dot: Column, denom: Column) -> Column:
+    """``dot / denom`` under the zero-vector rule every cosine here
+    follows: an all-zero side (denominator 0) scores 0.0. The zero case
+    rides on ``try_divide`` returning NULL (in ANSI and legacy modes
+    alike), coalesced to 0.0, instead of a ``when`` guard that would
+    re-evaluate the norms and double the per-row work; a NULL ``dot`` or
+    ``denom`` scores 0.0 too."""
+    return F.coalesce(F.try_divide(dot, denom), F.lit(0.0))
+
+
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Three array aggregations per pair (dot + one norm per side) — the
-    zero-denominator case rides on ``try_divide`` returning NULL (in ANSI
-    and legacy modes alike), coalesced to 0.0, instead of a ``when`` guard
-    that would re-evaluate both norms and double the per-row work. Null
-    inputs stay null via the (cheap, non-aggregating) isNull gate."""
+    """Three array aggregations per pair (dot + one norm per side) under
+    the :func:`cosine_or_zero` rule. Null inputs stay null via the
+    (cheap, non-aggregating) isNull gate."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(
         _c(a).isNull() | _c(b).isNull(), F.lit(None).cast("double")
-    ).otherwise(F.coalesce(F.try_divide(dot_product(a, b), denom), F.lit(0.0)))
+    ).otherwise(cosine_or_zero(dot_product(a, b), denom))
 
 
 def quantize_int8(a: Column | str) -> Column:

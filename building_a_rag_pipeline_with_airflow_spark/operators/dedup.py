@@ -119,10 +119,25 @@ def ngram_jaccard_pairs(
         .select("shingle")
     )
     sh = sh.join(posting_ok, "shingle")
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    return _jaccard_pairs(sh, (id_col, "shingle"), id_col, sizes, threshold)
+
+
+def _jaccard_pairs(post: DataFrame, cols, id_col: str, sizes: DataFrame,
+                   threshold: float) -> DataFrame:
+    """The finisher of :func:`ngram_jaccard_pairs` and
+    :func:`jaccard_pairs_from_index`: self-join the guarded postings on
+    their join keys, count ``n_common`` per pair, join both docs'
+    ``n_shingles`` from ``sizes`` and keep Jaccard >= ``threshold``.
+    ``cols`` lists each join side's columns in order — the keys
+    (``shingle`` in-plan, ``bucket, shingle`` from the index) and
+    ``id_col``, renamed to ``id_a`` / ``id_b``."""
+    keys = [c for c in cols if c != id_col]
+    a, b = (
+        post.select(*[F.col(c).alias(side) if c == id_col else c for c in cols])
+        for side in ("id_a", "id_b")
+    )
     inter = (
-        a.join(b, "shingle")
+        a.join(b, keys)
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("bigint").alias("n_common"))
@@ -225,10 +240,10 @@ def jaccard_pairs_from_index(
     threshold: float = 0.1,
     max_posting: int = 1000,
 ) -> DataFrame:
-    """Candidate near-dup pairs from a :func:`build_shingle_index` layout —
-    result-identical to :func:`ngram_jaccard_pairs` at the same (n,
-    threshold, max_posting), but the corpus is never re-tokenized: the
-    postings parquet is the only input, scanned ONCE (the self-join's two
+    """Candidate near-dup pairs from a :func:`build_shingle_index` layout,
+    finished by :func:`ngram_jaccard_pairs`' own ``_jaccard_pairs``
+    (joined on ``bucket, shingle``), so the corpus is never re-tokenized:
+    the postings parquet is the only input, scanned ONCE (the self-join's two
     sides are byte-identical scan+shuffle subtrees, so Spark's exchange
     reuse executes one and replays it — asserted by
     ``tests/test_scale_plans.py::test_shingle_index_scanned_once``), with
@@ -258,30 +273,12 @@ def jaccard_pairs_from_index(
         post = raw.where(F.col("shingle_df") <= max_posting).select(
             "bucket", "shingle", "doc_id"
         )
-    a = post.select("bucket", "shingle", F.col("doc_id").alias("id_a"))
-    b = post.select("bucket", "shingle", F.col("doc_id").alias("id_b"))
-    inter = (
-        a.join(b, ["bucket", "shingle"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("bigint").alias("n_common"))
-    )
-    sizes = spark.read.parquet(f"{path}/doc_sizes")
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("_na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("_nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_common")
-                / (F.col("_na") + F.col("_nb") - F.col("n_common")),
-                4,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _jaccard_pairs(
+        post,
+        ("bucket", "shingle", "doc_id"),
+        "doc_id",
+        spark.read.parquet(f"{path}/doc_sizes"),
+        threshold,
     )
 
 

@@ -34,7 +34,7 @@ stage). This module supplies that family, Spark-first:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.text import tokens
@@ -138,24 +138,31 @@ def bm25_score(
         qtf.groupBy("term")
         .agg(F.count("*").cast("double").alias("df_t"))
         .crossJoin(F.broadcast(stats))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-            ).alias("idf"),
-            "avgdl",
-        )
+        .select("term", _bm25_idf(F.col("n_docs")).alias("idf"), "avgdl")
     )
-    contrib = F.col("idf") * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
+    contrib = _bm25_contrib(F.col("idf"), F.col("avgdl"), k1, b)
     return (
         qtf.join(F.broadcast(idf), "term")
         .groupBy(id_col)
         .agg(F.round(F.sum(contrib), 4).alias("score"))
+    )
+
+
+def _bm25_idf(n_docs: Column) -> Column:
+    """The Lucene non-negative idf of the ``df_t`` column."""
+    return F.log(
+        F.lit(1.0) + (n_docs - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
+    )
+
+
+def _bm25_contrib(idf: Column, avgdl: Column, k1: float, b: float) -> Column:
+    """One posting's BM25 contribution from its ``tf`` and ``dl`` columns
+    — the one scoring expression of :func:`bm25_score` and both
+    from-index readers."""
+    return idf * (
+        F.col("tf")
+        * (k1 + 1.0)
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
     )
 
 
@@ -527,18 +534,30 @@ def build_postings_index(
     index_layout.write_meta(stats, path)
 
 
-def _corpus_stats(spark, path: str, meta) -> "tuple[float, float]":
-    """``(n_docs, avgdl)`` of a :func:`build_postings_index` layout: the
-    meta row's on a fresh index; once extended, summed over the per-batch
-    ``batch_stats`` rows (one row per batch, driver-side)."""
+def _index_contrib(spark, path: str, meta, post: DataFrame, k1: float,
+                   b: float) -> "tuple[DataFrame, Column]":
+    """The scoring half both from-index readers share: ``post`` (the
+    query-pruned postings) with a corpus-wide ``df_t``, and the
+    :func:`_bm25_contrib` of its rows. On a fresh index ``df_t``,
+    ``n_docs`` and ``avgdl`` are the stored ones. Once extended, the
+    stored ``df_t`` is batch-local, so it is recounted in-plan over the
+    pruned rows (≤ |query terms| keys — the join broadcasts), and
+    ``n_docs``/``avgdl`` are summed over the per-batch ``batch_stats``
+    rows (one row per batch, driver-side)."""
     if not bool(meta["extended"]):
-        return float(meta["n_docs"]), float(meta["avgdl"])
-    bs = (
-        spark.read.parquet(f"{path}/batch_stats")
-        .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-        .first()
-    )
-    return float(bs["n"]), float(bs["s"]) / float(bs["n"])
+        n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
+    else:
+        bs = (
+            spark.read.parquet(f"{path}/batch_stats")
+            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
+            .first()
+        )
+        n_docs, avgdl = float(bs["n"]), float(bs["s"]) / float(bs["n"])
+        dfreq = post.groupBy("term").agg(
+            F.count("*").cast("double").alias("df_t")
+        )
+        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
+    return post, _bm25_contrib(_bm25_idf(F.lit(n_docs)), F.lit(avgdl), k1, b)
 
 
 def bm25_topk_from_index(
@@ -550,10 +569,11 @@ def bm25_topk_from_index(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Top-k BM25 against a :func:`build_postings_index` layout —
-    result-identical to :func:`bm25_topk` on the same corpus, but the
-    corpus is never re-tokenized: the scan partition-prunes to the query
-    terms' hash buckets (driver-side bucket resolve over the term
+    """Top-k BM25 against a :func:`build_postings_index` layout, scored
+    by :func:`bm25_score`'s own ``_bm25_contrib`` through
+    ``_index_contrib`` (shared with :func:`bm25_topk_many_from_index`),
+    so the corpus is never re-tokenized: the scan partition-prunes to the
+    query terms' hash buckets (driver-side bucket resolve over the term
     literals — a handful of rows, same class as the IVF probe-cell
     resolve), then row-group-skips to the terms inside each bucket via
     the ``term`` min/max stats the build sorted for. Work at query time
@@ -572,7 +592,6 @@ def bm25_topk_from_index(
     terms = _check_query_terms(query_terms, "bm25_topk_from_index")
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
-    n_docs_val, avgdl_val = _corpus_stats(spark, path, meta)
     # resolve the terms' buckets with the same JVM hash the build used;
     # |terms| rows in a driver-local frame, folded at plan time (no job)
     bucket_rows = (
@@ -581,26 +600,15 @@ def bm25_topk_from_index(
         .collect()
     )
     buckets = sorted({r["b"] for r in bucket_rows})
-    post = (
+    post, contrib = _index_contrib(
+        spark,
+        path,
+        meta,
         spark.read.parquet(f"{path}/postings")
         .where(F.col("bucket").isin(buckets))  # partition pruning
-        .where(F.col("term").isin(terms))  # row-group skipping
-    )
-    if bool(meta["extended"]):
-        # batch-local stored df_t is stale across batches: recount over
-        # the pruned rows (≤ |query terms| keys — the join broadcasts)
-        dfreq = post.groupBy("term").agg(
-            F.count("*").cast("double").alias("df_t")
-        )
-        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n_docs_val) - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl_val)))
+        .where(F.col("term").isin(terms)),  # row-group skipping
+        k1,
+        b,
     )
     return (
         post.groupBy("doc_id")
@@ -622,8 +630,9 @@ def bm25_topk_many_from_index(
     b: float = 0.75,
 ) -> DataFrame:
     """Batch form of :func:`bm25_topk_from_index`: top-k BM25 for EVERY
-    query in ``queries_df`` (``q_id``, ``terms`` array) in ONE job —
-    per-query result-identical to the single-query path.
+    query in ``queries_df`` (``q_id``, ``terms`` array) in ONE job. Its
+    postings score through the single-query path's ``_index_contrib``
+    and its per-query cut is ``similarity._per_query_topk``.
 
     The single-query path resolves term→bucket on the DRIVER (a handful
     of literals); looping it over a query workload costs O(q) driver
@@ -636,13 +645,15 @@ def bm25_topk_many_from_index(
     broadcast-hash residual. Work is O(matching posting lists for the
     UNION of query terms), scanned once even for terms shared by many
     queries; the per-query fan-out happens after the postings have been
-    cut down. Final top-k is a per-query window (partition = one query's
-    candidate docs — bounded), never a global sort.
+    cut down. Final top-k is the salted two-phase per-query window,
+    never a global sort.
     """
+    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+        _per_query_topk,
+    )
+
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta["n_buckets"])
-    extended = bool(meta["extended"])
-    n_docs_val, avgdl_val = _corpus_stats(spark, path, meta)
     # (q_id, term) pairs, deduped within a query (a repeated query term
     # must not double a posting's contribution — same set semantics as
     # the single-query path's sorted(set(...)))
@@ -659,50 +670,24 @@ def bm25_topk_many_from_index(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
         )
     )
-    post = spark.read.parquet(f"{path}/postings").join(
-        F.broadcast(term_buckets), ["bucket", "term"]
-    )
-    if extended:
-        # batch-local stored df_t is stale across batches: recount over
-        # the pruned rows (≤ |workload terms| keys — broadcastable)
-        dfreq = post.groupBy("term").agg(
-            F.count("*").cast("double").alias("df_t")
-        )
-        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n_docs_val) - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl_val)))
+    post, contrib = _index_contrib(
+        spark,
+        path,
+        meta,
+        spark.read.parquet(f"{path}/postings").join(
+            F.broadcast(term_buckets), ["bucket", "term"]
+        ),
+        k1,
+        b,
     )
     hits = post.withColumn("_c", contrib).join(qt, "term")
     per_query = hits.groupBy("q_id", "doc_id").agg(
         F.round(F.sum("_c"), 4).alias("score")
     )
-    # Salted two-phase top-k (the weighted_sample_per_group pattern): a
-    # query containing one common term can have corpus-scale candidates,
-    # and row_number() OVER (PARTITION BY q_id) would sort them all in
-    # one task. Phase 1 cuts top-k within (q_id, doc-hash shard); phase 2
-    # re-ranks the bounded q×shards×k survivors. Composition is exactly
-    # the per-query top-k (a query-wide winner wins its shard too).
-    n_shards = 16
-    w1 = Window.partitionBy(
-        "q_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards))
-    ).orderBy(F.desc("score"), F.asc("doc_id"))
-    survivors = (
-        per_query.withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= int(k))
-        .drop("_rk")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= int(k))
-        .select("q_id", "doc_id", "score", "rank")
-    )
+    # a query containing one common term can have corpus-scale
+    # candidates: the salted two-phase cut keeps each query's top-k sort
+    # off one task
+    return _per_query_topk(per_query, "q_id", "doc_id", int(k))
 
 
 def consolidate_postings_index(

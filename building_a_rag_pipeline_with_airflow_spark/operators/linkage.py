@@ -131,15 +131,7 @@ def trigram_topk(
 
     Deterministic: scores round to 6 decimals with id tiebreaks, so the
     whole operator carries a full SQL oracle."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
-        _per_query_topk,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    qg = queries.select(
-        F.col(q_id).alias("q_id"), trigram_set(q_text).alias("_g")
-    ).withColumn("_qn", F.size("_g"))
+    qpost = _query_grams(queries, k, q_id, q_text)
     cg = corpus.select(
         F.col(c_id).alias("name_id"),
         F.col(c_text).alias("name"),
@@ -155,14 +147,39 @@ def trigram_topk(
             "gram",
             "left_semi",
         )
-    qpost = qg.select("q_id", "_qn", F.explode("_g").alias("gram"))
+    return _trigram_topk(qpost, cpost, "_cn", cg.select("name_id", "name"), k)
+
+
+def _query_grams(queries: DataFrame, k: int, q_id: str,
+                 q_text: str) -> DataFrame:
+    """(q_id, _qn, gram) rows of a query workload — its distinct grams
+    and their count — after the ``k`` guard, for both trigram searches."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    qg = queries.select(
+        F.col(q_id).alias("q_id"), trigram_set(q_text).alias("_g")
+    ).withColumn("_qn", F.size("_g"))
+    return qg.select("q_id", "_qn", F.explode("_g").alias("gram"))
+
+
+def _trigram_topk(qpost: DataFrame, cpost: DataFrame, cn: str,
+                  names: DataFrame, k: int) -> DataFrame:
+    """The finisher of :func:`trigram_topk` and
+    :func:`trigram_topk_from_index`: shared-gram counts per (query,
+    name) from the (gram, name_id, ``cn``) postings, Jaccard from the two
+    set sizes, the salted per-query cut, then the (name_id, name)
+    payload joined onto the top-k rows only."""
+    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+        _per_query_topk,
+    )
+
     shared = (
         qpost.join(cpost, "gram")
         .groupBy("q_id", "name_id")
         .agg(
             F.count("*").cast("double").alias("_shared"),
             F.first("_qn").alias("_qn"),
-            F.first("_cn").alias("_cn"),
+            F.first(cn).alias("_cn"),
         )
     )
     scored = shared.select(
@@ -178,9 +195,9 @@ def trigram_topk(
         ).alias("score"),
     )
     out = _per_query_topk(scored, "q_id", "name_id", int(k))
-    return out.join(
-        cg.select("name_id", "name"), "name_id"
-    ).select("q_id", "name_id", "name", "score", "rank")
+    return out.join(names, "name_id").select(
+        "q_id", "name_id", "name", "score", "rank"
+    )
 
 
 #: the trigram index as a bucketed-postings family: (name_id, n_grams,
@@ -271,15 +288,15 @@ def trigram_topk_from_index(
     q_text: str = "q_text",
     max_posting: "int | None" = 100_000,
 ) -> DataFrame:
-    """Fuzzy top-k search against a :func:`build_trigram_index` layout —
-    result-identical to :func:`trigram_topk` over the same corpus, but
-    the corpus is never re-grammed: the query workload's distinct grams
-    broadcast-join the postings scan on (bucket, gram) — the bucket side
-    prunes partitions dynamically (the ``bm25_topk_many_from_index``
-    shape), the gram side row-group-skips via the build's sort — so
-    query-time work is O(matching posting lists), independent of corpus
-    size. The stop-gram guard is the PUSHED ``gram_df <= max_posting``
-    parquet predicate on a fresh index.
+    """Fuzzy top-k search against a :func:`build_trigram_index` layout,
+    finished by :func:`trigram_topk`'s own ``_trigram_topk`` over the
+    stored postings, so the corpus is never re-grammed: the query
+    workload's distinct grams broadcast-join the postings scan on
+    (bucket, gram) — the bucket side prunes partitions dynamically (the
+    ``bm25_topk_many_from_index`` shape), the gram side row-group-skips
+    via the build's sort — so query-time work is O(matching posting
+    lists), independent of corpus size. The stop-gram guard is the
+    PUSHED ``gram_df <= max_posting`` parquet predicate on a fresh index.
 
     Extended indexes (``streaming_extend_trigram_index`` appends under
     new ``_batch_id`` partitions and flips ``meta.extended``): stored
@@ -289,26 +306,16 @@ def trigram_topk_from_index(
     rows (O(matching postings), the family recount rule). ``n_grams``
     needs no recount: it is a per-name property, computed whole within
     whichever batch wrote the name."""
-    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
-        _per_query_topk,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    qpost = _query_grams(queries, k, q_id, q_text)
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta.n_buckets)
-    qg = queries.select(
-        F.col(q_id).alias("q_id"), trigram_set(q_text).alias("_g")
-    ).withColumn("_qn", F.size("_g"))
-    qpost = qg.select("q_id", "_qn", F.explode("_g").alias("gram"))
     qgrams = qpost.select("gram").distinct().withColumn(
         "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
     )
     raw = spark.read.parquet(f"{path}/postings")
     # max_posting=None disables the stop-gram guard on BOTH paths — the
     # in-plan operator supports it (trigram_topk's `if max_posting is
-    # not None`), and from-index must stay result-identical to it in
-    # every mode
+    # not None`), and from-index honours it the same way in every mode
     if meta.extended:
         cpost = raw.join(F.broadcast(qgrams), ["bucket", "gram"])
         if max_posting is not None:
@@ -323,31 +330,13 @@ def trigram_topk_from_index(
         if max_posting is not None:
             raw = raw.where(F.col("gram_df") <= int(max_posting))
         cpost = raw.join(F.broadcast(qgrams), ["bucket", "gram"])
-    shared = (
-        qpost.join(cpost.select("gram", "name_id", "n_grams"), "gram")
-        .groupBy("q_id", "name_id")
-        .agg(
-            F.count("*").cast("double").alias("_shared"),
-            F.first("_qn").alias("_qn"),
-            F.first("n_grams").alias("_cn"),
-        )
+    return _trigram_topk(
+        qpost,
+        cpost.select("gram", "name_id", "n_grams"),
+        "n_grams",
+        spark.read.parquet(f"{path}/names"),
+        k,
     )
-    scored = shared.select(
-        "q_id",
-        "name_id",
-        (
-            F.round(
-                F.col("_shared")
-                / (F.col("_qn") + F.col("_cn") - F.col("_shared"))
-                * 1_000_000
-            )
-            / 1_000_000
-        ).alias("score"),
-    )
-    out = _per_query_topk(scored, "q_id", "name_id", int(k))
-    return out.join(
-        spark.read.parquet(f"{path}/names"), "name_id"
-    ).select("q_id", "name_id", "name", "score", "rank")
 
 
 def consolidate_trigram_index(

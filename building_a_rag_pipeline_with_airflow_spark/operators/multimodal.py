@@ -324,6 +324,23 @@ def phash_near_dups(hashed: DataFrame, max_hamming: int = 6,
     dividing the chance-collision rate by ~2^((c−1)·width)/C(n_bands,c)
     (c=2 over 8-bit bands: ~73× fewer chance candidates for 3.5× more
     banding rows). Equality with the c=1 pair set is pinned by test."""
+    _check_band_budget(max_hamming, n_bands, min_shared_bands)
+    hashes = hashed.select(F.col(id_col), F.col(hash_col))
+    if min_shared_bands == 1:
+        banded = _phash_band_rows(hashes, n_bands, id_col=id_col, hash_col=hash_col)
+    else:
+        banded = _phash_combo_rows(
+            hashes, n_bands, min_shared_bands, id_col=id_col, hash_col=hash_col
+        )
+    return _phash_pairs(banded, max_hamming, max_bucket)
+
+
+def _check_band_budget(max_hamming: int, n_bands: int,
+                       min_shared_bands: int) -> None:
+    """The pigeonhole guard of :func:`phash_near_dups` and
+    :func:`phash_pairs_from_index`: a pair at hamming h shares at least
+    ``n_bands - h`` clean bands, so ``min_shared_bands`` shared bands are
+    only guaranteed while ``max_hamming <= n_bands - min_shared_bands``."""
     if min_shared_bands < 1:
         raise ValueError(f"min_shared_bands must be >= 1, got {min_shared_bands}")
     if max_hamming > n_bands - min_shared_bands:
@@ -333,21 +350,15 @@ def phash_near_dups(hashed: DataFrame, max_hamming: int = 6,
             f"at hamming h is only guaranteed {n_bands} - h shared clean "
             "bands"
         )
-    if min_shared_bands == 1:
-        banded = _phash_band_rows(
-            hashed.select(F.col(id_col), F.col(hash_col)),
-            n_bands,
-            id_col=id_col,
-            hash_col=hash_col,
-        )
-    else:
-        banded = _phash_combo_rows(
-            hashed.select(F.col(id_col), F.col(hash_col)),
-            n_bands,
-            min_shared_bands,
-            id_col=id_col,
-            hash_col=hash_col,
-        )
+
+
+def _phash_pairs(banded: DataFrame, max_hamming: int,
+                 max_bucket: "int | None") -> DataFrame:
+    """The candidates-then-verify finisher of both pHash matchers over
+    (media_id, phash, band_i, band_v) rows, derived in-plan or read from
+    the index: drop band buckets above ``max_bucket``, self-join on
+    (band_i, band_v), keep each pair once and verify ``bit_count(a XOR
+    b) <= max_hamming``."""
     if max_bucket is not None:
         sizes = banded.groupBy("band_i", "band_v").agg(
             F.count("*").alias("_n")
@@ -505,14 +516,13 @@ def build_phash_index(df: DataFrame, path: str, n_bands: int = 8,
 def phash_pairs_from_index(spark, path: str, max_hamming: int = 6,
                            max_bucket: "int | None" = 100_000,
                            min_shared_bands: int = 1) -> DataFrame:
-    """Near-dup pairs from a :func:`build_phash_index` layout —
-    result-identical to :func:`phash_near_dups` over the same corpus
-    (parity-tested), but payloads are never re-hashed: the scan reads
-    band rows only. Same pigeonhole contract (``max_hamming <=
-    n_bands - min_shared_bands``) and the same ``max_bucket``
-    degenerate-band guard, recounted in-plan over the stored rows
-    (batch-extension-safe by construction — nothing denormalized to go
-    stale).
+    """Near-dup pairs from a :func:`build_phash_index` layout: the
+    stored band rows go through :func:`phash_near_dups`' own guard
+    (``_check_band_budget``) and finisher (``_phash_pairs``), so payloads
+    are never re-hashed — the scan reads band rows only. The
+    ``max_bucket`` degenerate-band guard is recounted in-plan over the
+    stored rows (batch-extension-safe by construction — nothing
+    denormalized to go stale).
 
     ``min_shared_bands`` (the corpus-scale banding, see
     :func:`phash_near_dups`) needs NO layout change or migration: every
@@ -524,14 +534,7 @@ def phash_pairs_from_index(spark, path: str, max_hamming: int = 6,
 
     meta = index_layout.read_meta(spark, path)
     n_bands = int(meta["n_bands"])
-    if min_shared_bands < 1:
-        raise ValueError(f"min_shared_bands must be >= 1, got {min_shared_bands}")
-    if max_hamming > n_bands - min_shared_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs n_bands - min_shared_bands "
-            f">= max_hamming (index has {n_bands} bands, "
-            f"min_shared_bands={min_shared_bands})"
-        )
+    _check_band_budget(max_hamming, n_bands, min_shared_bands)
     rows = spark.read.parquet(f"{path}/bands").select(
         "media_id", "phash", "band_i", "band_v"
     )
@@ -541,28 +544,4 @@ def phash_pairs_from_index(spark, path: str, max_hamming: int = 6,
             n_bands,
             min_shared_bands,
         )
-    if max_bucket is not None:
-        sizes = rows.groupBy("band_i", "band_v").agg(F.count("*").alias("_n"))
-        rows = rows.join(
-            sizes.where(F.col("_n") <= int(max_bucket)).select(
-                "band_i", "band_v"
-            ),
-            ["band_i", "band_v"],
-            "left_semi",
-        )
-    x = rows.select(
-        F.col("media_id").alias("id_a"), F.col("phash").alias("_ha"),
-        "band_i", "band_v",
-    )
-    y = rows.select(
-        F.col("media_id").alias("id_b"), F.col("phash").alias("_hb"),
-        "band_i", "band_v",
-    )
-    return (
-        x.join(y, ["band_i", "band_v"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.bit_count(F.expr("_ha ^ _hb")).cast("int"))
-        .where(F.col("hamming") <= int(max_hamming))
-        .select("id_a", "id_b", "hamming")
-    )
+    return _phash_pairs(rows, max_hamming, max_bucket)

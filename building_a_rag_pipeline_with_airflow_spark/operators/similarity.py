@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+    cosine_or_zero,
     cosine_similarity,
     dequantize_int8,
     dot_product,
@@ -58,9 +59,11 @@ def topk_cosine(
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
-def _per_query_topk(scored, q_id: str, c_id: str, k: int, n_shards: int = 16):
-    """Salted two-phase per-query top-k over a (q, candidate, score)
-    frame — the weighted_sample_per_group / bm25_topk_many pattern. A
+def _per_query_topk(scored, q_id: str, c_id: str, k: int, n_shards: int = 16,
+                    score: str = "score"):
+    """Salted two-phase per-query top-k over a (q, candidate, ``score``)
+    frame — the weighted_sample_per_group pattern, and the one copy of
+    it for kNN, trigram search, batch BM25 and co-occurrence recommend. A
     single ``row_number() OVER (PARTITION BY q)`` sorts each query's
     WHOLE candidate set (corpus-scale for the exact tier, a hot band for
     LSH) in one task; phase 1 cuts top-k within (q, candidate-hash
@@ -69,17 +72,17 @@ def _per_query_topk(scored, q_id: str, c_id: str, k: int, n_shards: int = 16):
     also wins its shard; deterministic tiebreaks unchanged."""
     w1 = Window.partitionBy(
         q_id, F.pmod(F.xxhash64(F.col(c_id)), F.lit(int(n_shards)))
-    ).orderBy(F.desc("score"), F.asc(c_id))
+    ).orderBy(F.desc(score), F.asc(c_id))
     survivors = (
         scored.withColumn("_rk", F.row_number().over(w1))
         .where(F.col("_rk") <= int(k))
         .drop("_rk")
     )
-    w2 = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    w2 = Window.partitionBy(q_id).orderBy(F.desc(score), F.asc(c_id))
     return (
         survivors.withColumn("rank", F.row_number().over(w2))
         .where(F.col("rank") <= int(k))
-        .select(q_id, c_id, "score", F.col("rank").cast("int").alias("rank"))
+        .select(q_id, c_id, score, F.col("rank").cast("int").alias("rank"))
     )
 
 
@@ -107,7 +110,9 @@ def knn_join(
         F.col(q_id),
         F.col(c_id),
         F.round(
-            dot_product(F.col(c_vec), F.col(q_vec)) / (F.col("_cn") * F.col("_qn")),
+            cosine_or_zero(
+                dot_product(F.col(c_vec), F.col(q_vec)), F.col("_cn") * F.col("_qn")
+            ),
             4,
         ).alias("score"),
     )
@@ -222,10 +227,10 @@ def ivf_assign(
     otherwise be re-evaluated per pair inside the guard AND the division.
 
     NULL vectors are EXCLUDED here (the mmr_topk NULL-vector guard
-    convention): their similarity to every centroid is NULL, so the
-    argmax window ties and dumps them into the lowest cell id — dead
-    rows no query can ever return (NULL cosine drops from every top-k),
-    stored and scanned forever. Filtering at the assignment boundary
+    convention): a NULL vector has no direction, so it ties on the same
+    similarity to every centroid and the argmax window dumps it into the
+    lowest cell id — a row with no meaningful score, stored and scanned
+    forever. Filtering at the assignment boundary
     keeps them out of the build, the streaming extension, and the
     recluster path at once."""
     cn = corpus.where(F.col(c_vec).isNotNull()).withColumn("_cn", l2_norm(c_vec))
@@ -234,8 +239,10 @@ def ivf_assign(
         corpus["*"],
         F.col(cell_id),
         F.round(
-            dot_product(F.col(c_vec), F.col(cell_vec))
-            / (F.col("_cn") * F.col("_celln")),
+            cosine_or_zero(
+                dot_product(F.col(c_vec), F.col(cell_vec)),
+                F.col("_cn") * F.col("_celln"),
+            ),
             4,
         ).alias("_csim"),
     )
@@ -278,7 +285,7 @@ def kmeans_centroids(
 
     # isNotNull: array_to_vector(NULL) would fail the fit mid-job (or a
     # NULL row would poison a center) — same NULL-vector guard as
-    # ivf_assign and the stride pickers
+    # ivf_assign and the stride picker
     feats = corpus.where(F.col(c_vec).isNotNull()).select(
         array_to_vector(F.col(c_vec).cast("array<double>")).alias("features")
     )
@@ -325,40 +332,58 @@ def ivf_topk_cosine(
     broadcast-small, the scan of non-probed cells is skipped entirely
     (partition pruning when the index is written partitioned by cell), and
     the final top-k is a per-partition heap (TakeOrderedAndProject), never a
-    global sort."""
-    if method == "kmeans":
-        centroids = kmeans_centroids(
-            corpus.select(c_id, c_vec),
-            n_cells or max(2, nprobe * 4),
-            c_vec=c_vec,
-        )
-    else:
-        # isNotNull: a NULL vector drawn as a CENTROID is a dead cell —
-        # every similarity against it is NULL, so nothing assigns there
-        # and the probe never selects it. Guarded in BOTH stride pickers
-        # (in-plan and durable build) so the two stay result-identical
-        # on NULL-bearing corpora; ivf_assign guards the corpus side.
-        centroids = corpus.where(
-            (F.col(c_id) % stride == F.lit(1)) & F.col(c_vec).isNotNull()
-        ).select(
-            F.col(c_id).alias("cell_id"), F.col(c_vec).alias("cell_vec")
-        )
+    global sort. Centroids, probe and scoring are the helpers
+    :func:`build_ivf_index` and :func:`query_ivf_index` use
+    (``_ivf_centroids``, ``_query_literal``, ``_probe_cells``,
+    ``_ivf_topk``)."""
+    centroids = _ivf_centroids(
+        corpus, method, n_cells or max(2, nprobe * 4), stride, c_id, c_vec
+    )
     assigned = ivf_assign(corpus, centroids, c_id, c_vec)
+    q, q_norm = _query_literal(query_vec)
+    probed = _probe_cells(centroids, q, q_norm, nprobe)
+    return _ivf_topk(
+        assigned.join(F.broadcast(probed), "cell_id"),
+        F.col(c_vec), l2_norm(c_vec), q, q_norm, k, c_id,
+    )
 
-    # Query norm is a constant: fold it on the driver with the same
-    # left-to-right double summation Spark's aggregate uses, so the literal
-    # is bit-identical to what an in-plan l2_norm(q) would produce — but
-    # costs zero per-row work.
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+
+def _ivf_centroids(corpus: DataFrame, method: str, n_cells: int, stride: int,
+                   c_id: str, c_vec: str) -> DataFrame:
+    """The (cell_id, cell_vec) centroids of :func:`ivf_topk_cosine` and
+    :func:`build_ivf_index`: MLlib k-means centers, or every
+    ``stride``-th vector. The stride picker skips NULL vectors: a NULL
+    centroid is a dead cell that nothing should assign to or probe
+    (:func:`ivf_assign` guards the corpus side)."""
+    if method == "kmeans":
+        return kmeans_centroids(corpus.select(c_id, c_vec), n_cells, c_vec=c_vec)
+    return corpus.where(
+        (F.col(c_id) % stride == F.lit(1)) & F.col(c_vec).isNotNull()
+    ).select(F.col(c_id).alias("cell_id"), F.col(c_vec).alias("cell_vec"))
+
+
+def _query_literal(query_vec: list[float]):
+    """The query vector as an array literal, plus its norm as a literal.
+    The norm is a constant: it is folded on the driver with the same
+    left-to-right double summation Spark's aggregate uses, so it is
+    bit-identical to an in-plan ``l2_norm(q)`` but costs no per-row
+    work."""
     qn = 0.0
     for x in query_vec:
         qn += float(x) * float(x)
-    q_norm = F.lit(qn**0.5)
-    probed = (
+    return F.array(*[F.lit(float(x)) for x in query_vec]), F.lit(qn**0.5)
+
+
+def _probe_cells(centroids: DataFrame, q, q_norm, nprobe: int) -> DataFrame:
+    """The ``nprobe`` cell ids whose centroids are closest to the query,
+    ties broken by cell id — the probe of both IVF query paths."""
+    return (
         centroids.select(
             "cell_id",
             F.round(
-                dot_product(F.col("cell_vec"), q) / (l2_norm("cell_vec") * q_norm),
+                cosine_or_zero(
+                    dot_product(F.col("cell_vec"), q), l2_norm("cell_vec") * q_norm
+                ),
                 4,
             ).alias("_qsim"),
         )
@@ -366,14 +391,20 @@ def ivf_topk_cosine(
         .limit(nprobe)
         .select("cell_id")
     )
+
+
+def _ivf_topk(rows: DataFrame, vec, norm, q, q_norm, k: int,
+              c_id: str) -> DataFrame:
+    """Exact cosine top-k over the probed cells' rows, given each row's
+    vector and norm expressions: a per-partition heap
+    (TakeOrderedAndProject), never a global sort."""
     return (
-        assigned.join(F.broadcast(probed), "cell_id")
-        .select(
+        rows.select(
             F.col(c_id),
             F.col("cell_id"),
-            F.round(
-                dot_product(F.col(c_vec), q) / (l2_norm(c_vec) * q_norm), 4
-            ).alias("score"),
+            F.round(cosine_or_zero(dot_product(vec, q), norm * q_norm), 4).alias(
+                "score"
+            ),
         )
         .orderBy(F.desc("score"), F.asc(c_id))
         .limit(k)
@@ -437,8 +468,10 @@ def lsh_knn_join(
         q_id,
         c_id,
         F.round(
-            dot_product(F.col(c_vec), F.col(q_vec))
-            / (l2_norm(F.col(c_vec)) * l2_norm(F.col(q_vec))),
+            cosine_or_zero(
+                dot_product(F.col(c_vec), F.col(q_vec)),
+                l2_norm(F.col(c_vec)) * l2_norm(F.col(q_vec)),
+            ),
             4,
         ).alias("score"),
     )
@@ -495,8 +528,9 @@ def build_ivf_index(
 ) -> None:
     """Materialize an IVF index on storage: vectors partitioned by cell.
 
-    This is the durable form of :func:`ivf_topk_cosine`'s in-plan index —
-    the assign step runs ONCE at build time, and the layout does the work
+    This is the durable form of :func:`ivf_topk_cosine`'s in-plan index,
+    with the same centroid picker (``_ivf_centroids``) — the assign step
+    runs ONCE at build time, and the layout does the work
     at query time: ``<path>/vectors/cell_id=N/`` directories mean a probe
     reads exactly the ``nprobe`` cells it needs via partition PRUNING (the
     scan never opens the other cells' files), which is the difference
@@ -519,19 +553,7 @@ def build_ivf_index(
     the test corpus)."""
     from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
 
-    if method == "kmeans":
-        centroids = kmeans_centroids(corpus.select(c_id, c_vec), n_cells, c_vec=c_vec)
-    else:
-        # isNotNull: a NULL vector drawn as a CENTROID is a dead cell —
-        # every similarity against it is NULL, so nothing assigns there
-        # and the probe never selects it. Guarded in BOTH stride pickers
-        # (in-plan and durable build) so the two stay result-identical
-        # on NULL-bearing corpora; ivf_assign guards the corpus side.
-        centroids = corpus.where(
-            (F.col(c_id) % stride == F.lit(1)) & F.col(c_vec).isNotNull()
-        ).select(
-            F.col(c_id).alias("cell_id"), F.col(c_vec).alias("cell_vec")
-        )
+    centroids = _ivf_centroids(corpus, method, n_cells, stride, c_id, c_vec)
     # an empty centroid set (e.g. a stride that misses every id in a
     # filtered corpus) would silently write an EMPTY index; fail loudly
     require_nonempty(centroids, "ivf centroids")
@@ -614,9 +636,9 @@ def recluster_ivf_index(
       (readers resolve through ``current_index``) and later expires the
       old directory with ``expire_index_versions``.
     * **Quantized layouts re-cluster losslessly-enough**: int8 codes are
-      dequantized in-plan (pure Catalyst) for the fit/assign, and the
-      rebuilt index is re-quantized — set by whether the source layout
-      stored codes.
+      dequantized in-plan (``_decoded``, pure Catalyst) for the
+      fit/assign, and the rebuilt index is re-quantized — set by whether
+      the source layout stored codes.
     * **The rebuild is a fresh BASE build** (every vector lands under
       batch -1): streamed extension history is consolidated, so an
       extension stream must restart with a FRESH checkpoint against the
@@ -630,12 +652,7 @@ def recluster_ivf_index(
     rows = spark.read.parquet(f"{path}/vectors")
     quantized = "_codes" in rows.columns
     if quantized:
-        corpus = rows.select(
-            F.col(c_id),
-            F.transform(
-                F.col("_codes"), lambda c: c.cast("double") * F.col("_scale")
-            ).alias(c_vec),
-        )
+        corpus = rows.select(F.col(c_id), _decoded().alias(c_vec))
     else:
         corpus = rows.select(c_id, c_vec)
     build_ivf_index(
@@ -667,29 +684,14 @@ def query_ivf_index(
     reading a footer; the data path stays fully distributed) so the cell
     predicate is literal at plan time and Catalyst turns it into partition
     pruning: the FileScan's ``PartitionFilters`` drops every other
-    ``cell_id=N`` directory without opening it. Scoring reuses the stored
-    ``_vnorm`` — no per-query norm recomputation — and top-k compiles to
-    TakeOrderedAndProject (per-partition heaps, no global sort)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    qn = 0.0
-    for x in query_vec:
-        qn += float(x) * float(x)
-    q_norm = F.lit(qn**0.5)
-
-    centroids = spark.read.parquet(f"{path}/centroids")
-    probe_cells = [
-        r["cell_id"]
-        for r in centroids.select(
-            "cell_id",
-            F.round(
-                dot_product(F.col("cell_vec"), q) / (l2_norm("cell_vec") * q_norm),
-                4,
-            ).alias("_qsim"),
-        )
-        .orderBy(F.desc("_qsim"), F.asc("cell_id"))
-        .limit(nprobe)
-        .collect()
-    ]
+    ``cell_id=N`` directory without opening it. The probe
+    (``_query_literal``, ``_probe_cells``) and the top-k (``_ivf_topk``)
+    are :func:`ivf_topk_cosine`'s; scoring reuses the stored ``_vnorm``
+    — no per-query norm recomputation — and a quantized layout decodes
+    through ``_decoded``, as :func:`recluster_ivf_index` does."""
+    q, q_norm = _query_literal(query_vec)
+    probed = _probe_cells(spark.read.parquet(f"{path}/centroids"), q, q_norm, nprobe)
+    probe_cells = [r["cell_id"] for r in probed.collect()]
     vectors = spark.read.parquet(f"{path}/vectors").where(
         F.col("cell_id").isin(probe_cells)
     )
@@ -698,27 +700,17 @@ def query_ivf_index(
         # composes with the cell predicate at the same scan, so it prunes
         # row groups inside the probed partitions (parquet min/max stats)
         vectors = vectors.where(prefilter)
-    if "_codes" in vectors.columns:
-        # quantized layout: reconstruct in-plan (Catalyst transform, no
-        # Python) — the scan reads int8 codes + one float, a quarter of
-        # the float32 probe IO; _vnorm was stored over the dequantized
-        # vector so the cosine is self-consistent
-        vec_expr = F.transform(
-            F.col("_codes"), lambda c: c.cast("double") * F.col("_scale")
-        )
-    else:
-        vec_expr = F.col(c_vec)
-    return (
-        vectors.select(
-            F.col(c_id),
-            F.col("cell_id"),
-            F.round(
-                dot_product(vec_expr, q) / (F.col("_vnorm") * q_norm), 4
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(c_id))
-        .limit(k)
-    )
+    # a quantized layout scans int8 codes + one float (a quarter of the
+    # float32 probe IO); _vnorm was stored over the dequantized vector
+    # so the cosine is self-consistent
+    vec = _decoded() if "_codes" in vectors.columns else F.col(c_vec)
+    return _ivf_topk(vectors, vec, F.col("_vnorm"), q, q_norm, k, c_id)
+
+
+def _decoded():
+    """A quantized IVF layout's vector, rebuilt in-plan (Catalyst
+    transform, no Python) as ``_codes`` · ``_scale`` in double."""
+    return F.transform(F.col("_codes"), lambda c: c.cast("double") * F.col("_scale"))
 
 
 def blocked_cosine_pairs(

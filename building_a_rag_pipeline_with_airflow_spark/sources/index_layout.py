@@ -23,6 +23,16 @@ postings — ``operators.dedup.build_shingle_index``; BM25 postings —
 * **Extensions** are ``foreachBatch`` writers with a checkpoint — the
   standard grow-in-production path (recompute/re-cluster offline when
   balance drifts, never per arrival).
+* **Reads** finish through the in-plan operator's own code. A
+  ``*_from_index`` reader differs from its in-plan twin only in where its
+  rows come from (the stored layout instead of an in-plan derive); the
+  candidate, verify and score steps after that are one private helper
+  per family: ``multimodal._phash_pairs``, ``linkage._trigram_topk``,
+  ``dedup._jaccard_pairs``, ``lexical._bm25_contrib`` (reached through
+  ``lexical._index_contrib``, which also holds the extended-index
+  ``df_t`` recount of both BM25 readers) and, for IVF,
+  ``similarity._ivf_centroids`` / ``_probe_cells`` / ``_ivf_topk`` /
+  ``_decoded``.
 
 These helpers are the single implementation of that contract; a fix to
 the write/replay mechanics lands in all six indexes at once. The four

@@ -5,19 +5,41 @@ every HEADLINE row) so plan diffs (Exchange count, join strategy,
 PushedFilters, Python-eval nodes) can be asserted before/after each
 change without re-running the bench.
 
+What is written is normalized: expression ids (``#123``), exchange plan
+ids, lambda-variable counters, temp directories and the repo location
+become fixed placeholders, so one ``diff -r`` of a capture made from one
+checkout against a capture made from another is the plan check.
+
 Usage: python scripts/capture_plans.py <round> <tag> [name ...]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_NORMALIZE = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)]+"), "<tmp>"),
+    (re.compile(re.escape(REPO)), "<repo>"),
+)
+
+
+def normalize(plan: str) -> str:
+    """The plan text with run-specific ids and paths replaced."""
+    for pattern, repl in _NORMALIZE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -43,7 +65,7 @@ def main() -> None:
         except Exception as exc:  # capture what we can, note the rest
             plan = f"<explain failed: {exc}>"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalize(plan))
         print(f"captured {name} ({len(plan)} chars)")
 
 

@@ -8,7 +8,8 @@ parameterized over every index, so a mechanics fix that lands in one
 path cannot silently miss the others:
 
 1. **build ≡ in-plan** — querying the built-then-extended index equals
-   the in-plan operator over the same full corpus;
+   the in-plan operator over the same full corpus (with every reader a
+   spec lists, e.g. the batch BM25 reader, whose df recount runs here);
 2. **extension replay is idempotent** — re-delivering the SAME batch
    through a fresh checkpoint (the crash-replay scenario) changes
    nothing;
@@ -61,6 +62,30 @@ class IndexSpec:
     # postings families re-base extended layouts (r10 directive #2) —
     # IVF has recluster_ivf_index, pHash never flips extended
     consolidate: "Callable | None" = None
+    # (spark, path, full) -> [(from-index df, in-plan df)]: further
+    # readers of the built-then-extended index, each equal to its twin
+    more_readers: "Callable | None" = None
+
+
+#: the batch BM25 reader's workload — a shared term, a single term and
+#: the single-query reader's terms
+BATCH_QUERIES = [["spark", "join"], ["merge"], QUERY_TERMS]
+
+
+def _bm25_many_per_query(spark, path, full):
+    """``bm25_topk_many_from_index`` over :data:`BATCH_QUERIES`, paired
+    per query with the in-plan ``bm25_topk``."""
+    queries = spark.createDataFrame(
+        list(enumerate(BATCH_QUERIES)), "q_id int, terms array<string>"
+    )
+    got = lexical.bm25_topk_many_from_index(spark, path, queries, k=5)
+    return [
+        (
+            got.where(F.col("q_id") == i).select("doc_id", "score"),
+            lexical.bm25_topk(full, terms, k=5),
+        )
+        for i, terms in enumerate(BATCH_QUERIES)
+    ]
 
 
 SPECS = [
@@ -113,6 +138,7 @@ SPECS = [
         prune_marker=lambda plan: "PartitionFilters" in plan
         and "bucket" in plan,
         consolidate=lexical.consolidate_postings_index,
+        more_readers=_bm25_many_per_query,
     ),
     IndexSpec(
         name="ivf",
@@ -271,6 +297,12 @@ def _run_contract(spec, spark, sf_dir, tmp_path):
     got = _rows(spec.query(spark, path))
     expect = _rows(spec.inplan(full))
     assert got == expect, f"{spec.name}: from-index != in-plan"
+    for reader_got, reader_expect in (
+        spec.more_readers(spark, path, full) if spec.more_readers else ()
+    ):
+        assert _rows(reader_got) == _rows(reader_expect), (
+            f"{spec.name}: a further from-index reader != in-plan"
+        )
 
     # ---- contract 2: replaying the SAME batch through a fresh
     # checkpoint (crash replay re-delivers it with the same batch id)

@@ -767,3 +767,50 @@ def test_blocked_cosine_tile_cap_output_invariant(spark, sf_dir):
             emb, threshold=0.4, n_blocks=n_blocks).collect())
     )
     assert lo == hi and lo
+
+
+def test_zero_vectors_score_zero_like_topk_cosine(spark, tmp_path):
+    """An all-zero query vector or corpus row scores 0.0 (the
+    ``vectors.cosine_or_zero`` rule ``topk_cosine`` follows) through
+    every IVF and kNN entry point, where a raw ``dot / (norm * norm)``
+    raised DIVIDE_BY_ZERO under ANSI. stride=2 also draws the zero row
+    as a centroid, so assignment and the probe meet it too."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [0.6, 0.8])],
+        "vec_id int, embedding array<float>",
+    )
+    q, zero_q = [1.0, 0.0], [0.0, 0.0]
+    queries = spark.createDataFrame(
+        [(1, q), (2, zero_q)], "q_id int, q_vec array<float>"
+    )
+
+    def scores(df):
+        return {r.vec_id: r.score for r in df.collect()}
+
+    expect = scores(similarity.topk_cosine(corpus, q, k=4))
+    assert expect[3] == 0.0
+    zeros = {i: 0.0 for i in expect}
+    assert scores(similarity.topk_cosine(corpus, zero_q, k=4)) == zeros
+
+    for query, want in ((q, expect), (zero_q, zeros)):
+        assert scores(
+            similarity.ivf_topk_cosine(corpus, query, k=4, stride=2, nprobe=2)
+        ) == want
+    path = str(tmp_path / "idx")
+    similarity.build_ivf_index(corpus, path, n_cells=2, stride=2)
+    for query, want in ((q, expect), (zero_q, zeros)):
+        assert scores(
+            similarity.query_ivf_index(spark, path, query, k=4, nprobe=2)
+        ) == want
+
+    knn = similarity.knn_join(queries, corpus, k=4).collect()
+    assert {r.vec_id: r.score for r in knn if r.q_id == 1} == expect
+    assert {r.vec_id: r.score for r in knn if r.q_id == 2} == zeros
+    # the zero query and the zero row sign-hash alike, so they always
+    # meet as LSH candidates
+    lsh = similarity.lsh_knn_join(
+        queries, corpus, k=4, n_planes=2, n_bands=2, dim=2
+    ).collect()
+    assert any(r.q_id == 2 and r.vec_id == 3 for r in lsh)
+    for r in lsh:
+        assert r.score == (expect if r.q_id == 1 else zeros)[r.vec_id]
