@@ -5,6 +5,7 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 
@@ -123,3 +124,36 @@ def require_nonempty(df: DataFrame, what: str = "input") -> DataFrame:
     if df.isEmpty():
         raise ValueError(f"empty {what}: expected at least one row")
     return df
+
+
+def keep_groups(rows: DataFrame, keys, keep) -> DataFrame:
+    """The rows whose ``keys`` group passes ``keep``, a predicate on the
+    group's row count ``_n``: the one group-size guard of the
+    candidates-then-verify matchers (stop-shingle and stop-gram caps,
+    band and block caps, repeat floors). One count aggregate, joined
+    back as a left semi join, so the guard adds no column and never
+    fans a row out."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    sizes = rows.groupBy(*keys).agg(F.count("*").alias("_n"))
+    return rows.join(sizes.where(keep(F.col("_n"))).select(*keys), keys, "left_semi")
+
+
+def bucket_pairs(rows: DataFrame, keys, id_col: str, carry=()) -> DataFrame:
+    """Each pair of ``rows`` that shares a ``keys`` bucket, once: a self
+    join on the keys, ``id_a < id_b``, and a dedup on ``(id_a, id_b)``
+    for pairs that meet in several buckets. Each ``carry`` column rides
+    along as ``<c>_a`` / ``<c>_b`` for the exact verify."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    a, b = (
+        rows.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *keys,
+        )
+        for s in "ab"
+    )
+    return (
+        a.join(b, keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )

@@ -16,6 +16,14 @@ full ladder:
   sort); band buckets → candidates → verified Jaccard.
 * SimHash — md5-derived per-shingle 64-bit vectors, majority per bit.
 * embedding near-dup — cosine threshold pairs (delegates to similarity ops).
+
+Every pair rung is candidates-then-verify through one core:
+``operators.keep_groups`` drops key groups that are too large (or, for
+ExactSubstr, too small), ``operators.bucket_pairs`` self-joins on the key
+and keeps each pair once, and the exact verify is ``_jaccard_tail`` for
+both shingle-Jaccard matchers and ``vectors.cosine_or_zero`` for the
+embedding matcher (a zero vector scores 0.0). The sign-LSH bands are
+``similarity._sign_bands``, shared with ``lsh_knn_join``.
 """
 
 from __future__ import annotations
@@ -30,8 +38,10 @@ from building_a_rag_pipeline_with_airflow_spark.functions.text import (
     tokens,
 )
 from building_a_rag_pipeline_with_airflow_spark.operators import (
+    bucket_pairs,
     checkpoint_nostats,
     ensure_min_partitions,
+    keep_groups,
     release_checkpoint,
     require_nonempty,
 )
@@ -111,15 +121,15 @@ def ngram_jaccard_pairs(
     shuffle costs more than the extra branch plus two tiny post-agg
     broadcast joins. Keep shuffled rows narrow; join small stats late."""
     sh = shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_shingles"))
-    posting_ok = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .where(F.col("_df") <= max_posting)
-        .select("shingle")
-    )
-    sh = sh.join(posting_ok, "shingle")
-    return _jaccard_pairs(sh, (id_col, "shingle"), id_col, sizes, threshold)
+    post = keep_groups(sh, "shingle", lambda c: c <= max_posting)
+    sizes = _shingle_sizes(sh, id_col)
+    return _jaccard_pairs(post, (id_col, "shingle"), id_col, sizes, threshold)
+
+
+def _shingle_sizes(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, n_shingles): each doc's distinct-shingle count, the set size
+    the Jaccard tail divides by."""
+    return sh.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_shingles"))
 
 
 def _jaccard_pairs(post: DataFrame, cols, id_col: str, sizes: DataFrame,
@@ -142,10 +152,20 @@ def _jaccard_pairs(post: DataFrame, cols, id_col: str, sizes: DataFrame,
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("bigint").alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("_nb"))
+    return _jaccard_tail(inter, sizes, id_col, threshold)
+
+
+def _jaccard_tail(pairs: DataFrame, sizes: DataFrame, id_col: str,
+                  threshold: float) -> DataFrame:
+    """The verify step of every shingle-Jaccard matcher: join both docs'
+    ``n_shingles`` onto (id_a, id_b, n_common) pairs and keep
+    ``round(n_common / (na + nb - n_common), 4) >= threshold``."""
+    sa, sb = (
+        sizes.select(F.col(id_col).alias(f"id_{s}"), F.col("n_shingles").alias(f"_n{s}"))
+        for s in "ab"
+    )
     return (
-        inter.join(sa, "id_a")
+        pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
             "id_a",
@@ -168,12 +188,7 @@ _SHINGLE_POSTINGS = index_layout.PostingsFamily(
     derive=lambda df, p: shingles(
         df, p["text_col"], p["id_col"], int(p["n"])
     ).select(F.col(p["id_col"]).alias("doc_id"), "shingle"),
-    sides=((
-        "doc_sizes",
-        lambda df, rows, p: rows.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("n_shingles")
-        ),
-    ),),
+    sides=(("doc_sizes", lambda df, rows, p: _shingle_sizes(rows, "doc_id")),),
 )
 
 
@@ -261,14 +276,10 @@ def jaccard_pairs_from_index(
     meta = index_layout.read_meta(spark, path)
     raw = spark.read.parquet(f"{path}/postings")
     if meta and meta.extended:
-        base = raw.select("bucket", "shingle", "doc_id")
-        ok = (
-            base.groupBy("bucket", "shingle")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") <= max_posting)
-            .select("bucket", "shingle")
+        post = keep_groups(
+            raw.select("bucket", "shingle", "doc_id"), ["bucket", "shingle"],
+            lambda c: c <= max_posting,
         )
-        post = base.join(ok, ["bucket", "shingle"])
     else:
         post = raw.where(F.col("shingle_df") <= max_posting).select(
             "bucket", "shingle", "doc_id"
@@ -386,18 +397,8 @@ def minhash_lsh_pairs(
         ]
     )
     banded = sig.select(F.col(id_col), F.explode(band_keys).alias("band"))
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), "band")
-        .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(banded, "band", id_col).select("id_a", "id_b")
     sh = shingles(df, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").cast("bigint").alias("n_shingles"))
     # Intersection counted only for candidate pairs: fan candidates out over
     # doc-a's shingles, semi-match doc-b's shingles on (id_b, shingle).
     common = (
@@ -406,23 +407,12 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("bigint").alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("_nb"))
-    return (
-        cand.join(common, ["id_a", "id_b"], "left")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.coalesce("n_common", F.lit(0))
-                / (F.col("_na") + F.col("_nb") - F.coalesce("n_common", F.lit(0))),
-                4,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= verify_threshold)
+    # a candidate sharing no shingle (a band collision of disjoint sets)
+    # still verifies, at Jaccard 0
+    pairs = cand.join(common, ["id_a", "id_b"], "left").select(
+        "id_a", "id_b", F.coalesce("n_common", F.lit(0)).alias("n_common")
     )
+    return _jaccard_tail(pairs, _shingle_sizes(sh, id_col), id_col, verify_threshold)
 
 
 def simhash(
@@ -612,19 +602,11 @@ def _repeated_positions(
     wins: DataFrame, id_col: str, min_count: int
 ) -> DataFrame:
     """(id, pos) of every window whose hash repeats ≥ ``min_count``
-    times in ``wins`` — the count-agg → equi-join core shared by both
-    hash tiers of :func:`duplicate_substring_spans` AND the rolling
-    tier's exact recount (:func:`_verify_candidates`), so a change to
-    the counting rule cannot drift between them. One map-side-combined
-    agg on the hash, one equi-join back with one row per qualifying
-    hash on the build side."""
-    dup = (
-        wins.groupBy("_h")
-        .agg(F.count("*").alias("_c"))
-        .where(F.col("_c") >= int(min_count))
-        .select("_h")
-    )
-    return wins.join(dup, "_h").select(id_col, "pos")
+    times in ``wins`` — the ``keep_groups`` guard shared by both hash
+    tiers of :func:`duplicate_substring_spans` AND the rolling tier's
+    exact recount (:func:`_verify_candidates`), so a change to the
+    counting rule cannot drift between them."""
+    return keep_groups(wins, "_h", lambda c: c >= int(min_count)).select(id_col, "pos")
 
 
 def _tokens_gated(
@@ -1024,14 +1006,10 @@ def spans_from_index(
     meta = index_layout.read_meta(spark, path)
     raw = spark.read.parquet(f"{path}/windows")
     if meta and meta.extended:
-        base = raw.select("bucket", "h", "doc_id", "pos")
-        dup = (
-            base.groupBy("bucket", "h")
-            .agg(F.count("*").alias("_c"))
-            .where(F.col("_c") >= int(min_count))
-            .select("bucket", "h")
-        )
-        hits = base.join(dup, ["bucket", "h"]).select("doc_id", "pos")
+        hits = keep_groups(
+            raw.select("bucket", "h", "doc_id", "pos"), ["bucket", "h"],
+            lambda c: c >= int(min_count),
+        ).select("doc_id", "pos")
     else:
         hits = raw.where(F.col("h_count") >= int(min_count)).select(
             "doc_id", "pos"
@@ -1195,15 +1173,18 @@ def embedding_near_dups(
     degenerate embedding region or an under-provisioned banding — an
     explicit modeling decision, and a dropped bucket loses only that
     band's vote; the other bands still propose the pair). ``None``
-    (default, and the oracle-replayed registry form) disables."""
+    (default, and the oracle-replayed registry form) disables.
+    A zero vector scores 0.0 against every candidate
+    (``vectors.cosine_or_zero``), like ``similarity.topk_cosine``."""
     from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+        cosine_or_zero,
         dot_product,
         l2_norm,
     )
     from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
         _hyperplanes,
+        _sign_bands,
         check_plane_budget,
-        lsh_signature,
     )
 
     check_plane_budget(
@@ -1212,40 +1193,22 @@ def embedding_near_dups(
         n_bands,
         enforce=enforce_plane_budget,
     )
-    planes = _hyperplanes(dim, n_planes, seed)
-    band_size = n_planes // n_bands
-    sig = df.withColumn("_sig", lsh_signature(F.col(vec_col), planes)).withColumn(
-        "_norm", l2_norm(F.col(vec_col))
+    banded = _sign_bands(
+        df, vec_col, _hyperplanes(dim, n_planes, seed), n_bands,
+        _norm=l2_norm(F.col(vec_col)),
     )
-    bands_arr = F.array(
-        *[
-            F.concat(F.lit(f"{b}:"),
-                     F.substring("_sig", b * band_size + 1, band_size))
-            for b in range(n_bands)
-        ]
-    )
-    banded = sig.withColumn("band", F.explode(bands_arr))
     if max_bucket is not None:
-        sizes = banded.groupBy("band").agg(F.count("*").alias("_n"))
-        banded = banded.join(
-            sizes.where(F.col("_n") <= int(max_bucket)).select("band"),
-            "band",
-            "left_semi",
-        )
-    x = banded.select(F.col(id_col).alias("id_a"),
-                      F.col(vec_col).alias("_va"), F.col("_norm").alias("_na"),
-                      "band")
-    y = banded.select(F.col(id_col).alias("id_b"),
-                      F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb"),
-                      "band")
+        banded = keep_groups(banded, "band", lambda c: c <= int(max_bucket))
+    va, vb = f"{vec_col}_a", f"{vec_col}_b"
     return (
-        x.join(y, "band")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        bucket_pairs(banded, "band", id_col, (vec_col, "_norm"))
         .select(
             "id_a", "id_b",
             F.round(
-                dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb")), 4
+                cosine_or_zero(
+                    dot_product(va, vb), F.col("_norm_a") * F.col("_norm_b")
+                ),
+                4,
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from building_a_rag_pipeline_with_airflow_spark.operators import keep_groups
 from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
 
@@ -58,17 +59,12 @@ def blocked_fuzzy_pairs(
     base = df.select(
         block.alias("_blk"), F.col(id_col).alias("id_a"), F.col(name_col).alias("name_a")
     ).distinct()
-    sizes = base.groupBy("_blk").agg(F.count("*").alias("_n"))
     # No explicit broadcast of the block-size table: its cardinality is
     # the number of DISTINCT blocking keys, which for soundex_block is
     # ≤ ~7k codes but for last_token_block is vocabulary-scale (millions
-    # of rows at 100 TB). A semi-join lets AQE pick broadcast when the
-    # filtered key set is actually small and shuffle otherwise.
-    bounded = base.join(
-        sizes.where(F.col("_n") <= int(max_block)).select("_blk"),
-        "_blk",
-        "left_semi",
-    )
+    # of rows at 100 TB). The guard's semi join lets AQE pick broadcast
+    # when the filtered key set is actually small and shuffle otherwise.
+    bounded = keep_groups(base, "_blk", lambda c: c <= int(max_block))
     other = bounded.select(
         "_blk", F.col("id_a").alias("id_b"), F.col("name_a").alias("name_b")
     )
@@ -141,12 +137,7 @@ def trigram_topk(
         "name_id", "_cn", F.explode("_g").alias("gram")
     )
     if max_posting is not None:
-        sizes = cpost.groupBy("gram").agg(F.count("*").alias("_n"))
-        cpost = cpost.join(
-            sizes.where(F.col("_n") <= int(max_posting)).select("gram"),
-            "gram",
-            "left_semi",
-        )
+        cpost = keep_groups(cpost, "gram", lambda c: c <= int(max_posting))
     return _trigram_topk(qpost, cpost, "_cn", cg.select("name_id", "name"), k)
 
 
@@ -319,13 +310,7 @@ def trigram_topk_from_index(
     if meta.extended:
         cpost = raw.join(F.broadcast(qgrams), ["bucket", "gram"])
         if max_posting is not None:
-            ok = (
-                cpost.groupBy("gram")
-                .agg(F.count("*").alias("_df"))
-                .where(F.col("_df") <= int(max_posting))
-                .select("gram")
-            )
-            cpost = cpost.join(F.broadcast(ok), "gram")
+            cpost = keep_groups(cpost, "gram", lambda c: c <= int(max_posting))
     else:
         if max_posting is not None:
             raw = raw.where(F.col("gram_df") <= int(max_posting))

@@ -28,6 +28,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from building_a_rag_pipeline_with_airflow_spark.operators import (
+    bucket_pairs,
+    keep_groups,
+    require_nonempty,
+)
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -359,32 +365,14 @@ def _phash_pairs(banded: DataFrame, max_hamming: int,
     the index: drop band buckets above ``max_bucket``, self-join on
     (band_i, band_v), keep each pair once and verify ``bit_count(a XOR
     b) <= max_hamming``."""
+    keys = ["band_i", "band_v"]
     if max_bucket is not None:
-        sizes = banded.groupBy("band_i", "band_v").agg(
-            F.count("*").alias("_n")
-        )
-        banded = banded.join(
-            sizes.where(F.col("_n") <= int(max_bucket)).select(
-                "band_i", "band_v"
-            ),
-            ["band_i", "band_v"],
-            "left_semi",
-        )
-    x = banded.select(
-        F.col("media_id").alias("id_a"), F.col("phash").alias("_ha"),
-        "band_i", "band_v",
-    )
-    y = banded.select(
-        F.col("media_id").alias("id_b"), F.col("phash").alias("_hb"),
-        "band_i", "band_v",
-    )
+        banded = keep_groups(banded, keys, lambda c: c <= int(max_bucket))
     return (
-        x.join(y, ["band_i", "band_v"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        bucket_pairs(banded, keys, "media_id", ("phash",))
         .withColumn(
             "hamming",
-            F.bit_count(F.expr("_ha ^ _hb")).cast("int"),
+            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))).cast("int"),
         )
         .where(F.col("hamming") <= int(max_hamming))
         .select("id_a", "id_b", "hamming")
@@ -488,7 +476,6 @@ def build_phash_index(df: DataFrame, path: str, n_bands: int = 8,
     no extended-mode flag is needed because the pairs query derives
     EVERYTHING (bucket sizes included) from the stored rows in-plan —
     there are no batch-local denormalized statistics to go stale."""
-    from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
     from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
     # family build-guard rule (r9 advice) — checked BEFORE the hashing

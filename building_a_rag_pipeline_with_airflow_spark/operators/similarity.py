@@ -444,23 +444,9 @@ def lsh_knn_join(
         enforce=enforce_plane_budget,
     )
     planes = _hyperplanes(dim, n_planes, seed)
-    band_size = n_planes // n_bands
-
-    def with_bands(df, vec, out_prefix):
-        sig = lsh_signature(F.col(vec), planes)
-        df = df.withColumn("_sig", sig)
-        bands = F.array(
-            *[
-                F.concat(F.lit(f"{b}:"), F.substring("_sig", b * band_size + 1, band_size))
-                for b in range(n_bands)
-            ]
-        )
-        return df.withColumn(f"{out_prefix}band", F.explode(bands)).drop("_sig")
-
-    qb = with_bands(queries, q_vec, "")
-    cb = with_bands(corpus, c_vec, "")
     cand = (
-        qb.join(cb, "band")
+        _sign_bands(queries, q_vec, planes, n_bands)
+        .join(_sign_bands(corpus, c_vec, planes, n_bands), "band")
         .select(q_id, c_id, q_vec, c_vec)
         .dropDuplicates([q_id, c_id])
     )
@@ -477,6 +463,27 @@ def lsh_knn_join(
     )
     # scale-safe per-query cut — see _per_query_topk
     return _per_query_topk(scored, q_id, c_id, k)
+
+
+def _sign_bands(df: DataFrame, vec_col: str, planes, n_bands: int,
+                **extra) -> DataFrame:
+    """``df`` exploded to one row per sign-LSH band of ``vec_col``: the
+    ``band`` key ``"<b>:<bits>"`` is the b-th slice of the signature over
+    ``planes``, the candidate key of :func:`lsh_knn_join` and
+    ``dedup.embedding_near_dups``. ``extra`` columns are computed once
+    per input row, before the explode."""
+    width = len(planes) // n_bands
+    keys = F.array(
+        *[
+            F.concat(F.lit(f"{b}:"), F.substring("_sig", b * width + 1, width))
+            for b in range(n_bands)
+        ]
+    )
+    return (
+        df.withColumns({"_sig": lsh_signature(F.col(vec_col), planes), **extra})
+        .withColumn("band", F.explode(keys))
+        .drop("_sig")
+    )
 
 
 def brp_topk(
@@ -737,7 +744,10 @@ def blocked_cosine_pairs(
        sequential fold by ~1e-13 — the slack is 9 orders of magnitude
        wider), then re-score the few survivors with the engine's own
        sequential `dot/(‖a‖·‖b‖)` and round — so the OUTPUT is
-       bit-identical to the naive HOF join and oracles unchanged.
+       bit-identical to the naive HOF join and oracles unchanged. A
+       zero vector scores 0.0 against every row, in its tiles and in the
+       re-score (the ``vectors.cosine_or_zero`` rule of the other cosine
+       paths).
 
     Work is O(n²/B²) per task across B² tasks — the quadratic cost is
     inherent to exactness (the LSH/IVF paths are the sub-quadratic
@@ -789,7 +799,10 @@ def blocked_cosine_pairs(
         M = np.asarray(
             [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
         )
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
+        # a zero row stays zero, so its tiles score 0.0 (the
+        # cosine_or_zero rule), not NaN
+        norms = np.linalg.norm(M, axis=1, keepdims=True)
+        M /= np.where(norms == 0.0, 1.0, norms)
         return pd.DataFrame(
             {
                 "_blk": [int(pdf["_blk"].iloc[0])],
@@ -867,7 +880,7 @@ def blocked_cosine_pairs(
         .select(
             "id_a", "id_b",
             F.round(
-                dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb")),
+                cosine_or_zero(dot_product("_va", "_vb"), F.col("_na") * F.col("_nb")),
                 int(ndigits),
             ).alias("cosine"),
         )

@@ -16,6 +16,9 @@ Scale design:
   shuffle on the key, zero fan-out, state = one row of payload per
   partition stream — the same shape MERGE ASOF uses in kdb/pandas, but
   expressed declaratively so Catalyst handles spill/AQE.
+  ``as_of_join`` and ``as_of_join_bucketed`` share one body, ``_as_of``:
+  the bucketed join is the same carry keyed by (key, time bucket), plus
+  a per-bucket summary, carry and stitch.
 * **interval join** buckets time into fixed-width cells: intervals explode
   to the cells they cover (bounded fan-out = interval_len/width + 1), the
   join is an equi-join on (key, cell) with a residual filter. Each point
@@ -71,69 +74,8 @@ def as_of_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    on = list(on)
-    if right_cols is None:
-        right_cols = [
-            c for c in right.columns if c not in on and c != right_ts
-        ]
-    right_cols = list(right_cols)
-    out_cols = {c: c + suffix if c in left.columns else c for c in right_cols}
-    ts_out = right_ts + suffix if right_ts in left.columns else right_ts
-
-    # Tag and union. The right side rides with _tag=0 so that at equal
-    # timestamps it sorts BEFORE the left row (backward: an exact-ts match
-    # is visible to the left row's running last_value).
-    r = right.select(
-        *[F.col(c) for c in on],
-        F.col(right_ts).cast("timestamp").alias("_ts"),
-        F.lit(0).alias("_tag"),
-        *[F.col(c).alias(f"_r_{c}") for c in right_cols],
-        *[F.lit(None).alias(f"_l_{c}") for c in left.columns],
-    )
-    l = left.select(
-        *[F.col(c) for c in on],
-        F.col(left_ts).cast("timestamp").alias("_ts"),
-        F.lit(1).alias("_tag"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}") for c in right_cols],
-        *[F.col(c).alias(f"_l_{c}") for c in left.columns],
-    )
-    asc = direction == "backward"
-    order = [F.col("_ts").asc() if asc else F.col("_ts").desc(), F.col("_tag").asc()]
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = r.unionByName(l).select(
-        "*",
-        F.last(F.when(F.col("_tag") == 0, F.col("_ts")), ignorenulls=True)
-        .over(w)
-        .alias("_m_ts"),
-        *[
-            F.last(F.col(f"_r_{c}"), ignorenulls=True).over(w).alias(f"_m_{c}")
-            for c in right_cols
-        ],
-    )
-    out = carried.where(F.col("_tag") == 1)
-    if tolerance_seconds is not None:
-        gap = F.abs(
-            F.col("_ts").cast("double") - F.col("_m_ts").cast("double")
-        )
-        keep = F.col("_m_ts").isNotNull() & (gap <= F.lit(float(tolerance_seconds)))
-        out = out.withColumns(
-            {
-                "_m_ts": F.when(keep, F.col("_m_ts")),
-                **{
-                    f"_m_{c}": F.when(keep, F.col(f"_m_{c}"))
-                    for c in right_cols
-                },
-            }
-        )
-    return out.select(
-        *[F.col(f"_l_{c}").alias(c) for c in left.columns],
-        F.col("_m_ts").alias(ts_out),
-        *[F.col(f"_m_{c}").alias(out_cols[c]) for c in right_cols],
-    )
+    return _as_of(left, right, on, left_ts, right_ts, right_cols,
+                  direction == "backward", None, tolerance_seconds, suffix)
 
 
 def as_of_join_bucketed(
@@ -172,106 +114,119 @@ def as_of_join_bucketed(
     a task comfortably. Ties and determinism notes from :func:`as_of_join`
     apply; exact-ts matches at a bucket boundary belong to the boundary
     row's own bucket (both sides bucket by the same floor)."""
+    return _as_of(left, right, on, left_ts, right_ts, right_cols, True,
+                  int(bucket_seconds), tolerance_seconds, suffix)
+
+
+def _as_of(left, right, on, left_ts, right_ts, right_cols, backward: bool,
+           width: "int | None", tolerance_seconds, suffix) -> DataFrame:
+    """The one body of :func:`as_of_join` and :func:`as_of_join_bucketed`
+    (``width`` set): the column defaults, the union-sort carry keyed by
+    ``on`` (plus the time bucket ``_b``), the bucketed join's summary,
+    carry and stitch steps, the tolerance nulling and the output
+    naming."""
     on = list(on)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in on and c != right_ts]
     right_cols = list(right_cols)
     out_cols = {c: c + suffix if c in left.columns else c for c in right_cols}
     ts_out = right_ts + suffix if right_ts in left.columns else right_ts
-    width = int(bucket_seconds)
-    bucket = lambda c: F.floor(F.unix_timestamp(F.col(c)) / width).cast("bigint")  # noqa: E731
+    left_cols, keys = left.columns, on
+    if width is not None:
+        bucket = lambda c: F.floor(F.unix_timestamp(F.col(c)) / width).cast("bigint")  # noqa: E731
+        left = left.withColumn("_b", bucket(left_ts))
+        right = right.withColumn("_b", bucket(right_ts))
+        keys = [*on, "_b"]
 
-    l_b = left.withColumn("_b", bucket(left_ts))
-    r_b = right.withColumn("_b", bucket(right_ts))
-
-    # (1) within-bucket union-sort carry — as_of_join's window, keyed by
-    # (on..., _b) so no task sees more than one bucket of one key
-    r_u = r_b.select(
-        *on, "_b",
+    # Tag and union. The right side rides with _tag=0 so that at equal
+    # timestamps it sorts BEFORE the left row (backward: an exact-ts match
+    # is visible to the left row's running last_value).
+    r = right.select(
+        *[F.col(c) for c in keys],
         F.col(right_ts).cast("timestamp").alias("_ts"),
         F.lit(0).alias("_tag"),
         *[F.col(c).alias(f"_r_{c}") for c in right_cols],
-        *[F.lit(None).alias(f"_l_{c}") for c in left.columns],
+        *[F.lit(None).alias(f"_l_{c}") for c in left_cols],
     )
-    l_u = l_b.select(
-        *on, "_b",
+    l = left.select(
+        *[F.col(c) for c in keys],
         F.col(left_ts).cast("timestamp").alias("_ts"),
         F.lit(1).alias("_tag"),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}")
-            for c in right_cols
-        ],
-        *[F.col(c).alias(f"_l_{c}") for c in left.columns],
+        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}") for c in right_cols],
+        *[F.col(c).alias(f"_l_{c}") for c in left_cols],
     )
+    order = [F.col("_ts").asc() if backward else F.col("_ts").desc(), F.col("_tag").asc()]
     w = (
-        Window.partitionBy(*on, "_b")
-        .orderBy(F.col("_ts").asc(), F.col("_tag").asc())
+        Window.partitionBy(*keys)
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = (
-        r_u.unionByName(l_u)
-        .select(
-            "*",
-            F.last(F.when(F.col("_tag") == 0, F.col("_ts")), ignorenulls=True)
-            .over(w)
-            .alias("_m_ts"),
-            *[
-                F.last(F.col(f"_r_{c}"), ignorenulls=True).over(w).alias(f"_m_{c}")
-                for c in right_cols
-            ],
-        )
-        .where(F.col("_tag") == 1)
-    )
-
-    # (2) per-(key, bucket) last right payload — metadata, one row/bucket
-    summary = r_b.groupBy(*on, "_b").agg(
-        F.max(
-            F.struct(
-                F.col(right_ts).cast("timestamp").alias("_ts"),
-                *[F.col(c).alias(f"_r_{c}") for c in right_cols],
-            )
-        ).alias("_last")
-    )
-    # (3) running carry over the merged bucket axis (left buckets may have
-    # no right rows — they still need an incoming payload)
-    axis = (
-        l_b.select(*on, "_b")
-        .distinct()
-        .unionByName(summary.select(*on, "_b"))
-        .distinct()
-        .join(summary, [*on, "_b"], "left")
-    )
-    wc = (
-        Window.partitionBy(*on)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = axis.select(
-        *on, "_b",
-        F.last("_last", ignorenulls=True).over(wc).alias("_carry"),
-    )
-    # (4) stitch: within-bucket match wins, else the incoming carry
-    stitched = within.join(carry, [*on, "_b"], "left").select(
+    carried = r.unionByName(l).select(
         "*",
-        F.coalesce(F.col("_m_ts"), F.col("_carry._ts")).alias("_f_ts"),
+        F.last(F.when(F.col("_tag") == 0, F.col("_ts")), ignorenulls=True)
+        .over(w)
+        .alias("_m_ts"),
         *[
-            F.coalesce(F.col(f"_m_{c}"), F.col(f"_carry._r_{c}")).alias(f"_f_{c}")
+            F.last(F.col(f"_r_{c}"), ignorenulls=True).over(w).alias(f"_m_{c}")
             for c in right_cols
         ],
     )
-    if tolerance_seconds is not None:
-        gap = F.abs(F.col("_ts").cast("double") - F.col("_f_ts").cast("double"))
-        keep = F.col("_f_ts").isNotNull() & (gap <= F.lit(float(tolerance_seconds)))
-        stitched = stitched.withColumns(
+    out = carried.where(F.col("_tag") == 1)
+    if width is not None:
+        # (2) per-(key, bucket) last right payload — metadata, one row/bucket
+        summary = right.groupBy(*keys).agg(
+            F.max(
+                F.struct(
+                    F.col(right_ts).cast("timestamp").alias("_ts"),
+                    *[F.col(c).alias(f"_r_{c}") for c in right_cols],
+                )
+            ).alias("_last")
+        )
+        # (3) running carry over the merged bucket axis (left buckets may
+        # have no right rows — they still need an incoming payload)
+        axis = (
+            left.select(*keys)
+            .distinct()
+            .unionByName(summary.select(*keys))
+            .distinct()
+            .join(summary, keys, "left")
+        )
+        wc = (
+            Window.partitionBy(*on)
+            .orderBy("_b")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        carry = axis.select(
+            *keys, F.last("_last", ignorenulls=True).over(wc).alias("_carry")
+        )
+        # (4) stitch: within-bucket match wins, else the incoming carry
+        out = out.join(carry, keys, "left").withColumns(
             {
-                "_f_ts": F.when(keep, F.col("_f_ts")),
-                **{f"_f_{c}": F.when(keep, F.col(f"_f_{c}")) for c in right_cols},
+                "_m_ts": F.coalesce(F.col("_m_ts"), F.col("_carry._ts")),
+                **{
+                    f"_m_{c}": F.coalesce(F.col(f"_m_{c}"), F.col(f"_carry._r_{c}"))
+                    for c in right_cols
+                },
             }
         )
-    return stitched.select(
-        *[F.col(f"_l_{c}").alias(c) for c in left.columns],
-        F.col("_f_ts").alias(ts_out),
-        *[F.col(f"_f_{c}").alias(out_cols[c]) for c in right_cols],
+    if tolerance_seconds is not None:
+        gap = F.abs(
+            F.col("_ts").cast("double") - F.col("_m_ts").cast("double")
+        )
+        keep = F.col("_m_ts").isNotNull() & (gap <= F.lit(float(tolerance_seconds)))
+        out = out.withColumns(
+            {
+                "_m_ts": F.when(keep, F.col("_m_ts")),
+                **{
+                    f"_m_{c}": F.when(keep, F.col(f"_m_{c}"))
+                    for c in right_cols
+                },
+            }
+        )
+    return out.select(
+        *[F.col(f"_l_{c}").alias(c) for c in left_cols],
+        F.col("_m_ts").alias(ts_out),
+        *[F.col(f"_m_{c}").alias(out_cols[c]) for c in right_cols],
     )
 
 

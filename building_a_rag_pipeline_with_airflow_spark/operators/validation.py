@@ -8,7 +8,9 @@ promoting a corpus release:
 
 * :func:`expectations_report` — a declarative contract (not-null,
   unique, range, set membership, regex) evaluated over the whole table
-  in ONE aggregation pass, one result row per expectation.
+  in ONE aggregation pass, one result row per expectation;
+  :func:`expectations_report_by` is the same body, ``_report``, with a
+  group column.
 * :func:`table_diff` — key-level reconciliation of two snapshots of the
   same table (added / removed / changed rows, with the changed columns
   named), one full-outer shuffle join, no window.
@@ -88,6 +90,15 @@ def expectations_report(df: DataFrame, expectations: Sequence[Mapping]) -> DataF
     cardinalities swap them for ``approx_count_distinct`` variants
     explicitly — this report is a release GATE, so it defaults to
     exact."""
+    return _report(df, [], expectations)
+
+
+def _report(df: DataFrame, group_cols: "list[str]",
+            expectations: Sequence[Mapping]) -> DataFrame:
+    """The one body of :func:`expectations_report` (no group column:
+    ``groupBy().agg`` is the same one-row global aggregate as
+    ``df.agg``, also over an empty table) and
+    :func:`expectations_report_by`."""
     names = [e["name"] for e in expectations]
     if len(set(names)) != len(names):
         raise ValueError("expectation names must be unique")
@@ -99,7 +110,7 @@ def expectations_report(df: DataFrame, expectations: Sequence[Mapping]) -> DataF
         F.coalesce(_violation_agg(e), F.lit(0)).cast("bigint").alias(e["name"])
         for e in expectations
     ]
-    one = df.agg(*aggs)
+    one = df.groupBy(*group_cols).agg(*aggs)
     per_exp = F.array(
         *(
             F.struct(
@@ -112,8 +123,11 @@ def expectations_report(df: DataFrame, expectations: Sequence[Mapping]) -> DataF
         )
     )
     return (
-        one.select(F.col("_n_rows").alias("n_rows"), F.explode(per_exp).alias("e"))
+        one.select(
+            *group_cols, F.col("_n_rows").alias("n_rows"), F.explode(per_exp).alias("e")
+        )
         .select(
+            *group_cols,
             "e.expectation",
             "e.kind",
             "e.col_name",
@@ -121,7 +135,7 @@ def expectations_report(df: DataFrame, expectations: Sequence[Mapping]) -> DataF
             "n_rows",
             (F.col("e.n_violations") == 0).alias("passed"),
         )
-        .orderBy("expectation")
+        .orderBy(*group_cols, "expectation")
     )
 
 
@@ -251,40 +265,4 @@ def expectations_report_by(
     applies per group: a group missing entirely produces NO row (no
     evidence), so pair it with an explicit expected-group list when
     absence itself must fail the gate."""
-    names = [e["name"] for e in expectations]
-    if len(set(names)) != len(names):
-        raise ValueError("expectation names must be unique")
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("_n_rows")]
-    aggs += [
-        F.coalesce(_violation_agg(e), F.lit(0)).cast("bigint").alias(e["name"])
-        for e in expectations
-    ]
-    one = df.groupBy(group_col).agg(*aggs)
-    per_exp = F.array(
-        *(
-            F.struct(
-                F.lit(e["name"]).alias("expectation"),
-                F.lit(e["kind"]).alias("kind"),
-                F.lit(e.get("col", "*")).alias("col_name"),
-                F.col(e["name"]).alias("n_violations"),
-            )
-            for e in expectations
-        )
-    )
-    return (
-        one.select(
-            group_col,
-            F.col("_n_rows").alias("n_rows"),
-            F.explode(per_exp).alias("e"),
-        )
-        .select(
-            group_col,
-            "e.expectation",
-            "e.kind",
-            "e.col_name",
-            "e.n_violations",
-            "n_rows",
-            (F.col("e.n_violations") == 0).alias("passed"),
-        )
-        .orderBy(group_col, "expectation")
-    )
+    return _report(df, [group_col], expectations)

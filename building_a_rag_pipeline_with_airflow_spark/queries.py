@@ -42,7 +42,11 @@ from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark import schemas
 from building_a_rag_pipeline_with_airflow_spark.functions import text as tx
-from building_a_rag_pipeline_with_airflow_spark.functions.vectors import l2_norm
+from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+    cosine_or_zero,
+    dot_product,
+    l2_norm,
+)
 from building_a_rag_pipeline_with_airflow_spark.operators import (
     analytics,
     chunking,
@@ -1930,9 +1934,8 @@ def near_dup_embeddings_exact(spark, sf_dir):
     the per-pair work is a single dot product, not three array aggregations.
     The streamed side is repartitioned so the nested-loop join parallelizes
     across cores instead of running on the single parquet-file partition.
+    A zero vector scores 0.0 (`vectors.cosine_or_zero`).
     """
-    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import dot_product
-
     emb = _t(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("id_a"),
@@ -1949,7 +1952,8 @@ def near_dup_embeddings_exact(spark, sf_dir):
         .select(
             "id_a", "id_b",
             F.round(
-                dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb")), 4
+                cosine_or_zero(dot_product("_va", "_vb"), F.col("_na") * F.col("_nb")),
+                4,
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= 0.4)

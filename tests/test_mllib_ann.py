@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from building_a_rag_pipeline_with_airflow_spark.operators import similarity
+from building_a_rag_pipeline_with_airflow_spark.operators import dedup, similarity
 
 
 @pytest.fixture(scope="module")
@@ -772,9 +772,11 @@ def test_blocked_cosine_tile_cap_output_invariant(spark, sf_dir):
 def test_zero_vectors_score_zero_like_topk_cosine(spark, tmp_path):
     """An all-zero query vector or corpus row scores 0.0 (the
     ``vectors.cosine_or_zero`` rule ``topk_cosine`` follows) through
-    every IVF and kNN entry point, where a raw ``dot / (norm * norm)``
-    raised DIVIDE_BY_ZERO under ANSI. stride=2 also draws the zero row
-    as a centroid, so assignment and the probe meet it too."""
+    every IVF, kNN and near-dup pair entry point, where a raw ``dot /
+    (norm * norm)`` raised DIVIDE_BY_ZERO under ANSI (and a NaN tile
+    score dropped the pair from ``blocked_cosine_pairs``). stride=2 also
+    draws the zero row as a centroid, so assignment and the probe meet
+    it too."""
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [0.6, 0.8])],
         "vec_id int, embedding array<float>",
@@ -814,3 +816,21 @@ def test_zero_vectors_score_zero_like_topk_cosine(spark, tmp_path):
     assert any(r.q_id == 2 and r.vec_id == 3 for r in lsh)
     for r in lsh:
         assert r.score == (expect if r.q_id == 1 else zeros)[r.vec_id]
+
+    # the pair matchers at threshold 0.0: every pair with the zero row
+    # is kept, at 0.0
+    all_pairs = {
+        (1, 2): 0.0, (1, 3): 0.0, (1, 4): 0.6,
+        (2, 3): 0.0, (2, 4): 0.8, (3, 4): 0.0,
+    }
+    blocked = similarity.blocked_cosine_pairs(corpus, threshold=0.0)
+    assert {(r.id_a, r.id_b): r.cosine for r in blocked.collect()} == all_pairs
+    near = {
+        (r.id_a, r.id_b): r.cosine
+        for r in dedup.embedding_near_dups(
+            corpus, threshold=0.0, n_planes=2, n_bands=2, dim=2,
+            enforce_plane_budget=False,
+        ).collect()
+    }
+    assert any(3 in pair for pair in near)
+    assert near.items() <= all_pairs.items()

@@ -1,9 +1,10 @@
 """The command-line tools around the engine: the scripts under scripts/
 compile, and bench.py's HEADLINE roster (which the bench, solo_anchor.py
 and capture_plans.py all run) names registered queries once each. Also
-static guards that every package function has a caller and that
-queries.py's rows keep their session fixtures in its fixture helpers. No
-Spark session."""
+static guards that every package function has a caller, that
+queries.py's rows keep their session fixtures in its fixture helpers and
+that every cosine divides through the zero-vector rule. No Spark
+session."""
 
 from __future__ import annotations
 
@@ -175,3 +176,24 @@ def test_every_streaming_gate_freezes_through_the_core():
             if node.name not in allowed[name]
         ]
     assert not found, f"gate state probed outside the freeze core: {found}"
+
+
+def test_cosines_divide_through_the_zero_rule():
+    """No package code divides a ``dot_product(...)`` by hand: every
+    cosine goes through ``vectors.cosine_or_zero`` (or a helper built on
+    it), so an all-zero vector scores 0.0 instead of raising
+    DIVIDE_BY_ZERO under ANSI. Only ``functions/vectors.py``, which
+    defines the rule, is exempt."""
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "functions" / "vectors.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Div)
+                and isinstance(node.left, ast.Call)
+                and ast.unparse(node.left.func).split(".")[-1] == "dot_product"
+            ):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not found, f"raw dot_product divisions: {found}"
