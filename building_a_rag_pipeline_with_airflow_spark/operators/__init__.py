@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,17 +22,11 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     fixes — and it shuffles the *pre-explosion* (small) rows.
 
     The partition-count probe (``df.rdd.getNumPartitions``) runs no job but
-    does build the physical plan once per call, driver-side. Pipelines whose
-    inputs are known to be well-partitioned can switch the guard off
-    session-wide — probe and all — with
-    ``spark.conf.set("spark.graft.ensureMinPartitions", "off")``; splitting
-    the file scan itself (``spark.sql.files.minPartitionNum``) is NOT an
+    does build the physical plan once per call, driver-side. Splitting the
+    file scan itself (``spark.sql.files.minPartitionNum``) is NOT an
     alternative, because a single-row-group parquet file yields empty byte-
     range splits and the explosion still lands on one task."""
-    spark = df.sparkSession
-    if spark.conf.get("spark.graft.ensureMinPartitions", "on") == "off":
-        return df
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -115,6 +110,45 @@ def checkpoint_nostats(df: DataFrame) -> DataFrame:
             "checkpoint", exc_info=True,
         )
         return ck
+
+
+def advance(
+    prev: "DataFrame | None", frame: DataFrame, nostats: bool = False
+) -> DataFrame:
+    """One step of an iterative or staged operator: materialize ``frame``
+    (``checkpoint_nostats`` when ``nostats``, else an eager
+    ``localCheckpoint``), then release ``prev``, the round or stage it
+    replaces, and return the pinned frame. ``prev`` is None on the first
+    step, where nothing is pinned yet."""
+    cur = checkpoint_nostats(frame) if nostats else frame.localCheckpoint(eager=True)
+    if prev is not None:
+        release_checkpoint(prev)
+    return cur
+
+
+def not_converged(
+    who: str, max_iter: int, hint: str, *frames: DataFrame
+) -> RuntimeError:
+    """Release the ``frames`` an iterative operator still pins and return
+    its one non-convergence error, for the caller to raise: a labeling or
+    peeling cut off mid-way would silently splinter its answer."""
+    for f in frames:
+        release_checkpoint(f)
+    return RuntimeError(
+        f"{who}: not converged after max_iter={max_iter} rounds; {hint}"
+    )
+
+
+@contextmanager
+def pinned(df: DataFrame):
+    """``df`` under an eager ``localCheckpoint`` for the ``with`` body,
+    released on every exit, a raise included: the frame a body reads more
+    than once (edges every round, a batch's rows every write)."""
+    ck = df.localCheckpoint(eager=True)
+    try:
+        yield ck
+    finally:
+        release_checkpoint(ck)
 
 
 def require_nonempty(df: DataFrame, what: str = "input") -> DataFrame:

@@ -37,6 +37,7 @@ from building_a_rag_pipeline_with_airflow_spark.functions.text import (
 from building_a_rag_pipeline_with_airflow_spark.operators import (
     ensure_min_partitions,
 )
+from building_a_rag_pipeline_with_airflow_spark.operators.sampling import _md5_slice60
 
 
 def repetition_stats(
@@ -338,6 +339,7 @@ def curate_corpus(
     )
 
     from building_a_rag_pipeline_with_airflow_spark.operators import (
+        advance,
         release_checkpoint,
     )
 
@@ -355,10 +357,6 @@ def curate_corpus(
             # gates already ran) or silently zero every fingerprint
             # with ANSI off, the exact degeneracy the checksum exists
             # to catch
-            from building_a_rag_pipeline_with_airflow_spark.operators.sampling import (
-                _md5_slice60,
-            )
-
             xor_key = _md5_slice60(F.col(id_col).cast("string"))
 
     def _stage_stats(frame: DataFrame) -> "tuple[int, int | None]":
@@ -393,101 +391,100 @@ def curate_corpus(
     # N's lazy plan re-executes stages 1..N-1 — the whole pipeline ran
     # ~5x (once per count plus once for the returned frame's consumer;
     # measured 240 s -> ~60 s at sf0.1). Superseded stage checkpoints
-    # are released as soon as the next stage materializes (the
-    # connected_components discipline); the RETURNED kept frame is the
-    # final checkpoint and belongs to the caller, like CC/pagerank
-    # returns. At 100 TB swap localCheckpoint for storage checkpoints —
-    # the docstring's write-metrics note.
-    n0 = df.count()
-    gates = gopher_quality_flags(df, text_col, id_col, **gate_kw)
-    kept = df.join(
-        gates.where(F.col("keep")).select(id_col), id_col, "left_semi"
-    ).localCheckpoint(eager=True)
-    n1, x1 = _stage_stats(kept)
-    stages.append(("quality_gates", n0, n1, x1))
+    # are released as soon as the next stage materializes
+    # (``operators.advance``, the connected_components discipline); the
+    # RETURNED kept frame is the final checkpoint and belongs to the
+    # caller, like CC/pagerank returns. At 100 TB swap localCheckpoint
+    # for storage checkpoints — the docstring's write-metrics note.
+    kept, rows_in = None, df.count()
 
-    if classifier_gate_kw is not None:
-        cfg = dict(classifier_gate_kw)
-        scores = cfg.pop("scores")
-        cfit = cfg.pop("fit")
-        prob_col = cfg.pop("prob_col", "p")
-        label_col = cfg.pop("label_col", "y")
-        drop_flagged = cfg.pop("drop_flagged", True)
-        # loud coverage contract: every surviving doc must be scored
-        # exactly once — a missing score would silently pass the doc
-        # around the gate, a duplicated score would fan the corpus out
-        sc = scores.select(
-            F.col(id_col), F.col(prob_col).alias("_clf_p")
+    def stage(name: str, frame: "DataFrame | None") -> None:
+        # a skipped stage (frame None) keeps the last survivors
+        nonlocal kept, rows_in
+        if frame is not None:
+            kept = advance(kept, frame)
+        n, x = _stage_stats(kept)
+        stages.append((name, rows_in, n, x))
+        rows_in = n
+
+    # a raise (a coverage or NULL-id check, a failed job) releases the
+    # stage still pinned; the caller never sees it
+    try:
+        gates = gopher_quality_flags(df, text_col, id_col, **gate_kw)
+        stage(
+            "quality_gates",
+            df.join(gates.where(F.col("keep")).select(id_col), id_col, "left_semi"),
         )
-        dup = sc.groupBy(id_col).count().where(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
-            raise ValueError(
-                "curate_corpus: classifier scores carry duplicate ids — "
-                "a duplicated score would fan the corpus out through "
-                "the gate join; dedupe the score table first"
+
+        if classifier_gate_kw is not None:
+            cfg = dict(classifier_gate_kw)
+            scores = cfg.pop("scores")
+            cfit = cfg.pop("fit")
+            prob_col = cfg.pop("prob_col", "p")
+            label_col = cfg.pop("label_col", "y")
+            drop_flagged = cfg.pop("drop_flagged", True)
+            # loud coverage contract: every surviving doc must be scored
+            # exactly once — a missing score would silently pass the doc
+            # around the gate, a duplicated score would fan the corpus out
+            sc = scores.select(
+                F.col(id_col), F.col(prob_col).alias("_clf_p")
             )
-        scored = kept.join(sc, id_col, "left")
-        if scored.where(F.col("_clf_p").isNull()).limit(1).count() > 0:
-            raise ValueError(
-                "curate_corpus: some surviving docs have no classifier "
-                "score — an unscored doc would silently bypass the "
-                "gate; score the whole corpus (or pre-filter it) first"
+            dup = sc.groupBy(id_col).count().where(F.col("count") > 1).limit(1)
+            if dup.count() > 0:
+                raise ValueError(
+                    "curate_corpus: classifier scores carry duplicate ids — "
+                    "a duplicated score would fan the corpus out through "
+                    "the gate join; dedupe the score table first"
+                )
+            scored = kept.join(sc, id_col, "left")
+            if scored.where(F.col("_clf_p").isNull()).limit(1).count() > 0:
+                raise ValueError(
+                    "curate_corpus: some surviving docs have no classifier "
+                    "score — an unscored doc would silently bypass the "
+                    "gate; score the whole corpus (or pre-filter it) first"
+                )
+            gated, _thr = classifier_gate(
+                scored,
+                cfit.select(
+                    F.col(prob_col).alias("_clf_p"),
+                    F.col(label_col).alias("_clf_y"),
+                ),
+                "_clf_p",
+                "_clf_y",
+                cal_col="_clf_p_cal",
+                keep_col="_clf_keep",
+                **cfg,
             )
-        gated, _thr = classifier_gate(
-            scored,
-            cfit.select(
-                F.col(prob_col).alias("_clf_p"),
-                F.col(label_col).alias("_clf_y"),
-            ),
-            "_clf_p",
-            "_clf_y",
-            cal_col="_clf_p_cal",
-            keep_col="_clf_keep",
-            **cfg,
-        )
-        sel = ~F.col("_clf_keep") if drop_flagged else F.col("_clf_keep")
-        prev = kept
-        kept = gated.where(sel).select(*prev.columns).localCheckpoint(
-            eager=True
-        )
-        release_checkpoint(prev)
-        n1b, x1b = _stage_stats(kept)
-        stages.append(("classifier_gate", n1, n1b, x1b))
-        n1 = n1b
+            sel = ~F.col("_clf_keep") if drop_flagged else F.col("_clf_keep")
+            stage("classifier_gate", gated.where(sel).select(*kept.columns))
 
-    clusters = dedup_clusters(
-        kept, text_col, id_col, threshold=near_dup_threshold
-    )
-    dupes = clusters.where(~F.col("is_canonical")).select(id_col)
-    prev = kept
-    kept = kept.join(dupes, id_col, "left_anti").localCheckpoint(eager=True)
-    release_checkpoint(prev)
-    n2, x2 = _stage_stats(kept)
-    stages.append(("near_dup_dedup", n1, n2, x2))
+        clusters = dedup_clusters(
+            kept, text_col, id_col, threshold=near_dup_threshold
+        )
+        dupes = clusters.where(~F.col("is_canonical")).select(id_col)
+        stage("near_dup_dedup", kept.join(dupes, id_col, "left_anti"))
+        release_checkpoint(clusters)  # the stage checkpoint was its last reader
 
-    if benchmark is not None:
-        contaminated = (
-            decontaminate(kept, benchmark, text_col, id_col)
-            .where(F.col("contaminated"))
-            .select(id_col)
-        )
-        prev = kept
-        kept = kept.join(contaminated, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        release_checkpoint(prev)
-    n3, x3 = _stage_stats(kept)
-    stages.append(("decontamination", n2, n3, x3))
+        clean = None
+        if benchmark is not None:
+            contaminated = (
+                decontaminate(kept, benchmark, text_col, id_col)
+                .where(F.col("contaminated"))
+                .select(id_col)
+            )
+            clean = kept.join(contaminated, id_col, "left_anti")
+        stage("decontamination", clean)
 
-    if mixture_weights is not None:
-        sampled, _plan = mixture_reweight(
-            kept, strata_col, mixture_weights, key=id_col
-        )
-        prev = kept
-        kept = sampled.localCheckpoint(eager=True)
-        release_checkpoint(prev)
-    n4, x4 = _stage_stats(kept)
-    stages.append(("mixture_reweight", n3, n4, x4))
+        sampled = None
+        if mixture_weights is not None:
+            sampled, _plan = mixture_reweight(
+                kept, strata_col, mixture_weights, key=id_col
+            )
+        stage("mixture_reweight", sampled)
+    except Exception:
+        if kept is not None:
+            release_checkpoint(kept)
+        raise
 
     if audit_checksum:
         audit = spark.createDataFrame(
@@ -668,11 +665,7 @@ def dsir_importance_weights(
             df.where(F.length(F.trim(F.col(text_col))) > 0)
             .select(*cols, F.explode(tokens(F.lower(F.col(text_col)))).alias("_w"))
         )
-        b = (
-            F.conv(F.substring(F.md5("_w"), 1, 15), 16, 10).cast("bigint")
-            % F.lit(int(n_buckets))
-        ).alias("b")
-        return ex.select(*cols, b)
+        return ex.select(*cols, (_md5_slice60("_w") % F.lit(int(n_buckets))).alias("b"))
 
     raw_tok = _bucketed(raw_df, keep_id=True)
     tgt_tok = _bucketed(target_df, keep_id=False)
@@ -720,11 +713,7 @@ def _nb_token_buckets(
         F.col(src).alias(out),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("_w"),
     )
-    b = (
-        F.conv(F.substring(F.md5("_w"), 1, 15), 16, 10).cast("bigint")
-        % F.lit(int(n_buckets))
-    ).alias("b")
-    return ex.select(out, b)
+    return ex.select(out, (_md5_slice60("_w") % F.lit(int(n_buckets))).alias("b"))
 
 
 def nb_domain_classify(

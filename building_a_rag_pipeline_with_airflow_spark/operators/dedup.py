@@ -38,13 +38,16 @@ from building_a_rag_pipeline_with_airflow_spark.functions.text import (
     tokens,
 )
 from building_a_rag_pipeline_with_airflow_spark.operators import (
+    advance,
     bucket_pairs,
     checkpoint_nostats,
     ensure_min_partitions,
     keep_groups,
-    release_checkpoint,
+    not_converged,
+    pinned,
     require_nonempty,
 )
+from building_a_rag_pipeline_with_airflow_spark.operators.sampling import _md5_slice60
 from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
 MERSENNE_P = 2147483647  # 2^31 - 1: permutation modulus for minhash
@@ -323,11 +326,7 @@ def shingle_id(col: "F.Column | str") -> "F.Column":
     becomes a pure map + per-doc aggregation, which is the 100 TB-safe
     shape (the previous rank-based vocabulary forced a single-partition
     global window)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-        % F.lit(MERSENNE_P)
-    )
+    return _md5_slice60(col) % F.lit(MERSENNE_P)
 
 
 def _permutation_params(num_perm: int, seed: int = 42):
@@ -429,8 +428,7 @@ def simhash(
     oracle reproduces it exactly (DuckDB: CAST('0x'||substr(md5(s),1,15) AS
     BIGINT))."""
     sh = shingles(df, text_col, id_col, n)
-    h = F.md5(F.col("shingle"))
-    word = F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint")
+    word = _md5_slice60(F.col("shingle"))
     bit_cols = [
         F.when(F.shiftright(word, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         .alias(f"b{i}")
@@ -1215,14 +1213,31 @@ def embedding_near_dups(
     )
 
 
-def _cc_broadcast_round(und: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE broadcast round's plan — factored out of
-    :func:`_cc_rounds_broadcast` so the plan-pin test asserts on the
-    EXACT construction the loop runs (the ``graph._round_contrib``
-    convention: a hand-rederived copy in the test would keep passing if
-    this round regressed to sort-merge joins). Returns the
-    ``(node, component, _changed)`` frame the loop checkpoints."""
-    b = F.broadcast(labels)
+def _cc_round(und: DataFrame, labels: DataFrame, bcast: bool) -> DataFrame:
+    """ONE round of :func:`connected_components` — the plan the loop
+    checkpoints, factored out so the plan-pin test asserts on the EXACT
+    construction the operator runs (the ``graph._round_contrib``
+    convention). ``und`` is the pinned symmetric edge checkpoint
+    partitioned by ``src``; ``labels`` the pinned ``(node, component)``
+    frame. Each round:
+
+    * neighbor min: ``und ⋈ labels on dst`` → ``groupBy(src)``;
+    * own label, and one pointer jump through the OLD labels (adopt the
+      label of the label): min-propagation alone moves a min one hop per
+      round, the jump shortens label chains (measured 17 → 12 rounds on a
+      diameter-~12 graph) without a second build of the labels side;
+    * a ``_changed`` flag, so the convergence probe is a flag scan of the
+      just-written blocks, not a join of two checkpoints.
+
+    With ``bcast`` the labels side is ``broadcast`` — built once, reused
+    by all three joins (exchange reuse matches the identical broadcast
+    subtrees), and the ``groupBy(src)`` needs no exchange because ``und``
+    is src-partitioned and a broadcast join preserves that. Without it
+    the same joins shuffle the labels side. Labels only ever decrease and
+    only ever hold ids of same-component members, so both strategies
+    reach the same min-member labeling — pinned by the oracle and the
+    variant-equality test."""
+    b = F.broadcast(labels) if bcast else labels
     nm = (
         und.join(b, und["dst"] == labels["node"])
         .groupBy(F.col("src").alias("node"))
@@ -1250,54 +1265,6 @@ def _cc_broadcast_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _cc_rounds_broadcast(
-    und: DataFrame, labels: DataFrame, max_iter: int
-) -> DataFrame:
-    """The broadcast-labels round loop of :func:`connected_components`
-    (see its docstring for the strategy and measurements). ``und`` is
-    the pinned symmetric edge checkpoint partitioned by ``src``;
-    ``labels`` the pinned ``(node, component)`` start table. Each round:
-
-    * ``b = broadcast(labels)`` — built once, reused by all three joins
-      (Spark's exchange reuse matches the identical broadcast subtrees);
-    * neighbor min: ``und ⋈ b on dst`` → ``groupBy(src)`` — no exchange
-      (``und`` is src-partitioned and the broadcast join preserves it);
-    * own label + one pointer jump through the OLD labels: two more
-      map-side lookups against the same broadcast — the jump shortens
-      label chains (measured 17 → 12 rounds on a diameter-~12 graph)
-      without the extra broadcast build a jump through the NEW frame
-      would cost;
-    * the ``_changed`` flag rides the checkpoint; the probe is a flag
-      scan of the new blocks, not a join.
-
-    Labels only ever decrease and only ever hold ids of same-component
-    members (neighbors' labels, or the old label of such a label), so
-    the fixpoint is the same min-member labeling the shuffle path
-    converges to — pinned by the oracle and the variant-equality test.
-    """
-    for _ in range(max_iter):
-        new_labels = checkpoint_nostats(_cc_broadcast_round(und, labels))
-        converged = new_labels.where("_changed").isEmpty()
-        release_checkpoint(labels)
-        labels = new_labels.select("node", "component")
-        # carry the checkpoint handle so release_checkpoint (next round
-        # or the caller) frees the real blocks through the projection
-        labels._graft_ckpt = getattr(new_labels, "_graft_ckpt", new_labels)
-        if converged:
-            release_checkpoint(und)
-            return labels
-    # error path: the final round's labels checkpoint has no caller to
-    # release it — free it here with the edges or the blocks stay pinned
-    # for the session (ADVICE r16; memory-discipline contract)
-    release_checkpoint(labels)
-    release_checkpoint(und)
-    raise RuntimeError(
-        f"connected_components: not converged after max_iter="
-        f"{max_iter} rounds; component diameter exceeds the bound "
-        "(raise max_iter, or check the edge list for chain shapes)"
-    )
-
-
 def connected_components(
     edges: DataFrame,
     a_col: str = "id_a",
@@ -1316,48 +1283,41 @@ def connected_components(
     a SQL oracle (recursive-CTE transitive closure) reproduces the result
     exactly.
 
-    Scale shape: each round is two shuffles (labels ⋈ edges on either
-    endpoint + a min-aggregate); rounds needed ≈ graph diameter, and
-    near-dup graphs are shallow (duplicate clusters are cliques or stars,
-    diameter ≤ ~3), so the loop runs 3-5 rounds in practice — the
-    driver-side loop only submits jobs, data never leaves the cluster.
-    ``max_iter`` bounds pathological chains; label-propagation CC at this
+    Scale shape: rounds needed ≈ graph diameter (less with the pointer
+    jump), and near-dup graphs are shallow (duplicate clusters are
+    cliques or stars, diameter ≤ ~3), so the loop runs 3-5 rounds in
+    practice — the driver-side loop only submits jobs, data never leaves
+    the cluster. ``max_iter`` bounds pathological chains with a raise: a
+    non-converged labeling would silently splinter long-chain components
+    (several "canonical" copies, no signal). Label-propagation CC at this
     shape is the standard MapReduce formulation (hash-to-min family).
     Output: (node, component) for every node appearing in any edge.
 
-    Memory discipline: every superseded round's checkpoint blocks are
-    unpersisted EXPLICITLY once the next round has materialized (the
-    convergence probe is the last reader of the old labels). Relying on
-    the ContextCleaner to notice dead references is not enough — repeated
-    calls in one session were measured accumulating pinned blocks until a
-    third invocation ran 4× slower (8.9 s → 33.8 s at sf0.1). The one
-    dataset left pinned is the RETURNED labels frame (its lineage is
-    truncated, so unpersisting it would make it unrecomputable); it is
-    output-sized — one row per node in any edge.
+    Memory discipline: every round is checkpointed (without truncation
+    round N's plan nests rounds 1..N-1 and the probe re-executes the
+    whole history), and the superseded round's blocks are released as
+    soon as the next one has materialized (``operators.advance``).
+    Relying on the ContextCleaner is not enough — repeated calls in one
+    session were measured accumulating pinned blocks until a third
+    invocation ran 4× slower (8.9 s → 33.8 s at sf0.1). The edges are
+    pinned for the loop only; the one dataset left pinned is the
+    RETURNED labels frame (its lineage is truncated, so unpersisting it
+    would make it unrecomputable); it is output-sized — one row per node
+    in any edge. The error path releases everything.
 
-    Join strategy (r16 optimization round): the labels frame is one row
-    per NODE — tiny next to the edges — so while the node count fits a
+    Join strategy (:func:`_cc_round`): the labels frame is one row per
+    NODE — tiny next to the edges — so while the node count fits a
     broadcast (``broadcast_nodes``, the `graph.pagerank` convention),
     each round ships the labels to the pinned edge partitions instead of
-    exchanging both sides: ONE broadcast build per round, reused by every
-    join in the round (neighbor lookup, own-label lookup, and a pointer
-    jump through the PREVIOUS labels — through OLD labels, not the frame
-    being built, so no second broadcast build and no duplicated subtree
-    per round; a jump through the new frame measured slower for exactly
-    that reason). ``und`` is partitioned by ``src`` at build time (the
-    one edge-scale exchange — HashPartitioning(src) satisfies the
-    (src, dst) clustering the distinct needs, so this REPLACES the old
-    distinct exchange rather than adding one; per-src fan-in is bounded
-    by the node count), so the per-round ``groupBy(src)`` needs no
-    exchange: a round is one node-scale broadcast build plus one
-    map-side job over the pinned edges. The convergence probe rides the
-    checkpoint as a ``_changed`` flag column (labels only ever decrease,
-    so ``new < old`` ⟺ ``new != old``) — a flag scan of the just-written
-    blocks instead of a node-keyed join of two checkpoints. Past
-    ``broadcast_nodes`` the pre-r16 shuffle formulation runs unchanged.
-    Measured at sf0.1 (solo warm best-of-3, r16 host): deep-chain
-    embedding graph 6.55 s → 3.40 s, shallow LSH graph 2.15 s →
-    ~1.5-2.1 s, byte-identical labels on both graphs."""
+    exchanging both sides: a round is one node-scale broadcast build plus
+    one map-side job over the edges. ``und`` is partitioned by ``src`` at
+    build time (the one edge-scale exchange — HashPartitioning(src)
+    satisfies the (src, dst) clustering the distinct needs, so it
+    REPLACES the distinct exchange rather than adding one). Past
+    ``broadcast_nodes`` the same round shuffles the labels side instead.
+    Measured at sf0.1 (solo warm best-of-3): deep-chain embedding graph
+    6.55 s → 3.40 s, shallow LSH graph 2.15 s → ~1.5-2.1 s against the
+    earlier all-shuffle rounds, byte-identical labels on both graphs."""
     und = (
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
@@ -1365,103 +1325,36 @@ def connected_components(
         )
         .repartition("src")
         .distinct()
-        .localCheckpoint(eager=True)  # edges are re-joined every round
     )
-    # checkpoint_nostats, not plain localCheckpoint: each round SELF-joins
-    # the labels frame (the pointer-jumping step), and localCheckpoint
-    # preserves the source plan's Statistics — so sizeInBytes SQUARES per
-    # round (bit-length doubles; measured 20 → 9721 bits in 10 rounds) and
-    # Catalyst dies at ~27 rounds with "BigInteger would overflow
-    # supported range" (hit on the r8 25x scale run, where chance-edge
-    # chains pushed CC past 25 rounds). Stripping origin stats caps the
-    # estimate at defaultSizeInBytes — constant per round.
-    labels = checkpoint_nostats(
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-    )
-    # one cheap scalar over the just-materialized node-scale checkpoint
-    # decides the join strategy for every round (the pagerank pattern)
-    if labels.count() <= int(broadcast_nodes):
-        return _cc_rounds_broadcast(und, labels, max_iter)
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und["dst"] == labels["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("component").alias("_nbr_min"))
+    with pinned(und) as und:  # edges are re-joined every round
+        # checkpoint_nostats, not plain localCheckpoint: each round
+        # SELF-joins the labels frame (the pointer jump), and
+        # localCheckpoint keeps the source plan's Statistics — so
+        # sizeInBytes SQUARES per round and Catalyst dies at ~27 rounds
+        # with "BigInteger would overflow supported range" (hit on the r8
+        # 25x scale run). Stripping origin stats caps the estimate.
+        labels = checkpoint_nostats(
+            und.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("component"))
         )
-        # Truncate lineage EVERY round (localCheckpoint; swap for
-        # setCheckpointDir+checkpoint when executor loss matters): without
-        # it round N's plan nests rounds 1..N-1, Catalyst re-optimizes an
-        # exponentially growing tree, and the convergence probe re-executes
-        # the whole history — the standard iterative-DataFrame trap.
-        cand = labels.join(neighbor_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("component"),
-                F.coalesce("_nbr_min", F.col("component")),
-            ).alias("component"),
+        # one cheap scalar over the just-materialized node-scale
+        # checkpoint picks the join strategy for every round
+        bcast = labels.count() <= int(broadcast_nodes)
+        for _ in range(max_iter):
+            new = advance(labels, _cc_round(und, labels, bcast), nostats=True)
+            labels = new.select("node", "component")
+            # carry the checkpoint handle so release_checkpoint (next
+            # round or the error path) frees the real blocks
+            labels._graft_ckpt = getattr(new, "_graft_ckpt", new)
+            if new.where("_changed").isEmpty():
+                return labels
+        raise not_converged(
+            "connected_components", max_iter,
+            "component diameter exceeds the bound (raise max_iter, or "
+            "check the edge list for chain shapes)",
+            labels,
         )
-        # Path compression (pointer jumping): also adopt the label OF the
-        # current label — component ids are always node ids, so the
-        # label's own row exists in cand. Min-propagation alone moves a
-        # min ONE hop per round (rounds ≈ diameter); compressing through
-        # the label as well makes the distance-to-min roughly halve each
-        # round (rounds ≈ log₂ diameter) at the cost of one extra
-        # node-keyed join INSIDE the same checkpoint job, not an extra
-        # action. Measured on sf0.1 embedding near-dup chains (diameter
-        # ~12): 12.8 s → ~6 s, same fixpoint, oracle unchanged.
-        new_labels = checkpoint_nostats(
-            cand.join(
-                cand.select(
-                    F.col("node").alias("component"),
-                    F.col("component").alias("_cc"),
-                ),
-                "component",
-                "left",
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("_cc", F.col("component")),
-                ).alias("component"),
-            )
-        )
-        converged = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .isEmpty()
-        )
-        # the probe above was the last reader of the old labels' blocks —
-        # release them now, or repeated calls pin every round's checkpoint.
-        # Must be release_checkpoint, not Dataset.unpersist(): the latter
-        # is a verified NO-OP on locally-checkpointed frames (the blocks
-        # live on the underlying RDD, not in the cache manager).
-        release_checkpoint(labels)
-        labels = new_labels
-        if converged:
-            break
-    else:
-        # Label propagation needs ~diameter rounds; returning a
-        # non-converged labeling would silently splinter long-chain
-        # components (multiple nodes satisfy node==component, so dedup
-        # would keep several "canonical" copies with no signal). Raise —
-        # near-dup graphs are diameter ≤ ~3, so hitting this means the
-        # edge list isn't the clique/star shape this operator assumes and
-        # the caller should raise max_iter deliberately.
-        # error path: release the final round's labels checkpoint too
-        # (ADVICE r16) — no caller ever sees it
-        release_checkpoint(labels)
-        release_checkpoint(und)
-        raise RuntimeError(
-            f"connected_components: not converged after max_iter="
-            f"{max_iter} rounds; component diameter exceeds the bound "
-            "(raise max_iter, or check the edge list for chain shapes)"
-        )
-    release_checkpoint(und)  # the returned labels no longer read the edges
-    return labels
 
 
 def dedup_clusters(
@@ -1475,13 +1368,16 @@ def dedup_clusters(
     """Near-dup clusters: Jaccard candidate pairs above ``threshold`` →
     connected components → (doc, component, is_canonical). The keep-set is
     ``is_canonical`` rows plus every doc in no pair (those never enter the
-    edge list and are trivially canonical)."""
+    edge list and are trivially canonical). The frame reads the pinned
+    component labels; ``release_checkpoint`` on it frees them."""
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, n=n, threshold=threshold, max_posting=max_posting
     )
     comp = connected_components(pairs, "id_a", "id_b")
-    return comp.select(
+    out = comp.select(
         F.col("node").alias(id_col),
         "component",
         (F.col("node") == F.col("component")).alias("is_canonical"),
     )
+    out._graft_ckpt = getattr(comp, "_graft_ckpt", comp)
+    return out

@@ -40,7 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from building_a_rag_pipeline_with_airflow_spark.operators import release_checkpoint
+from building_a_rag_pipeline_with_airflow_spark.operators import (
+    advance,
+    not_converged,
+    pinned,
+    release_checkpoint,
+)
 
 
 def _normalized_edges(e: DataFrame, out_w: DataFrame, use_bcast: bool) -> DataFrame:
@@ -155,25 +160,18 @@ def pagerank(
                 .first()
             )
             extra = d * float(row[0] or 0.0) / n
-        new_ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
+        # checkpoint the round (truncates per-round lineage) and release
+        # the superseded one; the first round's ranks are not pinned
+        ranks = advance(
+            ranks if i else None,
+            nodes.join(contrib, "node", "left").select(
                 "node",
                 (
                     F.lit(base + extra)
                     + F.lit(d) * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("pr"),
-            )
-            .localCheckpoint(eager=True)  # truncate per-round lineage
+            ),
         )
-        if i > 0:
-            # new_ranks is materialized; the superseded round's checkpoint
-            # blocks have no readers left — release them (same discipline
-            # as dedup.connected_components) or every round stays pinned.
-            # NB: plain Dataset.unpersist() is a no-op on checkpoints —
-            # see operators.release_checkpoint.
-            release_checkpoint(ranks)
-        ranks = new_ranks
     norm.unpersist()
     nodes.unpersist()
     if dangling is not None:
@@ -263,46 +261,40 @@ def triangle_count(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        # e is read by the degree agg, orientation, wedge sides, closing
-        # join and the edge count — 7 consumers; materialize once or an
-        # upstream construction pipeline re-executes per consumer (the
-        # same discipline as connected_components' edge checkpoint)
-        .localCheckpoint(eager=True)
     )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    keyed = (
-        e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("_da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("_db")), "b")
-    )
-    ka = F.struct(F.col("_da").alias("d"), F.col("a").alias("n"))
-    kb = F.struct(F.col("_db").alias("d"), F.col("b").alias("n"))
-    oriented = keyed.select(
-        F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(ka < kb, kb).otherwise(ka).alias("kv"),
-    )
-    x = oriented.alias("x")
-    y = oriented.alias("y")
-    wedges = x.join(
-        y, (F.col("x.u") == F.col("y.u")) & (F.col("x.kv") < F.col("y.kv"))
-    ).select(F.col("x.v").alias("u"), F.col("y.v").alias("v"))
-    closing = oriented.select("u", "v")
-    tri = wedges.join(closing, ["u", "v"], "left_semi")
-    n_tri = tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
-    n_edge = e.agg(F.count("*").cast("bigint").alias("n_edges"))
-    # Compute the one-row result eagerly (localCheckpoint), then RELEASE
-    # the edge-sized checkpoint — returning a frame that still reads `e`
-    # would keep the edge blocks pinned for the whole session, the exact
-    # accumulation connected_components' docstring measured as a 4×
-    # slowdown across repeated calls.
-    out = n_edge.crossJoin(n_tri).localCheckpoint(eager=True)
-    release_checkpoint(e)
-    return out
+    # e is read by the degree agg, orientation, wedge sides, closing join
+    # and the edge count — 7 consumers; pin it once or an upstream
+    # construction pipeline re-executes per consumer. The one-row result
+    # is computed eagerly inside the block, so the edge blocks are
+    # released on return instead of staying pinned for the session.
+    with pinned(e) as e:
+        deg = (
+            e.select(F.col("a").alias("node"))
+            .unionByName(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("deg"))
+        )
+        keyed = (
+            e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("_da")), "a")
+            .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("_db")), "b")
+        )
+        ka = F.struct(F.col("_da").alias("d"), F.col("a").alias("n"))
+        kb = F.struct(F.col("_db").alias("d"), F.col("b").alias("n"))
+        oriented = keyed.select(
+            F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(ka < kb, kb).otherwise(ka).alias("kv"),
+        )
+        x = oriented.alias("x")
+        y = oriented.alias("y")
+        wedges = x.join(
+            y, (F.col("x.u") == F.col("y.u")) & (F.col("x.kv") < F.col("y.kv"))
+        ).select(F.col("x.v").alias("u"), F.col("y.v").alias("v"))
+        closing = oriented.select("u", "v")
+        tri = wedges.join(closing, ["u", "v"], "left_semi")
+        n_tri = tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
+        n_edge = e.agg(F.count("*").cast("bigint").alias("n_edges"))
+        return n_edge.crossJoin(n_tri).localCheckpoint(eager=True)
 
 
 def k_core(
@@ -320,9 +312,9 @@ def k_core(
     Iterative peeling, the same execution discipline as
     :func:`pagerank` / ``dedup.connected_components``: each round one
     degree aggregate finds under-degree nodes, one (broadcastable)
-    anti-join drops their edges, ``localCheckpoint`` truncates lineage
-    and the superseded round's blocks are RELEASED via
-    ``release_checkpoint`` (plain unpersist is a no-op on checkpoints).
+    anti-join drops their edges, and ``operators.advance`` checkpoints
+    the round (truncating lineage) and RELEASES the superseded round's
+    blocks (plain unpersist is a no-op on checkpoints).
     The `isEmpty` convergence probe reads one partition. Rounds are
     bounded by the peeling depth (≤ longest chain of cascading
     removals); ``max_iter`` guards pathological chains with a raise, the
@@ -346,18 +338,15 @@ def k_core(
         weak = deg.where(F.col("_d") < int(k)).select("src")
         if weak.isEmpty():
             return und
-        nxt = (
+        und = advance(
+            und,
             und.join(weak, "src", "left_anti")
             .join(weak.withColumnRenamed("src", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
+            .select("src", "dst"),
         )
-        release_checkpoint(und)
-        und = nxt
         if und.isEmpty():
             return und
-    release_checkpoint(und)
-    raise RuntimeError(
-        f"k_core: not converged after max_iter={max_iter} peeling rounds; "
-        "raise max_iter for graphs with long removal cascades"
+    raise not_converged(
+        "k_core", max_iter,
+        "raise max_iter for graphs with long removal cascades", und,
     )

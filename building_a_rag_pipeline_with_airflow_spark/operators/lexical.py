@@ -596,7 +596,7 @@ def bm25_topk_from_index(
     # |terms| rows in a driver-local frame, folded at plan time (no job)
     bucket_rows = (
         local_frame(spark, [(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
+        .select(index_layout.bucket_of("term", n_buckets).alias("b"))
         .collect()
     )
     buckets = sorted({r["b"] for r in bucket_rows})
@@ -638,7 +638,7 @@ def bm25_topk_many_from_index(
     of literals); looping it over a query workload costs O(q) driver
     round-trips and O(q) jobs. Here the mapping runs IN-PLAN: the
     workload's distinct terms get their bucket via the same
-    ``pmod(xxhash64(term), n_buckets)`` the build used, and the postings
+    ``index_layout.bucket_of`` rule the build used, and the postings
     scan is pruned by a broadcast join on ``(bucket, term)`` — the bucket
     side becomes a dynamic-partition-pruning filter on the scan (plan
     shows ``dynamicpruning`` in PartitionFilters), the term side a
@@ -666,9 +666,7 @@ def bm25_topk_many_from_index(
     term_buckets = (
         qt.select("term")
         .distinct()
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
+        .withColumn("bucket", index_layout.bucket_of("term", n_buckets))
     )
     post, contrib = _index_contrib(
         spark,

@@ -301,7 +301,7 @@ def trigram_topk_from_index(
     meta = index_layout.read_meta(spark, path)
     n_buckets = int(meta.n_buckets)
     qgrams = qpost.select("gram").distinct().withColumn(
-        "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("gram", n_buckets)
     )
     raw = spark.read.parquet(f"{path}/postings")
     # max_posting=None disables the stop-gram guard on BOTH paths — the

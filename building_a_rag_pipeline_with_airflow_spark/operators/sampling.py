@@ -29,12 +29,13 @@ BUCKETS = 10_000
 
 
 def _md5_slice60(s: Column) -> Column:
-    """The module's ONE canonical 60-bit content hash: first 15 hex chars
+    """The package's ONE canonical 60-bit content hash: first 15 hex chars
     of md5(s) as a non-negative bigint — the slice every deterministic
-    sampler here derives buckets/folds/shards/uniforms from, kept in one
-    place so the DuckDB-reproducibility contract (``CAST('0x' ||
-    substr(md5(s), 1, 15) AS BIGINT)``, same slice as dedup.shingle_id)
-    has exactly one Spark-side spelling."""
+    sampler here derives buckets/folds/shards/uniforms from, and
+    ``dedup.shingle_id`` and curation's hashed token features too, kept
+    in one place so the DuckDB-reproducibility contract (``CAST('0x' ||
+    substr(md5(s), 1, 15) AS BIGINT)``) has exactly one Spark-side
+    spelling."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
+from building_a_rag_pipeline_with_airflow_spark.operators.sampling import _md5_slice60
 
 
 def hash_priority(id_col: "str | Column") -> Column:
@@ -45,9 +46,7 @@ def hash_priority(id_col: "str | Column") -> Column:
     engine-reproducible hash order every bottom-k sample uses (the
     `sampling.hash_sample` md5 slice)."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.conv(
-        F.substring(F.md5(c.cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    return _md5_slice60(c.cast("string"))
 
 
 def bottomk_sample(

@@ -25,6 +25,7 @@ from building_a_rag_pipeline_with_airflow_spark.operators.retrieval import (
     assemble_context,
     retrieve_chunks,
 )
+from building_a_rag_pipeline_with_airflow_spark.sources.index_layout import bucket_of
 
 STRATEGIES = ("fixed", "recursive", "semantic")
 
@@ -129,17 +130,16 @@ def write_index_bucketed(
     mode: str = "overwrite",
 ) -> None:
     """Persist a chunk/embedding index partitioned by a stable doc-hash
-    bucket (``doc_bucket = xxhash64(doc_id) % n``) — the layout that makes
-    DOCUMENT UPSERTS cheap: every chunk of one document lives in exactly
-    one partition directory, so revising a document rewrites one bucket,
-    not the index (see :func:`upsert_documents`).
+    bucket (``doc_bucket = index_layout.bucket_of(doc_id, n)``) — the
+    layout that makes DOCUMENT UPSERTS cheap: every chunk of one document
+    lives in exactly one partition directory, so revising a document
+    rewrites one bucket, not the index (see :func:`upsert_documents`).
 
     Size ``n_doc_buckets`` so a bucket is a few files at your corpus size;
     at 100 TB this is thousands, not 64."""
     (
         index.withColumn(
-            "doc_bucket",
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)).cast("int"),
+            "doc_bucket", bucket_of(F.col("doc_id").cast("string"), n_doc_buckets)
         )
         .repartition(n_doc_buckets, "doc_bucket")
         .write.mode(mode)
@@ -180,13 +180,11 @@ def upsert_documents(
     old ones must still go. A bucket left with no rows at all is absent
     from the dynamic overwrite's output, so the write would keep its old
     files; such a bucket directory is deleted after the write."""
-    bucket_of = F.pmod(
-        F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)
-    ).cast("int")
+    doc_bucket = bucket_of(F.col("doc_id").cast("string"), n_doc_buckets)
     changed_ids = changed_docs.select("doc_id").distinct()
     affected = sorted(
         r.doc_bucket
-        for r in changed_ids.select(bucket_of.alias("doc_bucket")).distinct().collect()
+        for r in changed_ids.select(doc_bucket.alias("doc_bucket")).distinct().collect()
     )  # bucket ids — metadata-scale driver list, becomes the partition filter
     if not affected:
         return []
@@ -199,7 +197,7 @@ def upsert_documents(
     )
     if keep_cols:
         fresh = build_index(changed_docs, strategy=strategy, dim=dim, keep_cols=keep_cols)
-    out = kept.unionByName(fresh.withColumn("doc_bucket", bucket_of).select(*kept.columns))
+    out = kept.unionByName(fresh.withColumn("doc_bucket", doc_bucket).select(*kept.columns))
     # one current file per affected bucket: a rewritten bucket loses it
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())

@@ -55,7 +55,7 @@ import os
 from dataclasses import dataclass
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
@@ -440,13 +440,21 @@ class PostingsFamily:
         return [(sub, make(df, rows, params)) for sub, make in self.sides]
 
 
+def bucket_of(key: "Column | str", n: int) -> Column:
+    """THE bucket rule of every hash-bucketed layout, ``pmod(xxhash64(key),
+    n)`` as int: the postings families' ``bucket`` and the chunk index's
+    ``doc_bucket``. Writers and readers must agree on it, or partition
+    pruning silently misses rows."""
+    return F.pmod(F.xxhash64(key), F.lit(int(n))).cast("int")
+
+
 def write_postings(
     family: PostingsFamily, rows: DataFrame, path: str, n_buckets: int,
     sides=(), *, batch_id: int = BASE_BATCH_ID, extend: bool = False,
 ) -> None:
     """THE postings write of a :class:`PostingsFamily`: count ``rows`` per
     key (cast to the family's stored count type), join the counts back,
-    hash-bucket by ``pmod(xxhash64(key), n_buckets)`` and write sorted by
+    hash-bucket by :func:`bucket_of` and write sorted by
     key under ``<path>/<rows_subdir>``; then each ``(subdir, frame)`` side
     table under the same batch. Its three callers differ only in what
     they hand it: a base build gives the corpus' rows (batch ``-1``,
@@ -457,9 +465,8 @@ def write_postings(
     counts = rows.groupBy(key).agg(
         F.count("*").cast(family.count_type).alias(family.count)
     )
-    bucket = F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     write_index_rows(
-        rows.join(counts, key).withColumn("bucket", bucket),
+        rows.join(counts, key).withColumn("bucket", bucket_of(key, n_buckets)),
         f"{path}/{family.rows_subdir}", partition_cols=("bucket",),
         sort_col=key, n_files=n_buckets, batch_id=batch_id, extend=extend,
     )
@@ -482,17 +489,14 @@ def start_pinned_extender(
     are released on every path — a skipped batch or a failed write
     (Structured Streaming retries it) must not leak one pinned RDD per
     batch."""
-    from building_a_rag_pipeline_with_airflow_spark.operators import release_checkpoint
+    from building_a_rag_pipeline_with_airflow_spark.operators import pinned
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         meta = read_meta(batch_df.sparkSession, index_path)
         p = {**meta.asDict(), **(params or {})}
-        rows = derive(batch_df, p).localCheckpoint(eager=True)
-        try:
+        with pinned(derive(batch_df, p)) as rows:
             if not rows.isEmpty():
                 write(batch_df, rows, p, batch_id)
-        finally:
-            release_checkpoint(rows)
 
     return start_extender(stream, checkpoint_path, write_batch, available_now)
 

@@ -73,6 +73,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from building_a_rag_pipeline_with_airflow_spark.operators.sampling import _md5_slice60
 from building_a_rag_pipeline_with_airflow_spark.pipeline import build_index
 from building_a_rag_pipeline_with_airflow_spark.session import local_frame
 from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
@@ -89,12 +90,7 @@ def _fingerprint(df: DataFrame) -> "tuple[int, int]":
     row = df.agg(
         F.count("*").alias("n"),
         F.coalesce(
-            F.bit_xor(
-                F.conv(
-                    F.substring(F.md5(F.concat(*map(field, df.columns))), 1, 15),
-                    16, 10,
-                ).cast("bigint")
-            ),
+            F.bit_xor(_md5_slice60(F.concat(*map(field, df.columns)))),
             F.lit(0),
         ).alias("fp"),
     ).first()
@@ -717,7 +713,7 @@ def streaming_duplication_profile(
     partials from different window sizes or floors never fold together."""
     from building_a_rag_pipeline_with_airflow_spark.operators import (
         dedup as _dd,
-        release_checkpoint,
+        pinned,
     )
 
     who = "streaming_duplication_profile"
@@ -743,12 +739,10 @@ def streaming_duplication_profile(
         wins = _dd._window_hashes(
             batch_df, text_col, id_col, int(k), max_doc_tokens
         )
-        counts = (
-            wins.groupBy(F.col("_h").alias("h"))
-            .agg(F.count("*").cast("bigint").alias("c"))
-            .localCheckpoint(eager=True)  # totals + floor + write: 3 refs
+        counts = wins.groupBy(F.col("_h").alias("h")).agg(
+            F.count("*").cast("bigint").alias("c")
         )
-        try:
+        with pinned(counts) as counts:  # totals + floor + write: 3 refs
             # a non-empty batch can still derive ZERO windows (all-blank
             # docs, every doc under the frozen k): the batch operator over
             # the accumulated rows sees them contribute nothing too
@@ -770,8 +764,6 @@ def streaming_duplication_profile(
                 index_layout._write_tagged(
                     partial, f"{state_path}/partials", batch_id
                 )
-        finally:
-            release_checkpoint(counts)
 
     return _start_gate(
         docs_stream, checkpoint_path, compacted_through, write_partials,

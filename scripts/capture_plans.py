@@ -6,9 +6,11 @@ PushedFilters, Python-eval nodes) can be asserted before/after each
 change without re-running the bench.
 
 What is written is normalized: expression ids (``#123``), exchange plan
-ids, lambda-variable counters, temp directories and the repo location
-become fixed placeholders, so one ``diff -r`` of a capture made from one
-checkout against a capture made from another is the plan check.
+ids, RDD ids and call sites (``SQLExecutionRDD[91] at <site>``, which
+checkpointed and local frames print), lambda-variable counters, temp
+directories and the repo location become fixed placeholders, so one
+``diff -r`` of a capture made from one checkout against a capture made
+from another is the plan check.
 
 Usage: python scripts/capture_plans.py <round> <tag> [name ...]
 """
@@ -29,6 +31,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _NORMALIZE = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"at \S+:\d+"), "at <site>"),
     (re.compile(r"(lambda [a-z]+)_\d+"), r"\1_N"),
     (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)]+"), "<tmp>"),
     (re.compile(re.escape(REPO)), "<repo>"),

@@ -514,7 +514,7 @@ def test_connected_components_broadcast_equals_shuffle(spark, sf_dir):
 def test_cc_broadcast_round_never_sortmergejoins(spark):
     """The broadcast CC round must broadcast the node-sized labels into
     the pinned src-partitioned edges — never sort-merge-shuffle the edge
-    side. Asserts on dedup._cc_broadcast_round, the EXACT helper the
+    side. Asserts on dedup._cc_round, the EXACT helper the
     loop checkpoints (the graph._round_contrib convention), over the
     operator's own und/labels construction."""
     from pyspark.sql import functions as F
@@ -542,7 +542,7 @@ def test_cc_broadcast_round_never_sortmergejoins(spark):
         .select("node", F.col("node").alias("component"))
     )
     plan = (
-        dedup._cc_broadcast_round(und, labels)
+        dedup._cc_round(und, labels, True)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -221,15 +221,10 @@ def test_build_filter_short_tuple_filters_nothing(spark):
     assert [r.id for r in out.collect()] == [2]
 
 
-def test_ensure_min_partitions_conf_off(spark, sf_dir):
+def test_ensure_min_partitions_splits_single_file_input(spark, sf_dir):
     from building_a_rag_pipeline_with_airflow_spark.operators import ensure_min_partitions
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    spark.conf.set("spark.graft.ensureMinPartitions", "off")
-    try:
-        assert ensure_min_partitions(docs) is docs  # untouched, no probe
-    finally:
-        spark.conf.unset("spark.graft.ensureMinPartitions")
     assert ensure_min_partitions(docs).rdd.getNumPartitions() >= 2
 
 

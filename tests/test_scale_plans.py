@@ -629,13 +629,20 @@ def test_checkpoint_hygiene_failures_are_logged(caplog):
     )
 
 
-def test_iterative_ops_release_superseded_checkpoints(spark):
+def test_iterative_ops_release_superseded_checkpoints(spark, sf_dir, caplog):
     """connected_components and pagerank checkpoint per round; every
     superseded round's blocks must actually be released (plain
     Dataset.unpersist() is a no-op on checkpoints — the regression this
     guards is operators.release_checkpoint being bypassed). Only the
-    returned frame's own checkpoint may stay pinned."""
-    from building_a_rag_pipeline_with_airflow_spark.operators import dedup, graph
+    returned frame's own checkpoint may stay pinned; a non-converged
+    operator pins nothing, and curate_corpus pins only its kept frame."""
+    import logging
+
+    from building_a_rag_pipeline_with_airflow_spark.operators import (
+        curation,
+        dedup,
+        graph,
+    )
 
     sc = spark.sparkContext
 
@@ -656,6 +663,58 @@ def test_iterative_ops_release_superseded_checkpoints(spark):
     assert pr.count() == 3
     after = sc._jsc.sc().getPersistentRDDs().size()
     assert after - before <= 1
+
+    # the shuffle-side rounds release the same way
+    before = after
+    labels = dedup.connected_components(
+        edges, a_col="a", b_col="b", broadcast_nodes=0
+    )
+    assert labels.count() == 5
+    after = sc._jsc.sc().getPersistentRDDs().size()
+    assert after - before <= 1
+
+    # a raise releases the last round and the edges, on both strategies
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
+    )
+    for nodes in (2_000_000, 0):
+        before = sc._jsc.sc().getPersistentRDDs().size()
+        with pytest.raises(RuntimeError, match="not converged"):
+            dedup.connected_components(path, max_iter=2, broadcast_nodes=nodes)
+        assert sc._jsc.sc().getPersistentRDDs().size() - before <= 0
+    tail = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e"), ("e", "f")],
+        "src string, dst string",
+    )
+    before = sc._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="not converged"):
+        graph.k_core(tail, k=2, max_iter=1)
+    assert sc._jsc.sc().getPersistentRDDs().size() - before <= 0
+
+    # every superseded stage and the near-dup labels are released, and
+    # the first stage (nothing to release yet) logs no hygiene warning
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    before = sc._jsc.sc().getPersistentRDDs().size()
+    with caplog.at_level(logging.WARNING):
+        kept, audit = curation.curate_corpus(
+            docs, benchmark=docs.where(F.col("doc_id") % 97 == 0),
+            mixture_weights={"src0": 2.0}, near_dup_threshold=0.3,
+        )
+        assert len(audit.collect()) == 4
+    assert sc._jsc.sc().getPersistentRDDs().size() - before <= 1
+    assert not [
+        r for r in caplog.records
+        if r.getMessage().startswith("release_checkpoint")
+    ]
+    # a raise mid-pipeline releases the stage it had pinned
+    scores = docs.select("doc_id", F.lit(0.5).alias("p"))
+    before = sc._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="no classifier score"):
+        curation.curate_corpus(docs, classifier_gate_kw={
+            "scores": scores.where(F.col("doc_id") % 7 != 0),
+            "fit": scores.select("p", F.lit(1).alias("y")),
+        })
+    assert sc._jsc.sc().getPersistentRDDs().size() - before <= 0
 
 
 R5_QUERIES = [
