@@ -8,23 +8,19 @@ cosine scan is a single columnar pass with no Python, but not a fused
 codegen loop. Measured alternatives (2M rows × dim 64, local[32],
 median of 3, r3):
 
-* interpreted HOF (this module's default)          1.65 s
+* interpreted HOF (this module's form)             1.65 s
 * per-element ``getItem`` expansion (codegen'd)    3.07 s  — the 64-term
   expression tree codegens but never vectorizes; 2x SLOWER than the HOF
-* Arrow ``pandas_udf`` + numpy BLAS (:func:`cosine_scores_pandas`)
-                                                   1.23 s warm, 5.4 s cold
+* Arrow ``pandas_udf`` + numpy BLAS                1.23 s warm, 5.4 s cold
 
-The pandas form wins warm bulk throughput by ~25% and is exposed below for
-scan-the-corpus workloads on long-running executors. The HOF form stays
-the default for the parity-checked exact path: it adds no Python workers,
-and its sequential fold order is bit-reproducible by the DuckDB oracles
-(BLAS reassociates the sum). Computation is in double regardless of
-storage type (float storage halves IO; double math keeps scores stable)."""
+The HOF is the one scorer: the BLAS form's ~25% warm-throughput edge
+costs Python workers, a 4× cold start, and its reassociated sum breaks
+the sequential fold order the DuckDB oracles reproduce bit for bit.
+Computation is in double regardless of storage type (float storage
+halves IO; double math keeps scores stable)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -58,37 +54,6 @@ def l2_normalize(a: Column | str) -> Column:
     return F.when(norm == 0, arr).otherwise(
         F.transform(arr, lambda x: x / norm)
     )
-
-
-def cosine_scores_pandas(query_vec: list[float]):
-    """Arrow-batched bulk cosine scorer against one query vector — the
-    measured warm-path winner for full-corpus scans (module docstring has
-    the numbers). Returns a pandas_udf ``array<float/double> -> double``;
-    zero/empty vectors score 0.0, null stays null (pandas NaN→null).
-
-    Not used by the oracle-checked queries: BLAS reassociates the dot-sum,
-    so last-ulp results can differ from the sequential fold the inlined
-    DuckDB oracles reproduce."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn_acc = 0.0
-    for x in q:
-        qn_acc += x * x
-    qn = float(np.sqrt(qn_acc))
-
-    @F.pandas_udf("double")
-    def _score(s: pd.Series) -> pd.Series:
-        mask = s.notna()
-        out = pd.Series(np.nan, index=s.index, dtype=np.float64)
-        if mask.any():
-            mat = np.array(s[mask].tolist(), dtype=np.float64)
-            dots = mat @ q
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            denom = norms * qn
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[mask] = np.where(denom > 0, dots / denom, 0.0)
-        return out
-
-    return _score
 
 
 def cosine_or_zero(dot: Column, denom: Column) -> Column:

@@ -16,8 +16,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from building_a_rag_pipeline_with_airflow_spark.functions.embed import embed_text
-from building_a_rag_pipeline_with_airflow_spark.functions.vectors import cosine_similarity
-from building_a_rag_pipeline_with_airflow_spark.operators.similarity import TOP_K, topk_cosine
+from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+    cosine_similarity,
+    l2_norm,
+)
+from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+    TOP_K,
+    _cosine_topk,
+    _query_literal,
+    topk_cosine,
+)
 from building_a_rag_pipeline_with_airflow_spark.session import local_frame
 
 
@@ -88,35 +96,18 @@ def _mmr_select(
     """MMR core shared by :func:`mmr_topk` and :func:`mmr_rerank`: the k
     selected rows as a local frame ``(id, *payload, rel, mmr_score,
     rank)`` in rank order."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # NULL vectors are excluded BEFORE the candidate cut: cosine
-    # propagates NULL, and when the corpus has fewer than fetch_k
-    # non-null vectors the desc sort would still admit NULL-scored rows
-    # — which then crash the greedy loop with float(None). A degenerate
-    # index degrades to fewer candidates instead of raising.
-    # One job: the topk_cosine cut (4dp score, id tiebreak) with each
-    # candidate's vector, 6dp rel and payload riding the k-row heap. The
-    # cosine sits in its own projection so it is computed once per row
-    # and rounded twice.
-    cands = (
-        index.where(F.col(vec_col).isNotNull())
-        .select(
-            id_col,
-            vec_col,
-            *payload,
-            cosine_similarity(F.col(vec_col), q).alias("_cos"),
-        )
-        .select(
-            id_col,
-            vec_col,
-            *payload,
-            F.round("_cos", 6).alias("rel"),
-            F.round("_cos", 4).alias("_score"),
-        )
-        .orderBy(F.desc("_score"), F.asc(id_col))
-        .limit(fetch_k)
-        .collect()
-    )
+    # NULL vectors are excluded BEFORE the candidate cut: they score
+    # NULL, and when the corpus has fewer than fetch_k non-null vectors
+    # the cut would still admit them — and a NULL rel crashes the greedy
+    # loop with float(None). A degenerate index degrades to fewer
+    # candidates instead of raising. One job: the topk_cosine cut with
+    # each candidate's vector and payload carried and the same cosine
+    # also kept at 6dp as ``rel``.
+    q, q_norm = _query_literal(query_vec)
+    cands = _cosine_topk(
+        index.where(F.col(vec_col).isNotNull()), F.col(vec_col), l2_norm(vec_col),
+        q, q_norm, fetch_k, id_col, cols=(vec_col, *payload, "score"), rel=True,
+    ).collect()
     spark = index.sparkSession
     sims = _pair_sims_frame(
         spark, [r[vec_col] for r in cands], index.schema[vec_col].dataType

@@ -299,17 +299,23 @@ def weighted_sample_topk(
     rejected loudly rather than silently dropped."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    w = F.col(weight_col).cast("double")
-    pri = F.when(
-        w > 0, F.pow(hash_uniform(key, salt), F.lit(1.0) / w)
-    ).otherwise(F.raise_error(F.lit(
-        f"weighted_sample_topk: non-positive or NULL {weight_col}"
-    )))
+    pri = _es_priority(key, weight_col, salt, "weighted_sample_topk")
     return (
         df.withColumn(priority_col, pri)
         .orderBy(F.desc(priority_col), key)
         .limit(int(k))
     )
+
+
+def _es_priority(key: str, weight_col: str, salt: str, who: str) -> Column:
+    """The Efraimidis–Spirakis priority ``u^(1/w)`` of both weighted
+    samplers; a NULL or non-positive weight raises, naming ``who``."""
+    w = F.col(weight_col).cast("double")
+    return F.when(
+        w > 0, F.pow(hash_uniform(key, salt), F.lit(1.0) / w)
+    ).otherwise(F.raise_error(F.lit(
+        f"{who}: non-positive or NULL {weight_col}"
+    )))
 
 
 def weighted_sample_per_group(
@@ -334,40 +340,24 @@ def weighted_sample_per_group(
     stratum like "language" holds a constant FRACTION of the corpus, so
     ``row_number() OVER (PARTITION BY lang)`` would sort ~n/5 rows in one
     task at any scale — the quantile_segment class of unscalable window.
-    Phase 1 keeps top-k within (group, content-hash salt) partitions
-    (each ≈ group/n_salts); phase 2 re-ranks the surviving
-    groups×n_salts×k rows — a bounded frame. The salt is md5-derived
-    from the key, so the result is still a pure function of the data
-    (layout-stable), and the two-phase composition is EXACTLY the plain
-    per-group top-k (any group-wide top-k row is also top-k within its
-    salt slice) — asserted in tests."""
+    The cut is ``similarity._per_query_topk`` with ``n_salts`` key-hash
+    shards per group: the shard is a function of the key, so the result
+    is still a pure function of the data (layout-stable), and the
+    two-phase composition is EXACTLY the plain per-group top-k —
+    asserted in tests."""
+    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+        _per_query_topk,
+    )
+
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if n_salts < 1:
         raise ValueError(f"n_salts must be >= 1, got {n_salts}")
-    w = F.col(weight_col).cast("double")
-    pri = F.when(
-        w > 0, F.pow(hash_uniform(key, salt), F.lit(1.0) / w)
-    ).otherwise(F.raise_error(F.lit(
-        f"weighted_sample_per_group: non-positive or NULL {weight_col}"
-    )))
-    salted = df.withColumn(priority_col, pri).withColumn(
-        "_salt", hash_bucket(key, salt + ":shard") % F.lit(int(n_salts))
-    )
-    w1 = Window.partitionBy(*group_cols, "_salt").orderBy(
-        F.desc(priority_col), key
-    )
-    survivors = (
-        salted.withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= int(k))
-        .drop("_rk", "_salt")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(F.desc(priority_col), key)
-    return (
-        survivors.withColumn("_rk", F.row_number().over(w2))
-        .where(F.col("_rk") <= int(k))
-        .drop("_rk")
-    )
+    pri = _es_priority(key, weight_col, salt, "weighted_sample_per_group")
+    return _per_query_topk(
+        df.withColumn(priority_col, pri), list(group_cols), key, k,
+        n_shards=n_salts, score=priority_col, rank="_rk",
+    ).drop("_rk")
 
 
 def assign_folds(

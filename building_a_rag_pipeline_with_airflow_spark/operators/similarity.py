@@ -19,12 +19,14 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+    binary_signature,
     cosine_or_zero,
-    cosine_similarity,
     dequantize_int8,
     dot_product,
     l2_norm,
@@ -46,43 +48,43 @@ def topk_cosine(
     """Exact cosine top-k for one query vector (V2). ``prefilter`` is an
     optional Column predicate applied *before* scoring (V3 hybrid search —
     partition-prunable at scale). ``payload`` columns ride along after
-    ``score``: ``(id, score, *payload)``."""
+    ``score``: ``(id, score, *payload)``. A NULL vector scores NULL and
+    sorts last."""
     df = corpus if prefilter is None else corpus.where(prefilter)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity(F.col(vec_col), q), 4).alias("score"),
-        *payload,
+    q, q_norm = _query_literal(query_vec)
+    return _cosine_topk(
+        df, F.col(vec_col), l2_norm(vec_col), q, q_norm, k, id_col,
+        cols=("score", *payload),
     )
-    # orderBy+limit compiles to TakeOrderedAndProject: per-partition heaps
-    # of k whole rows (payload included), no full sort, no corpus shuffle.
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
-def _per_query_topk(scored, q_id: str, c_id: str, k: int, n_shards: int = 16,
-                    score: str = "score"):
-    """Salted two-phase per-query top-k over a (q, candidate, ``score``)
-    frame — the weighted_sample_per_group pattern, and the one copy of
-    it for kNN, trigram search, batch BM25 and co-occurrence recommend. A
-    single ``row_number() OVER (PARTITION BY q)`` sorts each query's
-    WHOLE candidate set (corpus-scale for the exact tier, a hot band for
-    LSH) in one task; phase 1 cuts top-k within (q, candidate-hash
-    shard), phase 2 re-ranks the bounded q×shards×k survivors.
-    Composition is exactly the per-query top-k — a query-wide winner
-    also wins its shard; deterministic tiebreaks unchanged."""
+def _per_query_topk(scored, q_id, c_id: str, k: int, n_shards: int = 16,
+                    score: str = "score", rank: str = "rank"):
+    """Salted two-phase per-group top-k over a (group, candidate,
+    ``score``) frame: the one copy of it for kNN, trigram search, batch
+    BM25, co-occurrence recommend and per-group weighted sampling.
+    ``q_id`` is a group column or a list of them; the input's columns
+    are kept, and the per-group ``rank`` is appended. A single
+    ``row_number() OVER (PARTITION BY q)`` sorts each query's WHOLE
+    candidate set (corpus-scale for the exact tier, a hot band for LSH)
+    in one task; phase 1 cuts top-k within (q, candidate-hash shard),
+    phase 2 re-ranks the bounded q×shards×k survivors. Composition is
+    exactly the per-query top-k — a query-wide winner also wins its
+    shard; deterministic tiebreaks unchanged."""
+    keys = [q_id] if isinstance(q_id, str) else list(q_id)
     w1 = Window.partitionBy(
-        q_id, F.pmod(F.xxhash64(F.col(c_id)), F.lit(int(n_shards)))
+        *keys, F.pmod(F.xxhash64(F.col(c_id)), F.lit(int(n_shards)))
     ).orderBy(F.desc(score), F.asc(c_id))
     survivors = (
         scored.withColumn("_rk", F.row_number().over(w1))
         .where(F.col("_rk") <= int(k))
         .drop("_rk")
     )
-    w2 = Window.partitionBy(q_id).orderBy(F.desc(score), F.asc(c_id))
+    w2 = Window.partitionBy(*keys).orderBy(F.desc(score), F.asc(c_id))
     return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= int(k))
-        .select(q_id, c_id, score, F.col("rank").cast("int").alias("rank"))
+        survivors.withColumn(rank, F.row_number().over(w2))
+        .where(F.col(rank) <= int(k))
+        .select(*scored.columns, F.col(rank).cast("int").alias(rank))
     )
 
 
@@ -194,7 +196,7 @@ def check_plane_budget(
 def lsh_signature(vec_col, planes) -> "F.Column":
     """Sign-LSH bit signature as a string key: 1 bit per hyperplane."""
     bits = [
-        F.when(dot_product(vec_col, F.array(*[F.lit(float(v)) for v in p])) >= 0,
+        F.when(dot_product(vec_col, _query_literal(p)[0]) >= 0,
                F.lit("1")).otherwise(F.lit("0"))
         for p in planes
     ]
@@ -335,16 +337,16 @@ def ivf_topk_cosine(
     global sort. Centroids, probe and scoring are the helpers
     :func:`build_ivf_index` and :func:`query_ivf_index` use
     (``_ivf_centroids``, ``_query_literal``, ``_probe_cells``,
-    ``_ivf_topk``)."""
+    ``_cosine_topk``)."""
     centroids = _ivf_centroids(
         corpus, method, n_cells or max(2, nprobe * 4), stride, c_id, c_vec
     )
     assigned = ivf_assign(corpus, centroids, c_id, c_vec)
     q, q_norm = _query_literal(query_vec)
     probed = _probe_cells(centroids, q, q_norm, nprobe)
-    return _ivf_topk(
+    return _cosine_topk(
         assigned.join(F.broadcast(probed), "cell_id"),
-        F.col(c_vec), l2_norm(c_vec), q, q_norm, k, c_id,
+        F.col(c_vec), l2_norm(c_vec), q, q_norm, k, c_id, cols=("cell_id", "score"),
     )
 
 
@@ -363,49 +365,47 @@ def _ivf_centroids(corpus: DataFrame, method: str, n_cells: int, stride: int,
 
 
 def _query_literal(query_vec: list[float]):
-    """The query vector as an array literal, plus its norm as a literal.
-    The norm is a constant: it is folded on the driver with the same
-    left-to-right double summation Spark's aggregate uses, so it is
-    bit-identical to an in-plan ``l2_norm(q)`` but costs no per-row
-    work."""
+    """The query vector as an array literal, plus its norm as a literal:
+    the one place a vector becomes a literal. Catalyst does not fold an
+    ``aggregate`` over a literal array, so an in-plan ``l2_norm(q)``
+    would run on every row; the norm is folded here instead, with the
+    same left-to-right double summation Spark's aggregate uses and a
+    correctly rounded ``math.sqrt`` (the JVM's ``sqrt``), so it equals
+    the in-plan value bit for bit (``x**0.5`` is C ``pow``, which is
+    not correctly rounded)."""
     qn = 0.0
     for x in query_vec:
         qn += float(x) * float(x)
-    return F.array(*[F.lit(float(x)) for x in query_vec]), F.lit(qn**0.5)
+    return F.array(*[F.lit(float(x)) for x in query_vec]), F.lit(math.sqrt(qn))
 
 
 def _probe_cells(centroids: DataFrame, q, q_norm, nprobe: int) -> DataFrame:
     """The ``nprobe`` cell ids whose centroids are closest to the query,
     ties broken by cell id — the probe of both IVF query paths."""
-    return (
-        centroids.select(
-            "cell_id",
-            F.round(
-                cosine_or_zero(
-                    dot_product(F.col("cell_vec"), q), l2_norm("cell_vec") * q_norm
-                ),
-                4,
-            ).alias("_qsim"),
-        )
-        .orderBy(F.desc("_qsim"), F.asc("cell_id"))
-        .limit(nprobe)
-        .select("cell_id")
+    return _cosine_topk(
+        centroids, F.col("cell_vec"), l2_norm("cell_vec"), q, q_norm, nprobe,
+        "cell_id",
+    ).select("cell_id")
+
+
+def _cosine_topk(rows: DataFrame, vec, norm, q, q_norm, k: int, c_id: str,
+                 cols=("score",), rel: bool = False) -> DataFrame:
+    """The one single-query cosine cut: each row's ``vec`` (norm
+    ``norm``) against the query ``q`` (norm ``q_norm``, from
+    :func:`_query_literal`), scored NULL for a NULL vector and otherwise
+    under the ``cosine_or_zero`` rule; the ``k`` best by 4dp ``score``,
+    ties to the smaller id. Output is ``(c_id, *cols)``: ``cols`` are
+    column names, where ``score`` places the score and every other name
+    is carried through; ``rel`` appends the same cosine at 6dp. The cosine
+    is projected once and rounded after, and the cut is a per-partition
+    heap (TakeOrderedAndProject), never a global sort."""
+    cos = F.when(vec.isNull(), F.lit(None).cast("double")).otherwise(
+        cosine_or_zero(dot_product(vec, q), norm * q_norm)
     )
-
-
-def _ivf_topk(rows: DataFrame, vec, norm, q, q_norm, k: int,
-              c_id: str) -> DataFrame:
-    """Exact cosine top-k over the probed cells' rows, given each row's
-    vector and norm expressions: a per-partition heap
-    (TakeOrderedAndProject), never a global sort."""
+    out = [F.round("_cos", 4).alias("score") if c == "score" else c for c in cols]
     return (
-        rows.select(
-            F.col(c_id),
-            F.col("cell_id"),
-            F.round(cosine_or_zero(dot_product(vec, q), norm * q_norm), 4).alias(
-                "score"
-            ),
-        )
+        rows.select(F.col(c_id), *[c for c in cols if c != "score"], cos.alias("_cos"))
+        .select(c_id, *out, *([F.round("_cos", 6).alias("rel")] if rel else []))
         .orderBy(F.desc("score"), F.asc(c_id))
         .limit(k)
     )
@@ -692,7 +692,7 @@ def query_ivf_index(
     predicate is literal at plan time and Catalyst turns it into partition
     pruning: the FileScan's ``PartitionFilters`` drops every other
     ``cell_id=N`` directory without opening it. The probe
-    (``_query_literal``, ``_probe_cells``) and the top-k (``_ivf_topk``)
+    (``_query_literal``, ``_probe_cells``) and the top-k (``_cosine_topk``)
     are :func:`ivf_topk_cosine`'s; scoring reuses the stored ``_vnorm``
     — no per-query norm recomputation — and a quantized layout decodes
     through ``_decoded``, as :func:`recluster_ivf_index` does."""
@@ -711,7 +711,9 @@ def query_ivf_index(
     # float32 probe IO); _vnorm was stored over the dequantized vector
     # so the cosine is self-consistent
     vec = _decoded() if "_codes" in vectors.columns else F.col(c_vec)
-    return _ivf_topk(vectors, vec, F.col("_vnorm"), q, q_norm, k, c_id)
+    return _cosine_topk(
+        vectors, vec, F.col("_vnorm"), q, q_norm, k, c_id, cols=("cell_id", "score")
+    )
 
 
 def _decoded():
@@ -907,11 +909,6 @@ def binary_topk_cosine(
     match the exact scan on whatever the shortlist retains (recall is
     the quality knob: raise ``shortlist`` to trade IO for recall;
     pinned in tests/test_mllib_ann.py)."""
-    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
-        binary_signature,
-        cosine_similarity,
-    )
-
     if k < 1 or shortlist < k:
         raise ValueError(
             f"need shortlist >= k >= 1, got k={k} shortlist={shortlist}"
@@ -929,12 +926,5 @@ def binary_topk_cosine(
         F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig).cast("long"))),
     )
     short = sigged.orderBy(F.asc("_ham"), F.asc(c_id)).limit(int(shortlist))
-    qlit = F.array(*[F.lit(float(v)) for v in query_vec])
-    return (
-        short.select(
-            c_id,
-            F.round(cosine_similarity(F.col(c_vec), qlit), 4).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(c_id))
-        .limit(int(k))
-    )
+    q, q_norm = _query_literal(query_vec)
+    return _cosine_topk(short, F.col(c_vec), l2_norm(c_vec), q, q_norm, int(k), c_id)

@@ -7534,9 +7534,9 @@ def weighted_sample_per_lang(spark, sf_dir):
     (`operators.sampling.weighted_sample_per_group`): top-5 documents PER
     LANGUAGE by n_chars-weighted content-hash priority — the balanced-
     mixture form of `weighted_sample_documents` (a training mixture wants
-    per-domain weighted picks, not a global cut). One window partitioned
-    by the stratum (partition = one language's docs); identical priority
-    function, so membership stays relayout/engine-stable."""
+    per-domain weighted picks, not a global cut). The cut is the salted
+    two-phase per-group top-k (`similarity._per_query_topk`); identical
+    priority function, so membership stays relayout/engine-stable."""
     docs = _t(spark, sf_dir, "documents")
     return (
         sampling.weighted_sample_per_group(

@@ -31,7 +31,7 @@ postings — ``operators.dedup.build_shingle_index``; BM25 postings —
   ``dedup._jaccard_pairs``, ``lexical._bm25_contrib`` (reached through
   ``lexical._index_contrib``, which also holds the extended-index
   ``df_t`` recount of both BM25 readers) and, for IVF,
-  ``similarity._ivf_centroids`` / ``_probe_cells`` / ``_ivf_topk`` /
+  ``similarity._ivf_centroids`` / ``_probe_cells`` / ``_cosine_topk`` /
   ``_decoded``.
 
 These helpers are the single implementation of that contract; a fix to

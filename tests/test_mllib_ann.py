@@ -74,46 +74,6 @@ def test_brp_topk_nearest_first(emb, query_vec):
     assert len(exact_ids & {r.vec_id for r in got}) >= 3
 
 
-def test_cosine_scores_pandas_matches_hof(spark, emb, query_vec):
-    """The Arrow/BLAS bulk scorer (warm-path winner, vectors.py docstring)
-    must agree with the interpreted-HOF form to rounding precision, and
-    handle null/zero vectors identically."""
-    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
-        cosine_scores_pandas,
-        cosine_similarity,
-    )
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    hof = {
-        r.vec_id: r.s
-        for r in emb.select(
-            "vec_id", F.round(cosine_similarity("embedding", q), 4).alias("s")
-        ).collect()
-    }
-    pdu = {
-        r.vec_id: r.s
-        for r in emb.select(
-            "vec_id",
-            F.round(cosine_scores_pandas(query_vec)("embedding"), 4).alias("s"),
-        ).collect()
-    }
-    assert hof.keys() == pdu.keys()
-    mism = {k for k in hof if abs(hof[k] - pdu[k]) > 1e-9}
-    assert not mism, sorted(mism)[:5]
-
-    edge = spark.createDataFrame(
-        [(0, None), (1, [0.0] * len(query_vec))],
-        "id int, embedding array<float>",
-    )
-    rows = {
-        r.id: r.s
-        for r in edge.select(
-            "id", cosine_scores_pandas(query_vec)("embedding").alias("s")
-        ).collect()
-    }
-    assert rows[0] is None and rows[1] == 0.0
-
-
 def test_quantize_int8_roundtrip_error_bound(spark, emb):
     """Per-element |x - dequant(quant(x))| <= scale/2, exactly zero for
     all-zero vectors, and codes stay in int8 range."""
@@ -834,3 +794,46 @@ def test_zero_vectors_score_zero_like_topk_cosine(spark, tmp_path):
     }
     assert any(3 in pair for pair in near)
     assert near.items() <= all_pairs.items()
+
+
+def test_query_literal_norm_equals_in_plan_l2_norm(spark):
+    """``similarity._query_literal`` folds the query norm in Python;
+    it must equal Spark's in-plan ``l2_norm`` over the same literal bit
+    for bit. ``x**0.5`` is not correctly rounded: for this first query
+    it gives 1.0 where Spark gives 0.9999999999999999."""
+    import random
+
+    from building_a_rag_pipeline_with_airflow_spark.functions.embed import embed_text
+    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import l2_norm
+
+    rng = random.Random(15)
+    words = "merge token spark rag query join sort scan vector index chunk".split()
+    texts = ["merge token spark rag query"] + [
+        " ".join(rng.choices(words, k=rng.randint(1, 12))) for _ in range(99)
+    ]
+    cols = []
+    for i, t in enumerate(texts):
+        q, q_norm = similarity._query_literal(embed_text(t))
+        cols += [l2_norm(q).alias(f"s{i}"), q_norm.alias(f"f{i}")]
+    row = spark.range(1).select(*cols).first()
+    bad = [t for i, t in enumerate(texts) if row[f"s{i}"] != row[f"f{i}"]]
+    assert not bad, bad[:5]
+
+
+def test_single_query_cuts_sort_null_vectors_last(spark):
+    """With fewer non-NULL vectors than ``k``, ``topk_cosine`` and
+    ``binary_topk_cosine`` still return the NULL-vector rows, last and
+    with a NULL score."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.6, 0.8]), (4, None)],
+        "vec_id long, embedding array<float>",
+    )
+    cuts = {
+        "topk": similarity.topk_cosine(df, [1.0, 0.0], k=4),
+        "binary": similarity.binary_topk_cosine(
+            df, [1.0, 0.0], k=4, shortlist=4, dim=2
+        ),
+    }
+    for name, cut in cuts.items():
+        got = [(r.vec_id, r.score) for r in cut.collect()]
+        assert got == [(1, 1.0), (3, 0.6), (2, None), (4, None)], name

@@ -851,6 +851,21 @@ def test_rag_request_is_one_job_over_one_index_scan(spark, served_index, hybrid)
     assert "Join" not in plan
 
 
+def test_dense_request_scores_the_query_literal_once(spark, served_index):
+    """The query norm is folded before planning: the optimized plan of
+    ``retrieve_chunks`` holds no ``aggregate`` over the literal query
+    array (Catalyst does not fold one, so it would run per row), and the
+    literal is scored by exactly one aggregate, the dot."""
+    import re
+
+    from building_a_rag_pipeline_with_airflow_spark.operators import retrieval
+
+    df = retrieval.retrieve_chunks(served_index, "spark join merge", k=5)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"aggregate\(\[", plan) is None
+    assert plan.count("aggregate(zip_with(") == 1
+
+
 def test_mmr_request_runs_at_most_three_jobs(spark, served_index):
     """MMR: one candidate job, driver-local pair scoring, then the context
     aggregate over the k selected rows."""

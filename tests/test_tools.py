@@ -2,15 +2,16 @@
 compile, and bench.py's HEADLINE roster (which the bench, solo_anchor.py
 and capture_plans.py all run) names registered queries once each. Also
 static guards that every package function has a caller, that
-queries.py's rows keep their session fixtures in its fixture helpers and
-that every cosine divides through the zero-vector rule. No Spark
-session."""
+queries.py's rows keep their session fixtures in its fixture helpers,
+that every cosine divides through the zero-vector rule and that a vector
+becomes a literal in one place. No Spark session."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
 import py_compile
+import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -197,3 +198,31 @@ def test_cosines_divide_through_the_zero_rule():
             ):
                 found.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not found, f"raw dot_product divisions: {found}"
+
+
+def test_vector_literals_are_built_in_one_place():
+    """An ``F.array(*[F.lit(float(x)) ...])`` vector literal is built only
+    by ``similarity._query_literal``, which also folds the vector's norm
+    once in Python (an in-plan ``l2_norm`` over a literal array runs
+    on every row)."""
+    home = PACKAGE / "operators" / "similarity.py"
+    found = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = {
+            id(sub)
+            for node in ast.walk(tree)
+            if path == home
+            and isinstance(node, ast.FunctionDef)
+            and node.name == "_query_literal"
+            for sub in ast.walk(node)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Starred)
+                and isinstance(node.value, (ast.ListComp, ast.GeneratorExp))
+                and re.fullmatch(r"(\w+\.)?lit\(float\(.*\)\)", ast.unparse(node.value.elt))
+                and id(node) not in allowed
+            ):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not found, f"vector literals outside _query_literal: {found}"
