@@ -463,10 +463,11 @@ def _bm25_rows(df: DataFrame, p) -> DataFrame:
 #: rows keyed by term, document frequency stored as double ``df_t``, and
 #: one (n_docs, sum_dl) ``batch_stats`` row per batch — the
 #: replay-idempotent way to keep n_docs/avgdl exact under extension:
-#: extended-mode queries SUM the batch rows (each batch owns its
-#: ``_batch_id`` partition) instead of trusting a mutable meta fold that
-#: a replayed batch would double-count. Every posted document has at
-#: least one term, so counting the rows' documents counts the corpus.
+#: extended-mode queries and consolidation SUM the batch rows (the side's
+#: fold; each batch owns its ``_batch_id`` partition) instead of trusting
+#: a mutable meta fold that a replayed batch would double-count. Every
+#: posted document has at least one term, so counting the rows' documents
+#: counts the corpus.
 _BM25_POSTINGS = index_layout.PostingsFamily(
     rows_subdir="postings", key="term", count="df_t", count_type="double",
     derive=_bm25_rows,
@@ -478,8 +479,17 @@ _BM25_POSTINGS = index_layout.PostingsFamily(
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("dl").alias("sum_dl"),
         ),
+        ((), ("n_docs", "sum_dl")),
     ),),
 )
+
+
+def _corpus_stats(spark, path: str) -> "tuple[int, float]":
+    """``(n_docs, avgdl)`` of the corpus indexed at ``path``: its
+    per-batch ``batch_stats`` rows folded into one row (one driver-side
+    ``first()``)."""
+    bs = index_layout._read_side(spark, _BM25_POSTINGS, path, "batch_stats").first()
+    return int(bs["n_docs"]), float(bs["sum_dl"]) / int(bs["n_docs"])
 
 
 def build_postings_index(
@@ -547,12 +557,7 @@ def _index_contrib(spark, path: str, meta, post: DataFrame, k1: float,
     if not bool(meta["extended"]):
         n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
     else:
-        bs = (
-            spark.read.parquet(f"{path}/batch_stats")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .first()
-        )
-        n_docs, avgdl = float(bs["n"]), float(bs["s"]) / float(bs["n"])
+        n_docs, avgdl = map(float, _corpus_stats(spark, path))
         dfreq = post.groupBy("term").agg(
             F.count("*").cast("double").alias("df_t")
         )
@@ -705,16 +710,12 @@ def consolidate_postings_index(
     future streaming extension of the consolidated index keeps the
     replay-idempotent exact-sum property from a single-row base, exactly
     as after a fresh build. Computed from the stored postings alone,
-    never a corpus re-tokenization. Mechanics + swap-then-expire publishing via
-    the family-shared ``index_layout.consolidate_index``."""
-    fresh_stats = spark.read.parquet(f"{path}/batch_stats").agg(
-        F.sum("n_docs").cast("bigint").alias("n_docs"),
-        F.sum("sum_dl").cast("double").alias("sum_dl"),
-    )
-    tot = fresh_stats.first()  # one row — metadata-scale by contract
-    n_docs, sum_dl = int(tot["n_docs"]), float(tot["sum_dl"])
+    never a corpus re-tokenization. Mechanics, the ``batch_stats`` fold
+    and swap-then-expire publishing via the family-shared
+    ``index_layout.consolidate_index``; this function only turns the
+    folded row into the meta's fields."""
+    n_docs, avgdl = _corpus_stats(spark, path)
     return index_layout.consolidate_index(
         spark, _BM25_POSTINGS, path, out_path, manifest_path,
-        meta_fields={"n_docs": n_docs, "avgdl": sum_dl / n_docs},
-        folded={"batch_stats": fresh_stats},
+        meta_fields={"n_docs": n_docs, "avgdl": avgdl},
     )

@@ -23,6 +23,11 @@ postings — ``operators.dedup.build_shingle_index``; BM25 postings —
 * **Extensions** are ``foreachBatch`` writers with a checkpoint — the
   standard grow-in-production path (recompute/re-cluster offline when
   balance drifts, never per arrival).
+* **Folds**: whatever reads or re-bases ``_batch_id``-tagged partials —
+  a postings side table such as BM25's ``batch_stats``, a streaming
+  gate's state — merges them through ONE function,
+  :func:`_fold_partials`, so a reader and the compaction or
+  consolidation of the same rows cannot disagree.
 * **Reads** finish through the in-plan operator's own code. A
   ``*_from_index`` reader differs from its in-plan twin only in where its
   rows come from (the stored layout instead of an in-plan derive); the
@@ -256,6 +261,34 @@ def _read_or_none(spark: SparkSession, path: str) -> "DataFrame | None":
         return None
 
 
+def _fold_partials(raw: DataFrame, fold, meta=None) -> DataFrame:
+    """THE fold of ``_batch_id``-tagged partials into what one batch over
+    all their rows would have written — a gate reader's input, a gate
+    compaction's base, a postings side table's consolidated row. ``fold``
+    is one of:
+
+    * ``(group_cols, sum_cols)`` — the partials are mergeable sums:
+      summed per group (globally when ``group_cols`` is empty) and cast
+      back to their stored types, so a folded base stays byte-compatible
+      with later batches;
+    * ``"concat"`` — the rows themselves (per-batch output rows, whose
+      fold is plain union);
+    * a callable ``(raw, meta) -> folded`` for a fold that is exact but
+      neither (the sketch's global bottom-k).
+
+    The result carries no ``_batch_id``. Every fold here is associative,
+    which is why a folded base plus newer batches folds to the same
+    answer as the batches themselves."""
+    if callable(fold):
+        return fold(raw, meta)
+    if fold == "concat":
+        return raw.drop("_batch_id")
+    group_cols, sum_cols = fold
+    types = {f.name: f.dataType for f in raw.schema.fields}
+    aggs = [F.sum(c).cast(types[c]).alias(c) for c in sum_cols]
+    return raw.groupBy(*group_cols).agg(*aggs) if group_cols else raw.agg(*aggs)
+
+
 def replace_meta(spark: SparkSession, path: str, **fields) -> DataFrame:
     """The meta row stored at ``<path>/meta`` with ``fields`` replaced, in
     the stored schema — so each family's meta schema is written only by
@@ -425,19 +458,30 @@ class PostingsFamily:
     ``key``; ``params`` are the family's column names plus its frozen
     build constants (a builder passes its arguments, an extender the
     stored meta row — the same field names). ``sides`` are
-    ``(subdir, make)`` pairs, ``make(df, rows, params)`` giving the side
-    table a batch writes beside its postings (shingle doc sizes, trigram
-    names, BM25 batch stats)."""
+    ``(subdir, make)`` or ``(subdir, make, fold)`` entries,
+    ``make(df, rows, params)`` giving the side table a batch writes beside
+    its postings (shingle doc sizes, trigram names, BM25 batch stats) and
+    ``fold`` how its per-batch rows merge (:func:`_fold_partials`;
+    ``"concat"`` when absent)."""
 
     rows_subdir: str
     key: str
     count: str
     count_type: str
     derive: Callable[[DataFrame, Mapping], DataFrame]
-    sides: "tuple[tuple[str, Callable], ...]" = ()
+    sides: "tuple[tuple, ...]" = ()
 
     def side_frames(self, df: DataFrame, rows: DataFrame, params: Mapping):
-        return [(sub, make(df, rows, params)) for sub, make in self.sides]
+        return [(sub, make(df, rows, params)) for sub, make, *_ in self.sides]
+
+
+def _read_side(
+    spark: SparkSession, family: PostingsFamily, path: str, sub: str
+) -> DataFrame:
+    """Side table ``sub`` of the ``family`` index at ``path``, its
+    per-batch rows folded by the side's fold."""
+    folds = {s: f[0] if f else "concat" for s, _, *f in family.sides}
+    return _fold_partials(spark.read.parquet(f"{path}/{sub}"), folds[sub])
 
 
 def bucket_of(key: "Column | str", n: int) -> Column:
@@ -538,7 +582,6 @@ def start_postings_extender(
 def consolidate_index(
     spark: SparkSession, family: PostingsFamily, path: str, out_path: str,
     manifest_path: "str | None" = None, *, meta_fields: "Mapping | None" = None,
-    folded: "Mapping[str, DataFrame] | None" = None,
 ) -> "int | None":
     """Re-base an EXTENDED :class:`PostingsFamily` index into a fresh
     single-batch layout at ``out_path`` — the text-side twin of the
@@ -554,10 +597,11 @@ def consolidate_index(
     like a build's rows (the postings parquet is scanned twice — by the
     recount and by the rewrite's join probe — a deliberate trade: pinning
     corpus-scale rows would break the narrow-output-only checkpoint
-    rule). Side tables are batch-independent payloads, copied under
-    batch ``-1`` — except those a caller passes already ``folded`` (BM25's
-    summed ``batch_stats``). The meta is the source's with
-    ``extended=False`` plus ``meta_fields``.
+    rule). Each side table is folded by its own fold
+    (:func:`_read_side`) and written under batch ``-1``: the payload
+    sides are copied row for row, BM25's ``batch_stats`` is summed into
+    one row. The meta is the source's with ``extended=False`` plus
+    ``meta_fields``.
 
     Publishing: ``out_path`` must be a NEW directory (never ``path``
     itself — Spark cannot overwrite its own scan input; raised loudly).
@@ -573,12 +617,8 @@ def consolidate_index(
         spark, "consolidate_index", path, out_path, "source layout"
     )
     n_buckets = read_meta(spark, path)["n_buckets"]
-    folded = folded or {}
     rows = spark.read.parquet(f"{path}/{family.rows_subdir}")
-    sides = [
-        (sub, folded.get(sub) or spark.read.parquet(f"{path}/{sub}").drop("_batch_id"))
-        for sub, _ in family.sides
-    ]
+    sides = [(sub, _read_side(spark, family, path, sub)) for sub, *_ in family.sides]
     write_postings(
         family, rows.drop(family.count, "bucket", "_batch_id"), out, n_buckets, sides
     )

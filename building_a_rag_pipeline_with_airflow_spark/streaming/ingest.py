@@ -56,16 +56,21 @@ per-batch partials and its fold.
    ``<state>/<subdir>/_batch_id=N`` with dynamic partition overwrite
    (``index_layout._write_tagged``), so a replayed batch id replaces its
    own rows: per-batch cost is O(batch), never O(history).
-5. **Read fold** (:func:`_read_partials`). A reader folds the partials
-   (sums, a global bottom-k, or a union) into exactly what the batch
-   operator returns over the accumulated stream. A started gate whose
-   stream has delivered no non-empty batch has no partials yet: the
-   reader then returns the batch operator's empty-input answer where the
-   state can build it, and raises a ValueError otherwise — never a raw
+5. **Read fold** (:func:`_fold_state`). Each state subdir has ONE fold
+   in :data:`_STATE_LAYOUTS` — sums per group, a global bottom-k, or a
+   union — applied by the one fold of the index and gate families,
+   ``index_layout._fold_partials``. A reader folds its partials through
+   it, then finishes them into exactly what the batch operator returns
+   over the accumulated stream. A started gate whose stream has
+   delivered no non-empty batch has no partials yet: the reader then
+   returns the batch operator's empty-input answer where the state can
+   build it, and raises a ValueError otherwise — never a raw
    PATH_NOT_FOUND.
 6. **Compact** (:func:`compact_gate_state`). Offline, single-writer: the
-   per-batch partitions fold into one base partition at a new path, and
-   ``compacted_through`` lands in the new meta for step 2.
+   per-batch partitions fold through the SAME fold into one base
+   partition at a new path, so the compacted state reads exactly like
+   the uncompacted one, and ``compacted_through`` lands in the new meta
+   for step 2.
 """
 
 from __future__ import annotations
@@ -185,15 +190,14 @@ def _start_gate(
 
 
 def _read_partials(
-    spark: SparkSession, state_path: str, subdir, who: str, empty=None
+    spark: SparkSession, state_path: str, subdir: str, who: str, empty=None
 ) -> DataFrame:
-    """Protocol step 5's input: the partials under ``<state>/<subdir>``
-    (the state root when ``subdir`` is None). When the stream has
-    delivered no non-empty batch there is nothing there yet; then
-    ``empty`` stands in — a DDL string or schema for zero rows, or a
-    callable building the frame — and without it the read raises a
-    ValueError saying so."""
-    path = state_path if subdir is None else f"{state_path}/{subdir}"
+    """Protocol step 5's input: the partials under ``<state>/<subdir>``.
+    When the stream has delivered no non-empty batch there is nothing
+    there yet; then ``empty`` stands in — a DDL string or schema for zero
+    rows, or a callable building the frame — and without it the read
+    raises a ValueError saying so."""
+    path = f"{state_path}/{subdir}"
     rows = index_layout._read_or_none(spark, path)
     if rows is not None:
         return rows
@@ -205,6 +209,57 @@ def _read_partials(
             "directory)."
         )
     return empty() if callable(empty) else local_frame(spark, [], empty)
+
+
+def _bottomk_fold(raw: DataFrame, meta) -> DataFrame:
+    """The sketch's fold: the global bottom-k of the accumulated
+    samples (each global minimum is among its own batch's k minima)."""
+    return (
+        raw.drop("_batch_id")
+        .orderBy(F.asc_nulls_last("_prio"), F.asc_nulls_last(meta["id_col"]))
+        .limit(int(meta["k"]))
+    )
+
+
+# One fold map per gate: each state subdir's index_layout._fold_partials
+# fold, or "copy" for a frozen artifact that compaction rewrites
+# verbatim. Readers fold through their gate's entry (_fold_state) and
+# compact_gate_state through the same one, so a compacted state reads
+# exactly like the uncompacted one. PSI's entry serves its reader only:
+# its per-batch partitions are read_psi_trend's product, and its
+# uncovered baseline makes compact_gate_state refuse to fold them.
+_STATE_LAYOUTS = {
+    "psi": {"batches": (("bin",), ("n_new",))},
+    "expectations": {
+        "batches": (("expectation", "kind", "col_name"), ("n_violations", "n_rows"))
+    },
+    "embedding_drift": {
+        "batches": (("_p",), ("sum_v", "n", "sum_norm")), "baseline": "copy"
+    },
+    "duplication": {"partials": (("h",), ("c",)), "totals": ((), ("n_windows",))},
+    "calibration": {"partials": (("bin",), ("n", "sum_p", "sum_y"))},
+    "threshold": {"partials": (("threshold",), ("n", "pos"))},
+    "nb": {
+        "token_counts": (("_lbl", "b"), ("n",)),
+        "doc_counts": (("_lbl",), ("n_docs",)),
+    },
+    "sketch": {"batches": _bottomk_fold, "baseline": "copy"},
+    "split": {"batches": "concat", "components": "copy"},
+    "stamp": {"batches": "concat", "mapping": "copy"},
+}
+
+
+def _fold_state(
+    spark: SparkSession, state_path: str, gate: str, subdir: str, who: str,
+    empty=None, meta=None,
+) -> DataFrame:
+    """Protocol step 5: the partials of ``<state>/<subdir>``
+    (:func:`_read_partials`, ``empty`` included) folded by ``gate``'s
+    :data:`_STATE_LAYOUTS` entry; ``meta`` feeds a callable fold."""
+    return index_layout._fold_partials(
+        _read_partials(spark, state_path, subdir, who, empty),
+        _STATE_LAYOUTS[gate][subdir], meta,
+    )
 
 
 def read_documents_stream(
@@ -565,11 +620,7 @@ def read_psi_report(
     base = spark.read.parquet(f"{state_path}/baseline").select(
         "bin", "n_base"
     )
-    streamed = (
-        _read_partials(spark, state_path, "batches", "read_psi_report")
-        .groupBy("bin")
-        .agg(F.sum("n_new").cast("bigint").alias("n_new"))
-    )
+    streamed = _fold_state(spark, state_path, "psi", "batches", "read_psi_report")
     cells = base.join(streamed, "bin", "full_outer").select(
         "bin",
         F.coalesce("n_base", F.lit(0)).alias("n_base"),
@@ -787,18 +838,12 @@ def read_duplication_profile(spark: SparkSession, state_path: str) -> DataFrame:
     who = "read_duplication_profile"
     meta = index_layout.read_meta(spark, state_path)
     blist = [int(c) for c in meta["bands"]]  # stored as array<int>
-    counts = (
-        _read_partials(spark, state_path, "partials", who, "h string, c bigint")
-        .groupBy(F.col("h").alias("_h"))
-        .agg(F.sum("c").alias("_c"))
-    )
-    tot = _read_partials(
-        spark, state_path, "totals", who, "n_windows bigint"
-    ).agg(
-        F.coalesce(F.sum("n_windows"), F.lit(0)).cast("bigint").alias(
-            "n_windows"
-        )
-    )
+    counts = _fold_state(
+        spark, state_path, "duplication", "partials", who, "h string, c bigint"
+    ).withColumnsRenamed({"h": "_h", "c": "_c"})
+    tot = _fold_state(
+        spark, state_path, "duplication", "totals", who, "n_windows bigint"
+    ).select(F.coalesce("n_windows", F.lit(0)).alias("n_windows"))
     return _dd._duplication_bands(spark, counts, blist, tot)
 
 
@@ -862,13 +907,9 @@ def read_calibration_report(spark: SparkSession, state_path: str) -> DataFrame:
     )
 
     nb = int(index_layout.read_meta(spark, state_path)["n_bins"])
-    sums = _read_partials(
-        spark, state_path, "partials", "read_calibration_report",
+    sums = _fold_state(
+        spark, state_path, "calibration", "partials", "read_calibration_report",
         "bin int, n bigint, sum_p double, sum_y double",
-    ).groupBy("bin").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("sum_p").alias("sum_p"),
-        F.sum("sum_y").alias("sum_y"),
     )
     return _ev._calibration_frame(spark, sums, nb)
 
@@ -942,12 +983,9 @@ def read_threshold_curve(spark: SparkSession, state_path: str) -> DataFrame:
     )
 
     index_layout.read_meta(spark, state_path)  # refuses uninitialized state
-    grid = _read_partials(
-        spark, state_path, "partials", "read_threshold_curve",
+    grid = _fold_state(
+        spark, state_path, "threshold", "partials", "read_threshold_curve",
         "threshold double, n bigint, pos bigint",
-    ).groupBy("threshold").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("pos"),
     )
     return _ev._threshold_frame(_ev._threshold_cumulative(grid))
 
@@ -967,34 +1005,25 @@ def compact_gate_state(
     accumulate one small file per batch (file-count hygiene). Compaction
     pre-folds history so a read costs O(state), not O(state × batches).
 
-    ``folds`` maps every state subdir (meta aside) to its fold, one of:
-
-    * ``(group_cols, sum_cols)`` — the per-batch rows are SUMMED (every
-      sum gate's partials are mergeable sums by the family contract,
-      which is exactly why this fold is exact), re-cast to the stored
-      dtypes so the base stays byte-compatible with future batches;
-    * ``"concat"`` — every per-batch row is rewritten verbatim (exact
-      because the read-side fold of such a subdir is plain union, and
-      union is associative just like the sums; the stamp's and split's
-      verdict/assignment rows);
-    * a callable ``(raw, meta) -> base`` for folds that are exact but
-      neither sums nor union (the sketch's global bottom-k — the layout
-      owns proving the fold matches its read-side semantics);
-    * ``"copy"`` — a frozen non-batch artifact (the stamp's mapping, the
-      split's component map, a baseline), rewritten verbatim so the
-      compacted layout stays self-contained.
+    ``folds`` maps every state subdir (meta aside) to its fold — the
+    gate's :data:`_STATE_LAYOUTS` entry, folded by the same
+    ``index_layout._fold_partials`` its reader folds through — or to
+    ``"copy"`` for a frozen non-batch artifact (the stamp's mapping, the
+    split's component map, a baseline), rewritten verbatim so the
+    compacted layout stays self-contained.
 
     Folded rows land as the reserved base partition ``_batch_id = -1``
     (real Structured Streaming batch ids are ≥ 0) under ``out_path``;
-    the unchanged read-side fold then folds base + any newer batches,
-    associativity making compacted ≡ uncompacted (parity-tested in the
-    gate-family contract's compaction leg). Outputs are sized from the
+    the read-side fold then folds base + any newer batches, and because
+    every fold is associative, compacted ≡ uncompacted (parity-tested in
+    the gate-family contract's compaction leg). Outputs are sized from the
     source bytes, since a subdir can be data-scale (the duplication
     partials, the component map). A subdir the map does not name
     refuses the compaction (coverage guard).
 
     REPLAY IDEMPOTENCE — the invariant that makes this safe: the max
-    folded batch id is recorded as ``compacted_through`` in the
+    folded batch id (from the partition listing, not a data scan) is
+    recorded as ``compacted_through`` in the
     compacted meta, and every gate's write side SKIPS batch ids ≤
     ``compacted_through`` (protocol step 2) — so when Structured
     Streaming replays a batch whose partials were already folded into
@@ -1038,7 +1067,8 @@ def compact_gate_state(
     # subdir this map doesn't know would otherwise compact to a state
     # silently MISSING that data, and the readers' missing-dir fallbacks
     # would mask the loss as zeros (the loud-refusal rule)
-    uncovered = sorted(set(_state_subdirs(spark, state_path)) - set(folds) - {"meta"})
+    listing = _state_subdirs(spark, state_path)
+    uncovered = sorted(set(listing) - set(folds) - {"meta"})
     if uncovered:
         raise ValueError(
             f"{who}: {state_path} holds data subdir(s) {uncovered} not "
@@ -1071,21 +1101,11 @@ def compact_gate_state(
                 f"{dst}/{sub}"
             )
             continue
-        mb = raw.agg(F.max("_batch_id").alias("m")).first()["m"]
-        if mb is not None:
-            max_bid = max(max_bid, int(mb))
-        if fold == "concat":
-            base = raw
-        elif callable(fold):
-            base = fold(raw, meta)
-        else:
-            group_cols, sum_cols = fold
-            types = {f.name: f.dataType for f in raw.schema.fields}
-            aggs = [F.sum(c).cast(types[c]).alias(c) for c in sum_cols]
-            base = raw.groupBy(*group_cols).agg(*aggs) if group_cols else raw.agg(*aggs)
+        max_bid = max(max_bid, *listing[sub])
         order = [c for c in raw.columns if c != "_batch_id"]
         index_layout._write_tagged(
-            base.select(*order), f"{dst}/{sub}", index_layout.BASE_BATCH_ID,
+            index_layout._fold_partials(raw, fold, meta).select(*order),
+            f"{dst}/{sub}", index_layout.BASE_BATCH_ID,
             coalesce=n_out_files(sub), dynamic=False,
         )
     index_layout.write_meta(
@@ -1095,33 +1115,6 @@ def compact_gate_state(
         dst,
     )
     return max_bid
-
-
-def _bottomk_fold(raw: DataFrame, meta) -> DataFrame:
-    """The sketch's compaction fold: the global bottom-k of the
-    accumulated samples, exactly :func:`read_sketch_sample`'s fold."""
-    return (
-        raw.drop("_batch_id")
-        .orderBy(F.asc_nulls_last("_prio"), F.asc_nulls_last(meta["id_col"]))
-        .limit(int(meta["k"]))
-    )
-
-
-# One compact_gate_state fold map per compactable gate (see its
-# docstring for the fold kinds). PSI has none: its per-batch partition
-# view is the product itself (read_psi_trend) and must never be folded.
-_STATE_LAYOUTS = {
-    "duplication": {"partials": (("h",), ("c",)), "totals": ((), ("n_windows",))},
-    "calibration": {"partials": (("bin",), ("n", "sum_p", "sum_y"))},
-    "threshold": {"partials": (("threshold",), ("n", "pos"))},
-    "nb": {
-        "token_counts": (("_lbl", "b"), ("n",)),
-        "doc_counts": (("_lbl",), ("n_docs",)),
-    },
-    "sketch": {"batches": _bottomk_fold, "baseline": "copy"},
-    "split": {"batches": "concat", "components": "copy"},
-    "stamp": {"batches": "concat", "mapping": "copy"},
-}
 
 
 def compact_duplication_state(
@@ -1323,14 +1316,10 @@ def read_expectations_report(spark: SparkSession, state_path: str) -> DataFrame:
             "n_violations bigint, n_rows bigint",
         )
 
-    rows = _read_partials(
-        spark, state_path, "batches", "read_expectations_report", zero_counts
-    )
     return (
-        rows.groupBy("expectation", "kind", "col_name")
-        .agg(
-            F.sum("n_violations").cast("bigint").alias("n_violations"),
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
+        _fold_state(
+            spark, state_path, "expectations", "batches",
+            "read_expectations_report", zero_counts,
         )
         .select(
             "expectation",
@@ -1442,12 +1431,8 @@ def read_embedding_drift(spark: SparkSession, state_path: str) -> DataFrame:
     dim = int(index_layout.read_meta(spark, state_path)["dim"])
     base = centroid(spark.read.parquet(f"{state_path}/baseline"), "base")
     cur = centroid(
-        _read_partials(spark, state_path, "batches", "read_embedding_drift")
-        .groupBy("_p")
-        .agg(
-            F.sum("sum_v").alias("sum_v"),
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sum_norm").alias("sum_norm"),
+        _fold_state(
+            spark, state_path, "embedding_drift", "batches", "read_embedding_drift"
         ),
         "cur",
     )
@@ -1569,15 +1554,11 @@ def classify_with_streamed_nb(
     n_buckets = frozen
     if alpha is None:
         alpha = float(meta["alpha"])
-    cls_tok = (
-        _read_partials(spark, state_path, "token_counts", who)
-        .groupBy("_lbl", "b")
-        .agg(F.sum("n").cast("bigint").alias("n_lb"))
-    )
-    doc_counts = (
-        _read_partials(spark, state_path, "doc_counts", who)
-        .groupBy("_lbl")
-        .agg(F.sum("n_docs").cast("double").alias("n_docs"))
+    cls_tok = _fold_state(
+        spark, state_path, "nb", "token_counts", who
+    ).withColumnRenamed("n", "n_lb")
+    doc_counts = _fold_state(spark, state_path, "nb", "doc_counts", who).withColumn(
+        "n_docs", F.col("n_docs").cast("double")
     )
     sc_tok = _cur._nb_token_buckets(score_df, id_col, id_col, text_col, n_buckets)
     require_nonempty(sc_tok.limit(1), "nb scoring tokens")
@@ -1647,14 +1628,11 @@ def read_sketch_sample(spark: SparkSession, state_path: str) -> DataFrame:
     no dedup. Before the first non-empty batch the sample is empty (the
     frozen baseline's columns, zero rows), as the batch sampler's over
     an empty frame."""
-    meta = index_layout.read_meta(spark, state_path)
-    rows = _read_partials(
-        spark, state_path, "batches", "read_sketch_sample",
+    return _fold_state(
+        spark, state_path, "sketch", "batches", "read_sketch_sample",
         lambda: spark.read.parquet(f"{state_path}/baseline").limit(0),
-    ).drop("_batch_id")
-    return rows.orderBy(
-        F.asc_nulls_last("_prio"), F.asc_nulls_last(meta["id_col"])
-    ).limit(int(meta["k"]))
+        index_layout.read_meta(spark, state_path),
+    )
 
 
 def streaming_cluster_safe_split(
@@ -1744,14 +1722,10 @@ def read_split_assignments(spark: SparkSession, state_path: str) -> DataFrame:
     re-delivered row's ``(split_key, split)`` is identical and the
     surviving row arbitrary-safe."""
     idc = index_layout.read_meta(spark, state_path)["id_col"]
-    return (
-        _read_partials(
-            spark, state_path, "batches", "read_split_assignments",
-            f"`{idc}` string, split_key string, split string",
-        )
-        .drop("_batch_id")
-        .dropDuplicates([idc])
-    )
+    return _fold_state(
+        spark, state_path, "split", "batches", "read_split_assignments",
+        f"`{idc}` string, split_key string, split string",
+    ).dropDuplicates([idc])
 
 
 def read_sketch_report(
@@ -1906,11 +1880,9 @@ def read_stamped_assignments(spark: SparkSession, state_path: str) -> DataFrame:
     no honest empty frame to return; uninitialized state is refused by
     the meta read as usual."""
     meta = index_layout.read_meta(spark, state_path)  # refuses uninitialized
-    return (
-        _read_partials(spark, state_path, "batches", "read_stamped_assignments")
-        .drop("_batch_id")
-        .dropDuplicates([meta["id_col"]])
-    )
+    return _fold_state(
+        spark, state_path, "stamp", "batches", "read_stamped_assignments"
+    ).dropDuplicates([meta["id_col"]])
 
 
 def compact_stamp_state(

@@ -10,7 +10,12 @@ ids, RDD ids and call sites (``SQLExecutionRDD[91] at <site>``, which
 checkpointed and local frames print), lambda-variable counters, temp
 directories and the repo location become fixed placeholders, so one
 ``diff -r`` of a capture made from one checkout against a capture made
-from another is the plan check.
+from another is the plan check. A row whose plan rewrites several
+distinct aggregates (an ``Expand`` over a ``gid`` column) is captured
+again alone, in a fresh process: the optimizer orders those distinct
+groups by expression-id hashes, which depend on what ran earlier in the
+session, so only a fresh session gives an order that does not depend on
+the row order of the capture.
 
 Usage: python scripts/capture_plans.py <round> <tag> [name ...]
 """
@@ -19,6 +24,7 @@ from __future__ import annotations
 
 import os
 import re
+import subprocess
 import sys
 import tempfile
 
@@ -37,6 +43,9 @@ _NORMALIZE = (
     (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)]+"), "<tmp>"),
     (re.compile(re.escape(REPO)), "<repo>"),
 )
+
+#: the grouping-id column ``RewriteDistinctAggregates`` adds to its Expand
+_DISTINCT_GROUPS = re.compile(r"\bgid#")
 
 
 def normalize(plan: str) -> str:
@@ -68,6 +77,9 @@ def main() -> None:
             )
         except Exception as exc:  # capture what we can, note the rest
             plan = f"<explain failed: {exc}>"
+        if len(names) > 1 and _DISTINCT_GROUPS.search(plan):
+            subprocess.run([sys.executable, __file__, round_no, tag, name], check=True)
+            continue
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(normalize(plan))
         print(f"captured {name} ({len(plan)} chars)")

@@ -963,3 +963,33 @@ def test_readers_refuse_uninitialized_state(spark, tmp_path, reader):
     nope = str(tmp_path / "nope")
     with pytest.raises(ValueError, match=f"{nope} has no meta"):
         getattr(ingest, reader)(spark, nope).collect()
+
+
+# every gate: SPECS plus the two no-fold gates (split, stamp)
+_GATE_SPECS = {**SPECS, "split": _split_spec, "stamp": _stamp_spec}
+
+
+@pytest.mark.parametrize("gate", sorted(_GATE_SPECS))
+def test_every_data_subdir_has_a_fold(spark, sf_dir, tmp_path, gate):
+    """After two batches, each DATA subdir of a gate's state — one that
+    holds ``_batch_id`` partitions, so neither meta nor a frozen artifact
+    — has a fold in the gate's ``_STATE_LAYOUTS`` entry. Its readers and
+    ``compact_gate_state`` fold it through that one entry, so no subdir
+    is merged by a hand-written fold that compaction could disagree
+    with."""
+    ctx = _GATE_SPECS[gate](spark, sf_dir)
+    src = tmp_path / "src"
+    src.mkdir()
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    for drop in ("b1", "b2"):
+        ctx[drop].coalesce(1).write.parquet(str(src / drop))
+        raw = spark.readStream.schema(ctx["schema"]).parquet(f"{src}/*")
+        assert ctx["start"](raw, state, ck).awaitTermination(120)
+
+    data = sorted(
+        sub for sub, ids in ingest._state_subdirs(spark, state).items() if ids
+    )
+    layout = ingest._STATE_LAYOUTS.get(gate, {})
+    assert data, "two drained batches wrote no partials"
+    unfolded = [sub for sub in data if layout.get(sub, "copy") == "copy"]
+    assert not unfolded, f"{gate}: data subdirs without a fold: {unfolded}"

@@ -3,8 +3,9 @@ compile, and bench.py's HEADLINE roster (which the bench, solo_anchor.py
 and capture_plans.py all run) names registered queries once each. Also
 static guards that every package function has a caller, that
 queries.py's rows keep their session fixtures in its fixture helpers,
-that every cosine divides through the zero-vector rule and that a vector
-becomes a literal in one place. No Spark session."""
+that every cosine divides through the zero-vector rule, that a vector
+becomes a literal in one place and that per-batch partials are folded in
+one place. No Spark session."""
 
 from __future__ import annotations
 
@@ -226,3 +227,45 @@ def test_vector_literals_are_built_in_one_place():
             ):
                 found.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not found, f"vector literals outside _query_literal: {found}"
+
+
+def test_partials_fold_in_one_place():
+    """Per-batch ``_batch_id`` partials merge through one fold
+    (``index_layout._fold_partials``). In ``streaming/ingest.py`` only the
+    fold path (``_read_partials`` → ``_fold_state``), ``read_psi_trend``
+    (whose product is the per-batch view) and ``compact_gate_state``
+    consume ``_read_partials`` / ``_read_or_none`` output; and no package
+    module but ``sources/index_layout.py`` builds a ``batch_stats`` path
+    to read, so BM25's per-batch stats are summed only by that side's
+    fold."""
+    allowed = {
+        "_read_partials": {"_fold_state", "read_psi_trend"},
+        "_read_or_none": {"_read_partials", "compact_gate_state"},
+    }
+    tree = ast.parse((PACKAGE / "streaming" / "ingest.py").read_text())
+    found = [
+        f"{name} in {node.name}"
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        for name in sorted(
+            {
+                ast.unparse(sub.func).split(".")[-1]
+                for sub in ast.walk(node)
+                if isinstance(sub, ast.Call)
+            }
+            & set(allowed)
+        )
+        if node.name not in allowed[name]
+    ]
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "sources" / "index_layout.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and any(
+                "batch_stats" in ast.unparse(arg)
+                for arg in node.args + [k.value for k in node.keywords]
+                if isinstance(arg, ast.JoinedStr)
+                or (isinstance(arg, ast.Constant) and "/batch_stats" in str(arg.value))
+            ):
+                found.append(f"batch_stats path read at {path.relative_to(REPO)}:{node.lineno}")
+    assert not found, f"partials read outside the one fold: {found}"
